@@ -412,7 +412,7 @@ def bench_gha_ingest(spark, n_copies: int = 1500, runs: int = 3) -> list[float]:
         for r in range(runs + 1):  # run 0 is the untimed warm-up (parse-path
             _quiesce(spark)        # JIT, committer init — same protocol as
             t0 = time.perf_counter()  # _time_fn's warm-up materialization)
-            ingest_files(spark, [str(landing)], str(tmp / f"lake{r}"), fmt="parquet")
+            ingest_files(spark, [str(landing)], str(tmp / f"lake{r}"))
             if r:
                 samples.append(round(time.perf_counter() - t0, 3))
             shutil.rmtree(tmp / f"lake{r}", ignore_errors=True)
@@ -450,13 +450,13 @@ def bench_gha_ingest_gz(spark, n_copies: int = 1500) -> tuple[float, float]:
                 fh.write(json.dumps(ev) + "\n")
     try:
         t0 = time.perf_counter()
-        ingest_files(spark, [str(gz_path)], str(tmp / "lake1"), fmt="parquet")
+        ingest_files(spark, [str(gz_path)], str(tmp / "lake1"))
         single = time.perf_counter() - t0
         t0 = time.perf_counter()
         shards = split_landing(
             spark, [str(gz_path)], str(tmp / "split"), shard_bytes=1 << 20
         )
-        ingest_files(spark, shards, str(tmp / "lake2"), fmt="parquet")
+        ingest_files(spark, shards, str(tmp / "lake2"))
         split = time.perf_counter() - t0
         return single, split
     finally:

@@ -53,11 +53,6 @@ def parse_raw_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def count_corrupt(lines: DataFrame, value_col: str = "value") -> int:
-    """Corrupt-record count (gha.ipynb cells 4-5 ``bad.count()``)."""
-    return _parsed(lines, value_col).where(F.col(f"j.{CORRUPT_COL}").isNotNull()).count()
-
-
 def _common() -> list[Column]:
     # actor.login → username, repo.name → repo (every handler,
     # preprocess.py:42-44,53-55,...)

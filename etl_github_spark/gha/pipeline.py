@@ -286,11 +286,10 @@ def ingest_files(
     paths: list[str],
     outdir: str,
     mode: str = "append",
-    fmt: str | None = None,
 ) -> dict[str, str]:
     """Read hourly NDJSON files and append all six tables to ``outdir``
     (the landed-file ingest: :func:`read_raw` → :func:`ingest_raw`)."""
-    return ingest_raw(spark, read_raw(spark, paths), outdir, mode=mode, fmt=fmt)
+    return ingest_raw(spark, read_raw(spark, paths), outdir, mode=mode)
 
 
 def ingest_raw(
@@ -298,18 +297,9 @@ def ingest_raw(
     raw: DataFrame,
     outdir: str,
     mode: str = "append",
-    fmt: str | None = None,
-    versioned: bool = False,
 ) -> dict[str, str]:
     """Ingest a raw-lines frame (from :func:`read_raw` or
     :func:`read_raw_direct`) and append all six tables to ``outdir``.
-
-    ``versioned=True`` commits each table through the manifest layer
-    (`io.versioned.vwrite`): every ingest batch becomes an atomic table
-    version, so a crashed run is invisible, concurrent readers keep a
-    consistent snapshot, and yesterday's corpus is one
-    ``vread(version=...)`` away — the reference's Delta transactional
-    append, on the parquet layout.
 
     One cached parse feeds six partitioned writes — the Spark shape of
     process_file + write_delta (preprocess.py:143-175). The cache is
@@ -327,18 +317,11 @@ def ingest_raw(
 
     events = parse_raw_lines(raw).persist(StorageLevel.MEMORY_AND_DISK)
     events.count()  # materialize once; the six jobs below read cached blocks
-    if versioned:
-        from ..io.versioned import vwrite
-
-        def _commit(df, path, mode_, _parts, _fmt):
-            vwrite(df, path, mode=mode_)
-    else:
-        _commit = write_table
     try:
         out = {name: f"{outdir}/{name}" for name in EXTRACTORS}
         with ThreadPoolExecutor(max_workers=len(EXTRACTORS)) as ex:
             futs = [
-                ex.submit(_commit, fn(events), out[name], mode, ("date",), fmt)
+                ex.submit(write_table, fn(events), out[name], mode, ("date",))
                 for name, fn in EXTRACTORS.items()
             ]
             for f in futs:
@@ -354,7 +337,6 @@ def ingest_urls(
     landing_dir: str,
     outdir: str,
     mode: str = "append",
-    fmt: str | None = None,
     direct: bool = False,
     split_shard_bytes: int | None = None,
 ) -> dict[str, str]:
@@ -374,7 +356,7 @@ def ingest_urls(
     whole file to one task (the 100× straggler documented on
     read_raw)."""
     if direct:
-        return ingest_raw(spark, read_raw_direct(spark, urls), outdir, mode=mode, fmt=fmt)
+        return ingest_raw(spark, read_raw_direct(spark, urls), outdir, mode=mode)
     paths = fetch_to_landing(spark, urls, landing_dir)
     if split_shard_bytes:
         import os
@@ -382,4 +364,4 @@ def ingest_urls(
         paths = split_landing(
             spark, paths, os.path.join(landing_dir, "_split"), split_shard_bytes
         )
-    return ingest_files(spark, paths, outdir, mode=mode, fmt=fmt)
+    return ingest_files(spark, paths, outdir, mode=mode)

@@ -11,27 +11,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def run_analytics(spark, lakedir: str, outdir: str, fmt: str | None = None) -> dict[str, str]:
+def run_analytics(spark, lakedir: str, outdir: str) -> dict[str, str]:
     """The reference's full query_data flow (preprocess.py:209-244):
     read the lakehouse tables, run both keyword queries, overwrite the
     result tables (rm-and-rewrite in the reference → atomic
     mode="overwrite" here, S6)."""
     from ..io.sink import read_table, write_table
 
-    commit = read_table(spark, f"{lakedir}/commit", fmt=fmt)
-    comment = read_table(spark, f"{lakedir}/comment", fmt=fmt)
-    watch = read_table(spark, f"{lakedir}/watch", fmt=fmt)
+    commit = read_table(spark, f"{lakedir}/commit")
+    comment = read_table(spark, f"{lakedir}/comment")
+    watch = read_table(spark, f"{lakedir}/watch")
     out = {
         "commits": f"{outdir}/dask/commits",
         "comments": f"{outdir}/dask/comments",
     }
     write_table(
         keyword_commits(commit, watch), out["commits"],
-        mode="overwrite", partition_by=(), fmt=fmt,
+        mode="overwrite", partition_by=(),
     )
     write_table(
         keyword_comments(comment, watch), out["comments"],
-        mode="overwrite", partition_by=(), fmt=fmt,
+        mode="overwrite", partition_by=(),
     )
     return out
 

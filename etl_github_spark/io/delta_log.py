@@ -3,12 +3,10 @@
 The reference stores its lakehouse in Delta (preprocess.py:169-175
 `write_deltalake`, :181-186 add-action stats scan, :199-206
 OPTIMIZE/VACUUM). This environment has no delta-spark, so the engine's
-primary storage is plain Parquet with the semantics re-implemented on
-manifests (io/sink.py, io/versioned.py — SURVEY §1.4 sanctioned
-fallback). This module closes part of the remaining FORMAT gap with a
-from-scratch implementation of the published Delta transaction-log
-protocol (delta-io/delta PROTOCOL.md), scoped to the subset the
-reference actually uses:
+plain writers (io/sink.py) emit Parquet directories, and versioned
+history lives here: a from-scratch implementation of the published
+Delta transaction-log protocol (delta-io/delta PROTOCOL.md), scoped to
+the subset the reference actually uses:
 
 * ``_delta_log/<20-digit version>.json`` commits containing
   ``protocol`` / ``metaData`` / ``add`` / ``remove`` actions

@@ -1,18 +1,19 @@
-"""Physical IVF vector store: cell-partitioned parquet + pruned probes.
+"""Physical IVF-PQ vector store: cell-partitioned parquet + pruned probes.
 
 `sim_ivf_kmeans_topk` demonstrates the IVF *algorithm* with an in-plan
 cell filter; this module is the *storage* half of its 100 TB story:
-vectors are written once, partitioned by coarse-quantizer cell, so a
-probe is a PARTITION-PRUNED scan of nprobe directories — the other
-(corpus − nprobe/k) fraction of the data is never listed, opened, or
-read. Spark's partition discovery turns ``cell=<id>`` directories into
-a partition column; `ivf_probe_topk` filters on it, and the plan's
-PartitionFilters (asserted in tests) proves bytes-touched scales with
-nprobe, not corpus size.
+vectors are PQ-encoded once and written partitioned by coarse-quantizer
+cell, so a probe is a PARTITION-PRUNED scan of nprobe directories — the
+other (corpus − nprobe/k) fraction of the data is never listed, opened,
+or read. Spark's partition discovery turns ``cell=<id>`` directories
+into a partition column; `ivfpq_probe_topk` filters on it, and the
+plan's PartitionFilters (asserted in tests) proves bytes-touched scales
+with nprobe, not corpus size.
 
-Index metadata is the k×dim centroid matrix (see
-`queries.scale_paths.lloyd_fit`), stored beside the data as JSON — the
-same "stats sidecar" pattern as `sink.analyze_table`.
+Index metadata is the k×dim coarse centroid matrix (see
+`queries.scale_paths.lloyd_fit`) plus the PQ codebooks, stored beside
+the data as JSON — the same "stats sidecar" pattern as
+`sink.analyze_table`.
 """
 
 from __future__ import annotations
@@ -30,24 +31,6 @@ from .lsh_store import _cluster_for_write, recover_compaction  # noqa: F401
 # directly under the IVF store root. The adjacent LSH store partitions
 # live one level down: run it on <store>/bands AND <store>/sigs there
 # (see recover_compaction's docstring).
-
-
-def write_embeddings_ivf(emb: DataFrame, path: str, centroids) -> None:
-    """Assign each vector to its nearest centroid and write
-    cell-partitioned parquet (+ ``_centroids.json`` sidecar). One scan,
-    one shuffle-free kernel pass, one partitioned write."""
-    from ..queries.scale_paths import assign_cells
-
-    _cluster_for_write(
-        assign_cells(emb, centroids), "cell", "vec_id"
-    ).write.partitionBy("cell").mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as fh:
-        json.dump([[float(v) for v in c] for c in centroids], fh)
-
-
-def read_centroids(path: str):
-    with open(os.path.join(path, "_centroids.json")) as fh:
-        return json.load(fh)
 
 
 def probe_cells(centroids, q_vec, nprobe: int) -> list[int]:
@@ -231,28 +214,3 @@ def ivfpq_probe_topk(
     tab = residual_adc_tables(q_raw, centroids, books, probe, m, ksub)
     coded = spark.read.parquet(path).where(F.col("cell").isin(probe))
     return adc_score_topk(coded, probe, tab, m, topk=topk)
-
-
-def ivf_probe_topk(
-    spark: SparkSession,
-    path: str,
-    q_vec,
-    nprobe: int = 3,
-    k: int = 10,
-) -> DataFrame:
-    """Top-k cosine over the probed cells of an IVF store. The
-    ``cell IN (...)`` predicate is a partition filter: Spark prunes the
-    non-probed directories at planning time (no file listing, no IO),
-    and the scan + fold cosine + TakeOrderedAndProject runs over only
-    the probed fraction of the corpus."""
-    from ..queries.similarity import cosine
-
-    probe = probe_cells(read_centroids(path), q_vec, nprobe)
-    qe = F.array(*[F.lit(float(v)) for v in q_vec])
-    return (
-        spark.read.parquet(path)
-        .where(F.col("cell").isin(probe))
-        .select("vec_id", cosine(F.col("embedding"), qe).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
-    )

@@ -58,21 +58,20 @@ def write_table(
     path: str,
     mode: str = "append",
     partition_by: tuple[str, ...] = ("date",),
-    fmt: str | None = None,
 ) -> None:
     """Append/overwrite a date-partitioned table (S4/S6)."""
-    w = df.write.format(fmt or _FORMAT).mode(mode)
+    w = df.write.format(_FORMAT).mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
 
 
-def read_table(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Delta/Parquet-layout table scan (S5)."""
-    return spark.read.format(fmt or _FORMAT).load(path)
+    return spark.read.format(_FORMAT).load(path)
 
 
-def read_table_evolved(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Schema-evolution-aware scan: `mergeSchema` unions the columns of
     every file footer so a table whose later appends ADDED columns reads
     as one frame (missing values null) — the Delta `mergeSchema=true`
@@ -81,9 +80,7 @@ def read_table_evolved(spark: SparkSession, path: str, fmt: str | None = None) -
     Column REMOVAL/retyping still needs a rewrite (compact_table) —
     same as Delta, which only auto-merges additive changes.
     """
-    return (
-        spark.read.option("mergeSchema", "true").format(fmt or _FORMAT).load(path)
-    )
+    return spark.read.option("mergeSchema", "true").format(_FORMAT).load(path)
 
 
 def write_bucketed(
@@ -183,73 +180,6 @@ def merge_table(
         .partitionBy(partition_col)
         .parquet(path)
     )
-
-
-def delete_rows(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    key_cols: tuple[str, ...],
-    partition_col: str = "date",
-) -> int:
-    """Copy-on-write DELETE by key — the erasure verb (GDPR/right-to-be-
-    forgotten, bad-batch retraction) that merge/append/overwrite don't
-    express. Rows whose ``key_cols`` match a row in ``keys`` are removed;
-    returns the number of rows deleted.
-
-    Scale shape mirrors :func:`merge_table`: when ``keys`` carries the
-    partition column, only the partitions containing victims are read,
-    anti-joined, and dynamically overwritten — O(|affected partitions|),
-    not O(|table|). Without it, the delete must scan every partition to
-    find victims (still one pass + rewrite of only partitions that
-    contained any). The victim-key side is a distinct projection of the
-    request batch — small, broadcast into the anti-join.
-    """
-    from pyspark.sql import functions as F
-
-    victims = keys.select(*[c for c in keys.columns]).distinct()
-    if partition_col in keys.columns:
-        parts = [r[0] for r in victims.select(partition_col).distinct().collect()]
-        current = spark.read.parquet(path).where(F.col(partition_col).isin(parts))
-        vkeys = victims.select(*key_cols).distinct()
-    else:
-        hit = (
-            spark.read.parquet(path)
-            .join(F.broadcast(victims.select(*key_cols).distinct()), list(key_cols))
-            .select(partition_col)
-            .distinct()
-        )
-        parts = [r[0] for r in hit.collect()]
-        if not parts:
-            return 0
-        current = spark.read.parquet(path).where(F.col(partition_col).isin(parts))
-        vkeys = victims.select(*key_cols).distinct()
-    before = current.count()
-    keep = current.join(F.broadcast(vkeys), list(key_cols), "left_anti")
-    deleted = before - keep.count()
-    if deleted == 0:
-        return 0
-    # Dynamic overwrite only replaces partitions PRESENT in `keep` — a
-    # partition whose every row is deleted would silently survive.
-    # Remove fully-emptied partition dirs explicitly after the write.
-    # Partition values may surface as date objects on the read path but
-    # strings on the request path — compare by directory-name form.
-    kept_parts = {
-        str(r[0]) for r in keep.select(partition_col).distinct().collect()
-    }
-    (
-        cluster_for_write(keep, (partition_col,), key_cols[0])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    for p in parts:
-        if str(p) not in kept_parts:
-            shutil.rmtree(
-                Path(path) / f"{partition_col}={p}", ignore_errors=True
-            )
-    return deleted
 
 
 def compact_table(
@@ -426,40 +356,6 @@ def write_table_zordered(
         .drop("__zkey")
         .write.mode("overwrite")
         .parquet(path)
-    )
-
-
-def diff_snapshots(
-    old: DataFrame, new: DataFrame, key_cols: tuple[str, ...]
-) -> DataFrame:
-    """Change-data-capture between two table snapshots: one row per
-    changed key, classified ``insert`` / ``delete`` / ``update`` — the
-    read-side complement of :func:`merge_table` (a Delta CDF analog for
-    plain Parquet: diff any two snapshot paths after the fact).
-
-    Shape: each side collapses to (key, xxhash64 of the non-key columns)
-    before the full-outer join, so the shuffle carries two longs per
-    row instead of whole rows, and unchanged keys (the overwhelming
-    majority between adjacent snapshots) are filtered before any
-    downstream work. Hash collisions (~2⁻⁶⁴ per key) trade a vanishing
-    false-unchanged rate for not shipping row payloads.
-    """
-    from pyspark.sql import functions as F
-
-    keys = list(key_cols)
-    val_cols = [c for c in old.columns if c not in keys]
-    o = old.select(*keys, F.xxhash64(*val_cols).alias("__h_old"))
-    n = new.select(*keys, F.xxhash64(*val_cols).alias("__h_new"))
-    change = (
-        F.when(F.col("__h_old").isNull(), "insert")
-        .when(F.col("__h_new").isNull(), "delete")
-        .when(F.col("__h_old") != F.col("__h_new"), "update")
-    )
-    return (
-        o.join(n, keys, "full_outer")
-        .withColumn("change", change)
-        .where(F.col("change").isNotNull())
-        .select(*keys, "change")
     )
 
 

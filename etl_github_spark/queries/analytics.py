@@ -413,9 +413,8 @@ def profile_documents(spark, sf_dir):
 
     Shape: ONE aggregation pass computing all columns' stats, then a
     ``stack`` unpivot of the single result row. The table is scanned
-    once — at 100 TB the scan dominates, so this beats the per-column
-    union (kept as :func:`profile_documents_per_column`, pinned equal in
-    pytest) by ~|cols|×. The multiple ``count(DISTINCT)``s plan as one
+    once — at 100 TB the scan dominates, so this beats a per-column
+    union by ~|cols|×. The multiple ``count(DISTINCT)``s plan as one
     scan + an Expand (|cols|-way row replication into partial aggs):
     more agg input than a per-column pass, but only one trip through
     storage, and still fully partial-aggregatable.
@@ -438,30 +437,6 @@ def profile_documents(spark, sf_dir):
         "(col_name, n_nulls, n_distinct, min_str, max_str)",
         "__n AS n_rows",
     ).select("col_name", "n_rows", "n_nulls", "n_distinct", "min_str", "max_str")
-
-
-def profile_documents_per_column(spark, sf_dir):
-    """Per-column variant of :func:`profile_documents` (not registered):
-    one aggregation per column over the shared scan, unioned. Trades
-    |cols| scans for per-column pruning and no Expand replication —
-    preferable when only a narrow column subset is profiled on a wide
-    table. Output contract is identical (pinned in pytest)."""
-    d = T(spark, sf_dir, "documents")
-    parts = []
-    for c in _PROFILE_COLS:
-        parts.append(
-            d.agg(
-                F.count("*").alias("n_rows"),
-                (F.count("*") - F.count(c)).alias("n_nulls"),
-                F.count_distinct(c).alias("n_distinct"),
-                F.min(F.col(c).cast("string")).alias("min_str"),
-                F.max(F.col(c).cast("string")).alias("max_str"),
-            ).select(F.lit(c).alias("col_name"), "*")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 @query(

@@ -755,32 +755,6 @@ def dedup_simhash(spark, sf_dir):
     )
 
 
-def dedup_against_corpus(
-    batch: DataFrame, corpus: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Incremental dedup: drop batch rows whose *normalized fingerprint*
-    already exists in the historical corpus — the per-ingest-batch dedup
-    a continuously-crawling pipeline runs (batch is hours of data, the
-    corpus is everything ever kept).
-
-    Both sides reduce to md5 fingerprints of whitespace-normalized
-    lowercase text; the check is a left-anti join on the fingerprint.
-    At 100 TB the corpus side is a stored fingerprint TABLE (16 bytes ×
-    |corpus|, written bucketed by fingerprint so the anti-join is
-    shuffle-free on the corpus side and only the new batch shuffles).
-    Not a registered query: the synthetic fixtures contain no
-    cross-batch duplicates, so an oracle over them would be vacuous —
-    covered by crafted-overlap unit tests instead.
-    """
-    norm = F.md5(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    )
-    corpus_fp = corpus.select(norm.alias("fp")).distinct()
-    return batch.withColumn("fp", norm).join(
-        corpus_fp, "fp", "left_anti"
-    ).drop("fp")
-
-
 def _dup_span_positions(d: DataFrame) -> DataFrame:
     """Distinct (doc_id, tok_idx) token positions covered by a 4-gram
     occurring in >= 2 distinct documents. ``d`` must be

@@ -119,17 +119,17 @@ def pipeline_index_freshness(spark, sf_dir):
 
     docs = par(T(spark, sf_dir, "documents"))
     # Load (and tune() for) BOTH source tables on the MAIN thread before
-    # any pool work: T() applies the idempotent RUNTIME_CONF set via
-    # spark.conf.set, and issuing those from a pool thread would race
-    # the other half's planning (ADVICE r13) — after this line neither
-    # half touches session conf.
+    # any pool work: T() applies the RUNTIME_CONF set via spark.conf.set
+    # (ADVICE r13). The pool halves still call T() (the ANN half through
+    # _ivfpq_base_fit), so their conf sets are not absent, only
+    # value-idempotent: each writes the values already in place.
     T(spark, sf_dir, "embeddings")
     lsh_path = tempfile.mkdtemp(prefix="fresh_lsh_")
     ann_path = tempfile.mkdtemp(prefix="fresh_ann_")
 
     # The two index lifecycles are INDEPENDENT (different source tables,
     # different store roots, and — with the pre-load above — no session
-    # conf mutation on either path). Running them as two concurrent
+    # conf CHANGE on either path). Running them as two concurrent
     # driver-submitted job chains (guide §2.6 "overlap independent
     # jobs") lets each half's serial driver work (sidecar writes,
     # collects, fit-round combines) back-fill the other's idle

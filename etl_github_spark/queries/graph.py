@@ -669,16 +669,31 @@ def _enc_node(col: str, side: int):
     trailing zeros ⇒ shorter sorts first) — so
     ``enc = side·2^62 + value·10^(12−len)·16 + len`` preserves the
     full string order ('C' < 'S' via the side bit) and is injective.
-    Envelope: keys < 10^12 (TPC-H keys are ≤ 8 digits at sf100);
+    Envelope: 0 ≤ key < 10^12 (TPC-H keys are ≤ 8 digits at sf100);
     10^(12−len) is exact in double and the product stays ≤ 2^54, so
-    every arithmetic step is exact."""
+    every arithmetic step is exact. A key outside the envelope would
+    encode ambiguously, so it fails the query through ``raise_error``
+    in the same projection (no extra job); null keys stay null."""
     v = F.col(col).cast("long")
     ln = F.length(v.cast("string"))
-    return (
+    enc = (
         F.lit(side).cast("long") * F.lit(1 << 62)
         + v * F.pow(F.lit(10.0), (F.lit(12) - ln)).cast("long") * 16
         + ln
-    ).cast("long")
+    )
+    return (
+        F.when(
+            (v < 0) | (v >= 10**12),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"_enc_node: key outside [0, 10^12) in {col}: "),
+                    v.cast("string"),
+                )
+            ),
+        )
+        .otherwise(enc)
+        .cast("long")
+    )
 
 
 def _dec_node(c):
@@ -719,8 +734,10 @@ def _lpa_state(spark, sf_dir, rounds: int = 3):
     sort-free min(struct(-n, label)) argmax keyed on node — one
     aggregate, no per-round partition sort. Per-round shuffle is
     O(edges);
-    rounds are a fixed hyperparameter. Labels are node-id strings, so
-    min-tie-breaks compare identically in any engine.
+    rounds are a fixed hyperparameter. Labels are order-preserving int64
+    encodings of the node-id strings (`_enc_node`), so min-tie-breaks on
+    them match the oracle's string comparison by construction; callers
+    decode with `_dec_node`.
     """
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")

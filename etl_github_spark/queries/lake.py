@@ -1,6 +1,6 @@
 """Lakehouse-machinery exercises as oracle-checked queries.
 
-The storage layer (versioned manifests, incremental views) is pytest-
+The storage layer (the Delta log, incremental views) is pytest-
 verified where DuckDB can't express the behavior — but its OUTPUTS are
 plain deterministic aggregates, so these queries run a full write →
 maintain → read cycle in a scratch dir and return results an oracle
@@ -44,21 +44,24 @@ def _scratch(name: str) -> str:
 )
 def lake_versioned_timetravel(spark, sf_dir):
     """Transactional append + time travel, driver-checked end to end:
-    commit the even-id half of events as table version 1, append the
-    odd-id half as version 2, then read BOTH versions back through the
-    manifest layer. The returned (version, n_rows) pairs must equal
-    what the oracle derives from the fixture alone — so a broken
-    commit, a torn manifest, or a time-travel read that leaks the other
-    version's files all fail the hash compare.
+    commit the even-id half of events as Delta version 0, append the
+    odd-id half as version 1, then read BOTH versions back through the
+    log (`io/delta_log.py`), labelled 1 and 2. The returned
+    (version, n_rows) pairs must equal what the oracle derives from the
+    fixture alone — so a broken commit, a torn log entry, or a
+    time-travel read that leaks the other version's files all fail the
+    hash compare.
     """
-    from ..io.versioned import vread, vwrite
+    from ..io.delta_log import read_delta, write_delta
 
     e = T(spark, sf_dir, "events").select("event_id")
     path = _scratch("vtt")
-    vwrite(e.where(F.col("event_id") % 2 == 0), path)
-    vwrite(e.where(F.col("event_id") % 2 == 1), path, mode="append")
-    rows = [(1, vread(spark, path, 1).count()), (2, vread(spark, path, 2).count())]
-    shutil.rmtree(path, ignore_errors=True)
+    try:
+        write_delta(e.where(F.col("event_id") % 2 == 0), path)
+        write_delta(e.where(F.col("event_id") % 2 == 1), path, mode="append")
+        rows = [(v + 1, read_delta(spark, path, version=v).count()) for v in (0, 1)]
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(rows, "version int, n_rows long")
 
 
@@ -382,7 +385,8 @@ def lake_cdc_apply(spark, sf_dir):
     key-wide supersede, and the idempotent merge all hold.
 
     Scale shape: the apply is partition-pruned copy-on-write
-    (`io/sink.py::merge_table`/`delete_rows`); the change batch
+    (`streaming/cdc.py::apply_cdc_batch`, the `io/sink.py::merge_table`
+    shape); the change batch
     broadcasts; the rewrite touches only partitions holding changed
     keys. At 100 TB the batch:table ratio is what the COW path is
     built for — this query just compresses bootstrap+mutate+redeliver

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
@@ -42,18 +42,6 @@ def salted_count(df: DataFrame, keys: Sequence[str], n_salts: int = 16) -> DataF
         .agg(F.count("*").alias("__partial"))
     )
     return stage1.groupBy(*keys).agg(F.sum("__partial").alias("count"))
-
-
-def salted_sum(
-    df: DataFrame, keys: Sequence[str], value: Column | str, n_salts: int = 16
-) -> DataFrame:
-    value = F.col(value) if isinstance(value, str) else value
-    stage1 = (
-        with_salt(df, n_salts)
-        .groupBy(*keys, SALT_COL)
-        .agg(F.sum(value).alias("__partial"))
-    )
-    return stage1.groupBy(*keys).agg(F.sum("__partial").alias("sum"))
 
 
 def salted_broadcast_join(

@@ -27,29 +27,3 @@ def open_catalog(
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     """One-shot: open the catalog and run a SQL query."""
     return open_catalog(spark, sf_dir).sql(query)
-
-
-def open_query_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None
-) -> list[str]:
-    """Register every library operator as a composable temp view
-    ``q_<name>`` (lazy logical plans — nothing executes until queried),
-    on top of the base-table catalog. This turns the operator library
-    into a pure-SQL surface: ``SELECT * FROM q_dedup_summary JOIN
-    q_quality_gopher_stats USING (doc_id)`` composes two operators
-    through Catalyst with pushdown/pruning across the view boundary.
-
-    Views are plans, not materializations, so registering all ~230 is
-    milliseconds; Spark folds the view expansion into one optimized
-    plan per consuming query. Returns the registered view names.
-    """
-    from .queries import QUERIES
-
-    open_catalog(spark, sf_dir)
-    registered = []
-    for name, qd in QUERIES.items():
-        if names is not None and name not in names:
-            continue
-        qd.fn(spark, sf_dir).createOrReplaceTempView(f"q_{name}")
-        registered.append(f"q_{name}")
-    return registered

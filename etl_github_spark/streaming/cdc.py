@@ -159,8 +159,8 @@ def apply_cdc_batch(
     keep = current.join(F.broadcast(victims), list(key_cols), "left_anti")
     merged = keep.unionByName(ups.select(*keep.columns))
     # Dynamic overwrite only replaces partitions PRESENT in `merged`; a
-    # partition whose every row was deleted must be removed explicitly
-    # (same rule as io/sink.delete_rows). Partition values can surface
+    # partition whose every row was deleted must be removed explicitly.
+    # Partition values can surface
     # as date objects on the read path but strings on the request path —
     # compare by directory-name form.
     kept_parts = {

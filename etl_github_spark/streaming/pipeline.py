@@ -182,73 +182,6 @@ def stream_session_counts(
     )
 
 
-def stream_quality_gate(docs: DataFrame) -> DataFrame:
-    """Streaming document quality gate with OBSERVED per-batch metrics.
-
-    Applies the Gopher rule cascade (same column expressions as the
-    batch `quality_gopher_filter` — pure projections work unchanged on
-    a stream) and attaches Spark observed metrics so every micro-batch
-    reports (n_seen, n_kept) through `StreamingQueryProgress.
-    observedMetrics["quality_gate"]` without a second aggregation pass
-    or a side output — the production way to watch a curation stream's
-    reject rate drift (a scraper change shows up as a falling keep
-    ratio long before anyone reads the output table).
-
-    The observation is attached BEFORE the filter so n_seen counts the
-    raw stream; both metrics are plain counts (exact, mergeable across
-    partitions).
-    """
-    from ..queries.quality import _doc_stats, _words
-
-    s = _doc_stats(docs.select("doc_id", "text", _words().alias("_w")))
-    keep = (
-        F.col("n_words").between(20, 400)
-        & F.col("mean_word_len").between(2, 8)
-        & (F.col("stop_fraction") >= 0.03)
-        & (F.col("distinct_ratio") >= 0.35)
-    )
-    return (
-        s.withColumn("keep", keep)
-        .observe(
-            "quality_gate",
-            F.count(F.lit(1)).alias("n_seen"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        )
-        .where("keep")
-        .drop("keep")
-    )
-
-
-def stream_distinct_users_sketch(events, window: str = "1 hour", lg_k: int = 12):
-    """Windowed approximate distinct users on a STREAM via mergeable
-    DataSketches HLL — the streaming twin of `agg_hll_sketch_rollup`.
-    Each event-time window aggregates one sketch (kilobytes of state,
-    however many users), and the emitted estimate is the same sketch a
-    batch rollup would union — so a lambda-architecture reconciliation
-    (stream estimate vs batch exact) compares like with like.
-
-    Watermark-bounded state: closed windows are evicted; the per-window
-    state is ONE sketch, not a user set — distinct-count state that
-    cannot grow with cardinality.
-    """
-    from pyspark.sql import functions as F
-
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(lg_k))
-            ).alias("approx_users")
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "approx_users",
-        )
-    )
-
-
 def stream_delta_txn_sink(
     stream: DataFrame,
     table: str,

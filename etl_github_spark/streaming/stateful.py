@@ -3,9 +3,10 @@
 The reference has no stateful ops (SURVEY.md §2.8) — this is the
 north-star escape hatch for semantics neither windowed aggregation nor
 session windows express: arbitrary per-key state evolved across
-micro-batches. Example operator: per-user running activity profile
-(event count, last-seen timestamp, running value sum) maintained in
-GroupState and emitted once per batch per updated key.
+micro-batches. Operators: an EWMA volume-spike gate per event type,
+bounded per-shard token heavy hitters, and last-touch purchase
+attribution per user — each keeps its state in GroupState and emits
+from the micro-batch that updates it.
 
 At scale: state lives in the state store partitioned by the grouping
 key (RocksDB-backed on a real cluster); each micro-batch shuffles only
@@ -27,56 +28,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
-
-PROFILE_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("last_seen", TimestampType()),
-    ]
-)
-
-_STATE_SCHEMA = "n_events LONG, total_value DOUBLE, last_seen TIMESTAMP"
-
-
-def _update_profile(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    (user_id,) = key
-    n, total, last = state.get if state.exists else (0, 0.0, None)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-        batch_max = pdf["ts"].max()
-        last = batch_max if last is None else max(last, batch_max)
-    state.update((n, total, last))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "total_value": [total],
-            "last_seen": [last],
-        }
-    )
-
-
-def user_activity_profile(events: DataFrame) -> DataFrame:
-    """events(user_id, ts, value, ...) stream → running per-user profile.
-
-    Works on a streaming DataFrame (update output mode). Each batch
-    emits the refreshed profile for every user present in the batch.
-    """
-    return events.select("user_id", "ts", "value").groupBy("user_id").applyInPandasWithState(
-        _update_profile,
-        outputStructType=PROFILE_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 SPIKE_SCHEMA = StructType(
     [

@@ -44,35 +44,6 @@ def test_star_converges_fast(spark):
     assert len(lab) == 20
 
 
-def test_dedup_against_corpus_drops_known_fingerprints(spark):
-    """Batch rows whose normalized text already exists in the corpus are
-    dropped; whitespace/case differences still count as duplicates."""
-    from etl_github_spark.queries.dedup import dedup_against_corpus
-
-    corpus = spark.createDataFrame(
-        [(1, "Hello  World"), (2, "old news")], ["doc_id", "text"]
-    )
-    batch = spark.createDataFrame(
-        [
-            (10, "hello world"),      # dup of 1 after normalization
-            (11, "OLD   news "),      # dup of 2 after normalization
-            (12, "genuinely new"),
-        ],
-        ["doc_id", "text"],
-    )
-    kept = dedup_against_corpus(batch, corpus).collect()
-    assert [r["doc_id"] for r in kept] == [12]
-    assert kept[0]["text"] == "genuinely new"  # payload untouched
-
-
-def test_dedup_against_corpus_empty_corpus_keeps_all(spark):
-    from etl_github_spark.queries.dedup import dedup_against_corpus
-
-    corpus = spark.createDataFrame([], "doc_id long, text string")
-    batch = spark.createDataFrame([(1, "a"), (2, "b")], ["doc_id", "text"])
-    assert dedup_against_corpus(batch, corpus).count() == 2
-
-
 def _union_find_labels(pairs):
     """Reference CC: plain python union-find, label = component min."""
     parent: dict[int, int] = {}

@@ -11,7 +11,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from etl_github_spark.gha import EXTRACTORS, parse_raw_lines
-from etl_github_spark.gha.extract import count_corrupt
+from etl_github_spark.gha.extract import CORRUPT_COL, _parsed
 from etl_github_spark.gha.incremental import parse_start_stop
 from etl_github_spark.gha.pipeline import extract_tables, ingest_files, list_files
 from etl_github_spark.gha.queries import keyword_comments, keyword_commits
@@ -31,7 +31,9 @@ def test_parse_drops_corrupt_and_unknown(spark, tmp_path):
     events = parse_raw_lines(raw)
     # all well-formed envelope events survive (incl. unknown GollumEvent)
     assert events.count() == len(EVENTS)
-    assert count_corrupt(raw) == N_CORRUPT
+    # the non-JSON lines land in the corrupt-record sidecar
+    corrupt = _parsed(raw, "value").where(F.col(f"j.{CORRUPT_COL}").isNotNull())
+    assert corrupt.count() == N_CORRUPT
 
 
 def test_extract_tables_golden(spark, tmp_path):
@@ -67,8 +69,8 @@ def test_extract_tables_golden(spark, tmp_path):
 
 def test_ingest_sink_partitioned_and_incremental(spark, tmp_path):
     paths = write_fixture(tmp_path / "in", gz=True)
-    out = ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
-    commit = read_table(spark, out["commit"], fmt="parquet")
+    out = ingest_files(spark, paths, str(tmp_path / "lake"))
+    commit = read_table(spark, out["commit"])
     assert commit.count() == 5
     # hive partition layout by date
     parts = {p.name for p in (tmp_path / "lake" / "commit").iterdir() if p.is_dir()}
@@ -85,8 +87,8 @@ def test_ingest_sink_partitioned_and_incremental(spark, tmp_path):
 
     # append is incremental: re-ingest doubles rows (caller is responsible
     # for not re-listing processed hours; write itself must not dedup)
-    ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
-    assert read_table(spark, out["commit"], fmt="parquet").count() == 10
+    ingest_files(spark, paths, str(tmp_path / "lake"))
+    assert read_table(spark, out["commit"]).count() == 10
 
 
 def test_reference_queries_golden(spark, tmp_path):
@@ -147,7 +149,7 @@ def test_fetch_to_landing_and_ingest(spark, tmp_path):
     out = ingest_urls(spark, urls, str(tmp_path / "landing2"), str(tmp_path / "lake"))
     from etl_github_spark.io.sink import read_table
 
-    assert read_table(spark, out["watch"], fmt="parquet").count() == 7
+    assert read_table(spark, out["watch"]).count() == 7
 
 
 def test_direct_stream_read_matches_landed(spark, tmp_path):
@@ -176,7 +178,7 @@ def test_direct_stream_read_matches_landed(spark, tmp_path):
     )
     from etl_github_spark.io.sink import read_table
 
-    assert read_table(spark, out["watch"], fmt="parquet").count() == 7
+    assert read_table(spark, out["watch"]).count() == 7
     # the landing dir was never created — truly single-pass
     assert not (tmp_path / "unused_landing").exists()
 
@@ -197,26 +199,6 @@ def test_direct_stream_read_plain_text_and_open_failure(spark, tmp_path):
         read_raw_direct(
             spark, [f"file://{tmp_path}/nosuchfile.json.gz"], max_retries=1
         ).count()
-
-
-def test_versioned_ingest_time_travels(spark, tmp_path):
-    """versioned=True turns each ingest batch into an atomic table
-    version: after two ingests, version 1 still reads the first batch's
-    rows while head reads both."""
-    from etl_github_spark.gha.pipeline import ingest_raw, read_raw
-    from etl_github_spark.io.versioned import latest_version, vread
-
-    src = write_fixture(tmp_path / "src", gz=True)
-    lake = str(tmp_path / "lake")
-    raw = read_raw(spark, [str(p) for p in src])
-    out = ingest_raw(spark, raw, lake, versioned=True)
-    n1 = vread(spark, out["watch"]).count()
-    assert n1 == 7
-
-    ingest_raw(spark, raw, lake, versioned=True)
-    assert latest_version(out["watch"]) == 2
-    assert vread(spark, out["watch"]).count() == 2 * n1   # head
-    assert vread(spark, out["watch"], 1).count() == n1    # time travel
 
 
 def test_fetch_to_landing_failure_raises(spark, tmp_path):
@@ -280,7 +262,7 @@ def test_ingest_urls_end_to_end_resume_and_retry(spark, tmp_path):
     old_mtime = os.path.getmtime(landing / name1)
     time.sleep(0.05)
 
-    out = ingest_urls(spark, urls, str(landing), str(tmp_path / "lake"), fmt="parquet")
+    out = ingest_urls(spark, urls, str(landing), str(tmp_path / "lake"))
 
     # landing dir byte-identical to source, no .part leftovers
     assert sorted(os.listdir(landing)) == sorted(os.path.basename(p) for p in paths)
@@ -291,8 +273,8 @@ def test_ingest_urls_end_to_end_resume_and_retry(spark, tmp_path):
     assert os.path.getmtime(landing / name1) == old_mtime
 
     # the lake holds the same tables ingest_files produces
-    assert read_table(spark, out["commit"], fmt="parquet").count() > 0
-    assert read_table(spark, out["watch"], fmt="parquet").count() > 0
+    assert read_table(spark, out["commit"]).count() > 0
+    assert read_table(spark, out["watch"]).count() > 0
 
     # second run over the same landing dir is a pure no-op fetch
     landed_again = fetch_to_landing(spark, urls, str(landing))

@@ -11,81 +11,6 @@ from pyspark.sql import functions as F
 from .conftest import SF_SMALL
 
 
-def _build(spark, tmp_path):
-    from etl_github_spark.io.ivf_store import write_embeddings_ivf
-    from etl_github_spark.io.tables import load_table
-    from etl_github_spark.queries.scale_paths import lloyd_fit
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    centroids = lloyd_fit(emb, k=8, iters=3)
-    path = str(tmp_path / "ivf")
-    write_embeddings_ivf(emb, path, centroids)
-    q_vec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    return emb, centroids, path, q_vec
-
-
-def test_ivf_store_probe_matches_in_plan_filter(spark, tmp_path):
-    from etl_github_spark.io.ivf_store import ivf_probe_topk, probe_cells
-    from etl_github_spark.queries.scale_paths import assign_cells
-    from etl_github_spark.queries.similarity import cosine
-
-    emb, centroids, path, q_vec = _build(spark, tmp_path)
-
-    got = [tuple(r) for r in ivf_probe_topk(spark, path, q_vec).collect()]
-
-    probe = probe_cells(centroids, q_vec, 3)
-    qe = F.array(*[F.lit(float(v)) for v in q_vec])
-    want = [
-        tuple(r)
-        for r in (
-            assign_cells(emb, centroids)
-            .where(F.col("cell").isin(probe))
-            .select("vec_id", cosine(F.col("embedding"), qe).alias("cos_sim"))
-            .orderBy(F.desc("cos_sim"), "vec_id")
-            .limit(10)
-        ).collect()
-    ]
-    assert got == want
-
-
-def test_ivf_store_probe_prunes_partitions(spark, tmp_path):
-    """The probe plan must carry the cell predicate as a PartitionFilter
-    and its scan must touch ONLY the nprobe cell directories."""
-    from etl_github_spark.io.ivf_store import ivf_probe_topk, probe_cells, read_centroids
-
-    _, centroids, path, q_vec = _build(spark, tmp_path)
-    probed = ivf_probe_topk(spark, path, q_vec, nprobe=3)
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probed.explain("formatted")
-    plan = buf.getvalue()
-    part_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    assert "cell" in part_line
-
-    # behavioral proof: plant a corrupt parquet file in a NON-probed
-    # cell. A pruned scan never opens it; an unpruned scan fails on it.
-    import glob
-    import os
-
-    import pytest
-
-    probe = set(probe_cells(read_centroids(path), q_vec, 3))
-    all_cells = {
-        int(os.path.basename(p).split("=")[1])
-        for p in glob.glob(f"{path}/cell=*")
-    }
-    assert len(all_cells) > 3  # the store has cells the probe skips
-    victim = sorted(all_cells - probe)[0]
-    with open(f"{path}/cell={victim}/junk.parquet", "wb") as fh:
-        fh.write(b"not a parquet file")
-
-    assert ivf_probe_topk(spark, path, q_vec, nprobe=3).count() == 10
-
-    with pytest.raises(Exception):
-        spark.read.parquet(path).count()
-
-
 def _build_ivfpq(spark, tmp_path):
     from etl_github_spark.io.ivf_store import write_embeddings_ivfpq
     from etl_github_spark.io.tables import load_table

@@ -13,33 +13,33 @@ from .gha_fixture import write_fixture
 
 def test_run_analytics_overwrite_sink(spark, tmp_path):
     paths = write_fixture(tmp_path / "in", gz=True)
-    ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
-    out = run_analytics(spark, str(tmp_path / "lake"), str(tmp_path / "results"), fmt="parquet")
-    commits = read_table(spark, out["commits"], fmt="parquet").collect()
+    ingest_files(spark, paths, str(tmp_path / "lake"))
+    out = run_analytics(spark, str(tmp_path / "lake"), str(tmp_path / "results"))
+    commits = read_table(spark, out["commits"]).collect()
     assert [(r["username"], r["repo"], r["count"]) for r in commits] == [
         ("alice", "org/tools", 6)
     ]
-    comments = read_table(spark, out["comments"], fmt="parquet").collect()
+    comments = read_table(spark, out["comments"]).collect()
     assert [(r["username"], r["comment"]) for r in comments] == [("gina", "try dask here")]
 
     # overwrite is idempotent: re-running replaces, not appends (S6)
-    run_analytics(spark, str(tmp_path / "lake"), str(tmp_path / "results"), fmt="parquet")
-    assert read_table(spark, out["commits"], fmt="parquet").count() == 1
+    run_analytics(spark, str(tmp_path / "lake"), str(tmp_path / "results"))
+    assert read_table(spark, out["commits"]).count() == 1
 
 
 def test_compaction_preserves_rows_and_layout(spark, tmp_path):
     paths = write_fixture(tmp_path / "in", gz=True)
-    out = ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
+    out = ingest_files(spark, paths, str(tmp_path / "lake"))
     # three appends → many small files
-    ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
-    ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
-    before = read_table(spark, out["watch"], fmt="parquet")
+    ingest_files(spark, paths, str(tmp_path / "lake"))
+    ingest_files(spark, paths, str(tmp_path / "lake"))
+    before = read_table(spark, out["watch"])
     n_before = before.count()
     files_before = len(list((tmp_path / "lake" / "watch").rglob("*.parquet")))
 
     compact_table(spark, out["watch"])
 
-    after = read_table(spark, out["watch"], fmt="parquet")
+    after = read_table(spark, out["watch"])
     assert after.count() == n_before == 21
     files_after = len(list((tmp_path / "lake" / "watch").rglob("*.parquet")))
     assert files_after < files_before
@@ -53,9 +53,9 @@ def test_vacuum_reaps_orphans_preserves_rows(spark, tmp_path):
     the orphans, live data untouched (parquet analog of
     vacuum(retention_hours=0), preprocess.py:205)."""
     paths = write_fixture(tmp_path / "in", gz=True)
-    out = ingest_files(spark, paths, str(tmp_path / "lake"), fmt="parquet")
+    out = ingest_files(spark, paths, str(tmp_path / "lake"))
     watch = tmp_path / "lake" / "watch"
-    n_before = read_table(spark, out["watch"], fmt="parquet").count()
+    n_before = read_table(spark, out["watch"]).count()
 
     # killed overwrite → committer staging tree left behind
     staging = watch / "_temporary" / "0" / "task_000"
@@ -77,7 +77,7 @@ def test_vacuum_reaps_orphans_preserves_rows(spark, tmp_path):
     assert not (tmp_path / "lake" / "watch__compacting").exists()
     assert not (tmp_path / "lake" / "watch__old").exists()
     assert not list(watch.rglob("*.tmp"))
-    assert read_table(spark, out["watch"], fmt="parquet").count() == n_before
+    assert read_table(spark, out["watch"]).count() == n_before
 
     # idempotent: second vacuum is a no-op
     assert vacuum_table(str(watch)) == []
@@ -333,19 +333,6 @@ def test_streaming_session_windows_end_to_end(spark, tmp_path):
     # alice's 2 commits (22:10) and the bot commit (22:20) merge: one
     # session [22:10, 22:40) with 3 commits.
     assert rows == {("org/tools", "2024-02-29T22:10:00"): (3, "2024-02-29T22:40:00")}
-
-
-def test_diff_snapshots_classifies_changes(spark):
-    from etl_github_spark.io.sink import diff_snapshots
-
-    old = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "k long, s string, v double"
-    )
-    new = spark.createDataFrame(
-        [(2, "b", 20.0), (3, "c", 31.0), (4, "d", 40.0)], "k long, s string, v double"
-    )
-    got = {r["k"]: r["change"] for r in diff_snapshots(old, new, ("k",)).collect()}
-    assert got == {1: "delete", 3: "update", 4: "insert"}  # 2 unchanged → absent
 
 
 def test_parquet_schema_evolution_merges_columns(spark, tmp_path):
@@ -606,61 +593,6 @@ def test_prune_files_timestamp_stats_match_across_paths(spark, tmp_path):
     import glob
     n_all = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
     assert len(prune_files(path, "ts", 0, 10)) == n_all
-
-
-def test_delete_rows_by_key_including_emptied_partition(spark, tmp_path):
-    """delete_rows removes matched keys, physically drops partitions
-    whose rows are ALL deleted (dynamic overwrite alone would leave
-    them), and never touches unaffected partitions."""
-    import os
-
-    from etl_github_spark.io.sink import delete_rows
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01"),
-            (2, "b", "2024-01-01"),
-            (3, "c", "2024-01-02"),
-            (4, "d", "2024-01-03"),
-        ],
-        ["id", "val", "date"],
-    )
-    base.write.partitionBy("date").parquet(path)
-    d3_files = sorted(os.listdir(tmp_path / "tbl" / "date=2024-01-03"))
-
-    # delete id=1 (partial partition) and id=3 (empties 2024-01-02);
-    # request carries no partition column → scan-to-locate path
-    victims = spark.createDataFrame([(1,), (3,)], ["id"])
-    n = delete_rows(spark, path, victims, ("id",))
-    assert n == 2
-
-    left = {
-        (r.id, r.val, str(r.date)) for r in spark.read.parquet(path).collect()
-    }
-    assert left == {(2, "b", "2024-01-01"), (4, "d", "2024-01-03")}
-    assert not (tmp_path / "tbl" / "date=2024-01-02").exists()
-    # untouched partition keeps its physical files
-    assert sorted(os.listdir(tmp_path / "tbl" / "date=2024-01-03")) == d3_files
-
-    # deleting a missing key is a no-op returning 0
-    assert delete_rows(spark, path, spark.createDataFrame([(99,)], ["id"]), ("id",)) == 0
-
-
-def test_delete_rows_partition_scoped_request(spark, tmp_path):
-    """When the request carries the partition column, only named
-    partitions are read (fast path) and the count is exact."""
-    from etl_github_spark.io.sink import delete_rows
-
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "a", "2024-01-01"), (2, "b", "2024-01-02"), (3, "c", "2024-01-02")],
-        ["id", "val", "date"],
-    ).write.partitionBy("date").parquet(path)
-    victims = spark.createDataFrame([(2, "2024-01-02")], ["id", "date"])
-    assert delete_rows(spark, path, victims, ("id",)) == 1
-    left = {r.id for r in spark.read.parquet(path).collect()}
-    assert left == {1, 3}
 
 
 def test_bloom_sidecar_prunes_absent_keys_never_present_ones(spark, tmp_path):
@@ -1508,6 +1440,129 @@ def test_write_delta_append_retries_lost_version_race(spark, tmp_path, monkeypat
             mode="append",
             retries=0,
         )
+
+
+def test_write_delta_concurrent_appends_all_land(spark, tmp_path):
+    """Four real threads appending at once after a version-0 write: every
+    loser of a version race re-commits at the next version, so all four
+    land — versions 0..4, every row exactly once, no lost update."""
+    import threading
+
+    from etl_github_spark.io.delta_log import history, read_delta, write_delta
+
+    table = str(tmp_path / "dconc")
+    write_delta(spark.createDataFrame([(0,)], "x long"), table)
+    frames = {v: spark.createDataFrame([(v,)], "x long") for v in (1, 2, 3, 4)}
+    errs, versions = [], []
+
+    def appender(v):
+        try:
+            versions.append(write_delta(frames[v], table, mode="append", retries=4))
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    ts = [threading.Thread(target=appender, args=(v,)) for v in frames]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    assert not errs
+    assert sorted(versions) == [1, 2, 3, 4]
+    assert [h["version"] for h in history(table)] == [0, 1, 2, 3, 4]
+    assert sorted(r.x for r in read_delta(spark, table).collect()) == [0, 1, 2, 3, 4]
+
+
+def test_read_delta_snapshot_survives_overwrite_commit(spark, tmp_path):
+    """A frame resolved before an overwrite commit keeps reading the
+    files of the version it resolved (no torn read); the new head
+    reads only the overwrite."""
+    from etl_github_spark.io.delta_log import read_delta, write_delta
+
+    table = str(tmp_path / "dsnap")
+    write_delta(spark.createDataFrame([(1,), (2,)], "x long"), table)
+    snapshot = read_delta(spark, table)  # resolves version 0's files now
+    write_delta(spark.createDataFrame([(9,)], "x long"), table, mode="overwrite")
+    assert sorted(r.x for r in snapshot.collect()) == [1, 2]
+    assert [r.x for r in read_delta(spark, table).collect()] == [9]
+
+
+def _delta_vals(spark, table, version=None):
+    from etl_github_spark.io.delta_log import read_delta
+
+    return sorted(r.x for r in read_delta(spark, table, version=version).collect())
+
+
+def test_write_delta_append_overwrite_and_time_travel(spark, tmp_path):
+    """Appends accumulate, an overwrite replaces the head, and every
+    earlier version stays readable by number."""
+    from etl_github_spark.io.delta_log import history, write_delta
+
+    table = str(tmp_path / "dtt")
+    assert write_delta(spark.createDataFrame([(1,), (2,)], "x long"), table) == 0
+    assert write_delta(spark.createDataFrame([(3,)], "x long"), table) == 1
+    overwrite = spark.createDataFrame([(9,)], "x long")
+    assert write_delta(overwrite, table, mode="overwrite") == 2
+
+    assert _delta_vals(spark, table) == [9]  # head
+    assert _delta_vals(spark, table, 0) == [1, 2]  # time travel
+    assert _delta_vals(spark, table, 1) == [1, 2, 3]
+    assert [h["version"] for h in history(table)] == [0, 1, 2]
+
+
+def test_delta_crashed_writer_is_invisible_and_vacuumed(spark, tmp_path):
+    """A writer that died after staging its data files but before its
+    commit leaves files no version names: readers never see them and
+    vacuum_delta reaps them, leaving the committed rows intact."""
+    import os
+
+    from etl_github_spark.io.delta_log import _stage_files, vacuum_delta, write_delta
+
+    table = str(tmp_path / "dcrash")
+    write_delta(spark.createDataFrame([(1,)], "x long"), table)
+    # died between the data move and the commit: part files in the table
+    # root that no log entry references
+    orphans = [a["path"] for a in _stage_files(
+        spark.createDataFrame([(999,)], "x long"), table, ()
+    )]
+    # died inside the Spark write: a staging dir left behind
+    os.makedirs(os.path.join(table, ".stage-deadbeef"))
+
+    assert orphans
+    assert _delta_vals(spark, table) == [1]  # invisible to readers
+    reaped = vacuum_delta(table, retention_seconds=0)
+    assert reaped == sorted(orphans + [".stage-deadbeef"])
+    assert _delta_vals(spark, table) == [1]
+    assert vacuum_delta(table, retention_seconds=0) == []
+
+
+def test_vacuum_delta_drops_history_but_keeps_retained(spark, tmp_path):
+    """After checkpoint + log cleanup past an overwrite, vacuum_delta
+    reaps the overwritten history's files; the head still reads and
+    time travel into the dropped history raises."""
+    import pytest
+
+    from etl_github_spark.io.delta_log import (
+        checkpoint_delta,
+        cleanup_log,
+        snapshot_files,
+        vacuum_delta,
+        write_delta,
+    )
+
+    table = str(tmp_path / "dvac")
+    write_delta(spark.createDataFrame([(1,)], "x long"), table)
+    write_delta(spark.createDataFrame([(2,)], "x long"), table)
+    write_delta(spark.createDataFrame([(7,)], "x long"), table, mode="overwrite")
+    overwritten = snapshot_files(table, version=1)
+    retained = snapshot_files(table)
+
+    assert checkpoint_delta(table) == 2
+    cleanup_log(table)
+    reaped = vacuum_delta(table, retention_seconds=0)
+    assert reaped == sorted(overwritten) and not set(reaped) & set(retained)
+    assert _delta_vals(spark, table) == [7]
+    with pytest.raises(ValueError):
+        _delta_vals(spark, table, 1)
 
 
 def test_write_delta_create_race_restages_under_winner_layout(

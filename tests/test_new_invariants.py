@@ -668,3 +668,29 @@ def test_bench_names_are_registered():
         for n in set(bench.HEADLINE) & set(bench.EXTENDED)
     ]
     assert not dupes, f"queries benched twice (headline AND extended): {dupes}"
+
+
+def test_enc_node_round_trips_and_rejects_keys_outside_envelope(spark):
+    """`_enc_node` is order-preserving and `_dec_node` inverts it inside
+    [0, 10^12); a negative key or one of 10^12 or more would encode
+    ambiguously, so the projection itself must fail the job."""
+    import pytest
+
+    from etl_github_spark.queries.graph import _dec_node, _enc_node
+
+    keys = [0, 1, 9, 10, 19, 2, 100, 999_999_999_999]
+    enc = (
+        spark.createDataFrame([(k,) for k in keys], "k long")
+        .select("k", _enc_node("k", 1).alias("e"))
+        .select("k", "e", _dec_node("e").alias("d"))
+        .collect()
+    )
+    assert all(r.d == f"S{r.k}" for r in enc)
+    assert [r.k for r in sorted(enc, key=lambda r: r.e)] == sorted(keys, key=str)
+
+    for bad in (-1, 10**12):
+        df = spark.createDataFrame([(5,), (bad,)], "k long")
+        with pytest.raises(Exception, match="_enc_node: key outside"):
+            df.select(_enc_node("k", 0).alias("e")).collect()
+    nulls = spark.createDataFrame([(None,)], "k long").select(_enc_node("k", 0).alias("e"))
+    assert nulls.first().e is None

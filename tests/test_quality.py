@@ -129,24 +129,6 @@ def test_event_dedup_breaks_ts_ties_by_event_id(spark):
     assert kept == [3, 9]
 
 
-def test_profile_variants_agree(spark):
-    """Single-pass (registered) and per-column profiler variants must
-    produce the identical multiset of rows."""
-    from etl_github_spark.queries.analytics import (
-        profile_documents,
-        profile_documents_per_column,
-    )
-
-    from .conftest import SF_SMALL
-    from .oracle_harness import rows_to_multiset
-
-    a = profile_documents(spark, SF_SMALL)
-    b = profile_documents_per_column(spark, SF_SMALL)
-    ma = rows_to_multiset(a.columns, [tuple(r) for r in a.collect()])
-    mb = rows_to_multiset(b.columns, [tuple(r) for r in b.collect()])
-    assert ma == mb
-
-
 def test_lineage_manifest_funnel_invariants(spark):
     """The lineage manifest must be a consistent funnel: 5 stages,
     rows_in of stage k == rows_out of stage k-1, counts non-negative

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_github_spark.skew import salted_broadcast_join, salted_count, salted_sum
+from etl_github_spark.skew import salted_broadcast_join, salted_count
 
 
 def _skewed(spark, n_hot=5000, n_tail=500):
@@ -20,13 +20,6 @@ def test_salted_count_matches_plain(spark):
     df = _skewed(spark)
     plain = {(r["k"]): r["count"] for r in df.groupBy("k").count().collect()}
     salted = {(r["k"]): r["count"] for r in salted_count(df, ["k"]).collect()}
-    assert salted == plain
-
-
-def test_salted_sum_matches_plain(spark):
-    df = _skewed(spark)
-    plain = {r["k"]: r["s"] for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
-    salted = {r["k"]: r["sum"] for r in salted_sum(df, ["k"], "v").collect()}
     assert salted == plain
 
 

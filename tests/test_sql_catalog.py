@@ -27,30 +27,3 @@ def test_catalog_registers_all_tables(spark):
     for t in ("lineitem", "events", "documents", "embeddings"):
         assert t in views
     assert spark.sql("SELECT count(*) AS n FROM documents").first()["n"] == 500
-
-
-def test_query_views_compose_in_pure_sql(spark):
-    """Operator views must register lazily and compose through SQL with
-    results identical to calling the operators directly."""
-    from etl_github_spark.queries import QUERIES
-    from etl_github_spark.sql import open_query_views
-
-    from .conftest import SF_SMALL
-
-    views = open_query_views(
-        spark, SF_SMALL, names=("dedup_summary", "agg_global_count", "filter_eq")
-    )
-    assert sorted(views) == [
-        "q_agg_global_count",
-        "q_dedup_summary",
-        "q_filter_eq",
-    ]
-    direct = QUERIES["agg_global_count"].fn(spark, SF_SMALL).collect()
-    via_sql = spark.sql("SELECT * FROM q_agg_global_count").collect()
-    assert direct == via_sql
-    # composition across two operator views
-    joined = spark.sql(
-        "SELECT count(*) AS n FROM q_dedup_summary d "
-        "JOIN q_filter_eq f ON d.n_docs > 0"
-    ).collect()
-    assert joined[0]["n"] > 0

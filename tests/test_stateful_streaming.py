@@ -1,12 +1,11 @@
-"""applyInPandasWithState operator test: state must accumulate across
-micro-batches (the property plain windowed aggregation can't express)."""
+"""applyInPandasWithState operator tests: state must accumulate across
+micro-batches and survive a restart (the property plain windowed
+aggregation can't express)."""
 
 from __future__ import annotations
 
 import json
 from pathlib import Path
-
-from etl_github_spark.streaming.stateful import user_activity_profile
 
 
 def _write_batch(d: Path, name: str, rows):
@@ -16,74 +15,29 @@ def _write_batch(d: Path, name: str, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def _run_stream(spark, indir, ckpt, qname):
-    stream = (
-        spark.readStream.schema("user_id LONG, ts TIMESTAMP, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)  # force one micro-batch per file
-        .json(str(indir))
-    )
-    q = (
-        user_activity_profile(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-
-def test_state_accumulates_across_batches(spark, tmp_path):
-    indir = tmp_path / "in"
-    _write_batch(
-        indir,
-        "b1.json",
-        [
-            {"user_id": 1, "ts": "2024-01-01T00:00:00", "value": 10.0},
-            {"user_id": 1, "ts": "2024-01-01T00:05:00", "value": 5.0},
-            {"user_id": 2, "ts": "2024-01-01T00:01:00", "value": 1.0},
-        ],
-    )
-    _write_batch(
-        indir,
-        "b2.json",
-        [
-            {"user_id": 1, "ts": "2024-01-01T01:00:00", "value": 2.5},
-        ],
-    )
-    _run_stream(spark, indir, tmp_path / "ckpt", "profiles")
-    rows = spark.sql(
-        "SELECT * FROM profiles ORDER BY user_id, n_events"
-    ).collect()
-    # user 1 appears in both batches: first emit (2 events), then the
-    # state-carried update (3 events, 17.5 total)
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append((r.n_events, r.total_value))
-    assert by_user[2] == [(1, 1.0)]
-    assert by_user[1][-1] == (3, 17.5)
-    assert (2, 15.0) in by_user[1]
-    final = [r for r in rows if r.user_id == 1][-1]
-    assert final.last_seen.isoformat() == "2024-01-01T01:00:00"
-
-
-def _run_stream_recoverable(spark, indir, ckpt, outdir):
+def _run_attribution_recoverable(spark, indir, ckpt, outdir):
     # memory sink cannot recover from a checkpoint; foreachBatch + parquet
-    # can, which is also the production shape for update-mode state output.
+    # can, which is also the production shape for stateful output.
+    from pyspark.sql import functions as F
+
+    from etl_github_spark.streaming.stateful import attribution_last_touch
+
     stream = (
-        spark.readStream.schema("user_id LONG, ts TIMESTAMP, value DOUBLE")
+        spark.readStream.schema(
+            "event_id LONG, user_id LONG, event_type STRING, ts TIMESTAMP"
+        )
         .option("maxFilesPerTrigger", 1)
         .json(str(indir))
+        .withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
     )
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("append").parquet(str(outdir))
 
     q = (
-        user_activity_profile(stream)
+        attribution_last_touch(stream)
         .writeStream.foreachBatch(sink)
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", str(ckpt))
         .trigger(availableNow=True)
         .start()
@@ -92,16 +46,26 @@ def _run_stream_recoverable(spark, indir, ckpt, outdir):
 
 
 def test_state_survives_restart(spark, tmp_path):
+    """A touch seen by the first run must credit a purchase that only
+    the restarted run sees: the GroupState comes back from the
+    checkpoint, not from the input."""
     indir = tmp_path / "in"
-    _write_batch(indir, "b1.json", [{"user_id": 7, "ts": "2024-01-01T00:00:00", "value": 1.0}])
-    _run_stream_recoverable(spark, indir, tmp_path / "ckpt", tmp_path / "out")
+    _write_batch(
+        indir,
+        "b1.json",
+        [{"event_id": 1, "user_id": 7, "event_type": "click", "ts": "2024-01-01T00:00:00"}],
+    )
+    _run_attribution_recoverable(spark, indir, tmp_path / "ckpt", tmp_path / "out")
     # second run with a NEW file: checkpointed state must carry over
-    _write_batch(indir, "b2.json", [{"user_id": 7, "ts": "2024-01-02T00:00:00", "value": 2.0}])
-    _run_stream_recoverable(spark, indir, tmp_path / "ckpt", tmp_path / "out")
-    rows = spark.read.parquet(str(tmp_path / "out")).orderBy("n_events").collect()
-    assert [(r.n_events, r.total_value) for r in rows if r.user_id == 7] == [
-        (1, 1.0),
-        (2, 3.0),
+    _write_batch(
+        indir,
+        "b2.json",
+        [{"event_id": 2, "user_id": 7, "event_type": "purchase", "ts": "2024-01-01T00:30:00"}],
+    )
+    _run_attribution_recoverable(spark, indir, tmp_path / "ckpt", tmp_path / "out")
+    rows = spark.read.parquet(str(tmp_path / "out")).collect()
+    assert [(r.purchase_id, r.attributed_event_id, r.gap_us) for r in rows] == [
+        (2, 1, 30 * 60 * 1_000_000)
     ]
 
 
@@ -194,43 +158,6 @@ def test_token_heavy_hitters_tracks_dominant_token(spark, tmp_path):
     for r in rows:
         per_emit[(r["shard"], r["n_shard"])] += 1
     assert max(per_emit.values()) <= _HH_CAP
-
-
-def test_stream_distinct_users_sketch_matches_exact_small_cardinality(
-    spark, tmp_path
-):
-    """At small per-window cardinalities the HLL estimate is exact, so
-    the streaming sketch must reproduce the exact distinct counts the
-    same batch computes — windows closed by the watermark only."""
-    from etl_github_spark.streaming.pipeline import stream_distinct_users_sketch
-
-    indir = tmp_path / "in"
-    rows = [
-        {"user_id": u, "ts": f"2024-01-01T{h:02d}:10:00", "value": 1.0}
-        for h, users in [(0, [1, 2, 3]), (1, [2, 2, 4]), (5, [9])]
-        for u in users
-    ]
-    _write_batch(indir, "b1.json", rows)
-    stream = (
-        spark.readStream.schema("user_id LONG, ts TIMESTAMP, value DOUBLE")
-        .json(str(indir))
-    )
-    q = (
-        stream_distinct_users_sketch(stream)
-        .writeStream.format("memory")
-        .queryName("hll_win")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["window_start"].isoformat(): r["approx_users"]
-        for r in spark.sql("SELECT * FROM hll_win").collect()
-    }
-    # hour-5 window stays open under the 2h watermark (append mode)
-    assert got == {"2024-01-01T00:00:00": 3, "2024-01-01T01:00:00": 2}
 
 
 def test_streaming_attribution_credits_last_touch_across_batches(spark, tmp_path):
