@@ -2,11 +2,14 @@
 
 The reference stores its lakehouse in Delta (preprocess.py:169-175
 `write_deltalake`, :181-186 add-action stats scan, :199-206
-OPTIMIZE/VACUUM). This environment has no delta-spark, so the engine's
-plain writers (io/sink.py) emit Parquet directories, and versioned
-history lives here: a from-scratch implementation of the published
-Delta transaction-log protocol (delta-io/delta PROTOCOL.md), scoped to
-the subset the reference actually uses:
+OPTIMIZE/VACUUM). This environment has no delta-spark, so this module
+is a from-scratch implementation of the published Delta
+transaction-log protocol (delta-io/delta PROTOCOL.md), and it is the
+ONE write path for mutating an existing table: MERGE (with a
+``deletes`` key frame for CDC tombstones), DELETE, OPTIMIZE, Z-order,
+VACUUM, RESTORE, and the SCD2 and CDC applies built on MERGE all
+commit here. io/sink.py keeps only the plain Parquet writers. The
+protocol subset starts from what the reference actually uses:
 
 * ``_delta_log/<20-digit version>.json`` commits containing
   ``protocol`` / ``metaData`` / ``add`` / ``remove`` actions
@@ -187,7 +190,7 @@ def _stage_files(
             rel = os.path.join(*segments, name) if segments else name
             dest = os.path.join(table, rel)
             os.makedirs(os.path.dirname(dest), exist_ok=True)
-            shutil.move(f, dest)
+            os.replace(f, dest)
             stats = _file_stats(md, stats_cols)
             adds.append(
                 {
@@ -1128,14 +1131,17 @@ def delete_delta_dv(spark: SparkSession, table: str, predicate: str) -> dict:
         .where(F.expr(predicate))
         .select("__delta_dv_file", "__delta_dv_pos")
         # materialize the matched set ONCE (it is deleted-rows-sized);
-        # the three consumers below (touched files, per-file counts,
-        # new-row count) must not each re-run the filtered table scan
+        # the per-file counts and the sidecar write must not each
+        # re-run the filtered table scan
         .localCheckpoint()
     )
-    touched = sorted(r["__delta_dv_file"] for r in hits.select("__delta_dv_file").distinct().collect())
-    if not touched:
+    new_hits = {
+        r["__delta_dv_file"]: r["count"]
+        for r in hits.groupBy("__delta_dv_file").count().collect()
+    }
+    if not new_hits:
         return {"version": None, "deleted_rows": 0, "files": 0}
-    actions, new_adds = _stage_dv_actions(spark, table, hits, live, by_name, touched)
+    actions, new_adds = _stage_dv_actions(spark, table, hits, live, by_name, new_hits)
     actions.append(
         {
             "commitInfo": {
@@ -1150,11 +1156,10 @@ def delete_delta_dv(spark: SparkSession, table: str, predicate: str) -> dict:
     except Exception:
         _remove_staged(table, new_adds)
         raise
-    new_deleted = int(hits.count())
     return {
         "version": version,
-        "deleted_rows": new_deleted,
-        "files": len(touched),
+        "deleted_rows": sum(new_hits.values()),
+        "files": len(new_hits),
     }
 
 
@@ -1164,15 +1169,20 @@ def _stage_dv_actions(
     hits,
     live: dict[str, dict],
     by_name: dict[str, str],
-    touched: list[str],
+    new_hits: dict[str, int],
 ) -> tuple[list[dict], list[dict]]:
     """Stage one fresh deletion-vector sidecar per touched data file and
     return ``(actions, new_sidecar_adds)``: per file a dataChange remove
     of its current add entry plus the same entry re-added carrying the
     new DV reference. ``hits`` is a (dv_file, row_index) DataFrame of
-    NEWLY deleted rows; pre-existing DVs of the touched files are
-    unioned in — the new sidecar is the FULL deleted set for its file
-    (one DV per file, per protocol). Sidecar writes are distributed
+    NEWLY deleted rows and ``new_hits`` their count per touched file
+    (the new vector's cardinality adds the old one's, since a row
+    already deleted never matches again); pre-existing DVs of the
+    touched files are unioned in — the new sidecar is the FULL deleted
+    set for its file (one DV per file, per protocol). A file whose
+    every recorded row is now deleted gets the remove alone — it
+    leaves the snapshot, as in real Delta, instead of staying live
+    behind a full-cardinality vector. Sidecar writes are distributed
     (one hash partition per touched file); callers own the commitInfo
     and the ``_commit`` (and must ``_remove_staged(new_sidecar_adds)``
     on a failed publish)."""
@@ -1181,6 +1191,7 @@ def _stage_dv_actions(
 
     from pyspark.sql import functions as F
 
+    touched = sorted(new_hits)
     old_sidecars = [
         os.path.join(table, live[by_name[t]]["deletionVector"]["path"])
         for t in touched
@@ -1203,21 +1214,10 @@ def _stage_dv_actions(
             .mode("overwrite")
             .parquet(stage)
         )
-        counts = {
-            r["__delta_dv_file"]: r["n"]
-            for r in dv.groupBy("__delta_dv_file")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
         actions: list[dict] = []
         for t in touched:
-            parts = sorted(glob.glob(os.path.join(stage, f"__delta_dv_pf={t}", "part-*.parquet")))
-            if len(parts) != 1:  # pragma: no cover - hash-group contract
-                raise RuntimeError(f"DV stage for {t} wrote {len(parts)} files")
-            rel = f"deletion-vector-{uuid.uuid4().hex}.parquet"
-            shutil.move(parts[0], os.path.join(table, rel))
-            new_adds.append({"path": rel})
             old_add = live[by_name[t]]
+            n_deleted = new_hits[t] + old_add.get("deletionVector", {}).get("cardinality", 0)
             actions.append(
                 {
                     "remove": {
@@ -1227,6 +1227,15 @@ def _stage_dv_actions(
                     }
                 }
             )
+            n_rows = json.loads(old_add.get("stats") or "{}").get("numRecords")
+            if n_deleted == n_rows:
+                continue  # every row deleted: the remove alone retires it
+            parts = sorted(glob.glob(os.path.join(stage, f"__delta_dv_pf={t}", "part-*.parquet")))
+            if len(parts) != 1:  # pragma: no cover - hash-group contract
+                raise RuntimeError(f"DV stage for {t} wrote {len(parts)} files")
+            rel = f"deletion-vector-{uuid.uuid4().hex}.parquet"
+            os.replace(parts[0], os.path.join(table, rel))
+            new_adds.append({"path": rel})
             actions.append(
                 {
                     "add": {
@@ -1234,7 +1243,7 @@ def _stage_dv_actions(
                         "dataChange": True,
                         "deletionVector": {
                             "path": rel,
-                            "cardinality": int(counts[t]),
+                            "cardinality": int(n_deleted),
                         },
                     }
                 }
@@ -1251,7 +1260,7 @@ def _stage_dv_actions(
 #: row-metadata scans) — reserved like real Delta's __delta-prefixed
 #: names; a user column with one of these would make every DV join
 #: ambiguous, so the scan helpers refuse loudly instead
-_DV_RESERVED = ("__delta_dv_file", "__delta_dv_pos", "__delta_dv_pf")
+_DV_RESERVED = ("__delta_dv_file", "__delta_dv_pos", "__delta_dv_pf", "__delta_del")
 
 
 def _check_dv_reserved(cols) -> None:
@@ -1308,6 +1317,7 @@ def merge_delta_dv(
     source: DataFrame,
     on: tuple[str, ...] | list[str],
     stats_cols: tuple[str, ...] = (),
+    deletes: DataFrame | None = None,
 ) -> dict:
     """MERGE INTO with merge-on-read semantics (Delta's low-shuffle
     DV merge): target rows whose ``on`` key appears in ``source`` are
@@ -1316,6 +1326,13 @@ def merge_delta_dv(
     unmatched source rows as ordinary appended files, all in ONE
     commit. This is the upsert every CDC/ingest pipeline runs hourly;
     at 100 TB the cost is O(source + matching rows), never O(table).
+
+    ``deletes`` (key rows: the ``on`` columns) is Delta's ``WHEN
+    MATCHED THEN DELETE`` clause as data: every live target row whose
+    key appears there is DV-deleted in the same commit, wherever it
+    lives, and nothing replaces it; a key matching no row is a no-op.
+    A key present in both ``source`` and ``deletes`` raises — one
+    commit cannot both replace and delete a row.
 
     Semantics pinned to the real protocol: the source must be
     key-unique (several source rows binding one target row is Delta's
@@ -1326,16 +1343,18 @@ def merge_delta_dv(
     existing vectors); matched rows are replaced unconditionally (no
     change detection). Source schema must equal the table schema —
     MERGE does not evolve. Returns ``{"version", "updated",
-    "inserted", "files_touched"}`` (version ``None`` on an empty
-    source: no empty commit).
+    "inserted", "deleted", "files_touched"}`` (version ``None`` when
+    nothing matches and nothing is inserted: no empty commit).
 
     Scale shape: ONE target scan with row metadata joined once against
-    the source (AQE picks broadcast vs shuffle by actual source size);
-    the join result is materialized once (source-sized, not
-    table-sized) and feeds the DV sidecars, the appended file stage,
-    and both counters. Version claimed at plan time (TOCTOU rule):
-    a concurrent commit conflicts explicitly rather than silently
-    merging against a stale snapshot."""
+    the source and delete keys together (AQE picks broadcast vs
+    shuffle by actual size); the join result is materialized once
+    (source-sized, not table-sized) and feeds the DV sidecars, the
+    appended file stage, and the counters. Version claimed at plan
+    time (TOCTOU rule): a concurrent commit conflicts explicitly
+    rather than silently merging against a stale snapshot."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -1372,20 +1391,45 @@ def merge_delta_dv(
     _check_constraints(source, meta)  # MERGE's appended rows obey CHECKs
     # (merge sources carry the full schema, so this only VERIFIES)
     _apply_generated_columns(source, meta)
+    # delete keys ride the same probe as the source rows, flagged and
+    # null-padded, so one target scan and one join serve both clauses
+    probe = source.withColumn("__delta_del", F.lit(False))
+    if deletes is not None:
+        types = {f.name: f.dataType for f in schema.fields}
+        probe = probe.unionByName(
+            deletes.select(*on)
+            .distinct()
+            .select(
+                *[
+                    (F.col(c) if c in on else F.lit(None)).cast(types[c]).alias(c)
+                    for c in cols
+                ],
+                F.lit(True).alias("__delta_del"),
+            )
+        )
     # uniqueness only matters for keys that CAN bind a target row:
-    # null-keyed source rows never match (the join below never binds
+    # null-keyed probe rows never match (the join below never binds
     # them — they are plain inserts), so Delta's multiple-source-row
     # error does not apply to them
-    non_null = source
+    non_null = probe
     for k in on:
         non_null = non_null.where(F.col(k).isNotNull())
-    if (
+    clash = (
         non_null.groupBy(*on)
-        .agg(F.count("*").alias("n"))
+        .agg(
+            F.count("*").alias("n"),
+            F.max(F.col("__delta_del").cast("int")).alias("del"),
+        )
         .where(F.col("n") > 1)
         .limit(1)
-        .count()
-    ):
+        .collect()
+    )
+    if clash and clash[0]["del"]:
+        raise ValueError(
+            f"merge key {dict((k, clash[0][k]) for k in on)!r} is in both "
+            "source and deletes: one commit cannot replace and delete a row"
+        )
+    if clash:
         raise ValueError(
             "merge source is not key-unique on "
             f"{on}: several source rows would bind the same target row "
@@ -1397,29 +1441,44 @@ def merge_delta_dv(
         target_keys = _scan_with_rowmeta(spark, table, schema, pcols, live).select(
             *on, "__delta_dv_file", "__delta_dv_pos"
         )
-        merged = source.join(target_keys, on, "left").localCheckpoint()
+        merged = probe.join(target_keys, on, "left").localCheckpoint()
     else:
-        merged = source.select(
+        merged = probe.select(
             "*",
             F.lit(None).cast("string").alias("__delta_dv_file"),
             F.lit(None).cast("long").alias("__delta_dv_pos"),
         ).localCheckpoint()
-    hits = merged.where(F.col("__delta_dv_file").isNotNull()).select("__delta_dv_file", "__delta_dv_pos")
-    updated = int(hits.count())
-    inserted = int(merged.count()) - updated
-    if updated + inserted == 0:
-        return {"version": None, "updated": 0, "inserted": 0, "files_touched": 0}
-    touched = sorted(
-        r["__delta_dv_file"] for r in hits.select("__delta_dv_file").distinct().collect()
-    )
+    # one aggregate answers every counter and the touched-file list
+    new_hits: Counter = Counter()
+    n: Counter = Counter()  # rows by (matched a target row, delete key)
+    for r in merged.groupBy("__delta_dv_file", "__delta_del").count().collect():
+        matched = r["__delta_dv_file"] is not None
+        if matched:
+            new_hits[r["__delta_dv_file"]] += r["count"]
+        n[matched, r["__delta_del"]] += r["count"]
+    updated, deleted, inserted = n[True, False], n[True, True], n[False, False]
+    if updated + inserted + deleted == 0:
+        return {
+            "version": None,
+            "updated": 0,
+            "inserted": 0,
+            "deleted": 0,
+            "files_touched": 0,
+        }
     actions: list[dict] = []
     new_sidecars: list[dict] = []
-    if touched:
+    if new_hits:
+        hits = merged.where(F.col("__delta_dv_file").isNotNull()).select(
+            "__delta_dv_file", "__delta_dv_pos"
+        )
         actions, new_sidecars = _stage_dv_actions(
-            spark, table, hits, live, by_name, touched
+            spark, table, hits, live, by_name, new_hits
         )
     new_adds = _stage_files(
-        merged.select(*cols), table, stats_cols, partition_by=tuple(pcols)
+        merged.where(~F.col("__delta_del")).select(*cols),
+        table,
+        stats_cols,
+        partition_by=tuple(pcols),
     )
     actions.extend({"add": a} for a in new_adds)
     actions.append(
@@ -1441,7 +1500,8 @@ def merge_delta_dv(
         "version": version,
         "updated": updated,
         "inserted": inserted,
-        "files_touched": len(touched),
+        "deleted": deleted,
+        "files_touched": len(new_hits),
     }
 
 
@@ -1628,7 +1688,7 @@ def materialize_deletes(spark: SparkSession, table: str) -> dict:
                 rel_dir = "" if os.path.isabs(p) else os.path.dirname(p)
                 name = f"part-{uuid.uuid4().hex}.parquet"
                 rel = f"{rel_dir}/{name}" if rel_dir else name
-                shutil.move(src, os.path.join(table, rel))
+                os.replace(src, os.path.join(table, rel))
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
             stats = _file_stats(md, stats_cols)
@@ -2359,10 +2419,10 @@ def optimize_delta(
     no empty commit polluting history).
 
     Scale shape: planning is pure log metadata (O(live files) driver-
-    side — the same order every snapshot replay already pays); each bin
-    rewrite scans and writes only that bin's bytes; bins are
-    independent (parallelizable across partitions); the swap is one
-    atomic commit. The small-file pathology this fixes is the
+    side — the same order every snapshot replay already pays); ONE job
+    rewrites every bin, each by one task that scans and writes only
+    that bin's bytes, so bins run in parallel across partitions; the
+    swap is one atomic commit. The small-file pathology this fixes is the
     reference's own backfill pattern — 9,504 hourly appends = 9,504
     tiny files (gha.ipynb:19-29) — OPTIMIZE keeps a scan's task count
     proportional to data volume, not commit history.
@@ -2371,9 +2431,11 @@ def optimize_delta(
     race it raises with the staged files removed (the plan was computed
     against a stale snapshot — a remove-carrying commit must re-plan,
     never blind-retry; blind appends are the only commuting commits)."""
+    import glob
     import shutil
 
     import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     meta = _table_metadata(table)
@@ -2394,92 +2456,95 @@ def optimize_delta(
         key = tuple(sorted((add.get("partitionValues") or {}).items()))
         groups.setdefault(key, []).append((path, add))
 
+    plan: list[tuple[tuple, list[tuple[str, dict]]]] = []  # (partition, bin)
+    for key, files in sorted(groups.items()):
+        # DV-carrying files are skipped: compacting one from its raw
+        # bytes would resurrect deleted rows — materialize_deletes is
+        # the rewrite that applies the DV first
+        small = [
+            (p, a)
+            for p, a in files
+            if a.get("size", 0) < target_bytes and "deletionVector" not in a
+        ]
+        bins: list[list[tuple[str, dict]]] = []
+        cur: list[tuple[str, dict]] = []
+        cur_bytes = 0
+        for p, a in small:  # deterministic first-fit in path order
+            if cur and cur_bytes + a.get("size", 0) > target_bytes:
+                bins.append(cur)
+                cur, cur_bytes = [], 0
+            cur.append((p, a))
+            cur_bytes += a.get("size", 0)
+        if cur:
+            bins.append(cur)
+        plan.extend((key, b) for b in bins if len(b) >= 2)  # 1-file bins are optimal
+
     removes: list[str] = []
     adds: list[dict] = []
+    stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
     try:
-        for key, files in sorted(groups.items()):
-            # DV-carrying files are skipped: compacting one from its raw
-            # bytes would resurrect deleted rows — materialize_deletes is
-            # the rewrite that applies the DV first
-            small = [
-                (p, a)
-                for p, a in files
-                if a.get("size", 0) < target_bytes and "deletionVector" not in a
-            ]
-            bins: list[list[tuple[str, dict]]] = []
-            cur: list[tuple[str, dict]] = []
-            cur_bytes = 0
-            for p, a in small:  # deterministic first-fit in path order
-                if cur and cur_bytes + a.get("size", 0) > target_bytes:
-                    bins.append(cur)
-                    cur, cur_bytes = [], 0
-                cur.append((p, a))
-                cur_bytes += a.get("size", 0)
-            if cur:
-                bins.append(cur)
-            for b in bins:
-                if len(b) < 2:
-                    continue  # a 1-file bin is already optimal
-                # preserve whatever stats the inputs carried
-                stats_cols = tuple(
-                    sorted(
-                        {
-                            c
-                            for _, a in b
-                            for c in json.loads(a.get("stats", "{}")).get(
-                                "minValues", {}
-                            )
-                        }
-                    )
-                )
-                paths = [p for p, _ in b]
-                stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
-                try:
-                    (
-                        spark.read.schema(data_schema)
-                        .parquet(*[os.path.join(table, p) for p in paths])
-                        .coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(stage)
-                    )
-                    parts = sorted(
-                        f
-                        for f in os.listdir(stage)
-                        if f.startswith("part-") and f.endswith(".parquet")
-                    )
-                    if len(parts) != 1:  # pragma: no cover - coalesce(1) contract
-                        raise RuntimeError(
-                            f"OPTIMIZE bin rewrite produced {len(parts)} files"
-                        )
-                    src = os.path.join(stage, parts[0])
-                    md = pq.ParquetFile(src).metadata
-                    # same partitionValues ⇒ same hive dir as the inputs:
-                    # reuse it verbatim, no re-encoding to get wrong.
-                    # A shallow-cloned input has an ABSOLUTE source
-                    # path: its rewrite must land under THIS table's
-                    # root, never back in the source dir (r7 review)
-                    rel_dir = (
-                        ""
-                        if os.path.isabs(paths[0])
-                        else os.path.dirname(paths[0])
-                    )
-                    name = f"part-{uuid.uuid4().hex}.parquet"
-                    rel = f"{rel_dir}/{name}" if rel_dir else name
-                    shutil.move(src, os.path.join(table, rel))
-                finally:
-                    shutil.rmtree(stage, ignore_errors=True)
-                stats = _file_stats(md, stats_cols)
-                adds.append(
+        if plan:
+            # ONE job rewrites every bin: rows are tagged with their
+            # input file's bin and hash-clustered by it, so each bin is
+            # written by exactly one task into its own stage dir
+            bin_of = spark.createDataFrame(
+                [
+                    (os.path.basename(p), i)
+                    for i, (_, b) in enumerate(plan)
+                    for p, _ in b
+                ],
+                "__delta_opt_file string, __delta_opt_bin int",
+            )
+            (
+                spark.read.schema(data_schema)
+                .parquet(*[os.path.join(table, p) for _, b in plan for p, _ in b])
+                .withColumn("__delta_opt_file", F.col("_metadata.file_name"))
+                .join(F.broadcast(bin_of), "__delta_opt_file")
+                .drop("__delta_opt_file")
+                .repartition(len(plan), "__delta_opt_bin")
+                .write.partitionBy("__delta_opt_bin")
+                .mode("overwrite")
+                .parquet(stage)
+            )
+        for i, (key, b) in enumerate(plan):
+            # preserve whatever stats the inputs carried
+            stats_cols = tuple(
+                sorted(
                     {
-                        "path": rel,
-                        "partitionValues": dict(key),
-                        "size": os.path.getsize(os.path.join(table, rel)),
-                        "modificationTime": 0,
-                        "dataChange": False,
-                        **({"stats": json.dumps(stats)} if stats is not None else {}),
+                        c
+                        for _, a in b
+                        for c in json.loads(a.get("stats", "{}")).get(
+                            "minValues", {}
+                        )
                     }
                 )
-                removes.extend(paths)
+            )
+            paths = [p for p, _ in b]
+            parts = glob.glob(os.path.join(stage, f"__delta_opt_bin={i}", "part-*.parquet"))
+            if len(parts) != 1:  # pragma: no cover - hash-group contract
+                raise RuntimeError(f"OPTIMIZE bin rewrite produced {len(parts)} files")
+            md = pq.ParquetFile(parts[0]).metadata
+            # same partitionValues ⇒ same hive dir as the inputs:
+            # reuse it verbatim, no re-encoding to get wrong.
+            # A shallow-cloned input has an ABSOLUTE source
+            # path: its rewrite must land under THIS table's
+            # root, never back in the source dir (r7 review)
+            rel_dir = "" if os.path.isabs(paths[0]) else os.path.dirname(paths[0])
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            rel = f"{rel_dir}/{name}" if rel_dir else name
+            os.replace(parts[0], os.path.join(table, rel))
+            stats = _file_stats(md, stats_cols)
+            adds.append(
+                {
+                    "path": rel,
+                    "partitionValues": dict(key),
+                    "size": os.path.getsize(os.path.join(table, rel)),
+                    "modificationTime": 0,
+                    "dataChange": False,
+                    **({"stats": json.dumps(stats)} if stats is not None else {}),
+                }
+            )
+            removes.extend(paths)
         if not adds:
             return {"version": None, "removed": 0, "added": 0}
         actions: list[dict] = [
@@ -2500,6 +2565,8 @@ def optimize_delta(
     except Exception:
         _remove_staged(table, adds)
         raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return {"version": version, "removed": len(removes), "added": len(adds)}
 
 
@@ -2603,7 +2670,6 @@ def zorder_delta(
                     .parquet(stage)
                 )
                 import glob
-                import shutil
 
                 import pyarrow.parquet as pq
 
@@ -2629,7 +2695,7 @@ def zorder_delta(
                     )
                     name = f"part-{uuid.uuid4().hex}.parquet"
                     rel = f"{rel_dir}/{name}" if rel_dir else name
-                    shutil.move(parts[0], os.path.join(table, rel))
+                    os.replace(parts[0], os.path.join(table, rel))
                     stats = _file_stats(md, tuple(zorder_by))
                     adds.append(
                         {

@@ -1,14 +1,16 @@
-"""Lakehouse sinks: date-partitioned append/overwrite + compaction + vacuum.
+"""Lakehouse sinks: plain date-partitioned writers, readers and
+footer-stats file skipping.
 
 The reference writes Delta tables via ``write_deltalake(mode="append",
 partition_by="date")``, rewrites query results wholesale, and compacts +
-vacuums after each batch (preprocess.py:165-206,226-230). Spark-side the
-same contract is ``df.write.mode(...).partitionBy("date")`` over Parquet:
-delta-spark is not installable in this environment (see ARCHITECTURE.md
-§storage), so the storage layer is Parquet-only by design — same layout,
-same append/overwrite semantics; the ``_delta_log`` transaction features
-degrade to directory semantics, with :func:`vacuum_table` providing the
-``vacuum(retention_hours=0)`` analog (orphan staging-artifact reaping).
+vacuums after each batch (preprocess.py:165-206,226-230). Here the
+plain append/overwrite contract is ``df.write.mode(...).partitionBy("date")``
+over Parquet (delta-spark is not installable in this environment, see
+ARCHITECTURE.md §storage). Every mutation of an EXISTING table —
+MERGE, DELETE, OPTIMIZE, VACUUM, SCD2 and CDC applies — commits through
+the from-scratch Delta log in :mod:`etl_github_spark.io.delta_log`,
+whose commit protocol is the only crash-safety story: files staged
+without a commit are invisible and ``vacuum_delta`` reaps them.
 
 The reference's append+retry design can double-append on retry
 (preprocess.py:261; SURVEY.md §7 risk register); Spark task retries plus
@@ -18,16 +20,9 @@ no retry loop appears here by design.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
 _FORMAT = "parquet"
-
-# Suffixes of staging directories produced by compact_table's two-phase
-# rewrite; a crash between phases leaves one behind for vacuum to reap.
-_STAGING_SUFFIXES = ("__compacting", "__old")
 
 
 def cluster_for_write(
@@ -43,8 +38,8 @@ def cluster_for_write(
     at 100 TB the ``pmod(xxhash64(id), defaultParallelism)`` salt keeps
     partition-value × salt keys spread so no single writer owns a whole
     partition (guide §2.5 synthetic-key spread). Layout-only: readers
-    see the same rows. Shared by the lakehouse COW rewrites here and
-    both persisted index stores (io/lsh_store, io/ivf_store)."""
+    see the same rows. Shared by both persisted index stores
+    (io/lsh_store, io/ivf_store)."""
     from pyspark.sql import functions as F
 
     w = df.sparkSession.sparkContext.defaultParallelism
@@ -77,8 +72,8 @@ def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
     as one frame (missing values null) — the Delta `mergeSchema=true`
     behavior on the parquet layout. Costs a footer read per file at
     planning time; use the plain scan when the schema is known-stable.
-    Column REMOVAL/retyping still needs a rewrite (compact_table) —
-    same as Delta, which only auto-merges additive changes.
+    Column REMOVAL/retyping still needs a full rewrite — same as Delta,
+    which only auto-merges additive changes.
     """
     return spark.read.option("mergeSchema", "true").format(_FORMAT).load(path)
 
@@ -124,185 +119,6 @@ def write_table_sorted(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def merge_table(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: tuple[str, ...],
-    partition_col: str = "date",
-) -> None:
-    """Copy-on-write MERGE (upsert): rows matching ``key_cols`` are
-    replaced by ``updates``, new keys are inserted — the one lakehouse
-    verb append/overwrite can't express (a Delta ``MERGE INTO`` analog
-    for the Parquet layout).
-
-    Scale shape: only the partitions *touched by the updates* are read
-    and rewritten. The affected-partition list is a tiny driver collect
-    (distinct partition values of the update batch — bounded by the
-    batch, not the table); the anti-join removes superseded rows within
-    those partitions only, and the write uses dynamic partition
-    overwrite so untouched partitions' files are never listed, read, or
-    replaced. Cost is O(|affected partitions|), not O(|table|) — at
-    100 TB with daily partitions and an hourly update batch, that is
-    the difference between rewriting gigabytes and rewriting the lake.
-    """
-    from pyspark.sql import functions as F
-
-    # MERGE semantics: multiple update rows for one key is ambiguous
-    # (Delta's MERGE errors on multiple matches; silently inserting every
-    # copy would duplicate keys). Callers with versioned batches collapse
-    # to latest-per-key first (stream_merge_sink does).
-    dup = (
-        updates.groupBy(*key_cols)
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge_table: updates batch has multiple rows for key "
-            f"{dict(zip(key_cols, dup[0][:-1]))}; collapse to one row per "
-            f"key (e.g. latest version) before merging"
-        )
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    current = spark.read.parquet(path).where(F.col(partition_col).isin(parts))
-    keep = current.join(
-        updates.select(*key_cols).distinct(), list(key_cols), "left_anti"
-    )
-    merged = keep.unionByName(updates.select(*keep.columns))
-    (
-        cluster_for_write(merged, (partition_col,), key_cols[0])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    max_records_per_file: int = 50_000_000,
-    zorder_cols: tuple[str, ...] = (),
-) -> None:
-    """Small-file compaction (S7, preprocess.py:199-206).
-
-    Hourly appends create 24 small files/day — at 100 TB an uncompacted
-    table turns scans into metadata storms, which is exactly why the
-    reference compacts after every ingest batch (Delta OPTIMIZE there;
-    coalesced rewrite here).
-
-    ``repartition("date")`` hash-clusters each date partition into one
-    task (dates spread across ``spark.sql.shuffle.partitions`` tasks, so
-    a year of dates compacts in parallel), and ``maxRecordsPerFile``
-    splits any oversized date back into bounded files — per-partition
-    file-count control without funnelling the whole table through one
-    task. The swap is rename-aside (old → ``__old``, new → live, reap
-    old): the table path is missing only between two metadata renames,
-    not for the whole rewrite. A crash mid-swap leaves a ``__old`` /
-    ``__compacting`` staging dir that :func:`vacuum_table` reaps.
-
-    ``zorder_cols`` re-clusters rows within each date partition by the
-    Morton key while compacting (the Delta ``OPTIMIZE ZORDER BY`` combo:
-    one rewrite buys both fewer files and multi-column footer-stat
-    pruning) — the write already rewrites every row, so the clustering
-    sort is marginal cost.
-    """
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__old"
-    # Recover from a prior crashed compaction BEFORE starting: a stale
-    # __old would make shutil.move(path, old) nest the live table INSIDE
-    # it (shutil.move into an existing dir is a move-into, not a
-    # replace), corrupting the layout; a stale __compacting is an
-    # incomplete rewrite and is always safe to discard.
-    recover_table(path)
-    df = spark.read.parquet(path)
-    w = df.repartition("date")
-    if zorder_cols:
-        w = w.withColumn("__zkey", zorder_key(zorder_cols)).sortWithinPartitions(
-            "date", "__zkey"
-        ).drop("__zkey")
-    (
-        w.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy("date")
-        .parquet(tmp)
-    )
-    # rename-aside swap (local/HDFS rename semantics; an object store
-    # would use a transactional table format instead)
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-
-
-def recover_table(path: str) -> str | None:
-    """Repair the layout after a crashed :func:`compact_table` swap.
-
-    Crash states and their repair (the swap is: write tmp → move live
-    aside to ``__old`` → move tmp to live → reap ``__old``):
-
-    * live missing + ``__old`` present → the crash hit between the two
-      renames; ``__old`` holds the ONLY copy of committed data, so it is
-      **restored** to the table path (never deleted).
-    * live present + ``__old`` present → crash after the swap, before
-      the reap; ``__old`` is a superseded copy and is removed.
-    * ``__compacting`` present → an incomplete rewrite (never became
-      live); always safe to discard.
-
-    Returns a description of the recovery action taken, or None.
-    """
-    root = Path(path)
-    old = root.with_name(root.name + "__old")
-    tmp = root.with_name(root.name + "__compacting")
-    action = None
-    if old.exists():
-        if not root.exists():
-            shutil.move(str(old), str(root))
-            action = f"restored {old} -> {root}"
-        else:
-            shutil.rmtree(old)
-            action = f"reaped superseded {old}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-        action = (action + "; " if action else "") + f"discarded incomplete {tmp}"
-    return action
-
-
-def vacuum_table(path: str) -> list[str]:
-    """Reap orphaned write artifacts (the ``vacuum(retention_hours=0)``
-    analog for the Parquet layout; preprocess.py:205).
-
-    A killed Spark overwrite leaves ``_temporary/`` committer staging
-    trees; a crash inside :func:`compact_table`'s swap leaves
-    ``<table>__compacting`` / ``<table>__old`` siblings. None are
-    referenced by a successful read, but at 100 TB they are real storage
-    cost and confuse recursive listings. Returns the paths removed.
-
-    Safety (Delta's VACUUM never deletes committed data, neither does
-    this): staging siblings go through :func:`recover_table` first, so a
-    ``__old`` that holds the only copy of the table (crash between the
-    swap renames) is restored to the table path, never reaped.
-    """
-    root = Path(path)
-    removed: list[str] = []
-    # repair a half-finished compaction swap before touching siblings:
-    # reaps superseded copies, restores an orphaned-live __old
-    action = recover_table(path)
-    if action:
-        removed.append(action)
-    # committer staging trees anywhere under the table
-    for tmp_dir in root.rglob("_temporary"):
-        if tmp_dir.is_dir():
-            removed.append(str(tmp_dir))
-            shutil.rmtree(tmp_dir)
-    # stray in-flight task files (never committed, so not part of any read)
-    for tmp_file in root.rglob("*.tmp"):
-        removed.append(str(tmp_file))
-        tmp_file.unlink()
-    return removed
 
 
 def zorder_key(cols: tuple[str, ...], bits: int = 21):
@@ -551,117 +367,3 @@ def prune_files_eq(path: str, col: str, value) -> list[str]:
         if _os.path.relpath(f, path) not in stats:
             keep.append(f)
     return sorted(keep)
-
-
-def scd2_apply(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_col: str,
-    attr_cols: tuple[str, ...],
-    version: int,
-) -> dict:
-    """Slowly-Changing-Dimension Type 2 apply: fold an attribute-update
-    batch into a versioned dimension table that keeps FULL HISTORY —
-    each key carries one ``is_current=1`` row plus a closed row per past
-    value, bounded by ``valid_from``/``valid_to`` version stamps. The
-    dimension verb MERGE can't express: an update must CLOSE the
-    current row (set valid_to, drop currency) *and* INSERT the new one,
-    while an update that matches the current attributes exactly must be
-    a NO-OP (idempotent re-sends and unchanged-value churn don't bloat
-    history).
-
-    Table layout: ``key, attrs…, valid_from, valid_to (NULL = open),
-    is_current``. A batch key with NO existing row is a brand-new
-    dimension member: it inserts a current row (nothing to close). The
-    whole dimension is rewritten per batch — correct for
-    dimension-sized tables (the SCD2 use case); a fact-scale SCD2
-    would partition by key range and ride the partition-pruned COW path
-    like :func:`merge_table`. The rewrite uses the same crash-safe
-    rename-aside swap as :func:`compact_table` (``__compacting`` /
-    ``__old`` staging, repaired by :func:`recover_table`) — at no point
-    is the live directory the only copy.
-
-    Returns {"closed": n, "inserted": n} for audit logs (new keys count
-    as inserted, not closed).
-    """
-    from pyspark.sql import functions as F
-
-    recover_table(path)  # repair any prior crashed swap first
-    cur = spark.read.parquet(path)
-    up = updates.select(key_col, *attr_cols).distinct()
-    dup = up.groupBy(key_col).count().where(F.col("count") > 1).limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"scd2_apply: conflicting attribute rows for key "
-            f"{dup[0][0]!r} in one batch; resolve to one value per key first"
-        )
-    open_rows = cur.where(F.col("is_current") == 1)
-    closed_rows = cur.where(F.col("is_current") == 0)
-    # changed = open row whose attrs differ from the update for its key
-    diff_pred = None
-    for a in attr_cols:
-        p = ~F.col(f"cur.{a}").eqNullSafe(F.col(f"up.{a}"))
-        diff_pred = p if diff_pred is None else (diff_pred | p)
-    joined = open_rows.alias("cur").join(
-        F.broadcast(up.alias("up")), F.col(f"cur.{key_col}") == F.col(f"up.{key_col}")
-    )
-    # materialize once: consumed by the count and three downstream joins
-    changed_keys = (
-        joined.where(diff_pred)
-        .select(F.col(f"cur.{key_col}").alias(key_col))
-        .localCheckpoint()
-    )
-    # brand-new members: batch keys with no open row at all
-    new_keys = up.select(key_col).join(
-        open_rows.select(key_col), key_col, "left_anti"
-    ).localCheckpoint()
-    n_changed = changed_keys.count()
-    n_new = new_keys.count()
-    if n_changed == 0 and n_new == 0:
-        return {"closed": 0, "inserted": 0}
-    # close: stamp valid_to, drop currency — only for changed keys
-    to_close = (
-        open_rows.join(F.broadcast(changed_keys), key_col)
-        .withColumn("valid_to", F.lit(version).cast("long"))
-        .withColumn("is_current", F.lit(0))
-    )
-    # version-regression guard: closing an open row stamped at
-    # valid_from >= version would write valid_to <= valid_from — a
-    # silently corrupt history interval. The streaming path orders
-    # batches via the checkpoint, so this only trips direct callers
-    # replaying an out-of-order (or same-version, different-attrs)
-    # batch; raise rather than corrupt.
-    stale = to_close.where(F.col("valid_from") >= version).limit(1).collect()
-    if stale:
-        raise ValueError(
-            f"scd2_apply: version {version} is not after the open row for "
-            f"key {stale[0][key_col]!r} (valid_from="
-            f"{stale[0]['valid_from']}); batches must be applied in "
-            "increasing version order"
-        )
-    untouched_open = open_rows.join(F.broadcast(changed_keys), key_col, "left_anti")
-    insert_keys = changed_keys.unionByName(new_keys)
-    inserts = (
-        up.join(F.broadcast(insert_keys), key_col)
-        .withColumn("valid_from", F.lit(version).cast("long"))
-        .withColumn("valid_to", F.lit(None).cast("long"))
-        .withColumn("is_current", F.lit(1))
-    )
-    cols = cur.columns
-    out = (
-        closed_rows.select(*cols)
-        .unionByName(to_close.select(*cols))
-        .unionByName(untouched_open.select(*cols))
-        .unionByName(inserts.select(*cols))
-    )
-    # crash-safe rename-aside swap (compact_table's pattern): write the
-    # new version to __compacting, move live aside to __old, promote,
-    # reap — recover_table repairs every intermediate crash state.
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__old"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-    return {"closed": n_changed, "inserted": n_changed + n_new}

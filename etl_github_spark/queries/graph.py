@@ -421,6 +421,15 @@ def _hits_sql() -> str:
     return "".join(parts)
 
 
+def _release(df) -> None:
+    """Free the executor blocks behind an eager ``localCheckpoint``.
+    ``DataFrame.unpersist`` does not: the checkpoint lives on the RDD
+    the frame's LogicalRDD wraps, not in the cache manager. Only call
+    it once every eager checkpoint that reads ``df`` has run — the
+    lineage is truncated, so nothing can recompute it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 @query("graph_hits_bipartite", sql=_hits_sql(), tags=("graph", "iterative"))
 def graph_hits_bipartite(spark, sf_dir):
     """HITS hubs-and-authorities on the bipartite purchase graph
@@ -440,7 +449,10 @@ def graph_hits_bipartite(spark, sf_dir):
     growth cannot overflow. Per round: two broadcast-joined combinable
     aggregates + two 1-row max broadcasts — the edge list never
     re-shuffles (distinct-collapsed once, localCheckpoint-reused), and
-    the only exchanges are |nodes|-sized aggregation outputs.
+    the only exchanges are |nodes|-sized aggregation outputs. Storage
+    stays bounded across rounds: a round's two checkpoints are released
+    once the next round's first checkpoint has consumed them, so only
+    the edge list, the current round and the final scores are held.
     """
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -459,6 +471,7 @@ def graph_hits_bipartite(spark, sf_dir):
             "h", F.lit(_HITS_S).cast("long")
         )
         an = None
+        spent = []
         for _ in range(_HITS_ITERS):
             # score frames are |nodes|×16 B — broadcast them INTO the edge
             # scan so each half-round is a map-side join + one combinable
@@ -479,6 +492,8 @@ def graph_hits_bipartite(spark, sf_dir):
                 .agg(F.sum("h").cast("long").alias("a"))
                 .localCheckpoint()
             )
+            for df in spent:  # the previous round, fully consumed now
+                _release(df)
             ma = int(
                 a.agg(
                     F.greatest(
@@ -501,8 +516,11 @@ def graph_hits_bipartite(spark, sf_dir):
                 ).first()["md"]
             )
             h = hr.select("c", F.expr(f"h div {mh}").cast("long").alias("h"))
+            spent = [a, hr]
         an = an.localCheckpoint()
         h = h.localCheckpoint()
+        for df in (*spent, edges):
+            _release(df)
     top_a = (
         an.orderBy(F.col("a").desc(), "s")
         .limit(_HITS_TOP)

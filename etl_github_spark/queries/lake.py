@@ -123,21 +123,21 @@ def lake_matview_refresh(spark, sf_dir):
     tags=("lake", "merge"),
 )
 def lake_merge_upsert(spark, sf_dir):
-    """Copy-on-write MERGE (upsert), driver-checked end to end: land 90%
-    of events as the base table (ids with ``id % 10 != 0``), then merge
-    an update batch of every ``id % 5 == 0`` row with cents bumped by
-    100 — which both REPLACES existing keys and INSERTS the held-out
-    ``id % 10 == 0`` keys in one operation. The read-back per-type
-    (count, sum) must equal the oracle's closed form over the fixture
-    (all rows present; +100 exactly on the %5 keys), so superseded rows
-    surviving, double-inserts, or updates dropped by the dynamic
-    partition overwrite all diverge from the hash.
+    """MERGE (upsert), driver-checked end to end: land 90% of events as
+    a Delta table partitioned by event_type (ids with
+    ``id % 10 != 0``), then merge an update batch of every
+    ``id % 5 == 0`` row with cents bumped by 100 — which both REPLACES
+    existing keys and INSERTS the held-out ``id % 10 == 0`` keys in one
+    commit. The read-back per-type (count, sum) must equal the oracle's
+    closed form over the fixture (all rows present; +100 exactly on the
+    %5 keys), so superseded rows surviving, double-inserts, or dropped
+    updates all diverge from the hash.
 
-    The merge itself (`io/sink.py::merge_table`) rewrites only the
-    partitions the update batch touches — O(|affected partitions|),
-    the Delta ``MERGE INTO`` contract on the Parquet layout.
+    The merge itself (`io/delta_log.py::merge_delta_dv`) DV-deletes the
+    matched rows and appends their replacements with the inserts —
+    O(batch + matching rows), no data file rewritten.
     """
-    from ..io.sink import merge_table, write_table
+    from ..io.delta_log import merge_delta_dv, read_delta, write_delta
 
     e = T(spark, sf_dir, "events").select(
         "event_id",
@@ -145,15 +145,15 @@ def lake_merge_upsert(spark, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     path = _scratch("merge")
-    write_table(
+    write_delta(
         e.where(F.col("event_id") % 10 != 0), path, partition_by=("event_type",)
     )
     updates = e.where(F.col("event_id") % 5 == 0).select(
         "event_id", "event_type", (F.col("cents") + 100).alias("cents")
     )
-    merge_table(spark, path, updates, ("event_id",), partition_col="event_type")
+    merge_delta_dv(spark, path, updates, on=("event_id",))
     out = (
-        spark.read.parquet(path)
+        read_delta(spark, path)
         .groupBy("event_type")
         .agg(
             F.count("*").cast("long").alias("n_rows"),
@@ -261,10 +261,13 @@ def lake_scd2_history(spark, sf_dir):
     (the no-op rule that keeps idempotent producers from bloating
     history); everyone else keeps a single current row.
 
-    The apply itself is `io/sink.py::scd2_apply` — close + insert in
-    one pass, update batch broadcast, dimension-sized rewrite.
+    The dimension is a Delta table and the apply is
+    `streaming/cdc.py::scd2_apply` — the closing rows and the new open
+    rows land as one deletion-vector merge commit, no dimension
+    rewrite.
     """
-    from ..io.sink import scd2_apply, write_table
+    from ..io.delta_log import read_delta, write_delta
+    from ..streaming.cdc import scd2_apply
 
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     path = _scratch("scd2")
@@ -275,7 +278,7 @@ def lake_scd2_history(spark, sf_dir):
         F.lit(None).cast("long").alias("valid_to"),
         F.lit(1).alias("is_current"),
     )
-    write_table(v0, path, mode="overwrite", partition_by=())
+    write_delta(v0, path)
     changed = c.where(F.col("c_custkey") % 7 == 0).select(
         F.col("c_custkey").alias("k"), F.lit("PROMO").alias("segment")
     )
@@ -284,7 +287,7 @@ def lake_scd2_history(spark, sf_dir):
     )
     scd2_apply(spark, path, changed.unionByName(noop), "k", ("segment",), version=1)
     out = (
-        spark.read.parquet(path)
+        read_delta(spark, path)
         .groupBy("segment", "is_current")
         .agg(F.count("*").cast("long").alias("n_rows"))
     )
@@ -379,19 +382,20 @@ def lake_cdc_apply(spark, sf_dir):
     tombstones (every 7th key deleted — delete seq outranks the
     updates, so keys hit by both vanish), and absent-key deletes
     (negative keys — must be a no-op). The same batch is then applied
-    AGAIN: crash-redelivery must leave the table byte-identical, so
+    AGAIN: crash-redelivery must leave the table's rows unchanged, so
     the oracle's closed form (survivors = k%7≠0, +100 cents on k%5=0,
     segment MOVED on k%15=0) only matches if the collapse, the
     key-wide supersede, and the idempotent merge all hold.
 
-    Scale shape: the apply is partition-pruned copy-on-write
-    (`streaming/cdc.py::apply_cdc_batch`, the `io/sink.py::merge_table`
-    shape); the change batch
-    broadcasts; the rewrite touches only partitions holding changed
-    keys. At 100 TB the batch:table ratio is what the COW path is
-    built for — this query just compresses bootstrap+mutate+redeliver
-    into one verifiable cycle.
+    Scale shape: each apply is one Delta commit
+    (`streaming/cdc.py::apply_cdc_batch` → `io/delta_log.py::
+    merge_delta_dv`, upserts as the source and tombstones as its
+    ``deletes``): matched rows are DV-deleted wherever they live and
+    nothing is rewritten, so cost is O(batch + matching rows) — this
+    query just compresses bootstrap+mutate+redeliver into one
+    verifiable cycle.
     """
+    from ..io.delta_log import read_delta
     from ..streaming.cdc import apply_cdc_batch
 
     c = T(spark, sf_dir, "customer").select(
@@ -425,7 +429,7 @@ def lake_cdc_apply(spark, sf_dir):
         apply_cdc_batch(change, path, ("k",), "segment")
         apply_cdc_batch(change, path, ("k",), "segment")  # crash redelivery
         out = (
-            spark.read.parquet(path)
+            read_delta(spark, path)
             .groupBy("segment")
             .agg(
                 F.count("*").cast("long").alias("n_rows"),
@@ -451,22 +455,24 @@ def lake_cdc_apply(spark, sf_dir):
 )
 def lake_compact_roundtrip(spark, sf_dir):
     """Small-file compaction under the driver hash (S7 — the reference's
-    OPTIMIZE/compact after every ingest batch): land the events table
-    with a deliberate small-file storm in every date partition (one
-    5-way keyed repartition write — partitionBy fans each task into
-    every date dir; see the inline note), run `compact_table` (per-date
-    coalesced rewrite via the crash-safe rename-aside swap) plus
-    `vacuum_table`, and read the result back.
+    OPTIMIZE + VACUUM after every ingest batch, preprocess.py:199-206):
+    commit the events table as a Delta table partitioned by date with
+    a deliberate small-file storm in every date partition (one 5-way
+    keyed repartition write — partitionBy fans each task into every
+    date dir; see the inline note), run `optimize_delta` (per-date
+    bin-packing, one atomic commit) plus `vacuum_delta`, and read the
+    snapshot back.
     The oracle is the plain per-date rollup of the source — compaction
     is a LAYOUT operation, so any lost, duplicated, or reshuffled row
     flips the hash. The file-count contract (fewer, larger files) stays
     pinned by tests/test_lakehouse.py; this query pins the part that
     matters at 100 TB only if it's exact: content preservation.
 
-    Scale shape: the rewrite is per-date partition-pruned and
-    parallelizes across dates; read-back is an ordinary pruned scan.
+    Scale shape: bin planning is log metadata only, one job rewrites
+    every bin (one task per bin, reading just its own files), and
+    read-back is an ordinary log-listed scan.
     """
-    from ..io.sink import compact_table, read_table, vacuum_table, write_table
+    from ..io.delta_log import optimize_delta, read_delta, vacuum_delta, write_delta
 
     e = T(spark, sf_dir, "events").select(
         "event_id", "user_id", F.date_trunc("day", "ts").cast("date").alias("date")
@@ -482,11 +488,15 @@ def lake_compact_roundtrip(spark, sf_dir):
         # table content is identical as a multiset whatever the file
         # boundaries, and append-commit semantics stay pinned by
         # tests/test_lakehouse.py and T5.
-        write_table(e.repartition(5, F.pmod(F.col("event_id"), F.lit(5))), path)
-        compact_table(spark, path, max_records_per_file=1_000_000)
-        vacuum_table(path)
+        write_delta(
+            e.repartition(5, F.pmod(F.col("event_id"), F.lit(5))),
+            path,
+            partition_by=("date",),
+        )
+        optimize_delta(spark, path)
+        vacuum_delta(path, retention_seconds=0)
         out = (
-            read_table(spark, path)
+            read_delta(spark, path)
             .groupBy("date")
             .agg(
                 F.count("*").cast("long").alias("n_rows"),

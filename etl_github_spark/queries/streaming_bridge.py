@@ -351,7 +351,7 @@ def stream_heavy_hitters_replay(spark, sf_dir):
             base.where(F.col("b") == b).select("shard", "tok").coalesce(
                 1
             ).write.mode("overwrite").parquet(part)
-            shutil.move(
+            os.replace(
                 glob.glob(os.path.join(part, "part-*.parquet"))[0],
                 os.path.join(stream_dir, f"b{b}.parquet"),
             )
@@ -391,7 +391,6 @@ def _staged_event_stream(spark, sf_dir, cols, schema_ddl, root):
     to their batch oracles."""
     import glob
     import os
-    import shutil
     import time
 
     base = (
@@ -425,7 +424,7 @@ def _staged_event_stream(spark, sf_dir, cols, schema_ddl, root):
         if len(parts) != 1:  # empty or multi-file slice breaks batch order
             raise AssertionError(f"slice {b}: expected 1 staged file, got {parts}")
         dest = os.path.join(stream_dir, f"b{b}.parquet")
-        shutil.move(parts[0], dest)
+        os.replace(parts[0], dest)
         os.utime(dest, (now + 30 * b, now + 30 * b))
     return (
         spark.readStream.schema(schema_ddl)
@@ -1100,9 +1099,10 @@ def stream_scd2_replay(spark, sf_dir):
     """The streaming SCD2 dimension sink under the driver hash: replay
     the events fixture as three event-time-ordered micro-batches
     through `streaming/cdc.py::stream_scd2_sink` (foreachBatch →
-    `io/sink.py::scd2_apply`, tier = the user's latest event_type per
-    batch, version = the batch's max event-time seq) and return the
-    FULL resulting dimension — every open and closed history row.
+    `streaming/cdc.py::scd2_apply`, tier = the user's latest event_type
+    per batch, version = the batch's max event-time seq) into a Delta
+    dimension, and return the FULL resulting snapshot — every open and
+    closed history row.
 
     The oracle is the SCD2 fold written as a closed form over the
     same three slices: per user, the batch-latest tier chain
@@ -1116,15 +1116,17 @@ def stream_scd2_replay(spark, sf_dir):
     nothing, and a brand-new key in a later batch opens without
     closing anything.
 
-    At scale: each micro-batch shuffles only its own rows by key; the
-    dimension rewrite is dimension-sized by contract (scd2_apply
-    docstring) and the crash-safe rename-aside swap makes redelivered
+    At scale: each micro-batch shuffles only its own rows by key and
+    lands as one Delta commit (closing rows replace their open rows
+    through deletion vectors, new open rows append — nothing is
+    rewritten); the unchanged-value no-op rule makes redelivered
     batches idempotent — replayed here via availableNow over the same
     checkpoint dir the production job would use.
     """
     import shutil
     import tempfile
 
+    from ..io.delta_log import read_delta
     from ..streaming.cdc import stream_scd2_sink
 
     root = tempfile.mkdtemp(prefix="stream_scd2_")
@@ -1160,7 +1162,7 @@ def stream_scd2_replay(spark, sf_dir):
         q.awaitTermination()
         rows = [
             tuple(r)
-            for r in spark.read.parquet(table)
+            for r in read_delta(spark, table)
             .select("user_id", "tier", "valid_from", "valid_to", "is_current")
             .collect()
         ]
@@ -1192,7 +1194,6 @@ def _staged_sentinel_stream(spark, sf_dir, root, cols, schema_ddl, sentinels,
     'sent<i>' (the i-th sentinel)."""
     import glob
     import os
-    import shutil
     import time
 
     base = T(spark, sf_dir, "events").select(
@@ -1235,7 +1236,7 @@ def _staged_sentinel_stream(spark, sf_dir, root, cols, schema_ddl, sentinels,
         if len(parts) != 1:
             raise AssertionError(f"slice {sub}: expected 1 staged file, got {parts}")
         dest = os.path.join(stream_dir, f"f{i}.parquet")
-        shutil.move(parts[0], dest)
+        os.replace(parts[0], dest)
         os.utime(dest, (now - 60 + i, now - 60 + i))
     return (
         spark.readStream.schema(schema_ddl)
@@ -1576,7 +1577,7 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
         if len(data_files) != 1:
             raise AssertionError(f"expected 1 staged file, got {data_files}")
         now = time.time()
-        shutil.move(
+        os.replace(
             os.path.join(stage, data_files[0]),
             os.path.join(stream_dir, "f0.parquet"),
         )

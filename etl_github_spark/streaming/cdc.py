@@ -1,5 +1,5 @@
 """Change-data-capture apply: stream a (op, key, payload, seq) change
-log into the lakehouse table with exactly-once semantics.
+log into a Delta table with exactly-once semantics.
 
 `stream_merge_sink` handles the upsert-only world; real CDC feeds
 (Debezium-shaped) also carry DELETES and per-key ordering, and applying
@@ -14,30 +14,25 @@ them naively breaks in four ways this module exists to prevent:
   ``foreachBatch``; merge and delete are both idempotent under re-apply,
   so at-least-once delivery still yields exactly-once table state;
 * partition-changing updates — an update may move a row to a NEW
-  partition value, and a partition-pruned merge would leave the stale
-  copy alive in the old one. The default apply scope is key-wide
-  (purge-then-merge); ``partition_stable=True`` opts into the pruned
-  fast path when the layout guarantees keys never move.
+  partition value; the merge's key scan spans every partition, so the
+  stale copy in the old one is DV-deleted with the rest.
 
 Scale shape: each micro-batch collapses to one row per key (window over
-the batch, which is small by definition), then applies ONE fused
-partition-pruned COW cycle (victim discovery → survivor set → dynamic
-partition overwrite) — cost bounded by the partitions the batch
-touches, never the table.
+the batch, which is small by definition), then applies as ONE Delta
+commit through :func:`~etl_github_spark.io.delta_log.merge_delta_dv`
+(upserts as the merge source, tombstones as its ``deletes``) — cost
+O(batch + matching rows), no data file rewritten. The SCD2 dimension
+apply lives here too and commits the same way.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-from pathlib import Path
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..io.sink import cluster_for_write
+from ..io.delta_log import _next_version, merge_delta_dv, read_delta, write_delta
 
 #: change-log op codes (Debezium-style: create/update collapse to upsert)
 UPSERT_OPS = ("I", "U")
@@ -53,7 +48,7 @@ def _latest_per_key(batch_df: DataFrame, key_cols, seq_col: str) -> DataFrame:
     an upstream contract violation (the change-log seq is the total
     order): picking either silently would make the applied table state
     run-dependent, so it raises instead — the same conflicting-batch
-    guard :func:`~etl_github_spark.io.sink.scd2_apply` applies. Both
+    guard :func:`scd2_apply` applies. Both
     window specs share the key partitioning, so the probe costs no
     extra shuffle."""
     wk = Window.partitionBy(*key_cols)
@@ -78,14 +73,6 @@ def _latest_per_key(batch_df: DataFrame, key_cols, seq_col: str) -> DataFrame:
     return latest.drop("__rn", "__top_dups")
 
 
-def _has_data(path: str) -> bool:
-    """True when the table dir holds at least one non-artifact entry
-    (underscore = committer markers, dot = local-FS checksum files)."""
-    return os.path.isdir(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-
-
 def apply_cdc_batch(
     batch_df: DataFrame,
     path: str,
@@ -93,91 +80,34 @@ def apply_cdc_batch(
     partition_col: str,
     seq_col: str = "seq",
     op_col: str = "op",
-    partition_stable: bool = False,
 ) -> None:
-    """Apply one change-log batch to the table at ``path``.
+    """Apply one change-log batch to the Delta table at ``path``.
 
-    Collapses to the latest op per key, then deletes tombstoned keys
-    and merges surviving upserts (payload columns = everything except
-    the op/seq bookkeeping). Idempotent: re-applying the same batch
-    leaves the table unchanged.
-
-    ``partition_stable`` picks the supersede scope. The DEFAULT
-    (False) is key-wide and always correct: an update may CHANGE the
-    partition column (Debezium updates can touch any column), so stale
-    copies of the key are removed from EVERY partition (a scan to find
-    victims — the rewrite stays pruned) before the merge, and
-    tombstones likewise hunt the key wherever it lives. When the
-    caller can guarantee the partition value is an immutable function
-    of the key (the usual event-time layout), ``partition_stable=True``
-    skips the victim scan and applies everything partition-pruned —
-    the cheap path, opted into rather than silently assumed.
+    Collapses to the latest op per key; the surviving upserts (payload
+    columns = everything except the op/seq bookkeeping) are the merge
+    source and the tombstoned keys its ``deletes``, so the whole batch
+    is ONE commit. The key scan spans every partition: an upsert
+    replaces each live copy of its key wherever it lives (a
+    partition-moving update leaves no stale copy) and a tombstone
+    removes the key everywhere. Idempotent: re-applying the same batch
+    leaves the table's rows unchanged. The first batch on a path with
+    no committed version creates the table from its upserts alone,
+    partitioned by ``partition_col``.
     """
     if not batch_df.columns:
         return
     latest = _latest_per_key(batch_df, key_cols, seq_col)
     ups = latest.where(F.col(op_col).isin(*UPSERT_OPS)).drop(op_col, seq_col)
-    spark = batch_df.sparkSession
-    if not _has_data(path):
-        # first batch bootstraps the table from the upserts alone
-        # (overwrite, not errorifexists: a crashed first attempt may
-        # have left an artifact-only dir — same rule as stream_merge_sink)
-        ups.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    if _next_version(path) == 0:
+        write_delta(ups, path, partition_by=(partition_col,))
         return
-    # FUSED apply (r13, guide §2.4 "remove shuffles outright" / §1.2
-    # step 1): tombstone delete, key-wide supersede and merge previously
-    # ran as up to THREE separate COW cycles per batch (each with its
-    # own victim scan, emptiness probes, counts and rewrite — ~13 jobs,
-    # the affected partitions read and rewritten up to three times).
-    # One change batch is one logical transformation of the affected
-    # partitions, so compute the survivor set once and rewrite once.
-    # Semantics are unchanged and remain idempotent: only the latest op
-    # per key applies, a tombstone removes the key wherever it lives, an
-    # upsert replaces every prior copy of its key (partition-moving
-    # updates lose their stale copy because the OLD partition is in the
-    # affected set), absent-key deletes are no-ops, and re-applying the
-    # same batch deletes-then-reinserts identical rows (a fixpoint).
-    victims = latest.select(*key_cols).distinct()  # tombstoned ∪ superseded
-    if partition_stable:
-        # layout guarantees keys never move: the batch's own partition
-        # values bound the rewrite — no victim scan needed.
-        parts_df = latest.select(partition_col).distinct()
-    else:
-        # key-wide: find every partition any batch key currently lives
-        # in (one pruned scan, victims broadcast), plus the partitions
-        # the upserts land in.
-        hit = (
-            spark.read.parquet(path)
-            .join(F.broadcast(victims), list(key_cols))
-            .select(partition_col)
-        )
-        parts_df = hit.unionByName(ups.select(partition_col)).distinct()
-    parts = [r[0] for r in parts_df.collect()]
-    if not parts:
-        return  # no key present anywhere, nothing to insert
-    current = spark.read.parquet(path).where(F.col(partition_col).isin(parts))
-    keep = current.join(F.broadcast(victims), list(key_cols), "left_anti")
-    merged = keep.unionByName(ups.select(*keep.columns))
-    # Dynamic overwrite only replaces partitions PRESENT in `merged`; a
-    # partition whose every row was deleted must be removed explicitly.
-    # Partition values can surface
-    # as date objects on the read path but strings on the request path —
-    # compare by directory-name form.
-    kept_parts = {
-        str(r[0]) for r in merged.select(partition_col).distinct().collect()
-    }
-    (
-        cluster_for_write(merged, (partition_col,), key_cols[0])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
+    merge_delta_dv(
+        batch_df.sparkSession,
+        path,
+        ups,
+        on=key_cols,
+        deletes=latest.where(F.col(op_col) == DELETE_OP),
     )
-    for p in parts:
-        if str(p) not in kept_parts:
-            shutil.rmtree(
-                Path(path) / f"{partition_col}={p}", ignore_errors=True
-            )
 
 
 def stream_cdc_apply(
@@ -188,26 +118,18 @@ def stream_cdc_apply(
     partition_col: str,
     seq_col: str = "seq",
     op_col: str = "op",
-    partition_stable: bool = False,
 ) -> StreamingQuery:
     """Run the change-log stream into the table via ``foreachBatch``.
 
     ``Trigger.AvailableNow`` drains the backlog then stops — the same
     backfill-then-steady-state contract as the ingest pipeline; a
     long-lived deployment swaps in a processing-time trigger unchanged.
-    See :func:`apply_cdc_batch` for the ``partition_stable`` contract
-    (default handles partition-changing updates correctly).
+    Each micro-batch is one :func:`apply_cdc_batch` commit.
     """
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
-            batch_df,
-            path,
-            key_cols,
-            partition_col,
-            seq_col=seq_col,
-            op_col=op_col,
-            partition_stable=partition_stable,
+            batch_df, path, key_cols, partition_col, seq_col=seq_col, op_col=op_col
         )
 
     return (
@@ -216,6 +138,87 @@ def stream_cdc_apply(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def scd2_apply(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    key_col: str,
+    attr_cols: tuple[str, ...],
+    version: int,
+) -> dict:
+    """Slowly-Changing-Dimension Type 2 apply: fold an attribute-update
+    batch into a versioned Delta dimension table that keeps FULL
+    HISTORY — each key carries one ``is_current=1`` row plus a closed
+    row per past value, bounded by ``valid_from``/``valid_to`` version
+    stamps. An update must CLOSE the current row (set valid_to, drop
+    currency) *and* INSERT the new one, while an update that matches
+    the current attributes exactly must be a NO-OP (idempotent
+    re-sends and unchanged-value churn don't bloat history).
+
+    Table layout: ``key, attrs…, valid_from, valid_to (NULL = open),
+    is_current``. A batch key with NO open row is a brand-new
+    dimension member: it inserts a current row (nothing to close).
+    The closed versions of the changed open rows plus the new open
+    rows are applied as ONE :func:`merge_delta_dv` on
+    ``(key_col, "valid_from")``: each closing row replaces its open
+    row through a deletion vector, each new row is an insert — cost
+    O(batch + changed rows), one commit, no dimension rewrite. A batch
+    that changes nothing commits nothing.
+
+    Returns {"closed": n, "inserted": n} for audit logs (new keys count
+    as inserted, not closed).
+    """
+    cur = read_delta(spark, path)
+    up = updates.select(key_col, *attr_cols).distinct()
+    dup = up.groupBy(key_col).count().where(F.col("count") > 1).limit(1).collect()
+    if dup:
+        raise ValueError(
+            f"scd2_apply: conflicting attribute rows for key "
+            f"{dup[0][0]!r} in one batch; resolve to one value per key first"
+        )
+    open_rows = cur.where(F.col("is_current") == 1).select(
+        key_col, *[F.col(a).alias(f"__cur_{a}") for a in attr_cols], "valid_from"
+    )
+    # changed = no open row (brand-new member) or an attribute differs;
+    # materialized once: feeds the guard and both halves of the source
+    changed_pred = F.col("valid_from").isNull()
+    for a in attr_cols:
+        changed_pred = changed_pred | ~F.col(a).eqNullSafe(F.col(f"__cur_{a}"))
+    changed = up.join(open_rows, key_col, "left").where(changed_pred).localCheckpoint()
+    # version-regression guard: closing an open row stamped at
+    # valid_from >= version would write valid_to <= valid_from — a
+    # silently corrupt history interval. The streaming path orders
+    # batches via the checkpoint, so this only trips direct callers
+    # replaying an out-of-order (or same-version, different-attrs)
+    # batch; raise rather than corrupt.
+    stale = changed.where(F.col("valid_from") >= version).limit(1).collect()
+    if stale:
+        raise ValueError(
+            f"scd2_apply: version {version} is not after the open row for "
+            f"key {stale[0][key_col]!r} (valid_from="
+            f"{stale[0]['valid_from']}); batches must be applied in "
+            "increasing version order"
+        )
+    to_close = changed.where(F.col("valid_from").isNotNull()).select(
+        key_col,
+        *[F.col(f"__cur_{a}").alias(a) for a in attr_cols],
+        "valid_from",
+        F.lit(version).cast("long").alias("valid_to"),
+        F.lit(0).alias("is_current"),
+    )
+    opened = changed.select(
+        key_col,
+        *attr_cols,
+        F.lit(version).cast("long").alias("valid_from"),
+        F.lit(None).cast("long").alias("valid_to"),
+        F.lit(1).alias("is_current"),
+    )
+    out = merge_delta_dv(
+        spark, path, to_close.unionByName(opened), on=(key_col, "valid_from")
+    )
+    return {"closed": out["updated"], "inserted": out["inserted"]}
 
 
 def stream_scd2_sink(
@@ -228,40 +231,33 @@ def stream_scd2_sink(
 ) -> StreamingQuery:
     """Stream attribute updates into an SCD Type 2 dimension: every
     micro-batch collapses to the latest value per key (by ``seq``) and
-    folds through :func:`~etl_github_spark.io.sink.scd2_apply`, so the
-    dimension accumulates FULL HISTORY as the stream flows — the
-    slowly-changing-dimension maintenance loop (customer tier changes,
-    catalog recategorizations) as a checkpointed streaming job.
+    folds through :func:`scd2_apply`, so the dimension accumulates
+    FULL HISTORY as the stream flows — the slowly-changing-dimension
+    maintenance loop (customer tier changes, catalog recategorizations)
+    as a checkpointed streaming job. The first batch on a path with no
+    committed version creates the Delta table with every key open.
 
     The version stamp is the batch's max ``seq`` — derived from the
     DATA, not the batch id, so a redelivered batch stamps identically
     and scd2_apply's unchanged-value no-op rule makes the re-apply
     idempotent (exactly-once history on at-least-once delivery).
     """
-    from ..io.sink import scd2_apply
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
             return
-        from ..io.sink import recover_table
-
-        # repair any crashed scd2_apply swap BEFORE probing emptiness: a
-        # crash between its two renames leaves the live dir absent with
-        # the only copy in __old — bootstrapping over that would destroy
-        # the accumulated history on redelivery
-        recover_table(path)
         latest = _latest_per_key(batch_df, (key_col,), seq_col)
         head = latest.agg(F.max(seq_col).alias("v")).first()
         if head["v"] is None:
             return  # batch held only null seqs — nothing stampable
         ups = latest.select(key_col, *attr_cols)
-        if not _has_data(path):
+        if _next_version(path) == 0:
             boot = (
                 ups.withColumn("valid_from", F.lit(int(head["v"])).cast("long"))
                 .withColumn("valid_to", F.lit(None).cast("long"))
                 .withColumn("is_current", F.lit(1))
             )
-            boot.write.mode("overwrite").parquet(path)
+            write_delta(boot, path)
             return
         scd2_apply(
             latest.sparkSession, path, ups, key_col, attr_cols, version=int(head["v"])

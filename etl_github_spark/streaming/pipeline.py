@@ -96,23 +96,26 @@ def stream_merge_sink(
     key_cols: tuple[str, ...],
     partition_col: str = "date",
 ) -> StreamingQuery:
-    """Streaming upsert: each micro-batch is MERGEd into the lakehouse
-    table (latest version per key wins) instead of blindly appended —
-    the CDC-shaped sink a mutable source needs, which plain
+    """Streaming upsert: each micro-batch is MERGEd into the Delta table
+    (latest version per key wins) instead of blindly appended — the
+    CDC-shaped sink a mutable source needs, which plain
     ``writeStream.format("parquet")`` cannot express.
 
-    ``foreachBatch`` hands every micro-batch to the batch
-    :func:`~etl_github_spark.io.sink.merge_table`, so the sink inherits
-    its partition-pruned copy-on-write cost model; the checkpoint makes
-    redelivered batches re-apply, and merge idempotence makes that
-    re-apply a no-op — exactly-once table state on at-least-once
+    ``foreachBatch`` hands every micro-batch to
+    :func:`~etl_github_spark.io.delta_log.merge_delta_dv` — one commit,
+    matched rows DV-deleted, nothing rewritten; the first batch on a
+    path with no committed version creates the table with
+    ``write_delta``, partitioned by ``partition_col``. The checkpoint
+    makes redelivered batches re-apply, and the merge replaces each
+    key's row with the same row, so that re-apply leaves the table's
+    rows unchanged — exactly-once table state on at-least-once
     delivery. A batch may contain several versions of a key; the merge
     keeps the one with the highest event time.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as FF
 
-    from ..io.sink import merge_table
+    from ..io.delta_log import _next_version, merge_delta_dv, write_delta
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
@@ -126,22 +129,10 @@ def stream_merge_sink(
             .where(FF.col("__rn") == 1)
             .drop("__rn")
         )
-        import os
-
-        if os.path.isdir(path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(path)
-        ):
-            merge_table(latest.sparkSession, path, latest, key_cols, partition_col)
+        if _next_version(path) == 0:
+            write_delta(latest, path, partition_by=(partition_col,))
         else:
-            # First batch: plain partitioned write creates the table.
-            # Explicit overwrite, NOT the default errorifexists: if a
-            # prior attempt crashed after creating the dir with only
-            # underscore-prefixed entries (_temporary, _SUCCESS), the
-            # existence check above routes the checkpoint-redelivered
-            # batch back here, and a default-mode write would throw
-            # path-already-exists and wedge the stream. Overwriting an
-            # empty/artifact-only dir is the idempotent re-apply.
-            latest.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+            merge_delta_dv(latest.sparkSession, path, latest, on=key_cols)
 
     return (
         stream.writeStream.foreachBatch(upsert)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from etl_github_spark.gha.pipeline import ingest_files
 from etl_github_spark.gha.queries import run_analytics
-from etl_github_spark.io.sink import compact_table, read_table, vacuum_table
+from etl_github_spark.io.sink import read_table
 
 from .gha_fixture import write_fixture
 
@@ -28,59 +28,58 @@ def test_run_analytics_overwrite_sink(spark, tmp_path):
 
 
 def test_compaction_preserves_rows_and_layout(spark, tmp_path):
+    """Three hourly-style appends of the ingested watch table leave a
+    small file per append in its one date partition; OPTIMIZE packs
+    them into one file and the snapshot keeps every row."""
+    from etl_github_spark.io.delta_log import optimize_delta, read_delta, snapshot_files, write_delta
+
     paths = write_fixture(tmp_path / "in", gz=True)
     out = ingest_files(spark, paths, str(tmp_path / "lake"))
-    # three appends → many small files
-    ingest_files(spark, paths, str(tmp_path / "lake"))
-    ingest_files(spark, paths, str(tmp_path / "lake"))
-    before = read_table(spark, out["watch"])
-    n_before = before.count()
-    files_before = len(list((tmp_path / "lake" / "watch").rglob("*.parquet")))
+    watch = read_table(spark, out["watch"])
+    table = str(tmp_path / "watch_delta")
+    for i in range(3):
+        write_delta(watch.coalesce(1), table, partition_by=("date",) if i == 0 else ())
+    files_before = snapshot_files(table)
 
-    compact_table(spark, out["watch"])
+    optimize_delta(spark, table)
 
-    after = read_table(spark, out["watch"])
-    assert after.count() == n_before == 21
-    files_after = len(list((tmp_path / "lake" / "watch").rglob("*.parquet")))
-    assert files_after < files_before
-    assert files_after == 1  # one date partition × target 1 file
-    parts = {p.name for p in (tmp_path / "lake" / "watch").iterdir() if p.is_dir()}
-    assert parts == {"date=2024-02-29"}
+    assert read_delta(spark, table).count() == 3 * watch.count() == 21
+    files_after = snapshot_files(table)
+    assert len(files_before) == 3 and len(files_after) == 1
+    assert files_after[0].startswith("date=2024-02-29/")
 
 
 def test_vacuum_reaps_orphans_preserves_rows(spark, tmp_path):
-    """Simulated failed overwrite + crashed compaction swap: vacuum reaps
-    the orphans, live data untouched (parquet analog of
-    vacuum(retention_hours=0), preprocess.py:205)."""
+    """Leftovers of killed writers on a partitioned Delta table — an
+    uncommitted part file in a partition dir, a ``.stage-*`` dir and a
+    leaked commit temp file — are invisible to readers; vacuum_delta
+    reaps exactly them, keeps every committed row, and is a no-op when
+    run again (preprocess.py:205's vacuum(retention_hours=0))."""
+    import os
+
+    from etl_github_spark.io.delta_log import read_delta, vacuum_delta, write_delta
+
     paths = write_fixture(tmp_path / "in", gz=True)
     out = ingest_files(spark, paths, str(tmp_path / "lake"))
-    watch = tmp_path / "lake" / "watch"
-    n_before = read_table(spark, out["watch"]).count()
+    table = str(tmp_path / "watch_delta")
+    write_delta(read_table(spark, out["watch"]), table, partition_by=("date",))
+    n_before = read_delta(spark, table).count()
 
-    # killed overwrite → committer staging tree left behind
-    staging = watch / "_temporary" / "0" / "task_000"
-    staging.mkdir(parents=True)
-    (staging / "part-junk.parquet").write_bytes(b"not parquet")
-    # crashed compaction → half-finished sibling dirs
-    (tmp_path / "lake" / "watch__compacting").mkdir()
-    (tmp_path / "lake" / "watch__compacting" / "x").write_text("junk")
-    (tmp_path / "lake" / "watch__old").mkdir()
-    # in-flight task file never committed
-    (watch / "date=2024-02-29" / ".part-inflight.tmp").write_bytes(b"junk")
+    stray = os.path.join(table, "date=2024-02-29", "part-junk.parquet")
+    with open(stray, "wb") as fh:
+        fh.write(b"not parquet")
+    os.makedirs(os.path.join(table, ".stage-deadbeef", "date=2024-02-29"))
+    with open(os.path.join(table, "_delta_log", ".tmp-deadbeef.json"), "w") as fh:
+        fh.write("{}")
 
-    removed = vacuum_table(str(watch))
-    # one combined recovery action (superseded __old + incomplete
-    # __compacting) + the _temporary tree + the stray .tmp file
-    assert len(removed) == 3
-    assert any("reaped superseded" in r and "discarded incomplete" in r for r in removed)
-    assert not (watch / "_temporary").exists()
-    assert not (tmp_path / "lake" / "watch__compacting").exists()
-    assert not (tmp_path / "lake" / "watch__old").exists()
-    assert not list(watch.rglob("*.tmp"))
-    assert read_table(spark, out["watch"]).count() == n_before
-
-    # idempotent: second vacuum is a no-op
-    assert vacuum_table(str(watch)) == []
+    assert read_delta(spark, table).count() == n_before
+    assert vacuum_delta(table, retention_seconds=0) == [
+        ".stage-deadbeef",
+        "_delta_log/.tmp-deadbeef.json",
+        "date=2024-02-29/part-junk.parquet",
+    ]
+    assert read_delta(spark, table).count() == n_before
+    assert vacuum_delta(table, retention_seconds=0) == []
 
 
 def test_streaming_windowed_agg_end_to_end(spark, tmp_path):
@@ -115,70 +114,34 @@ def test_streaming_windowed_agg_end_to_end(spark, tmp_path):
     assert ("2024-03-01T00:00:00", "org/tools") not in rows
 
 
-def test_merge_table_upserts_only_affected_partitions(spark, tmp_path):
-    """merge_table replaces matched keys, inserts new ones, and leaves
-    partitions outside the update batch physically untouched."""
-    import os
+def test_merge_delta_dv_idempotent_reapply(spark, tmp_path):
+    """Re-applying the same update batch leaves the table's rows
+    unchanged — the retry-safety property the reference's append+retry
+    lacks."""
+    from collections import Counter
 
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import merge_table
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01"),
-            (2, "b", "2024-01-01"),
-            (3, "c", "2024-01-02"),
-            (4, "d", "2024-01-03"),
-        ],
-        ["id", "val", "date"],
-    )
-    base.write.partitionBy("date").parquet(path)
-    d1_files = sorted(os.listdir(tmp_path / "tbl" / "date=2024-01-01"))
-
-    updates = spark.createDataFrame(
-        [
-            (3, "c2", "2024-01-02"),  # update existing key
-            (5, "e", "2024-01-02"),   # insert into existing partition
-            (6, "f", "2024-01-04"),   # insert into brand-new partition
-        ],
-        ["id", "val", "date"],
-    )
-    merge_table(spark, path, updates, key_cols=("id",))
-
-    got = {
-        r["id"]: (r["val"], str(r["date"]))  # partition col type-infers to date
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        1: ("a", "2024-01-01"),
-        2: ("b", "2024-01-01"),
-        3: ("c2", "2024-01-02"),
-        4: ("d", "2024-01-03"),
-        5: ("e", "2024-01-02"),
-        6: ("f", "2024-01-04"),
-    }
-    # untouched partition: identical file listing (never rewritten)
-    assert sorted(os.listdir(tmp_path / "tbl" / "date=2024-01-01")) == d1_files
-
-
-def test_merge_table_idempotent_reapply(spark, tmp_path):
-    """Re-applying the same update batch is a no-op on row content —
-    the retry-safety property the reference's append+retry lacks."""
-    from etl_github_spark.io.sink import merge_table
+    from etl_github_spark.io.delta_log import merge_delta_dv, read_delta, write_delta
 
     path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "a", "2024-01-01")], ["id", "val", "date"]
-    ).write.partitionBy("date").parquet(path)
-    updates = spark.createDataFrame(
-        [(1, "a2", "2024-01-01")], ["id", "val", "date"]
+    write_delta(
+        spark.createDataFrame(
+            [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")], "id long, val string, date string"
+        ),
+        path,
+        partition_by=("date",),
     )
-    merge_table(spark, path, updates, key_cols=("id",))
-    merge_table(spark, path, updates, key_cols=("id",))
-    rows = spark.read.parquet(path).collect()
-    assert [(r["id"], r["val"]) for r in rows] == [(1, "a2")]
+    updates = spark.createDataFrame(
+        [(1, "a2", "2024-01-01"), (3, "c", "2024-01-03")], "id long, val string, date string"
+    )
+    merge_delta_dv(spark, path, updates, on=("id",))
+    once = Counter(tuple(r) for r in read_delta(spark, path).collect())
+    merge_delta_dv(spark, path, updates, on=("id",))
+    assert Counter(tuple(r) for r in read_delta(spark, path).collect()) == once
+    assert sorted((r["id"], r["val"]) for r in read_delta(spark, path).collect()) == [
+        (1, "a2"),
+        (2, "b"),
+        (3, "c"),
+    ]
 
 
 def test_write_table_sorted_yields_disjoint_file_ranges(spark, tmp_path):
@@ -355,116 +318,38 @@ def test_parquet_schema_evolution_merges_columns(spark, tmp_path):
 
 
 def test_compact_with_zorder_clusters_within_partition(spark, tmp_path):
-    """compact_table(zorder_cols=...) must leave each date partition's
-    row groups clustered on the z-key columns (narrow per-group ranges),
-    while preserving every row."""
-    import glob
+    """Z-ordering a partition built from 8 small unclustered appends
+    must leave its files clustered on the z-key columns (narrow
+    per-file ranges) while preserving every row."""
+    import json as _json
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from etl_github_spark.io.sink import compact_table
+    from etl_github_spark.io.delta_log import _replay, read_delta, write_delta, zorder_delta
 
     path = str(tmp_path / "t")
     df = spark.range(20000).select(
+        "id",
         F.lit("2024-01-01").alias("date"),
         F.pmod(F.xxhash64("id"), F.lit(256)).alias("x"),
         F.pmod(F.xxhash64("id", F.lit(1)), F.lit(256)).alias("y"),
     )
-    # 8 small unclustered files to compact
-    df.repartition(8).write.partitionBy("date").parquet(path)
-    compact_table(spark, path, max_records_per_file=2500, zorder_cols=("x", "y"))
+    for i in range(8):
+        write_delta(
+            df.where(F.col("id") % 8 == i).coalesce(1),
+            path,
+            partition_by=("date",) if i == 0 else (),
+        )
+    zorder_delta(spark, path, ("x", "y"), n_files=8, tiebreak="id")
 
     spans = []
-    for f in glob.glob(path + "/date=*/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            for i in range(md.row_group(rg).num_columns):
-                col = md.row_group(rg).column(i)
-                if col.path_in_schema in ("x", "y"):
-                    spans.append(col.statistics.max - col.statistics.min)
-    # unclustered row groups would span ~the full 0..255 domain on both
-    # columns; z-ordered groups must be materially narrower on average
-    assert spans and sum(spans) / len(spans) < 200
-    assert spark.read.parquet(path).count() == 20000
-
-
-def _mini_table(spark, path: str, n: int = 100):
-    from pyspark.sql import functions as F
-
-    spark.range(n).select(
-        F.lit("2024-01-01").alias("date"), F.col("id").alias("v")
-    ).write.partitionBy("date").parquet(path)
-
-
-def test_recover_table_restores_orphaned_old(spark, tmp_path):
-    """Crash between compact_table's two swap renames leaves __old as the
-    ONLY copy; vacuum must RESTORE it, never delete it (ADVICE r02)."""
-    import shutil
-
-    from etl_github_spark.io.sink import vacuum_table
-
-    path = str(tmp_path / "t")
-    _mini_table(spark, path)
-    rows_before = spark.read.parquet(path).count()
-    # simulate: live moved aside, crash before tmp -> live rename
-    shutil.move(path, path + "__old")
-    assert not (tmp_path / "t").exists()
-
-    actions = vacuum_table(path)
-    assert (tmp_path / "t").exists() and not (tmp_path / "t__old").exists()
-    assert any("restored" in a for a in actions)
-    assert spark.read.parquet(path).count() == rows_before
-
-
-def test_recover_table_reaps_superseded_old_and_tmp(spark, tmp_path):
-    """Crash after the swap (live present) leaves a superseded __old and/or
-    an incomplete __compacting: both are reaped, live data untouched."""
-    from etl_github_spark.io.sink import recover_table
-
-    path = str(tmp_path / "t")
-    _mini_table(spark, path)
-    _mini_table(spark, path + "__old", n=7)
-    _mini_table(spark, path + "__compacting", n=3)
-
-    recover_table(path)
-    assert (tmp_path / "t").exists()
-    assert not (tmp_path / "t__old").exists()
-    assert not (tmp_path / "t__compacting").exists()
-    assert spark.read.parquet(path).count() == 100
-
-
-def test_compact_table_survives_stale_staging_dirs(spark, tmp_path):
-    """A stale __old from a prior crash must not make compact_table nest
-    the live table inside it (shutil.move into an existing dir is a
-    move-INTO); compaction clears staging state first (ADVICE r02)."""
-    from etl_github_spark.io.sink import compact_table
-
-    path = str(tmp_path / "t")
-    _mini_table(spark, path)
-    _mini_table(spark, path + "__old", n=7)
-
-    compact_table(spark, path)
-    assert spark.read.parquet(path).count() == 100
-    assert not (tmp_path / "t__old").exists()
-
-
-def test_merge_table_rejects_duplicate_update_keys(spark, tmp_path):
-    """MERGE with multiple update rows per key is ambiguous (Delta errors
-    on multiple matches); merge_table must raise, not silently insert
-    every copy (ADVICE r02)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import merge_table
-
-    path = str(tmp_path / "t")
-    _mini_table(spark, path)
-    dup_updates = spark.createDataFrame(
-        [("2024-01-01", 1), ("2024-01-01", 1)], "date string, v long"
-    ).select(F.col("date"), F.col("v"))
-    with pytest.raises(ValueError, match="multiple rows"):
-        merge_table(spark, path, dup_updates, key_cols=("v",))
+    for add in _replay(path).values():
+        st = _json.loads(add["stats"])
+        spans += [st["maxValues"][c] - st["minValues"][c] for c in ("x", "y")]
+    # unclustered files would span ~the full 0..255 domain on both
+    # columns; z-ordered files must be materially narrower on average
+    assert len(spans) == 16 and sum(spans) / len(spans) < 200
+    assert read_delta(spark, path).count() == 20000
 
 
 def test_connected_components_raises_on_iteration_exhaustion(spark):
@@ -645,24 +530,27 @@ def test_bloom_sidecar_prunes_absent_keys_never_present_ones(spark, tmp_path):
 def test_scd2_apply_noop_and_idempotent(spark, tmp_path):
     """SCD2: unchanged re-sends add no history; re-applying the same
     batch after it took effect is a no-op; changed keys get exactly one
-    closed + one current row with correct version stamps."""
-    from etl_github_spark.io.sink import scd2_apply
+    closed + one current row with correct version stamps, applied as
+    ONE Delta commit (a no-op batch commits nothing)."""
+    from etl_github_spark.io.delta_log import history, read_delta, write_delta
+    from etl_github_spark.streaming.cdc import scd2_apply
 
     path = str(tmp_path / "dim")
     v0 = spark.createDataFrame(
         [(1, "A", 0, None, 1), (2, "B", 0, None, 1), (3, "A", 0, None, 1)],
         "k long, seg string, valid_from long, valid_to long, is_current int",
     )
-    v0.write.parquet(path)
+    write_delta(v0, path)
 
     ups = spark.createDataFrame(
         [(1, "Z"), (2, "B")], "k long, seg string"  # 1 changes, 2 re-sends
     )
     r = scd2_apply(spark, path, ups, "k", ("seg",), version=1)
     assert r == {"closed": 1, "inserted": 1}
+    assert [h["operation"] for h in history(path)][1:] == ["MERGE"]
     rows = {
         (x.k, x.seg, x.valid_from, x.valid_to, x.is_current)
-        for x in spark.read.parquet(path).collect()
+        for x in read_delta(spark, path).collect()
     }
     assert rows == {
         (1, "A", 0, 1, 0),   # closed old value
@@ -673,22 +561,25 @@ def test_scd2_apply_noop_and_idempotent(spark, tmp_path):
     # idempotent re-apply: the batch now matches current state everywhere
     r2 = scd2_apply(spark, path, ups, "k", ("seg",), version=2)
     assert r2 == {"closed": 0, "inserted": 0}
+    assert len(history(path)) == 2
     assert {
         (x.k, x.seg, x.valid_from, x.valid_to, x.is_current)
-        for x in spark.read.parquet(path).collect()
+        for x in read_delta(spark, path).collect()
     } == rows
 
 
 def test_scd2_apply_rejects_conflicting_batch(spark, tmp_path):
     import pytest
 
-    from etl_github_spark.io.sink import scd2_apply
+    from etl_github_spark.io.delta_log import write_delta
+    from etl_github_spark.streaming.cdc import scd2_apply
 
     path = str(tmp_path / "dim")
-    spark.createDataFrame(
+    dim = spark.createDataFrame(
         [(1, "A", 0, None, 1)],
         "k long, seg string, valid_from long, valid_to long, is_current int",
-    ).write.parquet(path)
+    )
+    write_delta(dim, path)
     bad = spark.createDataFrame([(1, "X"), (1, "Y")], "k long, seg string")
     with pytest.raises(ValueError, match="conflicting"):
         scd2_apply(spark, path, bad, "k", ("seg",), version=1)
@@ -697,13 +588,15 @@ def test_scd2_apply_rejects_conflicting_batch(spark, tmp_path):
 def test_scd2_apply_inserts_brand_new_keys(spark, tmp_path):
     """A batch key with no existing dimension row is a new member: one
     current row inserted, nothing closed — and the audit counts say so."""
-    from etl_github_spark.io.sink import scd2_apply
+    from etl_github_spark.io.delta_log import read_delta, write_delta
+    from etl_github_spark.streaming.cdc import scd2_apply
 
     path = str(tmp_path / "dim")
-    spark.createDataFrame(
+    dim = spark.createDataFrame(
         [(1, "A", 0, None, 1)],
         "k long, seg string, valid_from long, valid_to long, is_current int",
-    ).write.parquet(path)
+    )
+    write_delta(dim, path)
     ups = spark.createDataFrame(
         [(1, "Z"), (9, "N")], "k long, seg string"  # 1 changes, 9 is new
     )
@@ -711,7 +604,7 @@ def test_scd2_apply_inserts_brand_new_keys(spark, tmp_path):
     assert r == {"closed": 1, "inserted": 2}
     rows = {
         (x.k, x.seg, x.valid_from, x.valid_to, x.is_current)
-        for x in spark.read.parquet(path).collect()
+        for x in read_delta(spark, path).collect()
     }
     assert rows == {
         (1, "A", 0, 1, 0),
@@ -732,20 +625,22 @@ def test_scd2_apply_rejects_version_regression(spark, tmp_path):
     rejected apply must leave the table untouched."""
     import pytest
 
-    from etl_github_spark.io.sink import scd2_apply
+    from etl_github_spark.io.delta_log import read_delta, write_delta
+    from etl_github_spark.streaming.cdc import scd2_apply
 
     path = str(tmp_path / "dim")
-    spark.createDataFrame(
+    dim = spark.createDataFrame(
         [(1, "A", 5, None, 1)],
         "k long, seg string, valid_from long, valid_to long, is_current int",
-    ).write.parquet(path)
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
+    )
+    write_delta(dim, path)
+    before = {tuple(r) for r in read_delta(spark, path).collect()}
 
     ups = spark.createDataFrame([(1, "Z")], "k long, seg string")
     for v in (5, 4):  # same-version and out-of-order replays both reject
         with pytest.raises(ValueError, match="increasing version order"):
             scd2_apply(spark, path, ups, "k", ("seg",), version=v)
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
+    assert {tuple(r) for r in read_delta(spark, path).collect()} == before
     # a properly ordered apply still works
     r = scd2_apply(spark, path, ups, "k", ("seg",), version=6)
     assert r == {"closed": 1, "inserted": 1}
@@ -1974,6 +1869,58 @@ def test_delta_merge_dv_lifecycle(spark, tmp_path):
     assert merge_delta_dv(
         spark, table, spark.createDataFrame([], "id long, v long"), on=("id",)
     )["version"] is None
+
+
+def test_delta_merge_dv_deletes_clause(spark, tmp_path):
+    """``deletes`` is WHEN MATCHED THEN DELETE as data: tombstoned keys
+    are DV-deleted wherever they live and land in the SAME commit as the
+    upserts (one MERGE in history); deleting an absent key is a no-op
+    with no commit; a key in both frames raises."""
+    import pytest
+
+    from etl_github_spark.io.delta_log import history, merge_delta_dv, read_delta, write_delta
+
+    table = str(tmp_path / "mdel")
+    write_delta(
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40)],
+            "k long, dept string, v long",
+        ),
+        table,
+        partition_by=("dept",),
+    )
+    keys = lambda *ks: spark.createDataFrame([(k,) for k in ks], "k long")  # noqa: E731
+
+    out = merge_delta_dv(
+        spark,
+        table,
+        spark.createDataFrame([(2, "b", 21), (5, "a", 50)], "k long, dept string, v long"),
+        on=("k",),
+        deletes=keys(1, 3, 99),
+    )
+    assert out["version"] == 1
+    assert (out["updated"], out["inserted"], out["deleted"]) == (1, 1, 2)
+    assert [h["operation"] for h in history(table)] == ["WRITE", "MERGE"]
+    assert sorted(tuple(r) for r in read_delta(spark, table).collect()) == [
+        (2, "b", 21),  # moved partition: the old copy in dept=a is gone
+        (4, "b", 40),
+        (5, "a", 50),
+    ]
+
+    empty = spark.createDataFrame([], "k long, dept string, v long")
+    absent = merge_delta_dv(spark, table, empty, on=("k",), deletes=keys(1, 99))
+    assert absent["version"] is None and absent["deleted"] == 0
+    assert len(history(table)) == 2
+
+    with pytest.raises(ValueError, match="both source and deletes"):
+        merge_delta_dv(
+            spark,
+            table,
+            spark.createDataFrame([(4, "b", 41)], "k long, dept string, v long"),
+            on=("k",),
+            deletes=keys(4),
+        )
+    assert len(history(table)) == 2
 
 
 def test_delta_restore_lifecycle(spark, tmp_path):

@@ -84,6 +84,35 @@ def test_hits_scores_bounded_by_renormalization(spark):
         assert 0 <= r.score_q6 <= 3_000_000, r  # ~2x the 1e6 scale + slack
 
 
+def test_hits_storage_does_not_grow_with_rounds(spark, monkeypatch):
+    """Each HITS round checkpoints two frames; the round's checkpoints
+    must be released once the next round has consumed them, so a
+    6-round run leaves exactly as many persisted RDDs behind as a
+    3-round run (the final scores). Both outputs equal the oracle
+    unrolled to the same number of rounds (its CTEs materialized: each
+    round references the previous one twice, so inlined CTEs grow as
+    4^rounds scans)."""
+    from etl_github_spark.queries import graph
+
+    from .oracle_harness import compare
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    left = []
+    for iters in (3, 6):
+        monkeypatch.setattr(graph, "_HITS_ITERS", iters)
+        before = persisted()
+        out = graph.graph_hits_bipartite(spark, SF_ORACLE)  # held: keeps its scores
+        left.append(len(persisted() - before))
+        errors = compare(
+            spark, SF_ORACLE, "graph_hits_bipartite", lambda *_: out,
+            graph._hits_sql().replace(" AS (", " AS MATERIALIZED ("),
+        )
+        assert not errors, errors
+    assert left[0] == left[1], left
+
+
 def test_fk_orphans_covers_every_edge_and_no_orphans_in_fixture(spark):
     """All seven audited edges report, each with n_rows equal to the
     child table's count; the TPC-H-shaped fixture is referentially
@@ -694,3 +723,41 @@ def test_enc_node_round_trips_and_rejects_keys_outside_envelope(spark):
             df.select(_enc_node("k", 0).alias("e")).collect()
     nulls = spark.createDataFrame([(None,)], "k long").select(_enc_node("k", 0).alias("e"))
     assert nulls.first().e is None
+
+
+#: modules with a rename-aside publish of their OWN layout, not a table
+#: write path: module (relative to the package) -> why it is exempt
+_SWAP_EXEMPT = {
+    "io/lsh_store.py": "LSH index-store compaction swaps band dirs; "
+    "recover_compaction repairs a crash",
+    "io/ivf_store.py": "IVF-PQ index-store compaction swaps cell dirs with "
+    "the LSH store's recovery",
+    "io/matview.py": "materialized-view refresh publishes the rebuilt view "
+    "by rename",
+}
+
+
+def test_mutable_tables_have_no_copy_on_write_swap():
+    """Every mutation of an existing table commits through the Delta
+    log, so no module may bring back the copy-on-write path: a dynamic
+    partition overwrite (`partitionOverwriteMode`) or a rename-aside
+    directory swap (`__compacting` / `__old` staging dirs moved with
+    `shutil.move`). The exempt modules must still need their exemption."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "etl_github_spark"
+    pattern = re.compile(r"partitionOverwriteMode|__compacting|__old|shutil\.move")
+    hits, exempt_hit = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if pattern.search(line):
+                if rel in _SWAP_EXEMPT:
+                    exempt_hit.add(rel)
+                else:
+                    hits.append(f"{rel}:{i}: {line.strip()}")
+    assert not hits, f"copy-on-write table machinery is back: {hits}"
+    assert exempt_hit == set(_SWAP_EXEMPT), (
+        f"stale exemptions: {sorted(set(_SWAP_EXEMPT) - exempt_hit)}"
+    )

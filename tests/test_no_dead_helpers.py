@@ -26,8 +26,6 @@ KEEP = {
         "persist the shared parse",
     "etl_github_spark.gha.pipeline.ingest_urls":
         "production entry point for the real GH Archive source (needs network)",
-    "etl_github_spark.io.delta_log.vacuum_delta":
-        "Delta VACUUM, the reference's post-batch cleanup (preprocess.py:205)",
     "etl_github_spark.io.delta_log.drop_constraint":
         "inverse of add_constraint; public Delta table-property API",
     "etl_github_spark.io.formats":
@@ -47,7 +45,7 @@ KEEP = {
     "etl_github_spark.streaming.cdc.stream_cdc_apply":
         "streaming CDC sink; its batch step apply_cdc_batch is driver-checked",
     "etl_github_spark.streaming.pipeline.stream_merge_sink":
-        "streaming upsert sink over merge_table, public API",
+        "streaming upsert sink over merge_delta_dv, public API",
 }
 
 

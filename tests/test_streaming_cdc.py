@@ -28,9 +28,11 @@ def _read_changes(spark, landing):
 
 
 def _state(spark, path):
+    from etl_github_spark.io.delta_log import read_delta
+
     return {
         (r.k, r.dept, r.val)
-        for r in spark.read.parquet(path).select("k", "dept", "val").collect()
+        for r in read_delta(spark, path).select("k", "dept", "val").collect()
     }
 
 
@@ -73,6 +75,11 @@ def test_cdc_apply_end_to_end(spark, tmp_path):
 
 
 def test_cdc_redelivery_is_idempotent(spark, tmp_path):
+    """Each batch is one Delta commit, and re-applying a batch leaves
+    the table's rows unchanged."""
+    from collections import Counter
+
+    from etl_github_spark.io.delta_log import history, read_delta
     from etl_github_spark.streaming.cdc import apply_cdc_batch
 
     landing = tmp_path / "c"
@@ -92,18 +99,18 @@ def test_cdc_redelivery_is_idempotent(spark, tmp_path):
 
     apply_cdc_batch(b1, table, ("k",), "dept")
     apply_cdc_batch(b2, table, ("k",), "dept")
-    expect = _state(spark, table)
-    assert expect == {(1, "a", 11)}
-    # crash-redelivery: the SAME batch applies again → unchanged state
+    assert _state(spark, table) == {(1, "a", 11)}
+    rows = Counter(tuple(r) for r in read_delta(spark, table).collect())
+    # crash-redelivery: the SAME batch applies again → unchanged rows
     apply_cdc_batch(b2, table, ("k",), "dept")
-    assert _state(spark, table) == expect
+    assert Counter(tuple(r) for r in read_delta(spark, table).collect()) == rows
+    assert [h["operation"] for h in history(table)] == ["WRITE", "MERGE", "MERGE"]
 
 
 def test_cdc_delete_drops_emptied_partition_dir(spark, tmp_path):
-    """Deleting every row of a partition must remove its directory (the
-    delete_rows contract carries through the CDC path)."""
-    import os
-
+    """Deleting every row of a partition leaves it with no live file in
+    the snapshot and no row in a read of the table."""
+    from etl_github_spark.io.delta_log import read_delta, snapshot_files
     from etl_github_spark.streaming.cdc import apply_cdc_batch
 
     landing = tmp_path / "c"
@@ -122,7 +129,8 @@ def test_cdc_delete_drops_emptied_partition_dir(spark, tmp_path):
     apply_cdc_batch(b1, table, ("k",), "dept")
     apply_cdc_batch(b2, table, ("k",), "dept")
     assert _state(spark, table) == {(2, "rest", 2)}
-    assert not os.path.isdir(os.path.join(table, "dept=solo"))
+    assert snapshot_files(table, partition_filter={"dept": "solo"}) == []
+    assert read_delta(spark, table).where("dept = 'solo'").count() == 0
 
 
 def test_cdc_update_moving_partitions_leaves_no_stale_copy(spark, tmp_path):
@@ -155,6 +163,7 @@ def test_cdc_update_moving_partitions_leaves_no_stale_copy(spark, tmp_path):
 def test_stream_scd2_sink_accumulates_history(spark, tmp_path):
     """Streaming SCD2: batch 1 bootstraps, batch 2's changed key closes
     its old row and opens a new one while a re-sent key no-ops."""
+    from etl_github_spark.io.delta_log import history, read_delta
     from etl_github_spark.streaming.cdc import stream_scd2_sink
 
     landing = tmp_path / "c"
@@ -176,7 +185,7 @@ def test_stream_scd2_sink_accumulates_history(spark, tmp_path):
     q.awaitTermination(120)
     rows = {
         (r.k, r.seg, r.valid_from, r.valid_to, r.is_current)
-        for r in spark.read.parquet(table).collect()
+        for r in read_delta(spark, table).collect()
     }
     # version stamps are batch watermarks (max seq of the batch): the
     # bootstrap batch stamps 2, the second batch stamps 4
@@ -185,39 +194,8 @@ def test_stream_scd2_sink_accumulates_history(spark, tmp_path):
         (1, "Z", 4, None, 1),
         (2, "B", 2, None, 1),  # re-send left untouched
     }
-
-
-def test_stream_scd2_sink_recovers_crashed_swap_before_bootstrap_check(spark, tmp_path):
-    """If a prior scd2_apply crashed between its two swap renames (live
-    dir absent, only copy in __old), the sink must RESTORE it before the
-    emptiness probe — bootstrapping over it would destroy history."""
-    import shutil
-
-    from etl_github_spark.streaming.cdc import stream_scd2_sink
-
-    landing = tmp_path / "c"
-    _land(landing, "b1.json", [{"seq": 1, "k": 1, "seg": "A"}])
-    src1 = (
-        spark.readStream.schema("seq long, k long, seg string")
-        .json(str(landing))
-    )
-    table, ck1 = str(tmp_path / "dim"), str(tmp_path / "ck1")
-    stream_scd2_sink(src1, table, ck1, "k", ("seg",)).awaitTermination(120)
-    # simulate the mid-swap crash: live moved aside, promotion never ran
-    shutil.move(table, table + "__old")
-    # redelivery/next batch on a FRESH checkpoint (sees b1 + b2)
-    _land(landing, "b2.json", [{"seq": 2, "k": 1, "seg": "Z"}])
-    src2 = (
-        spark.readStream.schema("seq long, k long, seg string")
-        .json(str(landing))
-    )
-    stream_scd2_sink(src2, table, str(tmp_path / "ck2"), "k", ("seg",)).awaitTermination(120)
-    rows = {
-        (r.k, r.seg, r.valid_to, r.is_current)
-        for r in spark.read.parquet(table).collect()
-    }
-    # history survived: the batch-1 row was restored, then closed by Z
-    assert rows == {(1, "A", 2, 0), (1, "Z", None, 1)}
+    # bootstrap commit, then one MERGE for the second batch
+    assert [h["operation"] for h in history(table)] == ["WRITE", "MERGE"]
 
 
 def test_cdc_rejects_equal_winning_seq_for_key(spark, tmp_path):

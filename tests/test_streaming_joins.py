@@ -110,7 +110,9 @@ def test_stream_static_enrich_broadcasts_dim(spark, tmp_path):
 
 def test_stream_merge_sink_upserts_across_batches(spark, tmp_path):
     """Two micro-batches with overlapping keys: the table ends with the
-    latest version per key, no duplicates (streaming CDC upsert)."""
+    latest version per key, no duplicates (streaming CDC upsert): the
+    first batch creates the Delta table, the second is one MERGE."""
+    from etl_github_spark.io.delta_log import history, read_delta
     from etl_github_spark.streaming.pipeline import stream_merge_sink
 
     landing = tmp_path / "landing"
@@ -143,16 +145,19 @@ def test_stream_merge_sink_upserts_across_batches(spark, tmp_path):
     q.awaitTermination(120)
     got = {
         r["id"]: r["val"]
-        for r in spark.read.parquet(str(tmp_path / "tbl")).collect()
+        for r in read_delta(spark, str(tmp_path / "tbl")).collect()
     }
     assert got == {1: "a", 2: "b2", 3: "c"}
+    assert [h["operation"] for h in history(str(tmp_path / "tbl"))] == ["WRITE", "MERGE"]
 
 
 def test_stream_merge_sink_first_batch_redelivery_idempotent(spark, tmp_path):
     """If a prior first-batch attempt died after creating the table dir
-    with only underscore artifacts (_temporary), the redelivered batch
-    must still create the table instead of throwing path-already-exists
-    (ADVICE r02: explicit overwrite on the creation write)."""
+    but before its commit (a committer _temporary tree and an
+    uncommitted part file, no log version), the redelivered batch must
+    still create the table, and the dead attempt's file stays
+    invisible."""
+    from etl_github_spark.io.delta_log import read_delta
     from etl_github_spark.streaming.pipeline import stream_merge_sink
 
     landing = tmp_path / "landing"
@@ -161,9 +166,13 @@ def test_stream_merge_sink_first_batch_redelivery_idempotent(spark, tmp_path):
         "b1.json",
         [{"id": 1, "val": "a", "created_at": "2024-01-01T00:00:00Z", "date": "2024-01-01"}],
     )
-    # simulate the crashed first attempt: dir exists, only artifacts inside
+    # simulate the crashed first attempt: leftovers on disk, no commit
     tbl = tmp_path / "tbl"
     (tbl / "_temporary").mkdir(parents=True)
+    (tbl / "date=2024-01-01").mkdir()
+    spark.createDataFrame([(9, "dead")], "id long, val string").write.parquet(
+        str(tbl / "date=2024-01-01" / "dead")
+    )
     src = (
         spark.readStream.schema("id long, val string, created_at string, date string")
         .json(str(landing))
@@ -171,5 +180,5 @@ def test_stream_merge_sink_first_batch_redelivery_idempotent(spark, tmp_path):
     )
     q = stream_merge_sink(src, str(tbl), str(tmp_path / "ckpt"), key_cols=("id",))
     q.awaitTermination(120)
-    got = {r["id"]: r["val"] for r in spark.read.parquet(str(tbl)).collect()}
+    got = {r["id"]: r["val"] for r in read_delta(spark, str(tbl)).collect()}
     assert got == {1: "a"}
