@@ -14,14 +14,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_github_spark.queries import oracle_map, query_map
-from etl_github_spark.queries.core import flagship_popular_user_clicks
 
 SF0001 = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return flagship_popular_user_clicks(spark, SF0001)
+    return query_map()["flagship_popular_user_clicks"](spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -17,19 +17,11 @@ partition or fall back to decimal(38,s).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.tables import load_table
-from ..session import tune
-
-
-def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a fixture table on a tuned session."""
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+from ..io.tables import load_table as T  # noqa: F401  (the query modules' loader)
+from ..session import private_session
 
 
 def par(df: DataFrame, n: int | None = None) -> DataFrame:
@@ -93,44 +85,44 @@ def davg_sql(expr: str, scale: int = 2) -> str:
 _LOOP_ROWS_PER_TASK = 100_000
 
 
-@contextmanager
-def loop_shuffle(spark: SparkSession, n_rows: int):
-    """Scale-adaptive shuffle width for an iterative refinement loop
-    (CC / PageRank / LPA / BFS / k-core ... — many tiny rounds over one
-    materialized frame of known size).
+def loop_width(spark: SparkSession, n_rows: int) -> int:
+    """Partition count for an iterative loop over a materialized frame
+    of ``n_rows`` rows. The session width is sized for full scans; a
+    loop's rounds are far smaller and each exchange is its own stage
+    (5 CC rounds over a 4k-edge graph: 14.1 s at 32 partitions, 3.7 s
+    at 1). Local rounds get one task; a 100 TB edge list fans out to
+    ``rows / _LOOP_ROWS_PER_TASK`` tasks, capped at 8 waves. A loop runs
+    at this width on its own session (:func:`loop_frame`), never by
+    writing the caller's conf. Loops reduce with min/max/sum over exact
+    types, so width is layout-only."""
+    return max(1, min(int(n_rows) // _LOOP_ROWS_PER_TASK + 1,
+                      spark.sparkContext.defaultParallelism * 8))
 
-    The session-wide ``spark.sql.shuffle.partitions`` is sized for one
-    wave of full-scan work; an iterative loop re-shuffles a (usually
-    far smaller) frontier/label frame every round, and with AQE each
-    exchange becomes its own scheduled stage — at fixture scale the
-    fixed per-task/per-stage cost dominates the round (measured: 5 CC
-    rounds over a 4k-edge graph take 14.1 s at 32 shuffle partitions
-    vs 3.7 s at 1). Deriving the width from the MEASURED row count of
-    the loop's frame (guide §2: "derive from input size, not a
-    constant tuned for either local mode or the cluster") keeps local
-    rounds at single-task cost while a 100 TB edge list still fans out
-    to ``rows / _LOOP_ROWS_PER_TASK`` tasks (capped at 8 waves of the
-    cluster). Restores
-    the session value on exit — same set/restore discipline
-    `streaming_bridge._replay` uses for state-store sizing. Results
-    are partitioning-independent by construction (all loop reductions
-    here are min/max/sum over exact types), so this is layout-only.
-    """
-    sc = spark.sparkContext
-    p = max(1, min(int(n_rows) // _LOOP_ROWS_PER_TASK + 1,
-                   sc.defaultParallelism * 8))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    if p == 1:
-        # One partition leaves AQE nothing to adapt (no coalescing, no
-        # skew split within a chosen-single partition), but each
-        # exchange still becomes a separately scheduled query stage —
-        # measured 3.7 → 2.1 s over the same 5 CC rounds. Only at the
-        # provably-degenerate width; any multi-partition loop keeps AQE.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+def rebase(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``spark``: what is built on it plans
+    and runs with that session's conf (a loop on its
+    `session.private_session`, a result back on the caller's)."""
+    return DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.queryExecution().analyzed()
+        ),
+        spark,
+    )
+
+
+def loop_frame(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` on a private session at the loop width for ``n_rows``
+    rows: the loop built on it runs at that width."""
+    spark = df.sparkSession
+    return rebase(df, private_session(spark, loop_width(spark, n_rows)))
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the executor blocks behind materialized ``localCheckpoint``s.
+    ``DataFrame.unpersist`` does not: the checkpoint lives on the RDD
+    the frame's LogicalRDD wraps, not in the cache manager. Only call
+    it once every eager checkpoint that reads a frame has run — the
+    lineage is truncated, so nothing can recompute it."""
+    for df in dfs:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ._util import T, loop_shuffle, par
+from ._util import T, loop_frame, par, rebase, release
 from .dedup import JACCARD_PAIRS_SQL, dedup_jaccard_pairs
 from .registry import query
 
@@ -64,6 +64,7 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     scalar (the witness), not data — the documented exception for
     iterative algorithms.
     """
+    spark = edges.sparkSession
     # Lazily checkpoint the INPUT first: the symmetric union evaluates
     # its child twice (once per branch), and callers pass expensive edge
     # plans (LSH candidates + Jaccard verification, core-edge joins) —
@@ -74,64 +75,67 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).localCheckpoint()  # materialize the pair graph once; both the label
     # init and every iteration re-scan it.
-    # Size the loop's shuffle width from the MEASURED edge count (the
-    # count is a cached-RDD job — sym is already materialized): every
-    # round re-shuffles the label frame, and at the session's full-scan
-    # width the fixed per-task cost dominates small rounds (r13,
-    # measured 14.1 → 3.7 s over 5 rounds on the sf0.1 DBSCAN graph;
-    # see `_util.loop_shuffle`). Labels are mins over int64 ids, so the
-    # width cannot change any result.
-    spark = sym.sparkSession
+    release(edges)
+    # Size the loop's width from the MEASURED edge count (the count is
+    # a cached-RDD job — sym is already materialized): every round
+    # re-shuffles the label frame, and at the session's full-scan width
+    # the fixed per-task cost dominates small rounds (r13, measured
+    # 14.1 → 3.7 s over 5 rounds on the sf0.1 DBSCAN graph; see
+    # `_util.loop_frame`). Labels are mins over int64 ids, so the width
+    # cannot change any result.
+    sym = loop_frame(sym, sym.count())
+    # Seed labels with the first-hop neighbor min (same shuffle cost as
+    # the plain `distinct` init, but it bakes round 1 of propagation in).
+    lab = (
+        sym.groupBy(F.col("doc_a").alias("id"))
+        .agg(F.min("doc_b").alias("nb_min"))
+        .select("id", F.least("id", "nb_min").alias("label"))
+        .localCheckpoint()
+    )
+    total = lab.agg(F.sum("label")).first()[0]
     converged = False
-    with loop_shuffle(spark, sym.count()):
-        # Seed labels with the first-hop neighbor min (same shuffle cost
-        # as the plain `distinct` init, but it bakes round 1 of
-        # propagation in).
-        lab = (
-            sym.groupBy(F.col("doc_a").alias("id"))
-            .agg(F.min("doc_b").alias("nb_min"))
-            .select("id", F.least("id", "nb_min").alias("label"))
+    for _ in range(max_iters):
+        nb = (
+            sym.join(lab, sym["doc_b"] == lab["id"])
+            .groupBy("doc_a")
+            .agg(F.min("label").alias("nb_min"))
+        )
+        prop = (
+            lab.join(nb, lab["id"] == nb["doc_a"], "left")
+            .select(
+                lab["id"],
+                F.least(lab["label"], F.coalesce(nb["nb_min"], lab["label"])).alias(
+                    "label"
+                ),
+            )
+            # lazy: materialized once by the lab_new checkpoint job, then
+            # served from cache to both sides of the jump self-join —
+            # saves one driver job per round vs an eager checkpoint.
+            .localCheckpoint(eager=False)
+        )
+        jump = prop.select(
+            F.col("id").alias("j_id"), F.col("label").alias("j_label")
+        )
+        lab_new = (
+            prop.join(jump, prop["label"] == jump["j_id"], "left")
+            .select(
+                prop["id"],
+                F.least(
+                    prop["label"], F.coalesce(jump["j_label"], prop["label"])
+                ).alias("label"),
+            )
             .localCheckpoint()
         )
-        total = lab.agg(F.sum("label")).first()[0]
-        for _ in range(max_iters):
-            nb = (
-                sym.join(lab, sym["doc_b"] == lab["id"])
-                .groupBy("doc_a")
-                .agg(F.min("label").alias("nb_min"))
-            )
-            prop = (
-                lab.join(nb, lab["id"] == nb["doc_a"], "left")
-                .select(
-                    lab["id"],
-                    F.least(lab["label"], F.coalesce(nb["nb_min"], lab["label"])).alias(
-                        "label"
-                    ),
-                )
-                # lazy: materialized once by the lab_new checkpoint job, then
-                # served from cache to both sides of the jump self-join —
-                # saves one driver job per round vs an eager checkpoint.
-                .localCheckpoint(eager=False)
-            )
-            jump = prop.select(
-                F.col("id").alias("j_id"), F.col("label").alias("j_label")
-            )
-            lab_new = (
-                prop.join(jump, prop["label"] == jump["j_id"], "left")
-                .select(
-                    prop["id"],
-                    F.least(
-                        prop["label"], F.coalesce(jump["j_label"], prop["label"])
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            new_total = lab_new.agg(F.sum("label")).first()[0]
-            lab = lab_new
-            if new_total == total:  # labels are monotone non-increasing:
-                converged = True  # unchanged sum == fixpoint
-                break
-            total = new_total
+        new_total = lab_new.agg(F.sum("label")).first()[0]
+        # round consumed: its label frames are held only by lab_new's
+        # truncated lineage now, so storage stays flat in the round count
+        release(lab, prop)
+        lab = lab_new
+        if new_total == total:  # labels are monotone non-increasing:
+            converged = True  # unchanged sum == fixpoint
+            break
+        total = new_total
+    release(sym)
     if not converged:
         # Falling through silently would hand back WRONG labels on a
         # graph whose diameter exceeds the budget (deep chains). Raise:
@@ -142,7 +146,7 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
             "component diameter exceeds the iteration budget — rerun with "
             "a larger max_iters"
         )
-    return lab
+    return rebase(lab, spark)
 
 
 def _cluster_membership(spark, sf_dir) -> DataFrame:
@@ -511,36 +515,36 @@ def _dbscan_downstream(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     # Everything between the (materialized, measured) eps-graph and the
     # final corpus join is edge/node-sized — a dozen joins and group-bys
     # whose shuffles at the session's full-scan width cost more in
-    # per-task overhead than in work (r13; see `_util.loop_shuffle`).
-    # Size them from the edge count and materialize the two node-sized
-    # label frames inside the window; the corpus-sized role join stays
-    # OUTSIDE at session width (at 100 TB the corpus dwarfs the edge
-    # list, so its join must keep full-scan parallelism). Width is
-    # layout-only: every reduction here is min/count over int64.
-    spark = emb.sparkSession
-    with loop_shuffle(spark, edges.count()):
-        deg = edges.groupBy(F.col("va").alias("v")).agg(
-            F.count("*").cast("long").alias("c")
-        )
-        core = deg.where(F.col("c") >= _DB_MIN_NBRS).select("v")
-        ce = (
-            edges.join(core.withColumnRenamed("v", "va"), "va")
-            .join(core.withColumnRenamed("v", "vb"), "vb")
-            .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"))
-        )
-        comp = connected_components(ce)  # (id, label) for cores w/ core edges
-        core_lab = (
-            core.join(comp, core["v"] == comp["id"], "left")
-            .select("v", F.coalesce("label", "v").alias("cluster_id"))
-            .localCheckpoint()
-        )
-        border = (
-            edges.join(core_lab.withColumnRenamed("v", "vb"), "vb")
-            .join(core.withColumnRenamed("v", "va"), "va", "left_anti")
-            .groupBy(F.col("va").alias("v"))
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint()
-        )
+    # per-task overhead than in work (r13). Run them at the edge-count
+    # width (`_util.loop_frame`) and materialize the two node-sized
+    # label frames; the corpus-sized role join stays on the caller's
+    # session (at 100 TB the corpus dwarfs the edge list, so its join
+    # must keep full-scan parallelism). Width is layout-only: every
+    # reduction here is min/count over int64.
+    edges = loop_frame(edges, edges.count())
+    deg = edges.groupBy(F.col("va").alias("v")).agg(
+        F.count("*").cast("long").alias("c")
+    )
+    core = deg.where(F.col("c") >= _DB_MIN_NBRS).select("v")
+    ce = (
+        edges.join(core.withColumnRenamed("v", "va"), "va")
+        .join(core.withColumnRenamed("v", "vb"), "vb")
+        .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"))
+    )
+    comp = connected_components(ce)  # (id, label) for cores w/ core edges
+    core_lab = (
+        core.join(comp, core["v"] == comp["id"], "left")
+        .select("v", F.coalesce("label", "v").alias("cluster_id"))
+        .localCheckpoint()
+    )
+    border = (
+        edges.join(core_lab.withColumnRenamed("v", "vb"), "vb")
+        .join(core.withColumnRenamed("v", "va"), "va", "left_anti")
+        .groupBy(F.col("va").alias("v"))
+        .agg(F.min("cluster_id").alias("cluster_id"))
+        .localCheckpoint()
+    )
+    release(pairs, edges, comp)
     return (
         emb.select("vec_id")
         .join(core_lab.withColumnRenamed("v", "vec_id"), "vec_id", "left")

@@ -118,18 +118,12 @@ def pipeline_index_freshness(spark, sf_dir):
     from .scale_paths import _ivfpq_base_fit
 
     docs = par(T(spark, sf_dir, "documents"))
-    # Load (and tune() for) BOTH source tables on the MAIN thread before
-    # any pool work: T() applies the RUNTIME_CONF set via spark.conf.set
-    # (ADVICE r13). The pool halves still call T() (the ANN half through
-    # _ivfpq_base_fit), so their conf sets are not absent, only
-    # value-idempotent: each writes the values already in place.
-    T(spark, sf_dir, "embeddings")
     lsh_path = tempfile.mkdtemp(prefix="fresh_lsh_")
     ann_path = tempfile.mkdtemp(prefix="fresh_ann_")
 
     # The two index lifecycles are INDEPENDENT (different source tables,
-    # different store roots, and — with the pre-load above — no session
-    # conf CHANGE on either path). Running them as two concurrent
+    # different store roots, and no session conf write on either path —
+    # query code never writes conf). Running them as two concurrent
     # driver-submitted job chains (guide §2.6 "overlap independent
     # jobs") lets each half's serial driver work (sidecar writes,
     # collects, fit-round combines) back-fill the other's idle

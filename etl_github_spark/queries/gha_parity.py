@@ -24,7 +24,8 @@ so the oracles apply the same envelope filter `parse_raw_lines` uses
 envelope-less lines fall out identically on both sides; corrupt
 COUNTING reads raw lines and tests ``json_valid`` instead. Casting the
 '+00:00' ISO string to TIMESTAMP yields the same naive-UTC wall time in
-both engines (the Spark session is pinned UTC via ``tune``).
+both engines (the Spark session is pinned UTC at the session boundary,
+``session.tune``).
 """
 
 from __future__ import annotations
@@ -45,7 +46,6 @@ from ..gha.extract import (
     extract_watches,
     parse_raw_lines,
 )
-from ..session import tune
 from .registry import query
 
 #: the checked-in raw fixture — the single source both engines read.
@@ -83,7 +83,6 @@ _TS_DATE = (
 
 def _raw(spark: SparkSession) -> DataFrame:
     """Fixture lines → typed, envelope-filtered events (Spark side)."""
-    tune(spark)  # pin session TZ to UTC for the timestamp columns
     return parse_raw_lines(spark.read.text(FIXTURE))
 
 
@@ -186,7 +185,6 @@ def gha_corrupt_count(spark, sf_dir):
     by each engine's JSON parser. Valid-but-envelope-less lines (e.g. ``{{}}``) are NOT
     corrupt on either side; they fall to the envelope filter instead.
     """
-    tune(spark)
     lines = spark.read.text(FIXTURE)
     return (
         _parsed(lines, "value")
@@ -294,7 +292,6 @@ def gha_manifest_hours(spark, sf_dir):
     Scale shape: |hours| rows — pure metadata; at any corpus size the
     manifest stays a generate-then-broadcast frame.
     """
-    tune(spark)
     return spark.sql(
         f"""
         SELECT t AS hour_ts,
@@ -345,7 +342,6 @@ def gha_ingest_roundtrip(spark, sf_dir):
     from ..gha.pipeline import ingest_files
     from ..io.sink import read_table
 
-    tune(spark)
     out = tempfile.mkdtemp(prefix="gha_rt_")
     try:
         ingest_files(spark, [FIXTURE], out, mode="overwrite")

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import T, loop_shuffle
+from ._util import T, loop_frame, rebase, release
 from .registry import query
 
 _SCALE = 10**12  # fixed-point rank mass (total graph mass = _SCALE)
@@ -115,61 +115,60 @@ def graph_pagerank_purchases(spark, sf_dir):
         # work; the loop below only re-reads this materialized frame
         .localCheckpoint()
     )
-    # Rounds are |nodes|-sized aggregates and joins; size their shuffle
-    # width from the measured edge count instead of the session's
-    # full-scan width (`_util.loop_shuffle`). Fixed-point ranks are
-    # order-free, so width is layout-only.
-    with loop_shuffle(spark, edges.count()):
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=False)
+    # Rounds are |nodes|-sized aggregates and joins; run them at the
+    # width of the measured edge count (`_util.loop_frame`), not the
+    # session's full-scan width. Fixed-point ranks are order-free.
+    edges = loop_frame(edges, edges.count())
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
+    ncnt = nodes.agg(F.count("*").cast("long").alias("n"))
+    ranks = nodes.join(F.broadcast(ncnt)).select(
+        "node", F.expr(f"{_SCALE} div n").cast("long").alias("r")
+    )
+    spent = [edges, nodes]
+    for _ in range(_ITERS):
+        ranks = ranks.localCheckpoint(eager=False)
+        spent.append(ranks)
+        dang = (
+            ranks.join(
+                F.broadcast(deg.withColumnRenamed("src", "node")), "node", "left"
+            )
+            .where(F.col("outdeg").isNull())
+            .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm"))
         )
-        deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
-        ncnt = nodes.agg(F.count("*").cast("long").alias("n"))
-        ranks = nodes.join(F.broadcast(ncnt)).select(
-            "node", F.expr(f"{_SCALE} div n").cast("long").alias("r")
+        # rank/degree frames are |nodes|×16 B — broadcast them INTO the
+        # edge scan (the HITS rule): each round becomes a map-side join
+        # plus one combinable aggregate instead of re-shuffling the
+        # (much larger) edge list; beyond broadcastable node counts a
+        # deployment drops the hints and AQE plans the shuffle join.
+        inm = (
+            edges.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")
+            .join(F.broadcast(deg), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.expr("r div outdeg")).cast("long").alias("m"))
+            .withColumnRenamed("dst", "node")
         )
-        for _ in range(_ITERS):
-            ranks = ranks.localCheckpoint(eager=False)
-            dang = (
-                ranks.join(
-                    F.broadcast(deg.withColumnRenamed("src", "node")), "node", "left"
+        ranks = (
+            nodes.join(F.broadcast(ncnt))
+            .join(F.broadcast(dang))
+            .join(inm, "node", "left")
+            .select(
+                "node",
+                F.expr(
+                    f"(15 * ({_SCALE} div n)) div 100"
+                    " + (85 * (coalesce(m, 0) + (dm div n))) div 100"
                 )
-                .where(F.col("outdeg").isNull())
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm"))
+                .cast("long")
+                .alias("r"),
             )
-            # rank/degree frames are |nodes|×16 B — broadcast them INTO the
-            # edge scan (the HITS rule): each round becomes a map-side join
-            # plus one combinable aggregate instead of re-shuffling the
-            # (much larger) edge list; beyond broadcastable node counts a
-            # deployment drops the hints and AQE plans the shuffle join.
-            inm = (
-                edges.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")
-                .join(F.broadcast(deg), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.expr("r div outdeg")).cast("long").alias("m"))
-                .withColumnRenamed("dst", "node")
-            )
-            ranks = (
-                nodes.join(F.broadcast(ncnt))
-                .join(F.broadcast(dang))
-                .join(inm, "node", "left")
-                .select(
-                    "node",
-                    F.expr(
-                        f"(15 * ({_SCALE} div n)) div 100"
-                        " + (85 * (coalesce(m, 0) + (dm div n))) div 100"
-                    )
-                    .cast("long")
-                    .alias("r"),
-                )
-            )
-        # eager: pull every round's execution inside the loop-width
-        # scope (lazy plans would otherwise run at the final action,
-        # after the width is restored)
-        ranks = ranks.localCheckpoint()
+        )
+    ranks = rebase(ranks.localCheckpoint(), spark)  # runs every round
+    release(*spent)
     return (
         ranks.orderBy(F.col("r").desc(), "node")
         .limit(_TOP)
@@ -358,18 +357,20 @@ def graph_kcore_peel(spark, sf_dir):
     ).localCheckpoint()
     # peel rounds at edge-count-derived width (the pagerank note);
     # degree counts are order-free, so width is layout-only
-    with loop_shuffle(spark, e.count()):
-        for _ in range(_KCORE_ROUNDS):
-            deg = e.groupBy("u").agg(F.count("*").alias("deg"))
-            keep = deg.where(F.col("deg") >= _KCORE_K).select("u")
-            e = (
-                e.join(keep, "u")
-                .join(keep.withColumnRenamed("u", "v"), "v")
-                .select("u", "v")
-                .localCheckpoint(eager=False)
-            )
-        # eager: pull every round's execution inside the loop-width scope
-        e = e.localCheckpoint()
+    e = loop_frame(e, e.count())
+    spent = [e]
+    for _ in range(_KCORE_ROUNDS):
+        deg = e.groupBy("u").agg(F.count("*").alias("deg"))
+        keep = deg.where(F.col("deg") >= _KCORE_K).select("u")
+        e = (
+            e.join(keep, "u")
+            .join(keep.withColumnRenamed("u", "v"), "v")
+            .select("u", "v")
+            .localCheckpoint(eager=False)
+        )
+        spent.append(e)
+    e = rebase(e.localCheckpoint(), spark)  # runs every round
+    release(*spent)
     return e.groupBy("u").agg(F.count("*").cast("long").alias("core_deg")).select(
         F.col("u").alias("part_id"), "core_deg"
     )
@@ -421,15 +422,6 @@ def _hits_sql() -> str:
     return "".join(parts)
 
 
-def _release(df) -> None:
-    """Free the executor blocks behind an eager ``localCheckpoint``.
-    ``DataFrame.unpersist`` does not: the checkpoint lives on the RDD
-    the frame's LogicalRDD wraps, not in the cache manager. Only call
-    it once every eager checkpoint that reads ``df`` has run — the
-    lineage is truncated, so nothing can recompute it."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 @query("graph_hits_bipartite", sql=_hits_sql(), tags=("graph", "iterative"))
 def graph_hits_bipartite(spark, sf_dir):
     """HITS hubs-and-authorities on the bipartite purchase graph
@@ -466,61 +458,59 @@ def graph_hits_bipartite(spark, sf_dir):
     )
     # loop rounds at edge-count-derived width (the pagerank note);
     # fixed-point scores are order-free, so width is layout-only
-    with loop_shuffle(spark, edges.count()):
-        h = edges.select("c").distinct().withColumn(
-            "h", F.lit(_HITS_S).cast("long")
+    edges = loop_frame(edges, edges.count())
+    h = edges.select("c").distinct().withColumn(
+        "h", F.lit(_HITS_S).cast("long")
+    )
+    an = None
+    spent = []
+    for _ in range(_HITS_ITERS):
+        # score frames are |nodes|×16 B — broadcast them INTO the edge
+        # scan so each half-round is a map-side join + one combinable
+        # aggregate, not an edge-list shuffle (beyond broadcastable node
+        # counts a deployment drops the hint and lets AQE pick the
+        # shuffle join; the recurrence is identical either way).
+        # Each half-round's sum frame is EAGERLY checkpointed before
+        # its 1-row max is taken (r14): the former lazy form left the
+        # edge-sized aggregate inside BOTH the max's broadcast subtree
+        # and the normalize join, so every half-round ran its edge
+        # pass twice (guide §7.2 duplicated subtrees; 5.4 → 2.3 s).
+        # The max then collects driver-side — one tiny job over the
+        # checkpointed node frame instead of a broadcast-join plan;
+        # `div` on int64 is the identical truncating op either way.
+        a = (
+            edges.join(F.broadcast(h), "c")
+            .groupBy("s")
+            .agg(F.sum("h").cast("long").alias("a"))
+            .localCheckpoint()
         )
-        an = None
-        spent = []
-        for _ in range(_HITS_ITERS):
-            # score frames are |nodes|×16 B — broadcast them INTO the edge
-            # scan so each half-round is a map-side join + one combinable
-            # aggregate, not an edge-list shuffle (beyond broadcastable node
-            # counts a deployment drops the hint and lets AQE pick the
-            # shuffle join; the recurrence is identical either way).
-            # Each half-round's sum frame is EAGERLY checkpointed before
-            # its 1-row max is taken (r14): the former lazy form left the
-            # edge-sized aggregate inside BOTH the max's broadcast subtree
-            # and the normalize join, so every half-round ran its edge
-            # pass twice (guide §7.2 duplicated subtrees; 5.4 → 2.3 s).
-            # The max then collects driver-side — one tiny job over the
-            # checkpointed node frame instead of a broadcast-join plan;
-            # `div` on int64 is the identical truncating op either way.
-            a = (
-                edges.join(F.broadcast(h), "c")
-                .groupBy("s")
-                .agg(F.sum("h").cast("long").alias("a"))
-                .localCheckpoint()
-            )
-            for df in spent:  # the previous round, fully consumed now
-                _release(df)
-            ma = int(
-                a.agg(
-                    F.greatest(
-                        F.expr(f"max(a) div {_HITS_S}"), F.lit(1)
-                    ).alias("md")
-                ).first()["md"]
-            )
-            an = a.select("s", F.expr(f"a div {ma}").cast("long").alias("a"))
-            hr = (
-                edges.join(F.broadcast(an), "s")
-                .groupBy("c")
-                .agg(F.sum("a").cast("long").alias("h"))
-                .localCheckpoint()
-            )
-            mh = int(
-                hr.agg(
-                    F.greatest(
-                        F.expr(f"max(h) div {_HITS_S}"), F.lit(1)
-                    ).alias("md")
-                ).first()["md"]
-            )
-            h = hr.select("c", F.expr(f"h div {mh}").cast("long").alias("h"))
-            spent = [a, hr]
-        an = an.localCheckpoint()
-        h = h.localCheckpoint()
-        for df in (*spent, edges):
-            _release(df)
+        release(*spent)  # the previous round, fully consumed now
+        ma = int(
+            a.agg(
+                F.greatest(
+                    F.expr(f"max(a) div {_HITS_S}"), F.lit(1)
+                ).alias("md")
+            ).first()["md"]
+        )
+        an = a.select("s", F.expr(f"a div {ma}").cast("long").alias("a"))
+        hr = (
+            edges.join(F.broadcast(an), "s")
+            .groupBy("c")
+            .agg(F.sum("a").cast("long").alias("h"))
+            .localCheckpoint()
+        )
+        mh = int(
+            hr.agg(
+                F.greatest(
+                    F.expr(f"max(h) div {_HITS_S}"), F.lit(1)
+                ).alias("md")
+            ).first()["md"]
+        )
+        h = hr.select("c", F.expr(f"h div {mh}").cast("long").alias("h"))
+        spent = [a, hr]
+    an = rebase(an.localCheckpoint(), spark)
+    h = rebase(h.localCheckpoint(), spark)
+    release(*spent, edges)
     top_a = (
         an.orderBy(F.col("a").desc(), "s")
         .limit(_HITS_TOP)
@@ -597,40 +587,35 @@ def graph_bfs_shortest_paths(spark, sf_dir, max_hops: int = 4):
         # work; everything after iterates over this materialized frame
         .localCheckpoint()
     )
-    # Size every round's shuffle from the MEASURED edge count (the count
-    # is a cached-RDD job — und is already materialized; see
-    # `_util.loop_shuffle`): at the session's full-scan width the fixed
+    # Rounds run at the width the MEASURED edge count calls for (the
+    # pagerank note): at the session's full-scan width the fixed
     # per-task cost dominates the tiny frontier rounds. Distances are
     # unique per (node, hop), so width is layout-only.
-    with loop_shuffle(spark, und.count() * 2):
-        edges = (
-            und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            # hash-partition ONCE by the join key: the checkpointed frame
-            # keeps its outputPartitioning, so every round's frontier⋈edges
-            # join exchanges only the (small) frontier side — without this
-            # the full edge list re-shuffles every round and the whole BFS
-            # scales in O(rounds · edges) shuffle volume (measured 9.4× on
-            # the 10× probe before; edges move once after).
-            .repartition(F.col("a"))
-            .localCheckpoint(eager=False)
+    und = loop_frame(und, und.count() * 2)
+    edges = und.unionAll(
+        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).localCheckpoint(eager=False)
+    visited = und.sparkSession.createDataFrame([("C1", 0)], "node string, dist int")
+    frontier = visited
+    spent = [und, edges]
+    for h in range(1, max_hops + 1):
+        nbrs = (
+            frontier.join(edges, frontier.node == edges.a)
+            .select(F.col("b").alias("node"))
+            .distinct()
         )
-
-        visited = spark.createDataFrame([("C1", 0)], "node string, dist int")
-        frontier = visited
-        for h in range(1, max_hops + 1):
-            nbrs = (
-                frontier.join(edges, frontier.node == edges.a)
-                .select(F.col("b").alias("node"))
-                .distinct()
-            )
-            new = nbrs.join(visited, "node", "left_anti").select(
-                "node", F.lit(h).cast("int").alias("dist")
-            )
-            new = new.localCheckpoint()  # materialize: reused as frontier AND union arm
-            if new.isEmpty():
-                break
-            visited = visited.unionAll(new).localCheckpoint(eager=False)
-            frontier = new
+        new = nbrs.join(visited, "node", "left_anti").select(
+            "node", F.lit(h).cast("int").alias("dist")
+        )
+        new = new.localCheckpoint()  # materialize: reused as frontier AND union arm
+        spent.append(new)
+        if new.isEmpty():
+            break
+        visited = visited.unionAll(new).localCheckpoint(eager=False)
+        spent.append(visited)
+        frontier = new
+    visited = rebase(visited.localCheckpoint(), spark)  # runs every round
+    release(*spent)
     return visited
 
 
@@ -746,9 +731,8 @@ def _lpa_state(spark, sf_dir, rounds: int = 3):
     graph-shaped sibling).
 
     Scale shape: per round ONE join of the label frame against the
-    edge list (edges hash-partitioned ONCE by join key and
-    localCheckpointed — the BFS lesson: without it every round
-    re-shuffles the full edge list) plus a (node, label) count and a
+    edge list (labels broadcast into the localCheckpointed edge scan,
+    so the edge list never re-shuffles) plus a (node, label) count and a
     sort-free min(struct(-n, label)) argmax keyed on node — one
     aggregate, no per-round partition sort. Per-round shuffle is
     O(edges);
@@ -775,56 +759,56 @@ def _lpa_state(spark, sf_dir, rounds: int = 3):
         # ein) — without this each reference re-ran the whole join
         .localCheckpoint()
     )
-    # loop rounds at edge-count-derived width (the pagerank note);
-    # min-struct label votes are order-free, so width is layout-only
-    with loop_shuffle(spark, und.count() * 2):
-        edges = (
-            und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            # checkpoint only — with labels broadcast into the edge scan
-            # each round, edges never join-shuffle, so pre-partitioning by
-            # src would be a wasted exchange (contrast BFS, whose frontier
-            # join is shuffle-planned)
-            .localCheckpoint(eager=False)
+    # loop rounds at the session width (the pagerank note; the explicit
+    # dst repartition below is an edge-sized exchange either way)
+    edges = (
+        und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        # checkpoint only — with labels broadcast into the edge scan
+        # each round, edges never join-shuffle, so pre-partitioning by
+        # src would be a wasted exchange
+        .localCheckpoint(eager=False)
+    )
+    labels = (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+        .localCheckpoint(eager=False)
+    )
+    spent = [labels]
+    for _ in range(rounds):
+        # label frame is |nodes|×2 longs — broadcast it INTO the edge
+        # scan (the pagerank/HITS rule); beyond broadcastable node
+        # counts a deployment drops the hint and AQE plans the
+        # shuffle. The explicit dst repartition lets BOTH of the
+        # round's aggregates share ONE exchange (hash(dst) satisfies
+        # the (dst, label) clustering — guide §2.4 "two operations
+        # keyed the same way can share one exchange"); without it
+        # each round shuffled the vote rows twice (r14, −14%/round).
+        votes = (
+            edges.join(F.broadcast(labels), edges.src == labels.node)
+            .repartition(F.col("dst"))
+            .groupBy(F.col("dst").alias("node2"), "label")
+            .agg(F.count("*").alias("n"))
         )
+        # argmax by (n desc, label asc) as ONE sort-free aggregate:
+        # min(struct(-n, label)) — same semantics as the oracle's
+        # row_number window, without the per-round partition sort
         labels = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
+            votes.groupBy("node2")
+            .agg(
+                F.min(
+                    F.struct((-F.col("n")).alias("nn"), F.col("label"))
+                ).alias("m")
+            )
+            .select(
+                F.col("node2").alias("node"), F.col("m.label").alias("label")
+            )
             .localCheckpoint(eager=False)
         )
-        for _ in range(rounds):
-            # label frame is |nodes|×2 longs — broadcast it INTO the edge
-            # scan (the pagerank/HITS rule); beyond broadcastable node
-            # counts a deployment drops the hint and AQE plans the
-            # shuffle. The explicit dst repartition lets BOTH of the
-            # round's aggregates share ONE exchange (hash(dst) satisfies
-            # the (dst, label) clustering — guide §2.4 "two operations
-            # keyed the same way can share one exchange"); without it
-            # each round shuffled the vote rows twice (r14, −14%/round).
-            votes = (
-                edges.join(F.broadcast(labels), edges.src == labels.node)
-                .repartition(F.col("dst"))
-                .groupBy(F.col("dst").alias("node2"), "label")
-                .agg(F.count("*").alias("n"))
-            )
-            # argmax by (n desc, label asc) as ONE sort-free aggregate:
-            # min(struct(-n, label)) — same semantics as the oracle's
-            # row_number window, without the per-round partition sort
-            labels = (
-                votes.groupBy("node2")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("n")).alias("nn"), F.col("label"))
-                    ).alias("m")
-                )
-                .select(
-                    F.col("node2").alias("node"), F.col("m.label").alias("label")
-                )
-                .localCheckpoint(eager=False)
-            )
-        # eager: pull every round's execution inside the loop-width scope
-        labels = labels.localCheckpoint()
+        spent.append(labels)
+    labels = labels.localCheckpoint()  # runs every round; the rounds are spent after
+    release(*spent)
     return und, edges, labels
 
 
@@ -1168,79 +1152,81 @@ def graph_personalized_pagerank(spark, sf_dir):
     )
     # loop rounds at edge-count-derived width (the pagerank note);
     # fixed-point ranks are order-free, so width is layout-only
-    with loop_shuffle(spark, edges.count()):
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=False)
+    edges = loop_frame(edges, edges.count())
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
+    seeds = (
+        T(edges.sparkSession, sf_dir, "customer")
+        .where(F.col("c_nationkey") == 1)
+        .select(
+            F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias("node")
         )
-        deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
-        seeds = (
-            T(spark, sf_dir, "customer")
-            .where(F.col("c_nationkey") == 1)
+        .distinct()
+        .join(nodes, "node")  # only seeds that exist in the graph
+        .select("node", F.lit(1).alias("is_seed"))
+        .localCheckpoint(eager=False)
+    )
+    kcnt = seeds.agg(F.count("*").cast("long").alias("k"))
+    if kcnt.first()["k"] == 0:
+        # fail loudly: k = 0 would otherwise surface as an ANSI
+        # divide-by-zero deep inside the teleport expression
+        raise ValueError(
+            "personalized pagerank: seed cohort (nation-1 customers with "
+            "purchases) is empty in this fixture — choose another cohort"
+        )
+    base = nodes.join(F.broadcast(seeds), "node", "left").localCheckpoint(
+        eager=False
+    )
+    ranks = base.join(F.broadcast(kcnt)).select(
+        "node",
+        F.when(F.col("is_seed").isNotNull(), F.expr(f"{_SCALE} div k"))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("r"),
+    )
+    spent = [edges, nodes, seeds, base]
+    for _ in range(_ITERS):
+        ranks = ranks.localCheckpoint(eager=False)
+        spent.append(ranks)
+        dang = (
+            ranks.join(
+                F.broadcast(deg.withColumnRenamed("src", "node")), "node", "left"
+            )
+            .where(F.col("outdeg").isNull())
+            .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm"))
+        )
+        inm = (
+            edges.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")
+            .join(F.broadcast(deg), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.expr("r div outdeg")).cast("long").alias("m"))
+            .withColumnRenamed("dst", "node")
+        )
+        ranks = (
+            base.join(F.broadcast(kcnt))
+            .join(F.broadcast(dang))
+            .join(inm, "node", "left")
             .select(
-                F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias("node")
-            )
-            .distinct()
-            .join(nodes, "node")  # only seeds that exist in the graph
-            .select("node", F.lit(1).alias("is_seed"))
-            .localCheckpoint(eager=False)
-        )
-        kcnt = seeds.agg(F.count("*").cast("long").alias("k"))
-        if kcnt.first()["k"] == 0:
-            # fail loudly: k = 0 would otherwise surface as an ANSI
-            # divide-by-zero deep inside the teleport expression
-            raise ValueError(
-                "personalized pagerank: seed cohort (nation-1 customers with "
-                "purchases) is empty in this fixture — choose another cohort"
-            )
-        base = nodes.join(F.broadcast(seeds), "node", "left").localCheckpoint(
-            eager=False
-        )
-        ranks = base.join(F.broadcast(kcnt)).select(
-            "node",
-            F.when(F.col("is_seed").isNotNull(), F.expr(f"{_SCALE} div k"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("r"),
-        )
-        for _ in range(_ITERS):
-            ranks = ranks.localCheckpoint(eager=False)
-            dang = (
-                ranks.join(
-                    F.broadcast(deg.withColumnRenamed("src", "node")), "node", "left"
+                "node",
+                F.when(
+                    F.col("is_seed").isNotNull(),
+                    F.expr(
+                        f"(15 * ({_SCALE} div k)) div 100"
+                        " + (85 * (coalesce(m, 0) + dm div k)) div 100"
+                    ),
                 )
-                .where(F.col("outdeg").isNull())
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dm"))
+                .otherwise(F.expr("(85 * coalesce(m, 0)) div 100"))
+                .cast("long")
+                .alias("r"),
             )
-            inm = (
-                edges.join(F.broadcast(ranks.withColumnRenamed("node", "src")), "src")
-                .join(F.broadcast(deg), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.expr("r div outdeg")).cast("long").alias("m"))
-                .withColumnRenamed("dst", "node")
-            )
-            ranks = (
-                base.join(F.broadcast(kcnt))
-                .join(F.broadcast(dang))
-                .join(inm, "node", "left")
-                .select(
-                    "node",
-                    F.when(
-                        F.col("is_seed").isNotNull(),
-                        F.expr(
-                            f"(15 * ({_SCALE} div k)) div 100"
-                            " + (85 * (coalesce(m, 0) + dm div k)) div 100"
-                        ),
-                    )
-                    .otherwise(F.expr("(85 * coalesce(m, 0)) div 100"))
-                    .cast("long")
-                    .alias("r"),
-                )
-            )
-        # eager: pull every round's execution inside the loop-width scope
-        ranks = ranks.localCheckpoint()
+        )
+    ranks = rebase(ranks.localCheckpoint(), spark)  # runs every round
+    release(*spent)
     return (
         ranks.where((F.col("r") > 0) & F.col("node").startswith("S"))
         .orderBy(F.col("r").desc(), "node")

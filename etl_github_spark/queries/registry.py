@@ -25,10 +25,13 @@ Oracle-parity rules (see SURVEY.md §5 and the driver contract):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -62,7 +65,17 @@ def query(name: str, sql: str | None = None, tags: tuple[str, ...] = ()):  # dec
 
 
 def query_map() -> dict[str, QueryFn]:
-    return {n: d.fn for n, d in QUERIES.items()}
+    """The driver boundary: each query first tunes the session it is
+    handed. ``QUERIES[name].fn`` stays raw, for tuned sessions."""
+
+    def tuned(fn: QueryFn) -> QueryFn:
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(tune(spark), sf_dir)
+
+        return run
+
+    return {n: tuned(d.fn) for n, d in QUERIES.items()}
 
 
 def oracle_map() -> dict[str, str]:

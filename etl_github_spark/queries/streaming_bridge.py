@@ -14,16 +14,13 @@ batch query that happens to share the SQL shape (the same move
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import functions as F
 
+from ..session import private_session
 from ._util import T
 from .registry import query
 
-#: unique-but-deterministic memory-sink names (queries may run several
-#: times per session; timestamps/uuids would break replay determinism).
-_SINK_IDS = itertools.count()
+_STATE_PARTS = 4  # state-store shards of a bounded fixture replay
 
 
 @query(
@@ -56,21 +53,18 @@ def stream_hourly_counts_replay(spark, sf_dir):
     integer-truncates to micros exactly like the batch loader
     (`io/tables.py`), so streaming and batch see identical timestamps.
     """
-    stream = _events_stream(spark, sf_dir)
+    stream = _events_stream(private_session(spark, _STATE_PARTS), sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("w.start").alias("hour_start"), "event_type", "n")
     )
-    rows = [tuple(r) for r in _replay(spark, agg, "stream_hourly_replay")]
+    rows = [tuple(r) for r in _replay(agg, "stream_hourly_replay")]
     return spark.createDataFrame(rows, "hour_start timestamp, event_type string, n long")
 
 
-def _replay(
-    spark, agg_df, sink_prefix: str, mode: str = "complete",
-    state_parts: int | None = None,
-):
+def _replay(agg_df, sink: str, mode: str = "complete"):
     """Run a streaming aggregation to a memory sink with AvailableNow
     and return the materialized rows. Complete mode (default) holds the
     full aggregation state, so a bounded replay converges exactly to
@@ -81,39 +75,26 @@ def _replay(
     APPENDS each batch's updates to the sink: the caller sees the whole
     update history and reduces it to the final state itself.
 
-    State-partition count: stateful operators shard their state store
-    by `spark.sql.shuffle.partitions`, FIXED at query start. A bounded
-    fixture replay with the session default (32) pays 32 tasks × N
-    state stores × N micro-batches of pure checkpoint overhead for a
-    few MB of state, so the replay pins it to 4 for the stream's
-    lifetime and restores the session value after. Callers whose
-    per-batch work is Python state code over MANY groups (the
-    applyInPandasWithState bridges) pass a higher ``state_parts`` —
-    state partitions are also the Python-worker parallelism there, and
-    4 workers serializing thousands of per-group calls dominates the
-    replay (attribution: 4.3 → 3.3 s warm at 16). Production unbounded
-    runs size this to the cluster (it is a per-query knob, not a
-    semantic one — results are partition-count-invariant)."""
-    sink = f"{sink_prefix}_{next(_SINK_IDS)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts or 4))
+    ``agg_df`` is built on a `session.private_session` child, which
+    owns the sink's view and the state-partition count:
+    ``_STATE_PARTS`` (the session's 32 paid 32 state stores per batch
+    for a few MB of state), more for the applyInPandasWithState
+    bridges, whose Python workers that count also sizes. Results are
+    partition-count-invariant."""
+    s = agg_df.sparkSession
+    q = (
+        agg_df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
-        q = (
-            agg_df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-            rows = spark.sql(f"SELECT * FROM {sink}").collect()
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(sink)  # never leak the sink's state
+        q.awaitTermination()
+        return s.table(sink).collect()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return rows
+        q.stop()
+        s.catalog.dropTempView(sink)
 
 
 def _events_stream(spark, sf_dir):
@@ -121,7 +102,6 @@ def _events_stream(spark, sf_dir):
     nanos→micros timestamp narrowing as the batch loader."""
     from pyspark.sql.types import LongType
 
-    T(spark, sf_dir, "events")  # tune() the session (nanosAsLong, UTC)
     # target the table path itself (works whether events.parquet is a
     # single file — driver fixtures — or a directory of part files); a
     # pathGlobFilter on the parent dir would silently match NOTHING for
@@ -174,7 +154,7 @@ def stream_sessionize_replay(spark, sf_dir):
     append-mode run); the bounded replay holds |open sessions| state,
     = |users| here. One shuffle on the session key either way.
     """
-    stream = _events_stream(spark, sf_dir)
+    stream = _events_stream(private_session(spark, _STATE_PARTS), sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "1 day").alias("w"), "user_id")
@@ -185,7 +165,7 @@ def stream_sessionize_replay(spark, sf_dir):
         )
         .select("user_id", "session_start", "session_end", "n_events")
     )
-    rows = [tuple(r) for r in _replay(spark, agg, "stream_sessionize")]
+    rows = [tuple(r) for r in _replay(agg, "stream_sessionize")]
     return spark.createDataFrame(
         rows,
         "user_id long, session_start timestamp, session_end timestamp, n_events long",
@@ -219,14 +199,14 @@ def stream_dedup_replay(spark, sf_dir):
     agg is the usual partial+final count. Chained stateful operators
     share the micro-batch's event-time watermark.
     """
-    stream = _events_stream(spark, sf_dir)
+    stream = _events_stream(private_session(spark, _STATE_PARTS), sf_dir)
     ded = (
         stream.withColumn("day", F.date_trunc("day", "ts"))
         .withWatermark("ts", "1 hour")
         .dropDuplicates(["user_id", "event_type", "day"])
     )
     agg = ded.groupBy("event_type").agg(F.count("*").cast("long").alias("n_user_days"))
-    rows = [tuple(r) for r in _replay(spark, agg, "stream_dedup")]
+    rows = [tuple(r) for r in _replay(agg, "stream_dedup")]
     return spark.createDataFrame(rows, "event_type string, n_user_days long")
 
 
@@ -262,15 +242,15 @@ def stream_corpus_dedup_replay(spark, sf_dir):
     stream carries event time — documents here do not, the documented
     batch-backfill mode).
     """
-    T(spark, sf_dir, "documents")  # tune() the session
     from ..streaming.dedup import stream_dedup_against_corpus
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
+    rs = private_session(spark, _STATE_PARTS)
+    schema = rs.read.parquet(f"{sf_dir}/documents.parquet").schema
+    stream = rs.readStream.schema(schema).parquet(
         f"{sf_dir}/[d]ocuments.parquet"
     )
     corpus_fp = (
-        T(spark, sf_dir, "documents")
+        T(rs, sf_dir, "documents")
         .where(F.col("doc_id") % 2 == 0)
         .select(F.md5("text").alias("fp"))
         .distinct()
@@ -281,7 +261,7 @@ def stream_corpus_dedup_replay(spark, sf_dir):
         .groupBy(F.substring("fp", 1, 1).alias("bucket"))
         .agg(F.count("*").cast("long").alias("n_new"))
     )
-    rows = [tuple(r) for r in _replay(spark, agg, "stream_corpus_dedup")]
+    rows = [tuple(r) for r in _replay(agg, "stream_corpus_dedup")]
     return spark.createDataFrame(rows, "bucket string, n_new long")
 
 
@@ -333,9 +313,10 @@ def stream_heavy_hitters_replay(spark, sf_dir):
 
     from ..streaming.stateful import token_heavy_hitters
 
+    rs = private_session(spark, _STATE_PARTS)
     tok = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
     base = (
-        T(spark, sf_dir, "events")
+        T(rs, sf_dir, "events")
         .select(
             (F.col("user_id") % 100).cast("string").alias("tok"),
             (F.col("event_id") % 3).alias("b"),
@@ -356,12 +337,12 @@ def stream_heavy_hitters_replay(spark, sf_dir):
                 os.path.join(stream_dir, f"b{b}.parquet"),
             )
         stream = (
-            spark.readStream.schema("shard int, tok string")
+            rs.readStream.schema("shard int, tok string")
             .option("maxFilesPerTrigger", 1)
             .parquet(stream_dir)
         )
         hh = token_heavy_hitters(stream, shard_col="shard")
-        rows = [tuple(r) for r in _replay(spark, hh, "stream_hh", mode="update")]
+        rows = [tuple(r) for r in _replay(hh, "stream_hh", mode="update")]
     finally:
         shutil.rmtree(root, ignore_errors=True)
     import collections
@@ -499,10 +480,13 @@ def stream_attribution_replay(spark, sf_dir):
 
     from ..streaming.stateful import attribution_last_touch
 
+    # per-user Python state calls are the batch cost; give the state
+    # shuffle one partition per core (capped)
+    rs = private_session(spark, min(16, spark.sparkContext.defaultParallelism))
     root = tempfile.mkdtemp(prefix="stream_attr_")
     try:
         stream = _staged_event_stream(
-            spark,
+            rs,
             sf_dir,
             ["event_id", "user_id", "event_type", "ts_us"],
             "event_id long, user_id long, event_type string, ts_us long",
@@ -511,11 +495,7 @@ def stream_attribution_replay(spark, sf_dir):
         rows = [
             tuple(r)
             for r in _replay(
-                spark, attribution_last_touch(stream), "stream_attr",
-                mode="append",
-                # per-user Python state calls are the batch cost; give
-                # the state shuffle one partition per core (capped)
-                state_parts=min(16, spark.sparkContext.defaultParallelism),
+                attribution_last_touch(stream), "stream_attr", mode="append"
             )
         ]
     finally:
@@ -586,10 +566,11 @@ def stream_spike_gate_replay(spark, sf_dir):
 
     from ..streaming.stateful import volume_spike_gate
 
+    rs = private_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_spike_")
     try:
         stream = _staged_event_stream(
-            spark,
+            rs,
             sf_dir,
             ["event_type", "ts_us"],
             "event_type string, ts_us long",
@@ -597,7 +578,7 @@ def stream_spike_gate_replay(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, volume_spike_gate(stream),
+            for r in _replay(volume_spike_gate(stream),
                              "stream_spike", mode="update")
         ]
     finally:
@@ -650,11 +631,12 @@ def stream_interval_join_replay(spark, sf_dir):
 
     from ..streaming.joins import stream_stream_interval_join
 
+    rs = private_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_ssj_")
     try:
         cols = ["event_id", "user_id", "event_type", "ts_us"]
         ddl = "event_id long, user_id long, event_type string, ts_us long"
-        src = _staged_event_stream(spark, sf_dir, cols, ddl, root)
+        src = _staged_event_stream(rs, sf_dir, cols, ddl, root)
         # ONE staged source feeds BOTH join sides (r14; guide §6 —
         # file listing/discovery and offset tracking run once per
         # micro-batch instead of twice). The join is still a genuine
@@ -684,7 +666,7 @@ def stream_interval_join_replay(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, joined, "stream_ssj", mode="append")
+            for r in _replay(joined, "stream_ssj", mode="append")
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -736,11 +718,12 @@ def stream_outer_join_replay(spark, sf_dir):
 
     from ..streaming.joins import stream_stream_interval_join
 
+    rs = private_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_soj_")
     try:
         cols = ["event_id", "user_id", "event_type", "ts_us"]
         ddl = "event_id long, user_id long, event_type string, ts_us long"
-        src = _staged_event_stream(spark, sf_dir, cols, ddl, root)
+        src = _staged_event_stream(rs, sf_dir, cols, ddl, root)
         stream_dir = os.path.join(root, "in")
         # sentinel batch: one purchase + click 3 h past the last real
         # event — pushes wm(final) 2 h past every real purchase, so the
@@ -821,7 +804,7 @@ def stream_outer_join_replay(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, joined, "stream_soj", mode="append")
+            for r in _replay(joined, "stream_soj", mode="append")
             if r["purchase_id"] >= 0
         ]
     finally:
@@ -964,10 +947,11 @@ def stream_delta_source_replay(spark, sf_dir):
 
     from ..io.delta_log import write_delta
 
+    rs = private_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_dsrc_")
     table = os.path.join(root, "tbl")
     try:
-        base = T(spark, sf_dir, "events").select(
+        base = T(rs, sf_dir, "events").select(
             "event_id",
             "event_type",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -1008,11 +992,11 @@ def stream_delta_source_replay(spark, sf_dir):
             dest = os.path.join(stream_dir, name)
             os.link(os.path.join(table, name), dest)
             os.utime(dest, (now + 30 * v,) * 2)
-        vmap = spark.createDataFrame(
+        vmap = rs.createDataFrame(
             list(file_version.items()), "fname string, commit_version long"
         )
         src = (
-            spark.readStream.schema("event_id long, event_type string")
+            rs.readStream.schema("event_id long, event_type string")
             .option("maxFilesPerTrigger", 1)
             .parquet(stream_dir)
             .select(
@@ -1031,7 +1015,7 @@ def stream_delta_source_replay(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, agg, "stream_dsrc", mode="complete")
+            for r in _replay(agg, "stream_dsrc", mode="complete")
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -1291,10 +1275,11 @@ def stream_late_data_audit(spark, sf_dir):
     import shutil
     import tempfile
 
+    rs = private_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_late_")
     try:
         stream = _staged_sentinel_stream(
-            spark, sf_dir, root,
+            rs, sf_dir, root,
             cols=["event_id", "event_type", "ts_us"],
             schema_ddl="event_id long, event_type string, ts_us long",
             sentinels=[(-1, "__wm", _LATE_WM_US), (-1, "__wm", _LATE_WM2_US)],
@@ -1309,7 +1294,7 @@ def stream_late_data_audit(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, agg, "stream_late", mode="append")
+            for r in _replay(agg, "stream_late", mode="append")
             if r["event_type"] != "__wm"
         ]
     finally:
@@ -1364,10 +1349,11 @@ def stream_session_append_replay(spark, sf_dir):
     import shutil
     import tempfile
 
+    rs = private_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_sess_append_")
     try:
         stream = _staged_sentinel_stream(
-            spark, sf_dir, root,
+            rs, sf_dir, root,
             cols=["event_id", "user_id", "ts_us"],
             schema_ddl="event_id long, user_id long, ts_us long",
             sentinels=[(-1, -1, _LATE_WM_US), (-1, -1, _LATE_WM2_US)],
@@ -1386,7 +1372,7 @@ def stream_session_append_replay(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, agg, "stream_sess_append", mode="append")
+            for r in _replay(agg, "stream_sess_append", mode="append")
             if r["user_id"] >= 0
         ]
     finally:
@@ -1455,24 +1441,24 @@ def stream_neardup_replay(spark, sf_dir):
     state is one (doc, max) pair per in-flight doc, watermark-bounded
     when the stream carries event time.
     """
-    T(spark, sf_dir, "documents")  # tune() the session
     from ..queries.dedup import _md5_band_rows
     from ..streaming.dedup import stream_neardup_against_corpus
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    rs = private_session(spark, _STATE_PARTS)
+    schema = rs.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
-        spark.readStream.schema(schema)
+        rs.readStream.schema(schema)
         .parquet(f"{sf_dir}/[d]ocuments.parquet")
         .where(F.col("doc_id") % 2 == 1)
     )
-    corpus = T(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
+    corpus = T(rs, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
     # the lsh_store layout: skinny band rows + sigs stored once per doc,
     # both cut from ONE checkpointed banding pass
     rows = _md5_band_rows(corpus, with_sig=True).localCheckpoint(eager=False)
     corpus_bands = rows.select("doc_id", "band", "bucket")
     corpus_sigs = rows.where(F.col("band") == 0).select("doc_id", "sig")
     out = stream_neardup_against_corpus(stream, corpus_bands, corpus_sigs)
-    rows = [tuple(r) for r in _replay(spark, out, "stream_neardup")]
+    rows = [tuple(r) for r in _replay(out, "stream_neardup")]
     return spark.createDataFrame(rows, "doc_id long, max_agree long, kept boolean")
 
 
@@ -1556,7 +1542,8 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
     from ..queries.dedup import _md5_band_rows
     from ..streaming.dedup import stream_neardup_against_corpus_eventtime
 
-    docs = T(spark, sf_dir, "documents")
+    rs = private_session(spark, _STATE_PARTS)
+    docs = T(rs, sf_dir, "documents")
     crows = _md5_band_rows(
         docs.where(F.col("doc_id") % 2 == 0), with_sig=True
     ).localCheckpoint(eager=False)
@@ -1602,7 +1589,7 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
             * F.lit(3600_000_000)
         )
         stream = (
-            spark.readStream.schema("doc_id long, text string")
+            rs.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(stream_dir)
             .withColumn("created_at", ts)
@@ -1613,7 +1600,7 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
         )
         rows = [
             tuple(r)
-            for r in _replay(spark, out, "stream_neardup_et", mode="append")
+            for r in _replay(out, "stream_neardup_et", mode="append")
             if r["doc_id"] >= 0  # sentinels dropped post-materialization
         ]
     finally:

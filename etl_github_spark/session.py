@@ -48,14 +48,34 @@ BUILDER_CONF = {
 }
 
 
-def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
-    for k, v in RUNTIME_CONF.items():
+def _apply(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be static in some envs
             pass
     return spark
+
+
+def tune(spark: SparkSession) -> SparkSession:
+    """Apply runtime confs to an existing session (idempotent). Called
+    at the session boundaries only, never from query code."""
+    return _apply(spark, RUNTIME_CONF)
+
+
+def private_session(spark: SparkSession, partitions: int) -> SparkSession:
+    """A tuned child of ``spark`` with ``partitions`` shuffle partitions,
+    for one operation whose right width differs from the session's: a
+    bounded streaming replay (the state-store shard count, fixed at
+    query start) or an iterative loop (`queries._util.loop_width`). At
+    one partition AQE is off: it has nothing to adapt there, but would
+    still run every exchange as its own job. The child shares the
+    SparkContext but owns its conf and temp views, so the caller's conf
+    is never written."""
+    conf = {**RUNTIME_CONF, "spark.sql.shuffle.partitions": str(partitions)}
+    if partitions == 1:
+        conf["spark.sql.adaptive.enabled"] = "false"
+    return _apply(spark.newSession(), conf)
 
 
 def get_spark(app_name: str = "etl-github-spark", master: str | None = None) -> SparkSession:

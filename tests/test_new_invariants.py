@@ -761,3 +761,133 @@ def test_mutable_tables_have_no_copy_on_write_swap():
     assert exempt_hit == set(_SWAP_EXEMPT), (
         f"stale exemptions: {sorted(set(_SWAP_EXEMPT) - exempt_hit)}"
     )
+
+
+def test_cc_storage_does_not_grow_with_diameter(spark):
+    """Connected components releases each round's label checkpoints
+    once the next round has consumed them, so a long chain (more
+    rounds) leaves as many persisted RDDs behind as a short one: the
+    returned labels."""
+    import pytest
+
+    from etl_github_spark.queries.clustering import connected_components
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def chain(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
+        )
+
+    # the long chain really needs more rounds than the short one
+    connected_components(chain(4), max_iters=3)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain(64), max_iters=3)
+    left = []
+    for n in (4, 64):
+        before = persisted()
+        lab = connected_components(chain(n))  # held: keeps its labels
+        left.append(len(persisted() - before))
+        assert {r.label for r in lab.collect()} == {0}
+    assert left[0] == left[1], left
+
+
+def _calls(tree):
+    """(call, names of the enclosing functions) for every call in tree."""
+    import ast
+
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = (*scope, child.name)
+            if isinstance(child, ast.Call):
+                yield child, inner
+            yield from walk(child, inner)
+
+    yield from walk(tree, ())
+
+
+def test_query_code_never_writes_session_conf():
+    """Session conf is written in one module, `session.py`, and tuned
+    only at the session boundaries: the factory (`get_spark`), the
+    driver entry (`query_map`) and the SQL entry (`open_catalog`).
+    Query code that wrote session-wide conf would race against any
+    other query running on a concurrent driver thread."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "etl_github_spark"
+    boundary = {"get_spark", "query_map", "open_catalog"}
+    conf_sets, tunes = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for call, scope in _calls(ast.parse(path.read_text())):
+            f = call.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if (
+                name == "set"
+                and isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+                and rel != "session.py"
+            ):
+                conf_sets.append(f"{rel}:{call.lineno}")
+            if name == "tune" and not boundary & set(scope):
+                tunes.append(f"{rel}:{call.lineno} in {'.'.join(scope) or '<module>'}")
+    assert not conf_sets, f"conf.set outside session.py: {conf_sets}"
+    assert not tunes, f"tune() outside the session boundary: {tunes}"
+
+
+def test_loop_and_replay_queries_are_thread_safe(spark):
+    """Two loop queries and a streaming replay run at once on three
+    driver threads give their serial outputs, and leave the shared
+    session's conf exactly as they found it."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    names = (
+        "dedup_cluster_components",
+        "graph_kcore_peel",
+        "stream_hourly_counts_replay",
+    )
+
+    def run(name):
+        return sorted(map(tuple, QUERIES[name].fn(spark, SF_ORACLE).collect()))
+
+    conf = dict(spark.conf.getAll)
+    serial = {n: run(n) for n in names}
+    assert dict(spark.conf.getAll) == conf
+    with ThreadPoolExecutor(3) as pool:
+        concurrent = dict(zip(names, pool.map(run, names)))
+    assert concurrent == serial
+    assert dict(spark.conf.getAll) == conf
+
+
+def test_driver_boundary_tunes_an_adversarial_session(spark):
+    """The driver hands `queries()` a session it configured itself.
+    Each query must tune that session before planning: on a session
+    with ANSI off, nanosecond timestamps read natively and a non-UTC
+    zone, a table query over `events.ts`, a GH Archive query, a
+    streaming replay and the freshness capstone still match their
+    oracles. The test session those sessions derive from keeps its
+    conf."""
+    import __spark_entry__ as entry
+
+    from .oracle_harness import compare
+
+    conf = dict(spark.conf.getAll)
+    adv = spark.newSession()
+    adv.conf.set("spark.sql.ansi.enabled", "false")
+    adv.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    adv.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    for name in (
+        "sessionize_events",
+        "gha_extract_commits",
+        "stream_hourly_counts_replay",
+        "pipeline_index_freshness",
+    ):
+        errors = compare(adv, SF_ORACLE, name, queries[name], oracles[name])
+        assert not errors, (name, errors)
+    assert dict(spark.conf.getAll) == conf

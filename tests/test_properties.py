@@ -475,9 +475,10 @@ def test_perplexity_deciles_invariant_under_repartitioning(spark):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        frag = {
-            tuple(r) for r in quality_perplexity_unigram(spark, SF_SMALL).collect()
-        }
+        frag_df = quality_perplexity_unigram(spark, SF_SMALL)
+        # building the query must not reset the width under test
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        frag = {tuple(r) for r in frag_df.collect()}
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert base == frag
