@@ -8,35 +8,41 @@ and band each document ONCE, persist the band rows, and answer every
 later near-dup question (corpus self-dedup, new-batch judging,
 incremental ingest) from the store. This module is that storage half:
 
-- ``bands/`` — (doc_id, bucket) parquet PARTITIONED BY band: 8 skinny
-  rows per document, the self-join input. Band partitioning keeps
-  compaction and the candidate join's co-location unit aligned with
-  the banding itself.
-- ``sigs/`` — (doc_id, sig) parquet PARTITIONED BY ``sbucket =
+- ``bands/`` — (doc_id, band, bucket) Delta table PARTITIONED BY
+  band: 8 skinny rows per document, the self-join input. Band
+  partitioning keeps compaction and the candidate join's co-location
+  unit aligned with the banding itself.
+- ``sigs/`` — (doc_id, sig) Delta table PARTITIONED BY ``sbucket =
   pmod(hash(doc_id), 16)``: the 32-component signature stored ONCE per
   document (not 8× through the band explode), attached to candidate
   pairs only when an agreement estimate is needed — the same cand +
   sig-join shape the family's SQL oracle states. The hash-bucket
-  partitioning exists for COMPACTION: each bucket directory rewrites
-  independently (16 parallel tasks, never a single O(corpus) task) with
-  the same per-directory swap as ``bands/``.
+  partitioning exists for COMPACTION: OPTIMIZE bins files per
+  partition, so the 16 buckets rewrite as 16 parallel tasks, never a
+  single O(corpus) task.
 - ``_lsh_index.json`` — the family sidecar (n_hashes, band count, rows
   per band, family name, sig bucket count). The hash family itself is
   the module-constant md5/affine chain (`queries.dedup._md5_band_rows`
   — shared with the batch AND streaming paths), so unlike the IVF
   store there is nothing to fit: the sidecar exists to REFUSE appends
   from a mismatched family/layout, the drift that would silently
-  corrupt an index. Written via temp-file + ``os.replace`` so a crash
-  mid-dump can never leave a truncated sidecar (a JSONDecodeError
-  instead of the designed family-mismatch refusal).
+  corrupt an index. Published by `io.sink.write_sidecar` (temp file +
+  ``os.replace``) so a crash mid-dump can never leave a truncated
+  sidecar (a JSONDecodeError instead of the designed family-mismatch
+  refusal).
+
+Both tables are written, appended, read and compacted through the
+Delta log (`io/delta_log.py`): every reader scans exactly the files the
+log names, so a crashed write or compaction — staged files with no
+commit — is invisible, and `vacuum_delta` reaps it. There is no
+recovery step of the store's own.
 
 Append is embarrassingly incremental — banding is per-row map-side
-work, so a new batch pays one scan + one partitioned append and the
-appended index is BIT-IDENTICAL to a full rebuild (no refit identity
-to argue, unlike IVF-PQ; `dedup_lsh_store_upsert` pins it under the
-driver hash). Compaction rewrites each band / sig-bucket partition to
-one file via a per-directory swap; see :func:`compact_bands_store` for
-the exact crash-recovery contract.
+work, so a new batch pays one scan + one partitioned append commit per
+table and the appended index is BIT-IDENTICAL to a full rebuild (no
+refit identity to argue, unlike IVF-PQ; `dedup_lsh_store_upsert` pins
+it under the driver hash). Compaction is `optimize_delta` on each
+table; see :func:`compact_bands_store`.
 
 Reference semantics: the dedup contract is the reference's corpus
 hygiene concern re-expressed as a persisted index (see SURVEY.md §2.9);
@@ -51,6 +57,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .delta_log import optimize_delta, read_delta, snapshot_files, write_delta
+from .sink import write_sidecar
 
 _SIG_BUCKETS = 16
 
@@ -94,29 +103,26 @@ def _band_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return bands, sigs
 
 
-def _write_sidecar(path: str) -> None:
-    """Atomic sidecar publish: temp file + ``os.replace`` so a reader
-    (or a crash) never sees a half-written JSON."""
-    dest = os.path.join(path, "_lsh_index.json")
-    tmp = dest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(_family_meta(), fh)
-    os.replace(tmp, dest)
+def _commit_bands(docs: DataFrame, path: str, mode: str) -> None:
+    """Band ``docs`` once and commit the rows to ``bands/`` and
+    ``sigs/``, each clustered so a write lands one file per partition."""
+    bands, sigs = _band_frames(docs)
+    for name, frame, part in (("bands", bands, "band"), ("sigs", sigs, "sbucket")):
+        write_delta(
+            _cluster_for_write(frame, part),
+            os.path.join(path, name),
+            mode=mode,
+            partition_by=(part,),
+        )
 
 
 def write_bands_store(docs: DataFrame, path: str) -> None:
-    """Build the index: band + sign the corpus once, write ``bands/``
-    partitioned by band, ``sigs/`` partitioned by hash bucket, and the
-    family sidecar. One scan of the corpus, map-side banding, two
-    partitioned sinks."""
-    bands, sigs = _band_frames(docs)
-    _cluster_for_write(bands, "band").write.partitionBy("band").mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "bands"))
-    _cluster_for_write(sigs, "sbucket").write.partitionBy("sbucket").mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "sigs"))
-    _write_sidecar(path)
+    """Build the index: band + sign the corpus once, commit ``bands/``
+    partitioned by band, ``sigs/`` partitioned by hash bucket, and
+    write the family sidecar. One scan of the corpus, map-side banding,
+    two partitioned commits."""
+    _commit_bands(docs, path, "overwrite")
+    write_sidecar(os.path.join(path, "_lsh_index.json"), _family_meta())
 
 
 def read_lsh_index(path: str) -> dict:
@@ -136,7 +142,7 @@ def _read_sigs(spark: SparkSession, path: str) -> DataFrame:
     """(doc_id, sig) from the bucketed ``sigs/`` table — the ``sbucket``
     partition column is a physical-layout detail and never leaves the
     reader."""
-    return spark.read.parquet(os.path.join(path, "sigs")).select("doc_id", "sig")
+    return read_delta(spark, os.path.join(path, "sigs")).select("doc_id", "sig")
 
 
 def append_bands_store(docs: DataFrame, path: str) -> None:
@@ -147,87 +153,32 @@ def append_bands_store(docs: DataFrame, path: str) -> None:
     sidecar disagrees with the module's family constants (an index
     built under different banding would silently miss duplicates)."""
     _check_family(path)
-    bands, sigs = _band_frames(docs)
-    _cluster_for_write(bands, "band").write.partitionBy("band").mode(
-        "append"
-    ).parquet(os.path.join(path, "bands"))
-    _cluster_for_write(sigs, "sbucket").write.partitionBy("sbucket").mode(
-        "append"
-    ).parquet(os.path.join(path, "sigs"))
-
-
-def _compact_partitioned(spark: SparkSession, root: str, part_col: str) -> None:
-    """Rewrite every ``<part_col>=<v>`` directory under ``root`` to one
-    file (parallel across partitions via a key repartition), then swap
-    the rewritten directories in.
-
-    Crash-recovery contract: phase 1 moves every live directory to
-    ``<dir>.old`` and its rewrite into place; the ``.old`` directories
-    are deleted only in phase 2, AFTER every partition has swapped. A
-    crash mid-phase-1 therefore always leaves each partition's rows in
-    exactly one of ``<dir>`` (new) or ``<dir>.old`` (pre-compaction) —
-    recovery is "restore any ``.old`` whose ``<dir>`` is missing, then
-    delete the rest". This is single-writer compaction (the Delta-log
-    sibling `io/delta_log.py` owns multi-writer commit arbitration); a
-    concurrent READER between the two renames of one partition can see
-    that directory absent for the duration of an ``os.rename``, which
-    is the same exposure every swap-based OPTIMIZE without a
-    transaction log has.
-
-    Idempotence after a crash: compaction first runs
-    :func:`recover_compaction` on ``root``, so leftovers of an
-    interrupted earlier run (``*.old`` dirs that partition discovery
-    would otherwise merge back in as stale rows, or a stale
-    ``*_compact_tmp`` that ``shutil.move`` would nest new output
-    inside) are healed instead of corrupting the rewrite."""
-    import glob
-    import shutil
-
-    recover_compaction(root)
-    tmp = root + "_compact_tmp"
-    (
-        spark.read.parquet(root)
-        .repartition(part_col)
-        .write.partitionBy(part_col)
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    olds = []
-    for pdir in sorted(glob.glob(os.path.join(tmp, f"{part_col}=*"))):
-        dest = os.path.join(root, os.path.basename(pdir))
-        old = dest + ".old"
-        shutil.move(dest, old)
-        shutil.move(pdir, dest)
-        olds.append(old)
-    # every partition swapped — only now drop the pre-compaction copies
-    for old in olds:
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+    _commit_bands(docs, path, "append")
 
 
 def compact_bands_store(spark: SparkSession, path: str) -> dict:
     """OPTIMIZE for the band index: steady-state appends leave one small
-    file per batch in every partition directory; rewrite each ``band=``
-    and ``sbucket=`` partition to ONE file. Both tables use the same
-    keyed repartition (parallel across partitions — sigs compaction is
-    16 concurrent bucket rewrites, never one O(corpus) task) and the
-    same deferred-delete directory swap (see :func:`_compact_partitioned`
-    for the crash-recovery contract). Refuses a mismatched-family store
-    (same guard as append/judge — compacting a legacy layout would
-    otherwise die mid-rewrite with bands/ done and sigs/ untouched).
-    Returns {"files_before": n, "files_after": m}."""
-    import glob
-
+    file per batch in every partition; `optimize_delta` on ``bands/``
+    and then ``sigs/`` bin-packs each ``band`` and ``sbucket``
+    partition into one file (up to its target size), one parallel
+    Spark job and one ``dataChange: false`` commit per table — sigs
+    compaction is 16 concurrent bucket rewrites, never one O(corpus)
+    task. Readers see each table's old files or its new ones, never a
+    mix. Refuses a mismatched-family store (same guard as append/judge
+    — compacting a legacy layout would otherwise die mid-rewrite with
+    bands/ done and sigs/ untouched). The replaced files stay on disk
+    for time travel until `vacuum_delta` reaps them at its default
+    retention. Returns {"files_before": n, "files_after": m}, counted
+    from the live snapshots of both tables."""
     _check_family(path)
+    tables = [os.path.join(path, name) for name in ("bands", "sigs")]
 
     def _count():
-        return len(
-            glob.glob(os.path.join(path, "bands", "band=*", "*.parquet"))
-        ) + len(glob.glob(os.path.join(path, "sigs", "sbucket=*", "*.parquet")))
+        return sum(len(snapshot_files(t)) for t in tables)
 
     before = _count()
-    _compact_partitioned(spark, os.path.join(path, "bands"), "band")
-    _compact_partitioned(spark, os.path.join(path, "sigs"), "sbucket")
+    for t in tables:
+        optimize_delta(spark, t)
     return {"files_before": before, "files_after": _count()}
 
 
@@ -241,7 +192,7 @@ def store_neardup_pairs(spark: SparkSession, path: str) -> DataFrame:
     oracle SQL hashes both."""
     from ..queries.dedup import _N_HASHES
 
-    bands = spark.read.parquet(os.path.join(path, "bands"))
+    bands = read_delta(spark, os.path.join(path, "bands"))
     sigs = _read_sigs(spark, path)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -300,7 +251,7 @@ def store_judge_docs(spark: SparkSession, path: str, docs: DataFrame) -> DataFra
     _check_family(path)
     inc_bands, inc_sigs = _band_frames(docs)
     inc_sigs = inc_sigs.select("doc_id", "sig")
-    store_bands = spark.read.parquet(os.path.join(path, "bands")).select(
+    store_bands = read_delta(spark, os.path.join(path, "bands")).select(
         F.col("doc_id").alias("c_doc"), "band", "bucket"
     )
     cand = (
@@ -360,7 +311,7 @@ def store_delta_pairs(spark: SparkSession, path: str, docs: DataFrame) -> DataFr
     _check_family(path)
     inc_bands, inc_sigs = _band_frames(docs)
     inc_sigs = inc_sigs.select("doc_id", "sig")
-    store_bands = spark.read.parquet(os.path.join(path, "bands")).select(
+    store_bands = read_delta(spark, os.path.join(path, "bands")).select(
         F.col("doc_id").alias("s_doc"), "band", "bucket"
     )
     cross = (
@@ -398,33 +349,3 @@ def store_delta_pairs(spark: SparkSession, path: str, docs: DataFrame) -> DataFr
         .where(F.col("est_jaccard") >= 0.5)
     )
 
-
-def recover_compaction(root: str) -> dict:
-    """Crash recovery for a directory-swap compaction. ``root`` is ONE
-    partitioned-table root: for an IVF store that is the store path
-    itself (``cell=*`` lives directly under it); for an LSH store call
-    this TWICE — once on ``<store>/bands`` and once on ``<store>/sigs``
-    (calling it on the LSH store root is a silent no-op, since no
-    ``*.old``/staging dirs live there). Restore any ``<dir>.old`` whose
-    ``<dir>`` is missing (the crash hit between that partition's two
-    renames), delete the rest (their swap completed), and drop a
-    leftover ``*_compact_tmp`` staging dir. Idempotent; safe to run on
-    a healthy store (no-op). Returns counts of restored/deleted ``.old``
-    directories so an operator can see what the crash interrupted."""
-    import glob
-    import shutil
-
-    restored = deleted = 0
-    for old in sorted(glob.glob(os.path.join(root, "*.old"))):
-        dest = old[: -len(".old")]
-        if os.path.exists(dest):
-            shutil.rmtree(old, ignore_errors=True)
-            deleted += 1
-        else:
-            shutil.move(old, dest)
-            restored += 1
-    for tmp in glob.glob(os.path.join(root, "*_compact_tmp")) + glob.glob(
-        root + "_compact_tmp"
-    ):
-        shutil.rmtree(tmp, ignore_errors=True)
-    return {"restored": restored, "deleted": deleted}

@@ -20,6 +20,9 @@ no retry loop appears here by design.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 _FORMAT = "parquet"
@@ -46,6 +49,17 @@ def cluster_for_write(
     return df.repartition(
         *[F.col(c) for c in part_cols], F.pmod(F.xxhash64(id_col), F.lit(w))
     )
+
+
+def write_sidecar(dest: str, obj) -> None:
+    """Publish a JSON sidecar atomically: dump to ``<dest>.tmp``, then
+    ``os.replace`` it over ``dest``, so a reader (or a crash mid-dump)
+    sees the previous sidecar or the new one, never a truncated file.
+    Used by both index stores and the materialized views."""
+    tmp = dest + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, dest)
 
 
 def write_table(

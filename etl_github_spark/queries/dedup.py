@@ -1998,8 +1998,8 @@ def dedup_lsh_store_compact(spark, sf_dir):
     """The complete LSH-index lifecycle under one driver hash: build
     from the even half → append the odd half with the stored family →
     COMPACT the small files the append left (`compact_bands_store` —
-    one file per band partition via a band-keyed repartition, atomic
-    per-directory swap, sidecar untouched) → query. Compaction moves
+    one file per band and sig-bucket partition via `optimize_delta`,
+    one Delta commit per table, sidecar untouched) → query. Compaction moves
     bytes, never semantics: the result must STILL equal
     `dedup_minhash_lsh` exactly; a compaction that dropped, duplicated,
     or mis-routed a single band row would break the hash. The

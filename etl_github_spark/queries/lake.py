@@ -77,28 +77,28 @@ def lake_versioned_timetravel(spark, sf_dir):
 )
 def lake_matview_refresh(spark, sf_dir):
     """Incremental view maintenance, driver-checked end to end: land
-    events in two date-partition batches, merge-refresh the per-type
-    (count, sum) view after EACH append, and return the final view —
-    which must hash-equal a direct aggregate over the fixture. The
-    second refresh scans only the second batch (asserted here), so a
-    refresh that silently re-reads or misses history diverges from the
-    oracle. Money sums ride as exact integer cents (the engine-portable
-    fixed-point rule).
+    events in two Delta commits (even then odd event ids),
+    merge-refresh the per-type (count, sum) view after EACH append, and
+    return the final view — which must hash-equal a direct aggregate
+    over the fixture. The second refresh consumes only version 1, the
+    second batch (asserted here), so a refresh that silently re-reads
+    or misses history diverges from the oracle. Money sums ride as
+    exact integer cents (the engine-portable fixed-point rule).
     """
+    from ..io.delta_log import write_delta
     from ..io.matview import read_view, refresh_view
-    from ..io.sink import write_table
 
     e = T(spark, sf_dir, "events").select(
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
-        F.when(F.col("event_id") % 2 == 0, "b0").otherwise("b1").alias("batch"),
+        (F.col("event_id") % 2).alias("batch"),
     )
     table, view = _scratch("mv_t"), _scratch("mv_v")
-    write_table(e.where(F.col("batch") == "b0"), table, partition_by=("batch",))
+    write_delta(e.where(F.col("batch") == 0), table)
     refresh_view(spark, table, view, ["event_type"], ["cents"])
-    write_table(e.where(F.col("batch") == "b1"), table, partition_by=("batch",))
+    write_delta(e.where(F.col("batch") == 1), table, mode="append")
     r = refresh_view(spark, table, view, ["event_type"], ["cents"])
-    assert r["scanned"] == ["batch=b1"], r  # incrementality is part of the contract
+    assert (r["from"], r["to"]) == (0, 1), r  # incrementality is part of the contract
     out = read_view(spark, view).select(
         "event_type",
         F.col("cnt"),
@@ -1222,8 +1222,8 @@ def lake_matview_delta_feed(spark, sf_dir):
     OPTIMIZE the table (rewriting every file), append the odd half, and
     refresh again. The second refresh consumes only the feed since the
     first one — which must deliver the odd half ONCE and the OPTIMIZE
-    commit's rewritten files NEVER. A partition-listing refresher would
-    re-aggregate the compacted copy of the first batch here (the
+    commit's rewritten files NEVER. A refresher that listed the table's
+    files would re-aggregate the compacted copy of the first batch here (the
     double-count this variant exists to prevent) and the final view —
     hashed against a one-shot aggregate over the fixture — would be
     exactly one batch too heavy.
@@ -1233,7 +1233,7 @@ def lake_matview_delta_feed(spark, sf_dir):
     re-scanned. Money rides as exact integer cents.
     """
     from ..io.delta_log import optimize_delta, write_delta
-    from ..io.matview import read_view, refresh_view_delta
+    from ..io.matview import read_view, refresh_view
 
     e = T(spark, sf_dir, "events").select(
         "event_id",
@@ -1243,13 +1243,13 @@ def lake_matview_delta_feed(spark, sf_dir):
     table, view = _scratch("mvd_t"), _scratch("mvd_v")
     try:
         write_delta(e.where(F.col("event_id") % 2 == 0).repartition(2), table)
-        refresh_view_delta(spark, table, view, ["event_type"], ["cents"])
+        refresh_view(spark, table, view, ["event_type"], ["cents"])
         assert optimize_delta(spark, table, target_bytes=1 << 30)["version"] == 1
         write_delta(
             e.where(F.col("event_id") % 2 == 1).repartition(2), table,
             mode="append",
         )
-        r = refresh_view_delta(spark, table, view, ["event_type"], ["cents"])
+        r = refresh_view(spark, table, view, ["event_type"], ["cents"])
         assert (r["from"], r["to"]) == (0, 2), r  # consumed ONLY the feed
         out = read_view(spark, view).select(
             "event_type", "cnt", F.col("sum_cents").alias("sum_cents")

@@ -2807,11 +2807,11 @@ def sim_ivfpq_store_probe(spark, sf_dir, k: int = 8, nprobe: int = 3,
     """The STORAGE half of residual IVF-PQ — fit once, query many (the
     FAISS production shape `sim_ivfpq_residual_topk` computes in-plan):
     the coarse centroids and PQ codebooks are fitted once and persisted
-    with the cell-partitioned code table through `io/ivf_store.py`
-    (`write_embeddings_ivfpq`); the query is then answered PURELY from
-    the store (`ivfpq_probe_topk`) — sidecar index → driver-side probe
-    + ADC tables → partition-pruned scan of nprobe ``cell=<id>``
-    directories of m-byte codes → fold-ADC top-k. No re-fit, no raw
+    with the cell-partitioned Delta code table through `io/ivf_store.py`
+    (`write_ivfpq_store`); the query is then answered PURELY from the
+    store (`ivfpq_probe_topk`) — sidecar index → driver-side probe +
+    ADC tables → partition-pruned scan of the nprobe cells' committed
+    files of m-byte codes → fold-ADC top-k. No re-fit, no raw
     vectors on the query path; same oracle SQL as the in-plan sibling
     because the store is an execution strategy, not a semantics change
     (the contract `sim_ivf_store_probe` pins for plain IVF).
@@ -2919,8 +2919,8 @@ def sim_ivfpq_store_compact(spark, sf_dir, k: int = 8, nprobe: int = 3,
     build from the even half → APPEND the odd half with the stored
     index (`sim_ivfpq_store_upsert`'s step) → COMPACT the small files
     the append left (`io/ivf_store.py::compact_ivfpq_store` — one file
-    per cell via a cell-keyed repartition, atomic per-cell directory
-    swap, sidecar untouched) → probe. Compaction moves bytes, never
+    per cell via `optimize_delta`, published as one Delta commit,
+    sidecar untouched) → probe. Compaction moves bytes, never
     semantics, so the result must STILL equal `sim_ivfpq_residual_topk`
     bit for bit (the same fit-sample identity as the upsert query); a
     compaction that dropped, duplicated, or mis-routed a single code

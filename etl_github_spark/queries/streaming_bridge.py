@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import private_session
+from ..session import stream_session
 from ._util import T
 from .registry import query
 
@@ -53,7 +53,7 @@ def stream_hourly_counts_replay(spark, sf_dir):
     integer-truncates to micros exactly like the batch loader
     (`io/tables.py`), so streaming and batch see identical timestamps.
     """
-    stream = _events_stream(private_session(spark, _STATE_PARTS), sf_dir)
+    stream = _events_stream(stream_session(spark, _STATE_PARTS), sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -75,26 +75,46 @@ def _replay(agg_df, sink: str, mode: str = "complete"):
     APPENDS each batch's updates to the sink: the caller sees the whole
     update history and reduces it to the final state itself.
 
-    ``agg_df`` is built on a `session.private_session` child, which
+    ``agg_df`` is built on a `session.stream_session` child, which
     owns the sink's view and the state-partition count:
     ``_STATE_PARTS`` (the session's 32 paid 32 state stores per batch
     for a few MB of state), more for the applyInPandasWithState
     bridges, whose Python workers that count also sizes. Results are
-    partition-count-invariant."""
+    partition-count-invariant. The child is shared by every replay of
+    its width, so the sink's query name is ``sink`` plus a unique
+    suffix: concurrent replays never collide on it."""
+    import uuid
+
     s = agg_df.sparkSession
+    name = f"{sink}_{uuid.uuid4().hex}"
     q = (
         agg_df.writeStream.format("memory")
-        .queryName(sink)
+        .queryName(name)
         .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     try:
         q.awaitTermination()
-        return s.table(sink).collect()
+        return s.table(name).collect()
     finally:
         q.stop()
-        s.catalog.dropTempView(sink)
+        s.catalog.dropTempView(name)
+        _drop_clone_listener(s, q)
+
+
+def _drop_clone_listener(spark, q) -> None:
+    """A streaming query runs on a clone of its session; a stateful one
+    makes the clone's query manager, which registers its listener bus
+    on the SparkContext's shared listener bus, and nothing removes it:
+    one more listener per replay for the life of the context. Remove
+    it once the query has stopped. The bus is a private field of the
+    manager, read by reflection; the clone's manager serves no other
+    query."""
+    manager = q._jsq.streamingQuery().sparkSessionForStream().streams()
+    field = manager.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    spark.sparkContext._jsc.sc().listenerBus().removeListener(field.get(manager))
 
 
 def _events_stream(spark, sf_dir):
@@ -154,7 +174,7 @@ def stream_sessionize_replay(spark, sf_dir):
     append-mode run); the bounded replay holds |open sessions| state,
     = |users| here. One shuffle on the session key either way.
     """
-    stream = _events_stream(private_session(spark, _STATE_PARTS), sf_dir)
+    stream = _events_stream(stream_session(spark, _STATE_PARTS), sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "1 day").alias("w"), "user_id")
@@ -199,7 +219,7 @@ def stream_dedup_replay(spark, sf_dir):
     agg is the usual partial+final count. Chained stateful operators
     share the micro-batch's event-time watermark.
     """
-    stream = _events_stream(private_session(spark, _STATE_PARTS), sf_dir)
+    stream = _events_stream(stream_session(spark, _STATE_PARTS), sf_dir)
     ded = (
         stream.withColumn("day", F.date_trunc("day", "ts"))
         .withWatermark("ts", "1 hour")
@@ -244,7 +264,7 @@ def stream_corpus_dedup_replay(spark, sf_dir):
     """
     from ..streaming.dedup import stream_dedup_against_corpus
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     schema = rs.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = rs.readStream.schema(schema).parquet(
         f"{sf_dir}/[d]ocuments.parquet"
@@ -313,7 +333,7 @@ def stream_heavy_hitters_replay(spark, sf_dir):
 
     from ..streaming.stateful import token_heavy_hitters
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     tok = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
     base = (
         T(rs, sf_dir, "events")
@@ -482,7 +502,7 @@ def stream_attribution_replay(spark, sf_dir):
 
     # per-user Python state calls are the batch cost; give the state
     # shuffle one partition per core (capped)
-    rs = private_session(spark, min(16, spark.sparkContext.defaultParallelism))
+    rs = stream_session(spark, min(16, spark.sparkContext.defaultParallelism))
     root = tempfile.mkdtemp(prefix="stream_attr_")
     try:
         stream = _staged_event_stream(
@@ -566,7 +586,7 @@ def stream_spike_gate_replay(spark, sf_dir):
 
     from ..streaming.stateful import volume_spike_gate
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_spike_")
     try:
         stream = _staged_event_stream(
@@ -631,7 +651,7 @@ def stream_interval_join_replay(spark, sf_dir):
 
     from ..streaming.joins import stream_stream_interval_join
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_ssj_")
     try:
         cols = ["event_id", "user_id", "event_type", "ts_us"]
@@ -718,7 +738,7 @@ def stream_outer_join_replay(spark, sf_dir):
 
     from ..streaming.joins import stream_stream_interval_join
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_soj_")
     try:
         cols = ["event_id", "user_id", "event_type", "ts_us"]
@@ -947,7 +967,7 @@ def stream_delta_source_replay(spark, sf_dir):
 
     from ..io.delta_log import write_delta
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_dsrc_")
     table = os.path.join(root, "tbl")
     try:
@@ -1275,7 +1295,7 @@ def stream_late_data_audit(spark, sf_dir):
     import shutil
     import tempfile
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_late_")
     try:
         stream = _staged_sentinel_stream(
@@ -1349,7 +1369,7 @@ def stream_session_append_replay(spark, sf_dir):
     import shutil
     import tempfile
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_sess_append_")
     try:
         stream = _staged_sentinel_stream(
@@ -1444,7 +1464,7 @@ def stream_neardup_replay(spark, sf_dir):
     from ..queries.dedup import _md5_band_rows
     from ..streaming.dedup import stream_neardup_against_corpus
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     schema = rs.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         rs.readStream.schema(schema)
@@ -1542,7 +1562,7 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
     from ..queries.dedup import _md5_band_rows
     from ..streaming.dedup import stream_neardup_against_corpus_eventtime
 
-    rs = private_session(spark, _STATE_PARTS)
+    rs = stream_session(spark, _STATE_PARTS)
     docs = T(rs, sf_dir, "documents")
     crows = _md5_band_rows(
         docs.where(F.col("doc_id") % 2 == 0), with_sig=True

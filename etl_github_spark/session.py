@@ -10,6 +10,7 @@ parses tz-aware ISO-8601 timestamps; SURVEY.md §7 risk register).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -76,6 +77,29 @@ def private_session(spark: SparkSession, partitions: int) -> SparkSession:
     if partitions == 1:
         conf["spark.sql.adaptive.enabled"] = "false"
     return _apply(spark.newSession(), conf)
+
+
+_STREAM_SESSIONS: dict[tuple[str, int], SparkSession] = {}
+_STREAM_LOCK = threading.Lock()
+
+
+def stream_session(spark: SparkSession, partitions: int) -> SparkSession:
+    """The `private_session` child that bounded streaming replays with
+    ``partitions`` state partitions run on: one per SparkContext and
+    width, created once and reused. A session that starts a stream adds
+    a listener to the SparkContext's shared listener bus that nothing
+    removes, so a fresh child per replay would grow the bus by one
+    listener a call (the replay removes the one its stream's own
+    session clone adds). A child inherits nothing from the session it is
+    made from (it shares only the SparkContext), so every caller of the
+    same width can share it; its conf is written only here, at
+    creation, and concurrent replays on it keep apart by unique sink
+    names."""
+    key = (spark.sparkContext.applicationId, partitions)
+    with _STREAM_LOCK:
+        if key not in _STREAM_SESSIONS:
+            _STREAM_SESSIONS[key] = private_session(spark, partitions)
+        return _STREAM_SESSIONS[key]
 
 
 def get_spark(app_name: str = "etl-github-spark", master: str | None = None) -> SparkSession:

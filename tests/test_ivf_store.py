@@ -1,5 +1,6 @@
 """Physical IVF store: partition-pruned probes must touch only the
-probed cell directories and return exactly the in-plan probe's result."""
+probed cells' committed files and return exactly the in-plan probe's
+result."""
 
 from __future__ import annotations
 
@@ -62,28 +63,23 @@ def test_ivfpq_store_probe_prunes_partitions(spark, tmp_path):
     part_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "cell" in part_line
 
-    # behavioral proof (same as the plain-IVF probe): corrupt a
-    # non-probed cell directory — a pruned scan never opens it.
-    import glob
-    import os
-
+    # behavioral proof: corrupt a COMMITTED file of a non-probed cell —
+    # a pruned scan never opens it, while a full snapshot scan fails.
     import pytest
+    from etl_github_spark.io.delta_log import read_delta, snapshot_files
     from etl_github_spark.io.ivf_store import probe_cells, read_ivfpq_index
 
     centroids, _ = read_ivfpq_index(path)
     probe = set(probe_cells(centroids, q_raw, 3))
-    all_cells = {
-        int(os.path.basename(p).split("=")[1])
-        for p in glob.glob(f"{path}/cell=*")
-    }
-    assert len(all_cells) > 3
-    victim = sorted(all_cells - probe)[0]
-    with open(f"{path}/cell={victim}/junk.parquet", "wb") as fh:
+    files = {int(f.split("/")[0].split("=")[1]): f for f in snapshot_files(path)}
+    assert len(files) > 3
+    victim = files[sorted(set(files) - probe)[0]]
+    with open(f"{path}/{victim}", "wb") as fh:
         fh.write(b"not a parquet file")
 
     assert ivfpq_probe_topk(spark, path, q_raw, nprobe=3).count() == 10
     with pytest.raises(Exception):
-        spark.read.parquet(path).count()
+        read_delta(spark, path).count()
 
 
 def test_ivfpq_index_sidecar_roundtrips_exactly(spark, tmp_path):
@@ -114,6 +110,7 @@ def test_ivfpq_append_with_stored_index_matches_full_build(spark, tmp_path):
     contain the full corpus and probe identically to a full-corpus
     build (fit-sample identity: vec_id % 4 == 0 is a subset of the
     evens, so both fits see the same sample)."""
+    from etl_github_spark.io.delta_log import read_delta
     from etl_github_spark.io.ivf_store import (
         append_embeddings_ivfpq,
         ivfpq_probe_topk,
@@ -146,7 +143,7 @@ def test_ivfpq_append_with_stored_index_matches_full_build(spark, tmp_path):
     p_full = str(tmp_path / "full")
     write_embeddings_ivfpq(res_full, p_full, c_full, b_full)
 
-    assert spark.read.parquet(p_inc).count() == n_all
+    assert read_delta(spark, p_inc).count() == n_all
     got = [tuple(r) for r in ivfpq_probe_topk(spark, p_inc, q_raw).collect()]
     want = [tuple(r) for r in ivfpq_probe_topk(spark, p_full, q_raw).collect()]
     assert got == want
@@ -182,22 +179,20 @@ def test_ivfpq_compact_reduces_files_and_preserves_probe(spark, tmp_path):
         spark, emb.where(F.col("vec_id") % 2 == 1).select("vec_id", "embedding"), path
     )
 
+    from etl_github_spark.io.delta_log import read_delta, snapshot_files
+
     q_raw = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    n = spark.read.parquet(path).count()
+    n = read_delta(spark, path).count()
     want = [tuple(r) for r in ivfpq_probe_topk(spark, path, q_raw).collect()]
 
     stats = compact_ivfpq_store(spark, path)
     assert stats["files_after"] < stats["files_before"]
 
-    import glob
-    import os
+    # exactly one live file per cell, and the counts are the snapshot's
+    cells = [f.split("/")[0] for f in snapshot_files(path)]
+    assert len(cells) == len(set(cells)) == stats["files_after"]
 
-    # exactly one file per cell directory
-    for cdir in glob.glob(f"{path}/cell=*"):
-        assert len(glob.glob(os.path.join(cdir, "*.parquet"))) == 1, cdir
-    assert not glob.glob(f"{path}/*.old") and not glob.glob(f"{path}/_compact_tmp")
-
-    assert spark.read.parquet(path).count() == n
+    assert read_delta(spark, path).count() == n
     got = [tuple(r) for r in ivfpq_probe_topk(spark, path, q_raw).collect()]
     assert got == want
 
@@ -253,6 +248,7 @@ def test_write_ivfpq_store_matches_two_pass_write(spark, tmp_path):
     """`write_ivfpq_store` (fused raw-input build) must lay down the
     same rows and the same sidecar as `write_embeddings_ivfpq` over the
     separately materialized residual frame."""
+    from etl_github_spark.io.delta_log import read_delta
     from etl_github_spark.io.ivf_store import (
         read_ivfpq_index,
         write_embeddings_ivfpq,
@@ -272,8 +268,30 @@ def test_write_ivfpq_store_matches_two_pass_write(spark, tmp_path):
     def rows(p):
         return {
             r["vec_id"]: (tuple(r["codes"]), r["cell"])
-            for r in spark.read.parquet(p).collect()
+            for r in read_delta(spark, p).collect()
         }
 
     assert rows(p_new) == rows(p_old)
     assert read_ivfpq_index(p_new) == read_ivfpq_index(p_old)
+
+
+def test_ivfpq_sidecar_dump_failure_keeps_previous_index(tmp_path, monkeypatch):
+    """The sidecar is published by temp file + rename: a dump that dies
+    partway leaves the previous index readable, never a truncated one."""
+    import json
+
+    import pytest
+    from etl_github_spark.io.ivf_store import _write_ivfpq_sidecar, read_ivfpq_index
+
+    path = str(tmp_path)
+    _write_ivfpq_sidecar(path, [[0.5, 1.0]], [[[0.25]]])
+
+    def torn_dump(obj, fh):
+        fh.write('{"centroids": [[')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        _write_ivfpq_sidecar(path, [[9.0, 9.0]], [[[9.0]]])
+    monkeypatch.undo()
+    assert read_ivfpq_index(path) == ([[0.5, 1.0]], [[[0.25]]])

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import os
 
+from etl_github_spark.io.delta_log import read_delta, snapshot_files
 from etl_github_spark.io.lsh_store import (
     _SIG_BUCKETS,
     append_bands_store,
@@ -39,11 +40,11 @@ def test_store_layout_and_sidecar(spark, tmp_path):
     assert meta["family"] == "md5-affine"
     assert meta["n_hashes"] == 32 and meta["band_size"] == 4
     assert meta["sig_buckets"] == _SIG_BUCKETS
-    n_sigs = spark.read.parquet(os.path.join(path, "sigs")).count()
+    n_sigs = read_delta(spark, os.path.join(path, "sigs")).count()
     n_banded = docs.where("size(split(text, ' ')) >= 3").count()
     assert n_sigs == n_banded
     # every banded doc contributes exactly 8 band rows
-    n_bands = spark.read.parquet(os.path.join(path, "bands")).count()
+    n_bands = read_delta(spark, os.path.join(path, "bands")).count()
     assert n_bands == 8 * n_sigs
 
 
@@ -79,11 +80,11 @@ def test_append_refuses_family_mismatch(spark, tmp_path):
 
 
 def test_compaction_reduces_files_and_preserves_results(spark, tmp_path):
-    """After two appends each band dir holds >=3 files; compaction must
-    bring every band AND sig-bucket partition to one file without
-    changing a single pair or estimate — and sigs must NOT collapse to
-    a single global file (the coalesce(1) anti-pattern: one task
-    rewriting an O(corpus) table)."""
+    """After two appends each band partition holds >=3 live files;
+    compaction must bring every band AND sig-bucket partition to one
+    live file without changing a single pair or estimate — and sigs
+    must NOT collapse to a single global file (the coalesce(1)
+    anti-pattern: one task rewriting an O(corpus) table)."""
     path = str(tmp_path / "store")
     docs = _docs(spark)
     write_bands_store(docs.where("doc_id % 3 = 0"), path)
@@ -92,13 +93,15 @@ def test_compaction_reduces_files_and_preserves_results(spark, tmp_path):
     before = sorted(tuple(r) for r in store_neardup_pairs(spark, path).collect())
     stats = compact_bands_store(spark, path)
     assert stats["files_after"] < stats["files_before"]
-    for bdir in glob.glob(os.path.join(path, "bands", "band=*")):
-        assert len(glob.glob(os.path.join(bdir, "*.parquet"))) == 1
-    sig_dirs = glob.glob(os.path.join(path, "sigs", "sbucket=*"))
-    assert len(sig_dirs) > 1  # bucketed rewrite, not one global file
-    for sdir in sig_dirs:
-        assert len(glob.glob(os.path.join(sdir, "*.parquet"))) == 1
-    assert not glob.glob(os.path.join(path, "sigs", "*.parquet"))
+
+    def live_dirs(table):
+        return [f.split("/")[0] for f in snapshot_files(os.path.join(path, table))]
+
+    bands, sigs = live_dirs("bands"), live_dirs("sigs")
+    assert sorted(bands) == [f"band={b}" for b in range(8)]
+    assert len(sigs) > 1  # bucketed rewrite, not one global file
+    assert len(sigs) == len(set(sigs)) and all(d.startswith("sbucket=") for d in sigs)
+    assert stats["files_after"] == len(bands) + len(sigs)
     after = sorted(tuple(r) for r in store_neardup_pairs(spark, path).collect())
     assert before == after
 
@@ -251,35 +254,45 @@ def test_delta_pairs_plan_joins_sigs_above_collision(spark, tmp_path):
     )
 
 
-def test_recover_compaction_restores_interrupted_swap(spark, tmp_path):
-    """Simulate a crash mid-swap: one band directory was moved to .old
-    but its rewrite never landed, another's swap completed but its .old
-    was not yet deleted, and the staging dir remains. recover_compaction
-    must restore the missing band from .old, drop the completed one's
-    .old, clean the staging dir, and leave the store answering queries
-    exactly as before."""
-    import shutil
+def test_crashed_store_write_is_invisible_and_vacuumed(spark, tmp_path):
+    """A store write that crashed before its commit leaves staged part
+    files and a ``.stage-*`` dir in the table. Both stores read only
+    what the log names, so neither `store_neardup_pairs` nor
+    `ivfpq_probe_topk` sees the staged rows (duplicates that would add
+    pairs and neighbours), and `vacuum_delta` reaps exactly them."""
+    from pyspark.sql import functions as F
 
-    from etl_github_spark.io.lsh_store import recover_compaction
+    from etl_github_spark.io.delta_log import _stage_files, vacuum_delta
+    from etl_github_spark.io.ivf_store import ivfpq_probe_topk
 
-    path = str(tmp_path / "store")
-    docs = _docs(spark)
-    write_bands_store(docs, path)
-    before = sorted(tuple(r) for r in store_neardup_pairs(spark, path).collect())
-    bands = os.path.join(path, "bands")
-    # crash state: band=0 mid-swap (only .old exists), band=1 swap done
-    # but .old not yet deleted, staging dir still present
-    shutil.move(os.path.join(bands, "band=0"), os.path.join(bands, "band=0.old"))
-    shutil.copytree(
-        os.path.join(bands, "band=1"), os.path.join(bands, "band=1.old")
-    )
-    os.makedirs(bands + "_compact_tmp")
-    stats = recover_compaction(bands)
-    assert stats == {"restored": 1, "deleted": 1}
-    assert os.path.isdir(os.path.join(bands, "band=0"))
-    assert not os.path.exists(os.path.join(bands, "band=1.old"))
-    assert not os.path.exists(bands + "_compact_tmp")
-    after = sorted(tuple(r) for r in store_neardup_pairs(spark, path).collect())
-    assert before == after
-    # idempotent on a healthy store
-    assert recover_compaction(bands) == {"restored": 0, "deleted": 0}
+    from .test_ivf_store import _build_ivfpq
+
+    lsh = str(tmp_path / "store")
+    write_bands_store(_docs(spark), lsh)
+    ivf, q_raw = _build_ivfpq(spark, tmp_path)
+
+    def answers():
+        return (
+            sorted(tuple(r) for r in store_neardup_pairs(spark, lsh).collect()),
+            [tuple(r) for r in ivfpq_probe_topk(spark, ivf, q_raw).collect()],
+        )
+
+    before = answers()
+    staged = {}
+    for table, id_col, part in (
+        (os.path.join(lsh, "bands"), "doc_id", "band"),
+        (os.path.join(lsh, "sigs"), "doc_id", "sbucket"),
+        (ivf, "vec_id", "cell"),
+    ):
+        dup = read_delta(spark, table).withColumn(id_col, F.col(id_col) + 10**9)
+        adds = _stage_files(dup, table, (), partition_by=(part,))
+        stage = os.path.join(table, ".stage-crashed")
+        os.makedirs(stage)
+        open(os.path.join(stage, "part-00000.parquet"), "wb").close()
+        staged[table] = sorted(a["path"] for a in adds) + [".stage-crashed"]
+        assert adds and os.path.isdir(stage)
+
+    assert answers() == before
+    for table, paths in staged.items():
+        assert vacuum_delta(table, retention_seconds=0) == sorted(paths)
+    assert answers() == before

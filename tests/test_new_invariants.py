@@ -725,42 +725,28 @@ def test_enc_node_round_trips_and_rejects_keys_outside_envelope(spark):
     assert nulls.first().e is None
 
 
-#: modules with a rename-aside publish of their OWN layout, not a table
-#: write path: module (relative to the package) -> why it is exempt
-_SWAP_EXEMPT = {
-    "io/lsh_store.py": "LSH index-store compaction swaps band dirs; "
-    "recover_compaction repairs a crash",
-    "io/ivf_store.py": "IVF-PQ index-store compaction swaps cell dirs with "
-    "the LSH store's recovery",
-    "io/matview.py": "materialized-view refresh publishes the rebuilt view "
-    "by rename",
-}
-
-
 def test_mutable_tables_have_no_copy_on_write_swap():
-    """Every mutation of an existing table commits through the Delta
-    log, so no module may bring back the copy-on-write path: a dynamic
-    partition overwrite (`partitionOverwriteMode`) or a rename-aside
-    directory swap (`__compacting` / `__old` staging dirs moved with
-    `shutil.move`). The exempt modules must still need their exemption."""
+    """Every mutation of an existing table, index store or view commits
+    through the Delta log, so no module may bring back the copy-on-write
+    path: a dynamic partition overwrite (`partitionOverwriteMode`) or a
+    rename-aside directory swap (`__compacting` / `_compact_tmp` /
+    `__refreshing` staging dirs, `__old` / `.old` set-asides moved with
+    `shutil.move`). No module is exempt."""
     import re
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "etl_github_spark"
-    pattern = re.compile(r"partitionOverwriteMode|__compacting|__old|shutil\.move")
-    hits, exempt_hit = [], set()
-    for path in sorted(pkg.rglob("*.py")):
-        rel = path.relative_to(pkg).as_posix()
-        for i, line in enumerate(path.read_text().splitlines(), 1):
-            if pattern.search(line):
-                if rel in _SWAP_EXEMPT:
-                    exempt_hit.add(rel)
-                else:
-                    hits.append(f"{rel}:{i}: {line.strip()}")
-    assert not hits, f"copy-on-write table machinery is back: {hits}"
-    assert exempt_hit == set(_SWAP_EXEMPT), (
-        f"stale exemptions: {sorted(set(_SWAP_EXEMPT) - exempt_hit)}"
+    pattern = re.compile(
+        r"partitionOverwriteMode|__compacting|_compact_tmp|__refreshing|__old"
+        r"|\.old\"|shutil\.move"
     )
+    hits = [
+        f"{path.relative_to(pkg).as_posix()}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, f"copy-on-write table machinery is back: {hits}"
 
 
 def test_cc_storage_does_not_grow_with_diameter(spark):
@@ -841,15 +827,18 @@ def test_query_code_never_writes_session_conf():
 
 
 def test_loop_and_replay_queries_are_thread_safe(spark):
-    """Two loop queries and a streaming replay run at once on three
+    """Two loop queries and two streaming replays run at once on four
     driver threads give their serial outputs, and leave the shared
-    session's conf exactly as they found it."""
+    session's conf exactly as they found it. The replays share one
+    streaming child session, so this also checks that their memory
+    sinks keep apart."""
     from concurrent.futures import ThreadPoolExecutor
 
     names = (
         "dedup_cluster_components",
         "graph_kcore_peel",
         "stream_hourly_counts_replay",
+        "stream_sessionize_replay",
     )
 
     def run(name):
@@ -858,10 +847,23 @@ def test_loop_and_replay_queries_are_thread_safe(spark):
     conf = dict(spark.conf.getAll)
     serial = {n: run(n) for n in names}
     assert dict(spark.conf.getAll) == conf
-    with ThreadPoolExecutor(3) as pool:
+    with ThreadPoolExecutor(len(names)) as pool:
         concurrent = dict(zip(names, pool.map(run, names)))
     assert concurrent == serial
     assert dict(spark.conf.getAll) == conf
+
+
+def test_stream_replays_do_not_grow_the_listener_bus(spark):
+    """A session that runs a stream adds listeners to the SparkContext's
+    shared listener bus, and nothing removes them. Replays share one
+    streaming child per width, so replays after the first add none."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    replay = QUERIES["stream_hourly_counts_replay"].fn
+    replay(spark, SF_ORACLE).collect()
+    after_first = bus.listeners().size()
+    for _ in range(3):
+        replay(spark, SF_ORACLE).collect()
+    assert bus.listeners().size() == after_first
 
 
 def test_driver_boundary_tunes_an_adversarial_session(spark):
