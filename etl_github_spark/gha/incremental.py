@@ -6,9 +6,11 @@ preprocess.py:178-190) and caps the window at now-1h so partially
 published hours are never ingested (T2 — a hand-rolled completeness
 watermark).
 
-Spark equivalent: ``agg(max(created_at))`` on the sink — with Parquet
-this resolves from footer min/max statistics, i.e. a metadata-only scan,
-the same trick the reference plays on the transaction log.
+Spark equivalent: ``agg(max(created_at))`` on the sink. On the plain
+Parquet lake this is a FULL scan of the column: Spark's DSv1 parquet
+path does not answer ``max`` from footer statistics. A log-only answer
+needs add-action stats (``delta_log.high_water_mark``), which ROADMAP
+item 1 moves the lake onto.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ def _ceil_hour(t: dt.datetime) -> dt.datetime:
 
 
 def high_water_mark(spark: SparkSession, table_path: str) -> dt.datetime | None:
-    """max(created_at) of an ingested table (stats-backed scan)."""
+    """max(created_at) of an ingested table (a full column scan)."""
     try:
         row = read_table(spark, table_path).agg(F.max("created_at").alias("hw")).first()
     except Exception:  # table does not exist yet → full backfill

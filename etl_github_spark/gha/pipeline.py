@@ -9,6 +9,7 @@ parallelism, retries, and barriers are the engine's job (SURVEY.md §3).
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -100,74 +101,6 @@ def fetch_to_landing(
 
     sc = spark.sparkContext
     return sc.parallelize(urls, max(1, len(urls))).map(_fetch_one).collect()
-
-
-def read_raw_direct(
-    spark: SparkSession,
-    urls: list[str],
-    timeout: float = 60.0,
-    max_retries: int = 3,
-) -> DataFrame:
-    """Single-pass remote NDJSON(.gz) scan — the reference's direct
-    streaming read (``dd.read_json("https://...json.gz")``,
-    preprocess.py:144-147) re-expressed as one Arrow-batched
-    ``mapInPandas`` over the URL manifest: each task streams its URL
-    through gunzip straight into rows, never touching local disk, so
-    every byte is read exactly once.
-
-    Contract: row-identical to ``read_raw`` over the same files landed
-    by :func:`fetch_to_landing` (pinned by e2e test over ``file://``).
-    One task per URL (gzip is unsplittable, so this matches the landed
-    path's parallelism). Connection-open failures retry with backoff
-    inside the task; a MID-STREAM failure raises after rows were
-    yielded, and correctness then rests on Spark's task retry (the
-    failed attempt's output is discarded) — which is exactly why
-    fetch-to-landing (atomic publish + resume + re-readable bytes)
-    stays the resilient default and this path is opt-in
-    (``ingest_urls(..., direct=True)``).
-    """
-
-    def gen(batches):
-        import gzip
-        import io
-        import time
-        import urllib.request
-
-        import pandas as pd
-
-        for pdf in batches:
-            for url in pdf["url"]:
-                resp = None
-                last: Exception | None = None
-                for attempt in range(max_retries):
-                    try:
-                        resp = urllib.request.urlopen(url, timeout=timeout)
-                        break
-                    except Exception as exc:  # noqa: BLE001 - retry transport errors
-                        last = exc
-                        time.sleep(min(2**attempt, 30))
-                if resp is None:
-                    raise RuntimeError(
-                        f"open failed after {max_retries} tries: {url}"
-                    ) from last
-                stream = (
-                    gzip.GzipFile(fileobj=resp) if url.endswith(".gz") else resp
-                )
-                text = io.TextIOWrapper(stream, encoding="utf-8")
-                buf: list[str] = []
-                for line in text:
-                    buf.append(line.rstrip("\r\n"))
-                    if len(buf) >= 65536:
-                        yield pd.DataFrame({"value": buf})
-                        buf = []
-                if buf:
-                    yield pd.DataFrame({"value": buf})
-                resp.close()
-
-    urls_df = spark.createDataFrame([(u,) for u in urls], "url string").repartition(
-        max(1, len(urls)), "url"
-    )
-    return urls_df.mapInPandas(gen, schema="value string")
 
 
 def split_landing(
@@ -270,15 +203,20 @@ def read_raw(spark: SparkSession, paths: list[str]) -> DataFrame:
     return spark.read.text(paths)
 
 
-def extract_tables(raw_lines: DataFrame) -> dict[str, DataFrame]:
-    """Parsed events → the six normalized DataFrames.
+def extract_tables(events: DataFrame) -> Iterator[tuple[str, DataFrame]]:
+    """Parsed events (:func:`~.extract.parse_raw_lines`) → the six
+    normalized DataFrames, yielded as ``(table, frame)`` pairs one at a
+    time: planning the six frames is driver-side analysis (~0.6 s on a
+    4-core VM), so a writer that submits each frame as it arrives
+    overlaps that planning with the first writes (:func:`ingest_raw`).
+    ``dict(extract_tables(events))`` gives them all at once.
 
-    The parsed events plan is reused by all six extractors; Spark scans
-    the input once per action, so callers ingesting all tables should
-    ``.persist()`` the parsed frame (gha.ipynb cell 23's shared-scan
-    idiom, SURVEY.md §4)."""
-    events = parse_raw_lines(raw_lines)
-    return {name: fn(events) for name, fn in EXTRACTORS.items()}
+    The events plan is reused by all six extractors; Spark scans the
+    input once per action, so callers ingesting all tables should
+    ``.persist()`` the parsed frame first, as :func:`ingest_raw` does
+    (gha.ipynb cell 23's shared-scan idiom, SURVEY.md §4)."""
+    for name, fn in EXTRACTORS.items():
+        yield name, fn(events)
 
 
 def ingest_files(
@@ -298,8 +236,8 @@ def ingest_raw(
     outdir: str,
     mode: str = "append",
 ) -> dict[str, str]:
-    """Ingest a raw-lines frame (from :func:`read_raw` or
-    :func:`read_raw_direct`) and append all six tables to ``outdir``.
+    """Ingest a raw-lines frame (from :func:`read_raw`) and append all
+    six tables to ``outdir``.
 
     One cached parse feeds six partitioned writes — the Spark shape of
     process_file + write_delta (preprocess.py:143-175). The cache is
@@ -308,8 +246,7 @@ def ingest_raw(
     over the same cached blocks, so the scheduler interleaves their
     tasks and write/commit latencies overlap (~2× faster than serial
     locally; on a cluster it keeps executors saturated while per-table
-    commits run). For the direct path the cache also means the remote
-    bytes are streamed exactly once, not once per table.
+    commits run).
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -321,8 +258,8 @@ def ingest_raw(
         out = {name: f"{outdir}/{name}" for name in EXTRACTORS}
         with ThreadPoolExecutor(max_workers=len(EXTRACTORS)) as ex:
             futs = [
-                ex.submit(write_table, fn(events), out[name], mode, ("date",))
-                for name, fn in EXTRACTORS.items()
+                ex.submit(write_table, df, out[name], mode, ("date",))
+                for name, df in extract_tables(events)
             ]
             for f in futs:
                 f.result()
@@ -337,7 +274,6 @@ def ingest_urls(
     landing_dir: str,
     outdir: str,
     mode: str = "append",
-    direct: bool = False,
     split_shard_bytes: int | None = None,
 ) -> dict[str, str]:
     """Production entry point for the real GH Archive source:
@@ -345,18 +281,12 @@ def ingest_urls(
     Compose with :func:`list_files` / ``incremental.parse_start_stop``
     for the steady-state hourly loop (preprocess.py:247-266).
 
-    ``direct=True`` opts into the reference's single-pass semantics
-    (:func:`read_raw_direct`): no landing copy, each byte touched once;
-    trade-off documented on that function.
-
     ``split_shard_bytes`` opts into the decompress-split scale path
     (:func:`split_landing`): landed .gz files are exploded once into
     plain-text shards of roughly that size, so the parse stage
     parallelizes within a single large hour instead of assigning the
     whole file to one task (the 100× straggler documented on
     read_raw)."""
-    if direct:
-        return ingest_raw(spark, read_raw_direct(spark, urls), outdir, mode=mode)
     paths = fetch_to_landing(spark, urls, landing_dir)
     if split_shard_bytes:
         import os

@@ -2582,6 +2582,29 @@ def optimize_delta(
     return {"version": version, "removed": len(removes), "added": len(adds)}
 
 
+def zorder_key(cols: tuple[str, ...], bits: int = 21):
+    """Morton (Z-order) key: interleaves the low ``bits`` of each
+    non-negative integer column into one long, so rows close in EVERY
+    key dimension land close in the one-dimensional sort order.
+
+    Pure bitwise column expression (whole-stage codegen; no UDF):
+    bit b of column j becomes bit b*ncols+j of the key. ``bits`` * ncols
+    must stay < 63; 21 bits × 2 cols resolves ~2M distinct values per
+    dimension — coarser high bits still cluster correctly when a domain
+    exceeds that (Z-order needs relative, not exact, locality).
+    """
+    from pyspark.sql import functions as F
+
+    n = len(cols)
+    assert n * bits < 63, "interleaved key must fit a signed long"
+    z = F.lit(0).cast("long")
+    for b in range(bits):
+        for j, c in enumerate(cols):
+            bit = F.shiftright(F.col(c).cast("long"), b).bitwiseAND(F.lit(1))
+            z = z.bitwiseOR(F.shiftleft(bit, b * n + j))
+    return z
+
+
 def zorder_delta(
     spark: SparkSession,
     table: str,
@@ -2591,8 +2614,8 @@ def zorder_delta(
     bits: int = 21,
 ) -> dict:
     """OPTIMIZE ZORDER BY on the Delta log: rewrite the live snapshot
-    clustered by the Morton interleave of ``zorder_by`` (io/sink.py's
-    ``zorder_key`` — pure bitwise codegen, no UDF) into exactly
+    clustered by the Morton interleave of ``zorder_by`` (:func:`zorder_key`
+    — pure bitwise codegen, no UDF) into exactly
     ``n_files`` rank-balanced files per partition, with add-action
     stats on the clustered columns. Each file then covers a small
     hyper-rectangle of the key space, so ``stats_filter`` scans prune
@@ -2605,8 +2628,8 @@ def zorder_delta(
     contents and stats out, on every engine and every run. That
     determinism is what lets an external oracle recompute which files
     a box query must keep. The global rank sort is one exchange — the
-    same price any clustering rewrite pays; at production scale the
-    sampled-range variant (``write_table_zordered``) trades the
+    same price any clustering rewrite pays; at production scale a
+    sampled ``repartitionByRange`` on the key would trade the
     determinism back for a balanced parallel sort.
 
     Commits remove+add with ``dataChange: false`` like OPTIMIZE (rows
@@ -2615,8 +2638,6 @@ def zorder_delta(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
     from pyspark.sql.window import Window
-
-    from .sink import zorder_key
 
     if n_files < 1:
         raise ValueError("n_files must be >= 1")

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.tables import load_table as T  # noqa: F401  (the query modules' loader)
-from ..session import private_session
+from ..session import private_session, rebase
 
 
 def par(df: DataFrame, n: int | None = None) -> DataFrame:
@@ -99,30 +99,9 @@ def loop_width(spark: SparkSession, n_rows: int) -> int:
                       spark.sparkContext.defaultParallelism * 8))
 
 
-def rebase(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """``df``'s plan as a frame of ``spark``: what is built on it plans
-    and runs with that session's conf (a loop on its
-    `session.private_session`, a result back on the caller's)."""
-    return DataFrame(
-        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, df._jdf.queryExecution().analyzed()
-        ),
-        spark,
-    )
-
-
 def loop_frame(df: DataFrame, n_rows: int) -> DataFrame:
     """``df`` on a private session at the loop width for ``n_rows``
     rows: the loop built on it runs at that width."""
     spark = df.sparkSession
     return rebase(df, private_session(spark, loop_width(spark, n_rows)))
 
-
-def release(*dfs: DataFrame) -> None:
-    """Free the executor blocks behind materialized ``localCheckpoint``s.
-    ``DataFrame.unpersist`` does not: the checkpoint lives on the RDD
-    the frame's LogicalRDD wraps, not in the cache manager. Only call
-    it once every eager checkpoint that reads a frame has run — the
-    lineage is truncated, so nothing can recompute it."""
-    for df in dfs:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)

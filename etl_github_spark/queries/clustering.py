@@ -26,7 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ._util import T, loop_frame, par, rebase, release
+from ..session import rebase, release
+from ._util import T, loop_frame, par
 from .dedup import JACCARD_PAIRS_SQL, dedup_jaccard_pairs
 from .registry import query
 

@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import T, loop_frame, rebase, release
+from ..session import rebase, release
+from ._util import T, loop_frame
 from .registry import query
 
 _SCALE = 10**12  # fixed-point rank mass (total graph mass = _SCALE)

@@ -1084,7 +1084,7 @@ def lake_delta_change_feed(spark, sf_dir):
 
 
 def _morton_sql(col_a: str, col_b: str, bits: int = 21) -> str:
-    """DuckDB replica of io/sink.py::zorder_key for two columns: bit b
+    """DuckDB replica of io/delta_log.py::zorder_key for two columns: bit b
     of col j lands at position b*2+j (j=0 for ``col_a``). Disjoint bit
     positions make the OR a plain sum."""
     terms = []
@@ -1153,8 +1153,7 @@ def lake_delta_zorder_skip(spark, sf_dir):
     matters when re-clustering 100 TB is a once-a-quarter job serving
     every reader. The exact-rank split (vs repartitionByRange's
     sampled boundaries) is what makes the layout reproducible enough
-    to be oracle-checked; the sampled variant is the throughput path
-    (io/sink.py::write_table_zordered).
+    to be oracle-checked.
     """
     import os
 

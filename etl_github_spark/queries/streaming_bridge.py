@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import stream_session
+from ..session import drop_clone_listener, stream_session
 from ._util import T
 from .registry import query
 
@@ -37,10 +37,12 @@ def stream_hourly_counts_replay(spark, sf_dir):
     `readStream` file source over the events fixture, 1-hour windows
     with a 1-hour watermark, complete-mode memory sink, AvailableNow
     trigger — the bounded replay of `streaming/pipeline.py::
-    stream_windowed_counts`. The oracle is the batch closed form, so
-    the driver hash asserts the streaming replay CONVERGES to the batch
-    answer (the streaming-batch duality every downstream consumer
-    relies on). Spark's hour windows are epoch-aligned == date_trunc.
+    stream_windowed_counts`, which builds the aggregation (``ts`` is
+    renamed to its ``created_at`` event-time column). The oracle is the
+    batch closed form, so the driver hash asserts the streaming replay
+    CONVERGES to the batch answer (the streaming-batch duality every
+    downstream consumer relies on). Spark's hour windows are
+    epoch-aligned == date_trunc.
 
     In production the same plan runs unbounded with an append-mode
     parquet sink and the watermark closing windows incrementally; the
@@ -53,12 +55,15 @@ def stream_hourly_counts_replay(spark, sf_dir):
     integer-truncates to micros exactly like the batch loader
     (`io/tables.py`), so streaming and batch see identical timestamps.
     """
+    from ..streaming.pipeline import stream_windowed_counts
+
     stream = _events_stream(stream_session(spark, _STATE_PARTS), sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").cast("long").alias("n"))
-        .select(F.col("w.start").alias("hour_start"), "event_type", "n")
+    agg = stream_windowed_counts(
+        stream.withColumnRenamed("ts", "created_at"), group_col="event_type"
+    ).select(
+        F.col("window_start").alias("hour_start"),
+        "event_type",
+        F.col("cnt").alias("n"),
     )
     rows = [tuple(r) for r in _replay(agg, "stream_hourly_replay")]
     return spark.createDataFrame(rows, "hour_start timestamp, event_type string, n long")
@@ -100,21 +105,7 @@ def _replay(agg_df, sink: str, mode: str = "complete"):
     finally:
         q.stop()
         s.catalog.dropTempView(name)
-        _drop_clone_listener(s, q)
-
-
-def _drop_clone_listener(spark, q) -> None:
-    """A streaming query runs on a clone of its session; a stateful one
-    makes the clone's query manager, which registers its listener bus
-    on the SparkContext's shared listener bus, and nothing removes it:
-    one more listener per replay for the life of the context. Remove
-    it once the query has stopped. The bus is a private field of the
-    manager, read by reflection; the clone's manager serves no other
-    query."""
-    manager = q._jsq.streamingQuery().sparkSessionForStream().streams()
-    field = manager.getClass().getDeclaredField("listenerBus")
-    field.setAccessible(True)
-    spark.sparkContext._jsc.sc().listenerBus().removeListener(field.get(manager))
+        drop_clone_listener(s, q)
 
 
 def _events_stream(spark, sf_dir):
@@ -207,10 +198,10 @@ def stream_dedup_replay(spark, sf_dir):
     watermark-bounded `dropDuplicates` on (user, type, day) feeding a
     second stateful aggregation (count per type) in one streaming
     query — the exactly-once ingestion dedup layer
-    (`streaming/dedup.py::stream_dedup_exact`) composed with a rollup,
-    replayed bounded. Which physical duplicate row survives the dedup
-    is engine-arbitrary, so the query aggregates to the
-    duplicate-invariant count — the oracle's DISTINCT closed form —
+    (`streaming/dedup.py::stream_dedup_exact`, day buckets) composed
+    with a rollup, replayed bounded. Which physical duplicate row
+    survives the dedup is engine-arbitrary, so the query aggregates to
+    the duplicate-invariant count — the oracle's DISTINCT closed form —
     making the hash insensitive to survivor choice but sharp to any
     lost or double-counted key.
 
@@ -219,11 +210,11 @@ def stream_dedup_replay(spark, sf_dir):
     agg is the usual partial+final count. Chained stateful operators
     share the micro-batch's event-time watermark.
     """
+    from ..streaming.dedup import stream_dedup_exact
+
     stream = _events_stream(stream_session(spark, _STATE_PARTS), sf_dir)
-    ded = (
-        stream.withColumn("day", F.date_trunc("day", "ts"))
-        .withWatermark("ts", "1 hour")
-        .dropDuplicates(["user_id", "event_type", "day"])
+    ded = stream_dedup_exact(
+        stream, ["user_id", "event_type"], ts_col="ts", bucket="day"
     )
     agg = ded.groupBy("event_type").agg(F.count("*").cast("long").alias("n_user_days"))
     rows = [tuple(r) for r in _replay(agg, "stream_dedup")]

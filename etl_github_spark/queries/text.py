@@ -264,8 +264,8 @@ def text_stopword_removal(spark, sf_dir):
 )
 def multimodal_binary_meta(spark, sf_dir):
     # multimodal plumbing: opaque payload as BinaryType + typed metadata.
-    # Real decode (image/audio) lives in etl_github_spark.text.multimodal
-    # as mapInPandas with a stubbed codec.
+    # Real decode (image/audio) is out of scope: the multimodal_* queries
+    # run over a deterministic fake derived from doc attributes.
     d = T(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
     return d.select(
@@ -429,8 +429,8 @@ def multimodal_image_dims(spark, sf_dir):
     width/height live at bytes 16-24 of a real file) WITHOUT decoding
     the payload. The fixture has no real images, so the binary is
     synthesized in-plan (8-byte big-endian [width, height] derived from
-    doc attributes — a deterministic fake per the multimodal stubbing
-    contract, `multimodal.py`); the PARSE path is the real product:
+    doc attributes — a deterministic fake, no media codec in the
+    engine); the PARSE path is the real product:
     byte-slice → hex → integer, all JVM-side column ops, zero Python.
     The oracle recomputes the dims from the attributes directly, so a
     corrupted encode, an endianness slip, or an off-by-one slice
@@ -551,8 +551,8 @@ def multimodal_frame_sample(spark, sf_dir):
     opaque binary container header, derive clip duration, and EXPLODE
     the deterministic every-k-th-frame sample plan — one row per frame
     a downstream decode stage would extract, with its integer-exact
-    timestamp. The decode itself stays behind the multimodal codec stub
-    (`multimodal.py`); this op is the Spark-side contract around it:
+    timestamp. The decode itself is out of scope (no media codec in the
+    engine); this op is the Spark-side contract around it:
     header parse (substring/conv over binary, JVM-side), bounded
     ``sequence`` fan-out (n_frames/k rows per clip — never unbounded),
     and a per-frame work list partitionable by doc for the Arrow-batch
@@ -723,8 +723,8 @@ def multimodal_audio_frames(spark, sf_dir):
     fixed-offset header (a WAV fmt/data chunk in real life) WITHOUT
     decoding PCM. The fixture has no real audio, so the 8-byte header
     ([sample_rate:4][n_samples:4] big-endian) is synthesized in-plan
-    from doc attributes (the multimodal stubbing contract,
-    `multimodal.py`); the PARSE path and the frame arithmetic are the
+    from doc attributes (a deterministic fake, no media codec in the
+    engine); the PARSE path and the frame arithmetic are the
     real product. Frame grid: 1024-sample windows, 512-sample hop,
     center=False (librosa/torchaudio's non-padded STFT): n_frames,
     the last frame's start offset, and the uncovered tail the hop
@@ -821,8 +821,8 @@ def multimodal_video_scene_cuts(spark, sf_dir):
     before captioning/dedup: perceptual-hash each sampled frame, flag a
     cut wherever consecutive signatures differ in > 36 of 60 bits
     (random-frame Hamming is Binomial(60,½): μ=30, σ≈3.9 — the
-    threshold is ~1.5σ). The decode+pHash itself lives behind the
-    multimodal codec stub; here the signature is the deterministic fake
+    threshold is ~1.5σ). The decode+pHash itself is out of scope (no
+    media codec in the engine); here the signature is the deterministic fake
     (md5 of (doc, frame)) so the WHOLE distance/threshold/segment
     pipeline is real and oracle-checked.
 
@@ -933,8 +933,8 @@ def _phash_pairs_sql() -> str:
 def multimodal_phash_dedup_pairs(spark, sf_dir):
     """Perceptual-hash near-dup pairs over media payloads — the image
     dedup stage of a multimodal pipeline (aHash/pHash → Hamming-band
-    index), run here over the deterministic fake decode the multimodal
-    stubbing contract mandates (`multimodal.py`): the 'image' is the
+    index), run here over a deterministic fake decode (no media codec
+    in the engine): the 'image' is the
     doc's normalized content stream, each of 60 pixel-blocks hashes its
     8-char block, and bit_p is the block hash's lowest bit — LOCAL
     content edits flip only the touched blocks' bits, exactly the

@@ -5,6 +5,13 @@ conf set is what we'd ship on a 1000-executor cluster — AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), broadcast
 threshold sized for dimension tables, UTC session time zone (reference
 parses tz-aware ISO-8601 timestamps; SURVEY.md §7 risk register).
+
+This module is also the one door to Spark internals: :func:`rebase`,
+:func:`release` and :func:`drop_clone_listener` are the engine's only
+uses of private Spark APIs (py4j handles and JVM reflection), so a
+Spark upgrade that moves one breaks here and in its test, not silently
+inside a loop query (``tests/test_new_invariants.py`` fails on a
+private handle anywhere else in the package).
 """
 
 from __future__ import annotations
@@ -12,7 +19,7 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable confs applied to *any* session (including a session the
 #: driver harness hands us) — safe to set after the JVM is up.
@@ -100,6 +107,43 @@ def stream_session(spark: SparkSession, partitions: int) -> SparkSession:
         if key not in _STREAM_SESSIONS:
             _STREAM_SESSIONS[key] = private_session(spark, partitions)
         return _STREAM_SESSIONS[key]
+
+
+def rebase(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``spark``: what is built on it plans
+    and runs with that session's conf (a loop on its
+    :func:`private_session`, a result back on the caller's). Wraps the
+    analyzed plan with the JVM's ``classic.Dataset.ofRows``."""
+    return DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.queryExecution().analyzed()
+        ),
+        spark,
+    )
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the executor blocks behind materialized ``localCheckpoint``s.
+    ``DataFrame.unpersist`` does not: the checkpoint lives on the RDD
+    the frame's LogicalRDD wraps, not in the cache manager. Only call
+    it once every eager checkpoint that reads a frame has run — the
+    lineage is truncated, so nothing can recompute it."""
+    for df in dfs:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def drop_clone_listener(spark: SparkSession, q) -> None:
+    """A streaming query runs on a clone of its session; a stateful one
+    makes the clone's query manager, which registers its listener bus
+    on the SparkContext's shared listener bus, and nothing removes it:
+    one more listener per query for the life of the context. Remove
+    it once the query ``q`` has stopped. The bus is a private field of
+    the manager, read by reflection; the clone's manager serves no
+    other query."""
+    manager = q._jsq.streamingQuery().sparkSessionForStream().streams()
+    field = manager.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    spark.sparkContext._jsc.sc().listenerBus().removeListener(field.get(manager))
 
 
 def get_spark(app_name: str = "etl-github-spark", master: str | None = None) -> SparkSession:

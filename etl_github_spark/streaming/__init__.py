@@ -1,3 +1,3 @@
-from .dedup import stream_dedup_exact, stream_dedup_within_watermark  # noqa: F401
-from .joins import stream_static_enrich, stream_stream_interval_join  # noqa: F401
-from .pipeline import stream_ingest, stream_session_counts, stream_windowed_counts  # noqa: F401
+from .dedup import stream_dedup_exact  # noqa: F401
+from .joins import stream_stream_interval_join  # noqa: F401
+from .pipeline import stream_windowed_counts  # noqa: F401

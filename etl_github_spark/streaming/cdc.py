@@ -1,9 +1,10 @@
 """Change-data-capture apply: stream a (op, key, payload, seq) change
 log into a Delta table with exactly-once semantics.
 
-`stream_merge_sink` handles the upsert-only world; real CDC feeds
-(Debezium-shaped) also carry DELETES and per-key ordering, and applying
-them naively breaks in four ways this module exists to prevent:
+An upsert-only feed is the special case whose ops are all ``I``/``U``;
+real CDC feeds (Debezium-shaped) also carry DELETES and per-key
+ordering, and applying them naively breaks in four ways this module
+exists to prevent:
 
 * intra-batch ordering — a batch may hold I→U→D for one key; only the
   LATEST op per key (by the monotone ``seq``) may apply, and an earlier

@@ -8,16 +8,11 @@ set of keys seen inside the watermark horizon, pruned by the engine, so
 memory is bounded by (arrival rate × watermark) instead of the full
 history — the only formulation that survives at 100 TB/day.
 
-Two variants with different guarantees:
-
-- :func:`stream_dedup_exact` — ``dropDuplicates([key, bucket])``
-  keyed by (key, truncated event time): a duplicate arriving within the
-  same bucket is dropped; one arriving in a later bucket re-emits.
-  Deterministic state size, at-most-one emission per bucket.
-- :func:`stream_dedup_within_watermark` —
-  ``dropDuplicatesWithinWatermark([key])``: drops any duplicate whose
-  event time lands within the watermark delay of the first-seen row,
-  regardless of window alignment (Spark 3.5+ operator).
+:func:`stream_dedup_exact` is ``dropDuplicates([key, bucket])`` keyed
+by (key, truncated event time): a duplicate arriving within the same
+bucket is dropped; one arriving in a later bucket re-emits.
+Deterministic state size, at-most-one emission per bucket. The corpus
+variants below judge arriving documents against a landed corpus.
 """
 
 from __future__ import annotations
@@ -47,17 +42,6 @@ def stream_dedup_exact(
         .dropDuplicates([*keys, "__w"])
         .drop("__w")
     )
-
-
-def stream_dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "created_at",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Window-alignment-free dedup: any duplicate arriving within the
-    watermark delay of the first-seen row is dropped."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def stream_dedup_against_corpus(

@@ -1,18 +1,12 @@
-"""Streaming joins: stream-stream interval join and stream-static enrich.
+"""Streaming joins: the stream-stream interval join.
 
 A continuous ingest pipeline correlates events across streams (a click
-with the view that preceded it) and enriches a stream against dimension
-tables. Spark-native:
-
-- stream-stream joins buffer BOTH sides in state; watermarks plus an
-  event-time range condition bound that state — without the range bound
-  the state grows forever, which is the 100 TB/day failure mode. Spark
-  prunes each side's buffer once the watermark passes the time-range's
-  reach, so state is (rate × (watermark + interval)), independent of
-  stream lifetime.
-- stream-static joins need no state at all: the static side is planned
-  per micro-batch (broadcast for dim-sized tables), so the stream side
-  never shuffles.
+with the view that preceded it). Stream-stream joins buffer BOTH sides
+in state; watermarks plus an event-time range condition bound that
+state — without the range bound the state grows forever, which is the
+100 TB/day failure mode. Spark prunes each side's buffer once the
+watermark passes the time-range's reach, so state is
+(rate × (watermark + interval)), independent of stream lifetime.
 """
 
 from __future__ import annotations
@@ -56,10 +50,3 @@ def stream_stream_interval_join(
     )
     return lw.join(rw, cond, how)
 
-
-def stream_static_enrich(
-    stream: DataFrame, dim: DataFrame, key: str, how: str = "left"
-) -> DataFrame:
-    """Enrich a stream against a static dimension (broadcast per
-    micro-batch — the stream side never shuffles)."""
-    return stream.join(F.broadcast(dim), key, how)

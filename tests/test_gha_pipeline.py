@@ -37,7 +37,7 @@ def test_parse_drops_corrupt_and_unknown(spark, tmp_path):
 
 
 def test_extract_tables_golden(spark, tmp_path):
-    tables = extract_tables(_raw(spark, tmp_path))
+    tables = dict(extract_tables(parse_raw_lines(_raw(spark, tmp_path))))
 
     commits = {tuple(r) for r in tables["commit"].select("sha", "username", "repo").collect()}
     # 2+1+1+1 commits; zero-commit push contributes no rows
@@ -92,7 +92,7 @@ def test_ingest_sink_partitioned_and_incremental(spark, tmp_path):
 
 
 def test_reference_queries_golden(spark, tmp_path):
-    tables = extract_tables(_raw(spark, tmp_path))
+    tables = dict(extract_tables(parse_raw_lines(_raw(spark, tmp_path))))
     out = keyword_commits(tables["commit"], tables["watch"]).collect()
     # only alice's "use Dask ..." commit survives: bot excluded, dask/
     # repo excluded, org/quiet unpopular, "daskboard" lacks " dask",
@@ -107,8 +107,8 @@ def test_reference_queries_golden(spark, tmp_path):
 
 
 def test_plain_text_and_gzip_equivalent(spark, tmp_path):
-    t_gz = extract_tables(_raw(spark, tmp_path, gz=True))
-    t_txt = extract_tables(_raw(spark, tmp_path, gz=False))
+    t_gz = dict(extract_tables(parse_raw_lines(_raw(spark, tmp_path, gz=True))))
+    t_txt = dict(extract_tables(parse_raw_lines(_raw(spark, tmp_path, gz=False))))
     for name in EXTRACTORS:
         assert t_gz[name].count() == t_txt[name].count(), name
 
@@ -152,55 +152,6 @@ def test_fetch_to_landing_and_ingest(spark, tmp_path):
     assert read_table(spark, out["watch"]).count() == 7
 
 
-def test_direct_stream_read_matches_landed(spark, tmp_path):
-    """Opt-in single-pass path (reference parity, preprocess.py:144-147):
-    read_raw_direct over file:// URLs must be ROW-IDENTICAL to
-    fetch_to_landing + read_raw over the same files, and the direct
-    ingest must produce the same lake tables."""
-    from etl_github_spark.gha.pipeline import (
-        fetch_to_landing,
-        ingest_urls,
-        read_raw,
-        read_raw_direct,
-    )
-
-    src_paths = write_fixture(tmp_path / "src", gz=True)
-    urls = [f"file://{p}" for p in src_paths]
-
-    landed = fetch_to_landing(spark, urls, str(tmp_path / "landing"))
-    landed_rows = sorted(r.value for r in read_raw(spark, landed).collect())
-    direct_rows = sorted(r.value for r in read_raw_direct(spark, urls).collect())
-    assert direct_rows == landed_rows  # byte-identical lines
-
-    out = ingest_urls(
-        spark, urls, str(tmp_path / "unused_landing"), str(tmp_path / "lake"),
-        direct=True,
-    )
-    from etl_github_spark.io.sink import read_table
-
-    assert read_table(spark, out["watch"]).count() == 7
-    # the landing dir was never created — truly single-pass
-    assert not (tmp_path / "unused_landing").exists()
-
-
-def test_direct_stream_read_plain_text_and_open_failure(spark, tmp_path):
-    """Non-gz URLs pass through undecompressed; an unopenable URL fails
-    the job after bounded retries."""
-    import pytest
-
-    from etl_github_spark.gha.pipeline import read_raw_direct
-
-    p = tmp_path / "plain.json"
-    p.write_text('{"a": 1}\n{"a": 2}\n')
-    rows = read_raw_direct(spark, [f"file://{p}"]).collect()
-    assert sorted(r.value for r in rows) == ['{"a": 1}', '{"a": 2}']
-
-    with pytest.raises(Exception, match="open failed|nosuchfile"):
-        read_raw_direct(
-            spark, [f"file://{tmp_path}/nosuchfile.json.gz"], max_retries=1
-        ).count()
-
-
 def test_fetch_to_landing_failure_raises(spark, tmp_path):
     from etl_github_spark.gha.pipeline import fetch_to_landing
 
@@ -218,7 +169,7 @@ def test_fetch_to_landing_failure_raises(spark, tmp_path):
 def test_commit_messages_nonnull_filter_semantics(spark, tmp_path):
     # SQL three-valued logic: contains(null) is null → row dropped, which
     # differs from pandas NaN propagation (SURVEY.md §7 risk register).
-    tables = extract_tables(_raw(spark, tmp_path))
+    tables = dict(extract_tables(parse_raw_lines(_raw(spark, tmp_path))))
     df = tables["commit"].withColumn(
         "message", F.when(F.col("sha") == "a2", None).otherwise(F.col("message"))
     )

@@ -85,14 +85,12 @@ def test_vacuum_reaps_orphans_preserves_rows(spark, tmp_path):
 def test_streaming_windowed_agg_end_to_end(spark, tmp_path):
     """Real stream: landing dir → parse → watermark+window agg → memory
     sink via foreachBatch-free append... complete-mode memory table."""
-    from etl_github_spark.gha.extract import parse_raw_lines
-    from etl_github_spark.gha.pipeline import extract_tables  # noqa: F401
+    from etl_github_spark.gha.extract import extract_commits, parse_raw_lines
     from etl_github_spark.streaming import stream_windowed_counts
-    from etl_github_spark.streaming.pipeline import read_raw_stream
-    from etl_github_spark.gha.extract import extract_commits
 
     write_fixture(tmp_path / "landing", gz=False)
-    events = parse_raw_lines(read_raw_stream(spark, str(tmp_path / "landing")))
+    raw = spark.readStream.format("text").load(str(tmp_path / "landing"))
+    events = parse_raw_lines(raw)
     commits = extract_commits(events)
     agg = stream_windowed_counts(commits, window="1 hour", group_col="repo")
     q = (
@@ -142,160 +140,6 @@ def test_merge_delta_dv_idempotent_reapply(spark, tmp_path):
         (2, "b"),
         (3, "c"),
     ]
-
-
-def test_write_table_sorted_yields_disjoint_file_ranges(spark, tmp_path):
-    """Range-clustered files must carry narrow, non-overlapping min/max
-    footer stats on the sort key — the property that makes parquet
-    file skipping work on selective reads."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import write_table_sorted
-
-    df = spark.range(20000).select(
-        (F.xxhash64("id") % 10000).alias("user_id"), F.col("id").alias("v")
-    )
-    path = str(tmp_path / "sorted")
-    write_table_sorted(df, path, ("user_id",), n_files=8)
-
-    ranges = []
-    for f in glob.glob(path + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            assert col.path_in_schema == "user_id"
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) >= 4
-    ranges.sort()
-    # disjoint (boundary ties allowed): each file's min >= previous max
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert lo2 >= hi1
-    # and collectively narrow: total covered span ~ key domain, not
-    # n_files * domain (the unsorted failure mode where every file
-    # spans the full key range)
-    spans = sum(hi - lo for lo, hi in ranges)
-    domain = max(hi for _, hi in ranges) - min(lo for lo, _ in ranges)
-    assert spans <= domain * 1.01
-    # content survives the rewrite
-    assert spark.read.parquet(path).count() == 20000
-
-
-def test_format_round_trips_preserve_rows_and_schema(spark, tmp_path):
-    """parquet/ORC/JSON/CSV round-trips must return the identical row
-    multiset and schema (CSV via simple-type projection)."""
-    import pytest
-
-    from etl_github_spark.io.formats import FORMATS, read_format, write_format
-    from etl_github_spark.io.tables import load_table
-
-    df = (
-        load_table(spark, "/root/testdata/sf0.001", "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-        .limit(200)
-    )
-    expect = sorted(tuple(r) for r in df.collect())
-    for fmt in FORMATS:
-        path = str(tmp_path / fmt)
-        write_format(df, path, fmt)
-        back = read_format(spark, path, fmt, schema=df.schema)
-        assert back.schema == df.schema, fmt
-        assert sorted(tuple(r) for r in back.collect()) == expect, fmt
-
-
-def test_text_format_reads_require_schema(spark, tmp_path):
-    import pytest
-
-    from etl_github_spark.io.formats import read_format
-
-    with pytest.raises(ValueError):
-        read_format(spark, str(tmp_path), "json")
-    with pytest.raises(ValueError):
-        read_format(spark, str(tmp_path), "avro")
-
-
-def test_zorder_prunes_on_secondary_dimension(spark, tmp_path):
-    """Z-order clustering must yield footer-stat pruning on BOTH key
-    columns: for a predicate on y alone, the x-sorted layout leaves every
-    file a candidate while the z-ordered layout prunes most of them."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import write_table_sorted, write_table_zordered
-
-    df = spark.range(40000).select(
-        F.pmod(F.xxhash64("id"), F.lit(1024)).alias("x"),
-        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1024)).alias("y"),
-        F.col("id").alias("v"),
-    )
-
-    def candidates(path, col_name, lo, hi):
-        total, cand = 0, 0
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = next(
-                i
-                for i in range(md.row_group(0).num_columns)
-                if md.row_group(0).column(i).path_in_schema == col_name
-            )
-            mins = [md.row_group(r).column(idx).statistics.min for r in range(md.num_row_groups)]
-            maxs = [md.row_group(r).column(idx).statistics.max for r in range(md.num_row_groups)]
-            total += 1
-            if min(mins) <= hi and max(maxs) >= lo:
-                cand += 1
-        return cand, total
-
-    xsorted = str(tmp_path / "xsorted")
-    zordered = str(tmp_path / "zordered")
-    write_table_sorted(df, xsorted, ("x", "y"), n_files=16)
-    write_table_zordered(df, zordered, ("x", "y"), n_files=16, bits=10)
-
-    # y-only box predicate: 1/8 of the y domain
-    cand_sorted, total_sorted = candidates(xsorted, "y", 0, 127)
-    cand_z, total_z = candidates(zordered, "y", 0, 127)
-    assert total_sorted >= 8 and total_z >= 8
-    assert cand_sorted == total_sorted  # x-major sort: y stats are full-range
-    assert cand_z <= total_z // 2  # z-order: most files miss the y box
-
-    # and the rewrite is lossless
-    assert spark.read.parquet(zordered).count() == 40000
-
-
-def test_streaming_session_windows_end_to_end(spark, tmp_path):
-    """Session windows over a real file-source stream: the 22:10-22:20
-    commit burst merges into one session per repo; sessions still open
-    at the watermark (the 23:59 and 00:05 events) are withheld in
-    append mode."""
-    from etl_github_spark.gha.extract import extract_commits, parse_raw_lines
-    from etl_github_spark.streaming import stream_session_counts
-    from etl_github_spark.streaming.pipeline import read_raw_stream
-
-    write_fixture(tmp_path / "landing", gz=False)
-    commits = extract_commits(parse_raw_lines(read_raw_stream(spark, str(tmp_path / "landing"))))
-    agg = stream_session_counts(commits, gap="20 minutes", watermark="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sess_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r["repo"], r["session_start"].isoformat()): (r["cnt"], r["session_end"].isoformat())
-        for r in spark.sql("SELECT * FROM sess_counts").collect()
-    }
-    # alice's 2 commits (22:10) and the bot commit (22:20) merge: one
-    # session [22:10, 22:40) with 3 commits.
-    assert rows == {("org/tools", "2024-02-29T22:10:00"): (3, "2024-02-29T22:40:00")}
 
 
 def test_parquet_schema_evolution_merges_columns(spark, tmp_path):
@@ -390,141 +234,6 @@ def test_read_table_evolved_merges_added_column(spark, tmp_path):
     assert rows[0] is None and rows[4] == 1
     # plain scan still works (schema from a sampled footer, no crash)
     assert read_table(spark, path).count() == 5
-
-
-def test_analyze_and_prune_files_skip_disjoint_ranges(spark, tmp_path):
-    """Footer-stats pruning: a range-clustered table prunes files whose
-    [min,max] is disjoint from the predicate, and reading the kept
-    files returns exactly the matching rows."""
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import analyze_table, prune_files, write_table_sorted
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    write_table_sorted(df, path, sort_cols=("k",), n_files=8)
-
-    stats = analyze_table(path)
-    assert stats["n_rows"] == 1000 and stats["n_files"] >= 4
-
-    keep = prune_files(path, "k", 100, 150)
-    assert 0 < len(keep) < stats["n_files"]  # genuinely pruned
-    got = spark.read.parquet(*keep).where(F.col("k").between(100, 150)).count()
-    assert got == 51
-    # pruned-out files really contain no matching rows
-    import glob, os
-    all_files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    dropped = [f for f in all_files if f not in set(keep)]
-    if dropped:
-        n = spark.read.parquet(*dropped).where(F.col("k").between(100, 150)).count()
-        assert n == 0
-
-
-def test_prune_files_keeps_files_appended_after_analyze(spark, tmp_path):
-    """A file appended after analyze_table wrote the manifest has no
-    stats row; the plan list must still include it (conservative keep),
-    otherwise an incremental job silently drops its rows."""
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import analyze_table, prune_files, write_table, write_table_sorted
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    write_table_sorted(df, path, sort_cols=("k",), n_files=8)
-    analyze_table(path)
-
-    late = spark.range(5000, 5010).select(F.col("id").alias("k"), F.lit(0).alias("v"))
-    write_table(late, path, mode="append", partition_by=())
-
-    # predicate range matches ONLY the late rows — pruning on the stale
-    # manifest must still return the unanalyzed file(s)
-    keep = prune_files(path, "k", 5000, 6000)
-    got = spark.read.parquet(*keep).where(F.col("k").between(5000, 6000)).count()
-    assert got == 10
-
-
-def test_prune_files_timestamp_stats_match_across_paths(spark, tmp_path):
-    """Timestamp min/max stats must prune identically whether they come
-    from the JSON manifest (string round-trip) or straight from the
-    footers — the canonical form is str(v) on both paths."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from etl_github_spark.io.sink import analyze_table, prune_files, write_table_sorted
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(200).select(
-        F.col("id").alias("k"),
-        (F.to_timestamp(F.lit("2024-01-01 00:00:00")) + F.make_interval(hours=F.col("id"))).alias("ts"),
-    )
-    # Spark's default INT96 timestamps carry no footer min/max; stats-based
-    # pruning of time columns requires the annotated INT64 form.
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        write_table_sorted(df, path, sort_cols=("ts",), n_files=4)
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-
-    lo, hi = "2024-01-02 00:00:00", "2024-01-03 00:00:00"
-    direct = prune_files(path, "ts", lo, hi)      # no manifest yet: footer path
-    analyze_table(path)
-    via_manifest = prune_files(path, "ts", lo, hi)
-    assert direct == via_manifest
-    assert 0 < len(direct) < 4
-
-    # incomparable bounds (numeric vs string stats) never drop a file
-    import glob
-    n_all = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    assert len(prune_files(path, "ts", 0, 10)) == n_all
-
-
-def test_bloom_sidecar_prunes_absent_keys_never_present_ones(spark, tmp_path):
-    """analyze_table(bloom_cols=...) writes per-file bloom sidecars;
-    prune_files_eq must keep every file that truly contains the probe
-    key (no false negatives, the correctness side) and prune files for
-    absent keys (the effectiveness side), while statless files are
-    always kept."""
-    from etl_github_spark.io.sink import analyze_table, prune_files_eq
-
-    path = str(tmp_path / "tbl")
-    # two files with DISJOINT user_id ranges via partitioning
-    spark.createDataFrame(
-        [(i, "2024-01-01") for i in range(100)]
-        + [(i + 10_000, "2024-01-02") for i in range(100)],
-        ["user_id", "date"],
-    ).write.partitionBy("date").parquet(path)
-    st = analyze_table(path, bloom_cols=("user_id",))
-    assert all("bloom" in m for m in st["files"].values())
-
-    import glob
-
-    import pyarrow.parquet as pq
-
-    all_files = sorted(glob.glob(f"{path}/**/*.parquet", recursive=True))
-    containing = [
-        f
-        for f in all_files
-        if 42 in pq.read_table(f, columns=["user_id"])["user_id"].to_pylist()
-    ]
-    assert containing, "fixture must place the probe key somewhere"
-    kept = prune_files_eq(path, "user_id", 42)
-    # no false negatives: every file that truly holds 42 is kept
-    assert set(containing) <= set(kept)
-    # effectiveness: the other partition's files are pruned
-    assert all("date=2024-01-02" not in f for f in kept)
-
-    # absent key: prunes down to (at most) bloom false positives
-    kept_absent = prune_files_eq(path, "user_id", 555_555)
-    assert len(kept_absent) < len(all_files)
-
-    # a file appended after analyze has no sidecar and is always kept
-    spark.createDataFrame([(7, "2024-01-03")], ["user_id", "date"]).write.mode(
-        "append"
-    ).partitionBy("date").parquet(path)
-    kept2 = prune_files_eq(path, "user_id", 555_555)
-    assert any("date=2024-01-03" in f for f in kept2)
 
 
 def test_scd2_apply_noop_and_idempotent(spark, tmp_path):

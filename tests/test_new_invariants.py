@@ -684,6 +684,24 @@ def test_rotation_window_matches_generator():
     assert list(q.QUERIES)[: len(window)] == window
 
 
+def test_queries_md_matches_registry():
+    """QUERIES.md is generated from the registry; a committed copy that
+    drifted (a renamed query, a rewritten docstring) misdescribes the
+    engine. Regenerate with `python tools_gen_query_index.py`."""
+    import importlib.util
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "tools_gen_query_index", root / "tools_gen_query_index.py"
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    assert (root / "QUERIES.md").read_text() == tool.render(), (
+        "QUERIES.md is stale — run `python tools_gen_query_index.py`"
+    )
+
+
 def test_bench_names_are_registered():
     """Every bench HEADLINE/EXTENDED name must exist in the registry — a
     typo or a renamed query would otherwise surface only as a silent
@@ -856,14 +874,44 @@ def test_loop_and_replay_queries_are_thread_safe(spark):
 def test_stream_replays_do_not_grow_the_listener_bus(spark):
     """A session that runs a stream adds listeners to the SparkContext's
     shared listener bus, and nothing removes them. Replays share one
-    streaming child per width, so replays after the first add none."""
+    streaming child per width, so replays after the first add none.
+    The SCD2 and exactly-once replays start foreachBatch sinks on the
+    caller's own session; repeating them must not grow the bus either."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
-    replay = QUERIES["stream_hourly_counts_replay"].fn
-    replay(spark, SF_ORACLE).collect()
+    names = (
+        "stream_hourly_counts_replay",
+        "stream_scd2_replay",
+        "stream_delta_sink_exactly_once",
+    )
+    for name in names:
+        QUERIES[name].fn(spark, SF_ORACLE).collect()
     after_first = bus.listeners().size()
-    for _ in range(3):
-        replay(spark, SF_ORACLE).collect()
+    for _ in range(2):
+        for name in names:
+            QUERIES[name].fn(spark, SF_ORACLE).collect()
     assert bus.listeners().size() == after_first
+
+
+def test_spark_internals_only_in_session_module():
+    """Private Spark handles (py4j `_jvm`/`_jdf`/`_jsq`/`_jsc`/
+    `_jsparkSession`) and JVM reflection (`getDeclaredField`) appear in
+    `session.py` only, so a Spark upgrade that moves one breaks one
+    module and its tests, not a loop query somewhere else."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "etl_github_spark"
+    private = {"_jvm", "_jdf", "_jsq", "_jsc", "_jsparkSession", "getDeclaredField"}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "session.py":
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            name = n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
+            if name in private:
+                hits.append(f"{rel}:{n.lineno} {name}")
+    assert not hits, f"Spark internals outside session.py: {hits}"
 
 
 def test_driver_boundary_tunes_an_adversarial_session(spark):

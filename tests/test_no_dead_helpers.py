@@ -6,6 +6,8 @@ below with a reason.
 
 A reference is a Name, an Attribute, an imported name, or an identifier
 inside a string literal (``getattr``-style lookups, registry names).
+An import inside a package ``__init__.py`` is not a reference: a
+re-export exposes a name, it does not call it.
 Docstrings do not count: prose that mentions a helper does not call it.
 Tests do not count either: a helper only its own test calls is dead.
 """
@@ -21,31 +23,14 @@ PKG = ROOT / "etl_github_spark"
 
 #: dotted name (a function, or a whole module) -> why it stays unreferenced
 KEEP = {
-    "etl_github_spark.gha.pipeline.extract_tables":
-        "public parse-once-to-six-frames step; ingest_raw inlines it to "
-        "persist the shared parse",
     "etl_github_spark.gha.pipeline.ingest_urls":
         "production entry point for the real GH Archive source (needs network)",
     "etl_github_spark.io.delta_log.drop_constraint":
         "inverse of add_constraint; public Delta table-property API",
-    "etl_github_spark.io.formats":
-        "format-breadth reader/writer (parquet/orc/json/csv), public API",
     "etl_github_spark.io.ivf_store.write_embeddings_ivfpq":
         "two-pass IVF-PQ writer; tests pin the fused writer bit-identical to it",
-    "etl_github_spark.io.sink.write_table_sorted":
-        "range-clustered writer, public footer-stats pruning API",
-    "etl_github_spark.io.sink.write_table_zordered":
-        "Z-order clustered writer, public footer-stats pruning API",
-    "etl_github_spark.io.sink.prune_files":
-        "min/max file skipping over analyze_table stats, public API",
-    "etl_github_spark.io.sink.prune_files_eq":
-        "bloom-sidecar file skipping over analyze_table stats, public API",
-    "etl_github_spark.multimodal":
-        "multimodal ingest capability of the paper (media files and features)",
     "etl_github_spark.streaming.cdc.stream_cdc_apply":
         "streaming CDC sink; its batch step apply_cdc_batch is driver-checked",
-    "etl_github_spark.streaming.pipeline.stream_merge_sink":
-        "streaming upsert sink over merge_delta_dv, public API",
 }
 
 
@@ -73,12 +58,13 @@ def _referenced_names() -> set[str]:
     for path in _production_files():
         tree = ast.parse(path.read_text(), str(path))
         docs = _docstring_ids(tree)
+        reexport = path.name == "__init__.py"
         for n in ast.walk(tree):
             if isinstance(n, ast.Name):
                 names.add(n.id)
             elif isinstance(n, ast.Attribute):
                 names.add(n.attr)
-            elif isinstance(n, ast.alias):
+            elif isinstance(n, ast.alias) and not reexport:
                 names.add(n.name.rsplit(".", 1)[-1])
             elif (
                 isinstance(n, ast.Constant)

@@ -228,3 +228,78 @@ def test_cdc_rejects_equal_winning_seq_for_key(spark, tmp_path):
     b2 = spark.read.schema(_SCHEMA).json(str(landing / "ok.json"))
     apply_cdc_batch(b2, table, ("k",), "dept")
     assert _state(spark, table) == {(1, "a", 11), (2, "b", 20)}
+
+
+_UPSERT_SCHEMA = "op string, seq long, id long, val string, date string"
+
+
+def test_cdc_all_upsert_feed_upserts_across_batches(spark, tmp_path):
+    """An upsert-only feed is a change log whose ops are all I/U. Two
+    micro-batches with overlapping keys: the table ends with the latest
+    version per key, no duplicates; the first batch creates the Delta
+    table, the second is one MERGE."""
+    from etl_github_spark.io.delta_log import history, read_delta
+    from etl_github_spark.streaming.cdc import stream_cdc_apply
+
+    landing = tmp_path / "landing"
+    _land(
+        landing,
+        "b1.json",
+        [
+            {"op": "I", "seq": 1, "id": 1, "val": "a", "date": "2024-01-01"},
+            {"op": "I", "seq": 2, "id": 2, "val": "b", "date": "2024-01-01"},
+        ],
+    )
+    _land(
+        landing,
+        "b2.json",
+        [
+            # later version of key 2, plus a new key in a new partition
+            {"op": "U", "seq": 3, "id": 2, "val": "b2", "date": "2024-01-01"},
+            {"op": "I", "seq": 4, "id": 3, "val": "c", "date": "2024-01-02"},
+        ],
+    )
+    src = (
+        spark.readStream.schema(_UPSERT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)  # force two micro-batches
+        .json(str(landing))
+    )
+    table = str(tmp_path / "tbl")
+    q = stream_cdc_apply(src, table, str(tmp_path / "ckpt"), ("id",), "date")
+    q.awaitTermination(120)
+    assert {r["id"]: r["val"] for r in read_delta(spark, table).collect()} == {
+        1: "a",
+        2: "b2",
+        3: "c",
+    }
+    assert read_delta(spark, table).count() == 3
+    assert [h["operation"] for h in history(table)] == ["WRITE", "MERGE"]
+
+
+def test_cdc_first_batch_redelivery_hides_uncommitted_file(spark, tmp_path):
+    """If a prior first-batch attempt died after creating the table dir
+    but before its commit (a committer _temporary tree and an
+    uncommitted part file, no log version), the redelivered batch must
+    still create the table, and the dead attempt's file stays
+    invisible."""
+    from etl_github_spark.io.delta_log import read_delta
+    from etl_github_spark.streaming.cdc import stream_cdc_apply
+
+    landing = tmp_path / "landing"
+    _land(
+        landing,
+        "b1.json",
+        [{"op": "I", "seq": 1, "id": 1, "val": "a", "date": "2024-01-01"}],
+    )
+    # simulate the crashed first attempt: leftovers on disk, no commit
+    tbl = tmp_path / "tbl"
+    (tbl / "_temporary").mkdir(parents=True)
+    (tbl / "date=2024-01-01").mkdir()
+    spark.createDataFrame([(9, "dead")], "id long, val string").write.parquet(
+        str(tbl / "date=2024-01-01" / "dead")
+    )
+    src = spark.readStream.schema(_UPSERT_SCHEMA).json(str(landing))
+    q = stream_cdc_apply(src, str(tbl), str(tmp_path / "ckpt"), ("id",), "date")
+    q.awaitTermination(120)
+    got = {r["id"]: r["val"] for r in read_delta(spark, str(tbl)).collect()}
+    assert got == {1: "a"}

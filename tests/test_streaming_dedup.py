@@ -57,43 +57,6 @@ def test_stream_dedup_exact_drops_in_window_duplicates(spark, tmp_path):
     ]
 
 
-def test_stream_dedup_within_watermark_drops_while_state_live(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps first-seen state until the
-    watermark passes first_ts + delay — duplicates arriving while the
-    state is live are dropped regardless of bucket alignment."""
-    from etl_github_spark.streaming.dedup import stream_dedup_within_watermark
-
-    landing = tmp_path / "landing"
-    _land(
-        landing,
-        "a.json",
-        [
-            {"event_id": 1, "user_id": 10, "created_at": "2024-01-01T00:05:00Z"},
-            {"event_id": 1, "user_id": 10, "created_at": "2024-01-01T00:55:00Z"},  # dup
-            {"event_id": 2, "user_id": 11, "created_at": "2024-01-01T00:10:00Z"},
-        ],
-    )
-    src = (
-        spark.readStream.schema("event_id long, user_id long, created_at string")
-        .json(str(landing))
-        .selectExpr("event_id", "user_id", "to_timestamp(created_at) AS created_at")
-    )
-    deduped = stream_dedup_within_watermark(src, ["event_id"], ts_col="created_at")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_wm_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        r["event_id"] for r in spark.sql("SELECT * FROM dedup_wm_out").collect()
-    )
-    assert got == [1, 2]
-
-
 def test_stream_dedup_against_corpus_drops_landed_and_in_stream_dups(spark, tmp_path):
     """Corpus-known fingerprints never re-emit; in-stream duplicates emit
     once (first micro-batch occurrence wins); genuinely new docs pass."""

@@ -1,157 +1,20 @@
-"""Streaming ingest (Trigger.AvailableNow + checkpoint exactly-once) and
-multimodal mapInPandas plumbing tests."""
+"""Streaming windowed-count semantics, checked on a batch frame."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from etl_github_spark.multimodal import (
-    MEDIA_SCHEMA,
-    Codec,
-    extract_features,
-    meta_summary,
-    resize_media,
-    sample_frames,
-)
-from etl_github_spark.streaming import stream_ingest, stream_windowed_counts
+from etl_github_spark.streaming import stream_windowed_counts
 
 from .gha_fixture import write_fixture
 
 
-def test_stream_ingest_available_now(spark, tmp_path):
-    write_fixture(tmp_path / "landing", gz=False)
-    q = stream_ingest(
-        spark,
-        str(tmp_path / "landing"),
-        str(tmp_path / "lake"),
-        str(tmp_path / "ckpt"),
-        table="commit",
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "lake" / "commit"))
-    assert out.count() == 5
-
-    # exactly-once: restarting over the same landing dir adds nothing
-    q2 = stream_ingest(
-        spark,
-        str(tmp_path / "landing"),
-        str(tmp_path / "lake"),
-        str(tmp_path / "ckpt"),
-        table="commit",
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "lake" / "commit")).count() == 5
-
-    # new file landing → only the delta is processed
-    staged = write_fixture(tmp_path / "staged", gz=False, n_files=1)
-    import shutil
-
-    shutil.copy(staged[0], tmp_path / "landing" / "2024-03-01-2.json")
-    q3 = stream_ingest(
-        spark,
-        str(tmp_path / "landing"),
-        str(tmp_path / "lake"),
-        str(tmp_path / "ckpt"),
-        table="commit",
-    )
-    q3.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "lake" / "commit")).count() == 10
-
-
 def test_stream_windowed_counts_batch_semantics(spark, tmp_path):
     # windowed agg logic is testable on a batch frame (same expression)
+    from etl_github_spark.gha import parse_raw_lines
     from etl_github_spark.gha.pipeline import extract_tables
 
     paths = write_fixture(tmp_path / "in", gz=True)
-    commits = extract_tables(spark.read.text(paths))["commit"]
+    commits = dict(extract_tables(parse_raw_lines(spark.read.text(paths))))["commit"]
     out = stream_windowed_counts(commits, window="1 hour", group_col="repo")
     rows = {(r.window_start.isoformat(), r.repo): r.cnt for r in out.collect()}
     assert rows[("2024-02-29T22:00:00", "org/tools")] == 3  # a1,a2,b1
     assert rows[("2024-03-01T00:00:00", "org/tools")] == 1  # d1
-
-
-def _media_df(spark, n=20):
-    rows = [
-        (i, bytes([i % 251]) * (10 + i), ("png" if i % 2 else "jpg", 64 + i, 48 + i))
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_multimodal_features_fake_codec(spark):
-    media = _media_df(spark)
-    feats = extract_features(media, Codec(fake=True))
-    rows = {r.media_id: r for r in feats.collect()}
-    assert len(rows) == 20
-    assert rows[3].n_bytes == 13
-    # deterministic across runs
-    again = {r.media_id: r for r in extract_features(media, Codec(fake=True)).collect()}
-    assert all(rows[i].digest == again[i].digest and rows[i].feat_0 == again[i].feat_0 for i in rows)
-
-
-def test_multimodal_codec_stub_raises(spark):
-    with pytest.raises(Exception) as ei:
-        extract_features(_media_df(spark, 3), Codec(fake=False)).collect()
-    assert "NotImplementedError" in str(ei.value) or "no media codec" in str(ei.value)
-
-
-def test_multimodal_meta_only_prunes_payload(spark):
-    media = _media_df(spark)
-    out = meta_summary(media)
-    got = {r.format: r.n_items for r in out.collect()}
-    assert got == {"jpg": 10, "png": 10}
-    assert sample_frames(media, 2).count() == 10
-    # null payload tolerated
-    media2 = media.withColumn(
-        "payload", F.when(F.col("media_id") == 0, None).otherwise(F.col("payload"))
-    )
-    r0 = {r.media_id: r for r in extract_features(media2, Codec(fake=True)).collect()}[0]
-    assert r0.n_bytes is None and r0.digest is None
-
-
-def test_multimodal_resize_updates_meta_and_payload(spark):
-    media = _media_df(spark, 6)
-    out = {r.media_id: r for r in resize_media(media, 32, 16, Codec(fake=True)).collect()}
-    assert len(out) == 6
-    for r in out.values():
-        assert (r.meta.width, r.meta.height) == (32, 16)
-        assert len(r.payload) == (32 * 16) // 64
-    # deterministic re-encode, format preserved
-    again = {r.media_id: r for r in resize_media(media, 32, 16, Codec(fake=True)).collect()}
-    assert all(bytes(out[i].payload) == bytes(again[i].payload) for i in out)
-    assert out[1].meta.format == "png" and out[2].meta.format == "jpg"
-
-
-def test_multimodal_resize_stub_raises(spark):
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        resize_media(_media_df(spark, 2), 8, 8, Codec(fake=False)).collect()
-
-
-def test_multimodal_binaryfile_ingest_roundtrip(spark, tmp_path):
-    """binaryFile ingestion: payload bytes survive exactly, media_id is
-    path-stable across re-reads, glob filters at listing time, and the
-    ingested frame composes with the Arrow feature extractor."""
-    from etl_github_spark.multimodal import Codec, extract_features, ingest_media_files
-
-    media_dir = tmp_path / "media" / "nested"
-    media_dir.mkdir(parents=True)
-    payloads = {"a.jpg": b"\xff\xd8fakejpegbytes", "b.png": b"\x89PNGfake", "c.txt": b"not media"}
-    for name, data in payloads.items():
-        (media_dir / name).write_bytes(data)
-
-    m = ingest_media_files(spark, str(tmp_path / "media"), glob="*.{jpg,png}")
-    rows = {r["meta"]["format"]: bytes(r["payload"]) for r in m.collect()}
-    assert rows == {"jpg": payloads["a.jpg"], "png": payloads["b.png"]}  # txt excluded
-
-    ids1 = sorted(r["media_id"] for r in m.collect())
-    ids2 = sorted(
-        r["media_id"]
-        for r in ingest_media_files(spark, str(tmp_path / "media"), glob="*.{jpg,png}").collect()
-    )
-    assert ids1 == ids2 and len(set(ids1)) == 2
-
-    feats = extract_features(m, Codec(fake=True)).collect()
-    assert {f["n_bytes"] for f in feats} == {len(payloads["a.jpg"]), len(payloads["b.png"])}

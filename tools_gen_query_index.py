@@ -1,12 +1,14 @@
 #!/usr/bin/env python
 """Regenerate QUERIES.md — a one-line-per-query index of the registry
 (name, tags, oracle-checked?, first docstring line). Run after adding
-operators so the inventory stays current."""
+operators so the inventory stays current; a tier-1 test fails while the
+committed file differs from :func:`render`."""
 
 from __future__ import annotations
 
 
-def main() -> None:
+def render() -> str:
+    """The text of QUERIES.md for the current registry."""
     import etl_github_spark.queries as q
 
     lines = [
@@ -27,9 +29,15 @@ def main() -> None:
         lines.append(
             f"| {i} | `{name}` | {tags} | {'y' if d.sql else 'rows-only'} | {head} |"
         )
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    from etl_github_spark.queries import QUERIES
+
     with open("QUERIES.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"QUERIES.md: {len(q.QUERIES)} queries")
+        f.write(render())
+    print(f"QUERIES.md: {len(QUERIES)} queries")
 
 
 if __name__ == "__main__":
