@@ -1,4 +1,4 @@
-"""Minimal Delta-Lake transaction log: append/overwrite commits + replay.
+"""Delta-Lake transaction log: commits, replay, and the table verbs.
 
 The reference stores its lakehouse in Delta (preprocess.py:169-175
 `write_deltalake`, :181-186 add-action stats scan, :199-206
@@ -7,87 +7,71 @@ is a from-scratch implementation of the published Delta
 transaction-log protocol (delta-io/delta PROTOCOL.md), and it is the
 ONE write path for mutating an existing table: MERGE (with a
 ``deletes`` key frame for CDC tombstones), DELETE, OPTIMIZE, Z-order,
-VACUUM, RESTORE, and the SCD2 and CDC applies built on MERGE all
-commit here. io/sink.py keeps only the plain Parquet writers. The
-protocol subset starts from what the reference actually uses:
+PURGE, VACUUM, RESTORE, and the SCD2 and CDC applies built on MERGE
+all commit here. io/sink.py keeps only the plain Parquet writers.
 
-* ``_delta_log/<20-digit version>.json`` commits containing
-  ``protocol`` / ``metaData`` / ``add`` / ``remove`` actions
-  (NDJSON, one action per line — reader version 1, writer version 2);
-* append commits (add actions only) and overwrite commits (remove all
-  live files + add the new ones) — the reference's two write modes,
-  BOTH schema-enforced against the table's metaData by field names and
-  types (nullability/metadata-insensitive: Spark file sources force
-  read schemas nullable, so a table's own read-back snapshot must
-  append cleanly);
-* snapshot replay at latest or any historical version (time travel by
-  version, the DESCRIBE HISTORY analog via :func:`history`), with the
+Scope:
+
+* ``_delta_log/<20-digit version>.json`` commits of ``protocol`` /
+  ``metaData`` / ``add`` / ``remove`` / ``txn`` / ``commitInfo``
+  actions (NDJSON, one action per line), replayed at the latest or any
+  historical version (time travel, :func:`history`, RESTORE), with the
   scan schema taken from the LOG's metaData, not file-order luck;
-* per-file ``stats`` on add actions (numRecords + min/max of the stats
-  columns) so the high-water-mark scan can be answered from the LOG
-  alone, like the reference's dt.get_add_actions() trick.
+* append and overwrite commits, schema-enforced by field names and
+  types (nullability-insensitive: Spark file sources force read
+  schemas nullable), ADDITIVE schema evolution (``merge_schema``), and
+  ``txn`` idempotency for exactly-once streaming sinks;
+* hive-partitioned tables (the reference's ``partition_by="date"``)
+  pruned FROM THE LOG, and min/max data skipping on add-action stats,
+  which also answer the high-water-mark scan without opening a file;
+* merge-on-read deletion vectors (:func:`delete_delta_dv`,
+  :func:`merge_delta_dv`, read through by every scan and purged by
+  :func:`materialize_deletes`), column mapping mode ``name`` with
+  metadata-only :func:`rename_column`/:func:`drop_column`, CHECK
+  constraints, generated columns, ``delta.appendOnly``, and shallow
+  clones;
+* parquet checkpoints: replay starts from the newest checkpoint at or
+  below the target and applies only the JSON tail, and
+  :func:`cleanup_log` may drop the prefix; time travel into a cleaned
+  prefix raises.
+
+Out of scope: checkpoint tombstones (``remove`` actions are not
+carried into checkpoints; files removed before a cleaned checkpoint are
+reaped by :func:`vacuum_delta` after retention, real Delta's end state
+too), ``txn`` actions in checkpoints, type changes (``overwriteSchema``), column mapping on
+partitioned tables, and the full change-data feed.
+
+Each job is done in one place: :func:`_actions` parses a version file,
+:func:`_commit_op` is the commit step (``commitInfo``, the atomic
+publish, removal of staged files on failure), :func:`_move_staged`
+publishes a rewrite staged one file per key, and :func:`_scan` is the
+deletion-vector-aware scan.
 
 Crash/concurrency story: a commit is staged as a hidden temp file,
 fsync'd, then atomically CLAIMED via ``os.link`` to the version name —
 the version file is never visible in a torn state, exactly one writer
 wins a version (losers raise FileExistsError), and a loser's staged
 data files are removed before the error propagates (no orphan leak).
-:func:`vacuum_delta` additionally reaps any data file the log does not
-reference (crashed pre-commit stagings). :func:`_replay` refuses
-non-contiguous logs (a missing version file means lost commits — an
-error, never a silently wrong snapshot).
-
-Round 7 closes the two gaps the round-5 review named first:
-
-* **partitioned tables** (the reference's actual layout is
-  ``partition_by="date"``, preprocess.py:169-175): ``write_delta``
-  takes ``partition_by``; files are laid out hive-style
-  (``col=value/part-*.parquet``), add actions carry real
-  ``partitionValues`` (string-encoded per the spec, null →
-  ``__HIVE_DEFAULT_PARTITION__`` on disk / JSON null in the action),
-  and readers prune partitions FROM THE LOG — a
-  ``partition_filter`` scan never opens (or even lists) a file in a
-  non-matching partition;
-* **checkpoints**: :func:`checkpoint_delta` writes a spec-shaped
-  ``<version>.checkpoint.parquet`` (one row per live action, nested
-  add/metaData/protocol columns) plus ``_last_checkpoint``; replay
-  starts from the newest checkpoint at-or-below the target version
-  and applies only the JSON tail, so a 9,504-commit hourly backfill
-  (the reference's own window, gha.ipynb:19-29) replays O(live files
-  + tail) instead of O(all commits). :func:`cleanup_log` may then
-  drop JSON files at-or-below the checkpoint; time travel to a
-  version whose JSON prefix was cleaned raises (never guesses), and
-  log-gap detection still fires on the post-checkpoint tail.
-
-Round 7 also adds the read-side and evolution pieces a user hits next:
-min/max DATA SKIPPING off add-action stats (``stats_filter`` on
-:func:`snapshot_files`/:func:`read_delta` — zone maps), and ADDITIVE
-schema evolution (``write_delta(..., merge_schema=True)`` commits a
-fresh metaData action with the widened schema; metadata resolution is
-version-aware, so time travel below the evolution commit reads under
-the old schema and pre-evolution files fill new columns with nulls —
-real Delta's mergeSchema semantics).
-
-Deliberately out of scope (documented, not silently faked): deletion
-vectors, column mapping, checkpoint tombstones (``remove`` actions are
-not carried into checkpoints — after :func:`cleanup_log`, files
-removed before the checkpoint become log-unreferenced and are reaped
-by :func:`vacuum_delta` after retention, which is also real Delta's
-end state), and non-additive schema changes (drops/renames/type
-changes — ``overwriteSchema`` territory — always raise).
-Interop with delta-spark cannot be tested in
-this env; the protocol shape follows the public spec so a real reader
-should accept these tables, and the round-trip is pinned by tests +
-driver-hashed registry queries (``lake_delta_log_scan``,
+Every verb that reads the snapshot claims its version BEFORE planning,
+so a concurrent commit turns into an explicit conflict instead of a
+commit built on a stale snapshot. :func:`vacuum_delta` reaps any data
+file the log does not reference (crashed pre-commit stagings).
+:func:`_replay` refuses non-contiguous logs (a missing version file
+means lost commits — an error, never a silently wrong snapshot).
+Interop with delta-spark cannot be tested in this env; the protocol
+shape follows the public spec, and the round-trip is pinned by tests
+and driver-hashed registry queries (``lake_delta_log_scan``,
 ``lake_delta_partitioned``, ``lake_delta_checkpoint``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import functools
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -118,6 +102,13 @@ def _list_versions(table: str) -> list[int]:
     return sorted(out)
 
 
+def _actions(table: str, version: int) -> list[dict]:
+    """The actions of one version file, in file order — THE one place a
+    version file is opened and parsed."""
+    with open(_version_file(table, version)) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
 def _json_safe(v):
     """Stats values → JSON-storable form (Delta stores timestamps/dates
     as ISO strings). Returns ``_OMIT`` for types stats can't carry."""
@@ -138,6 +129,8 @@ _OMIT = object()
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+_BASE_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
 
 def _decode_hive_dir(segment: str) -> tuple[str, str | None]:
@@ -167,50 +160,84 @@ def _stage_files(
     inside the data files (Spark's partitionBy drops them — same as
     Delta), readers re-derive them from the log/paths."""
     import glob
-    import shutil
 
     import pyarrow.parquet as pq
 
-    stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(stage)
-    adds = []
-    try:
-        pattern = os.path.join(stage, *(["*"] * len(partition_by)), "part-*.parquet")
-        for f in sorted(glob.glob(pattern)):
-            md = pq.ParquetFile(f).metadata  # one footer read per file
-            if md.num_rows == 0:
-                continue  # empty partitions produce 0-row files: nothing to commit
-            rel_dirs = os.path.relpath(os.path.dirname(f), stage)
-            segments = [] if rel_dirs == "." else rel_dirs.split(os.sep)
-            pvals = dict(_decode_hive_dir(s) for s in segments)
-            name = f"part-{uuid.uuid4().hex}.parquet"
-            rel = os.path.join(*segments, name) if segments else name
-            dest = os.path.join(table, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(f, dest)
-            stats = _file_stats(md, stats_cols)
-            adds.append(
-                {
-                    "path": rel.replace(os.sep, "/"),
-                    "partitionValues": pvals,
-                    "size": os.path.getsize(dest),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                    **({"stats": json.dumps(stats)} if stats is not None else {}),
-                }
-            )
-    except Exception:
-        _remove_staged(table, adds)
-        raise
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    adds: list[dict] = []
+    with _stage_dir(table) as stage:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(stage)
+        try:
+            pattern = os.path.join(stage, *(["*"] * len(partition_by)), "part-*.parquet")
+            for f in sorted(glob.glob(pattern)):
+                md = pq.ParquetFile(f).metadata  # one footer read per file
+                if md.num_rows == 0:
+                    continue  # empty partitions produce 0-row files: nothing to commit
+                rel_dirs = os.path.relpath(os.path.dirname(f), stage)
+                segments = [] if rel_dirs == "." else rel_dirs.split(os.sep)
+                rel = os.path.join(*segments, f"part-{uuid.uuid4().hex}.parquet")
+                os.makedirs(os.path.dirname(os.path.join(table, rel)), exist_ok=True)
+                os.replace(f, os.path.join(table, rel))
+                pvals = dict(_decode_hive_dir(s) for s in segments)
+                adds.append(_add_action(table, rel, md, pvals, stats_cols, True))
+        except Exception:
+            _remove_staged(table, adds)
+            raise
     return adds
 
 
-def _remove_staged(table: str, adds: list[dict]) -> None:
+@contextlib.contextmanager
+def _stage_dir(table: str):
+    """A hidden ``.stage-*`` dir under the table root for one Spark
+    write; removed on exit (files moved out of it are not)."""
+    stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
+    try:
+        yield stage
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _move_staged(
+    table: str, stage: str, col: str, like: dict, prefix: str = "part"
+) -> dict:
+    """Publish a rewrite staged by ``df.write.partitionBy(col)``: for each
+    key of ``like`` its ``col=<key>`` dir must hold exactly one file
+    (the hash-group contract of ``repartition(n, col)``), which moves
+    under the table root into the directory of ``like[key]`` — a path
+    the rewrite replaces, so a partition's rewrite stays in its hive
+    dir. Returns ``{key: (relative path, footer metadata)}``; a key
+    whose rewrite kept no rows wrote no dir and is absent. On failure
+    the files already moved are removed before the error propagates."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    moved: dict = {}
+    try:
+        for key, path in like.items():
+            parts = glob.glob(os.path.join(stage, f"{col}={key}", "part-*.parquet"))
+            if len(parts) > 1:  # pragma: no cover - hash-group contract
+                raise RuntimeError(f"rewrite of {col}={key} staged {len(parts)} files")
+            if not parts:
+                continue
+            # a shallow clone's input has an ABSOLUTE source path: its
+            # rewrite lands under THIS table's root (the clone's
+            # copy-on-write), never back in the source dir
+            rel_dir = "" if os.path.isabs(path) else os.path.dirname(path)
+            name = f"{prefix}-{uuid.uuid4().hex}.parquet"
+            rel = f"{rel_dir}/{name}" if rel_dir else name
+            md = pq.ParquetFile(parts[0]).metadata
+            os.replace(parts[0], os.path.join(table, rel))
+            moved[key] = (rel, md)
+    except Exception:
+        _remove_staged(table, [{"path": rel} for rel, _ in moved.values()])
+        raise
+    return moved
+
+
+def _remove_staged(table: str, adds) -> None:
     for a in adds:
         try:
             os.remove(os.path.join(table, a["path"]))
@@ -218,7 +245,25 @@ def _remove_staged(table: str, adds: list[dict]) -> None:
             pass
 
 
-def _file_stats(md, cols: tuple[str, ...]) -> dict | None:
+def _add_action(
+    table: str, rel: str, md, pvals: dict, stats_cols, data_change: bool
+) -> dict:
+    """The add action of a file just placed at ``rel`` under the table."""
+    return {
+        "path": rel.replace(os.sep, "/"),
+        "partitionValues": pvals,
+        "size": os.path.getsize(os.path.join(table, rel)),
+        "modificationTime": 0,
+        "dataChange": data_change,
+        "stats": json.dumps(_file_stats(md, tuple(stats_cols))),
+    }
+
+
+def _remove_action(path: str, data_change: bool) -> dict:
+    return {"remove": {"path": path, "deletionTimestamp": 0, "dataChange": data_change}}
+
+
+def _file_stats(md, cols: tuple[str, ...]) -> dict:
     """numRecords + min/max per requested column from the parquet footer
     metadata (no data read), serialized the way Delta stores them (JSON
     string on the add action). A column with incomplete or
@@ -301,6 +346,30 @@ def _commit(table: str, version: int, actions: list[dict]) -> None:
         pass
 
 
+def _commit_op(
+    table: str,
+    version: int,
+    actions: list[dict],
+    operation: str,
+    parameters: dict,
+    staged=(),
+) -> int:
+    """THE commit step every verb goes through: append the
+    ``commitInfo`` action, publish ``version`` (:func:`_commit`), and on
+    a failed publish remove the ``staged`` files ({"path": ...} entries
+    this commit placed under the table root) before the error
+    propagates. Returns the version."""
+    commit_info = {
+        "commitInfo": {"operation": operation, "operationParameters": parameters, "timestamp": 0}
+    }
+    try:
+        _commit(table, version, [*actions, commit_info])
+    except Exception:
+        _remove_staged(table, staged)
+        raise
+    return version
+
+
 def last_txn_version(table: str, app_id: str) -> int | None:
     """Latest ``txn`` action version recorded for ``app_id`` — the
     protocol's idempotent-writer bookkeeping (a streaming sink asks
@@ -312,34 +381,24 @@ def last_txn_version(table: str, app_id: str) -> int | None:
     (txn persistence through parquet checkpoints is documented out of
     scope; keep the JSON tail longer than the app's replay horizon)."""
     versions = _list_versions(table)
-    latest: int | None = None
     # newest-first, first hit wins: write_delta enforces per-app txn
     # monotonicity (at-or-below is skipped), so the newest commit
     # carrying the app's txn holds its max — a streaming sink's
     # per-batch check is O(commits since the app's last write), not
     # O(whole retained log)
     for v in reversed(versions):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                txn = action.get("txn")
-                if txn and txn.get("appId") == app_id:
-                    latest = txn["version"]
-                    break
-        if latest is not None:
-            break
-    if latest is None:
-        cp = _last_checkpoint(table)
-        if cp is not None and (not versions or min(versions) > 0):
-            raise ValueError(
-                f"txn visibility for app {app_id!r} on {table} is lost: "
-                "the JSON log below the checkpoint was cleaned and no "
-                "retained commit carries the app's txn — cannot decide "
-                "idempotency safely"
-            )
-    return latest
+        for action in _actions(table, v):
+            txn = action.get("txn")
+            if txn and txn.get("appId") == app_id:
+                return txn["version"]
+    if _last_checkpoint(table) is not None and (not versions or min(versions) > 0):
+        raise ValueError(
+            f"txn visibility for app {app_id!r} on {table} is lost: "
+            "the JSON log below the checkpoint was cleaned and no "
+            "retained commit carries the app's txn — cannot decide "
+            "idempotency safely"
+        )
+    return None
 
 
 def write_delta(
@@ -400,186 +459,108 @@ def write_delta(
         raise ValueError("txn idempotency is defined for append commits only")
     os.makedirs(table, exist_ok=True)
     adds: list[dict] | None = None
-    staged_layout: tuple[str, ...] | None = None
-    staged_mapping: tuple[str | None, str] | None = None  # (physical-name
-    # map, generated-columns key) in effect when the files were staged
+    staged_key = None  # (layout, physical-name map, generated columns) of `adds`
     attempts = 1 + max(0, retries if mode == "append" else 0)
     for attempt in range(attempts):
-        if txn is not None and os.path.isdir(_log_path(table)):
-            app_id, txn_version = txn
-            try:
-                seen = last_txn_version(table, app_id)
-            except ValueError:
-                if adds is not None:  # no-orphan invariant holds on the
-                    _remove_staged(table, adds)  # visibility-lost path too
-                raise
-            if seen is not None and seen >= txn_version:
-                if adds is not None:  # staged in a lost-race prior attempt
-                    _remove_staged(table, adds)
-                return None
-        version = _next_version(table)  # refuses gapped logs
-        actions: list[dict] = []
-        mapped_meta: dict | None = None
-        df_eff = df  # generated columns may extend this per attempt
-        gen_key = ""
-        if version == 0:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": uuid.uuid4().hex,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": df.schema.json(),
-                        "partitionColumns": list(partition_by),
-                        "configuration": {},
-                        "createdTime": 0,
-                    }
-                }
-            )
-            layout = tuple(partition_by)
-        else:
-            # ONE metadata walk per commit (schema + layout both come off
-            # it) — with checkpointing every N commits the walk is O(tail),
-            # and not repeating it keeps an N-commit append loop O(N·tail)
-            try:
-                meta = _table_metadata(table)
-            except Exception:
-                if adds is not None:
-                    _remove_staged(table, adds)
-                raise
-            if mode == "overwrite":
-                try:
-                    _refuse_append_only(meta, "write_delta(mode='overwrite')")
-                except Exception:
-                    if adds is not None:
-                        _remove_staged(table, adds)
-                    raise
-            try:  # generated columns: compute absent, verify present
-                df_eff = _apply_generated_columns(df, meta)
-            except Exception:
-                if adds is not None:
-                    _remove_staged(table, adds)
-                raise
-            gen_key = json.dumps(_generated_columns(meta), sort_keys=True)
-            recorded = None if meta is None else meta["schemaString"]
-            if recorded is not None and _schema_shape(
-                json.loads(recorded)
-            ) != _schema_shape(json.loads(df_eff.schema.json())):
-                if merge_schema and _mapping_on(meta):
-                    if adds is not None:
-                        _remove_staged(table, adds)
-                    raise ValueError(
-                        "schema evolution on a column-mapped table is not "
-                        "supported (new fields need column-id assignment)"
-                    )
-                if merge_schema and _is_additive_evolution(
-                    json.loads(recorded), json.loads(df_eff.schema.json())
-                ):
-                    actions.append(
-                        {"metaData": {**meta, "schemaString": df_eff.schema.json()}}
-                    )
-                else:
-                    if adds is not None:
-                        _remove_staged(table, adds)
-                    raise ValueError(
-                        f"schema mismatch writing to {table} (mode={mode}): the "
-                        "table's metaData schema differs from the DataFrame's in "
-                        "field names or types. Append and overwrite both enforce "
-                        "the recorded schema; pass merge_schema=True for the "
-                        "additive case (every recorded field kept with its "
-                        "recorded shape, new fields added) — drops, renames, "
-                        "and type changes always raise"
-                    )
-            try:  # CHECK constraints (re-read per attempt: the winner of
-                # a lost race may have added one)
-                _check_constraints(df_eff, meta)
-            except ValueError:
-                if adds is not None:
-                    _remove_staged(table, adds)
-                raise
-            mapped_meta = meta if _mapping_on(meta) else None
-            recorded_parts = (
-                () if meta is None else tuple(meta.get("partitionColumns", []))
-            )
-            if partition_by and tuple(partition_by) != recorded_parts:
-                if adds is not None:
-                    _remove_staged(table, adds)
-                raise ValueError(
-                    f"partition mismatch writing to {table}: table is "
-                    f"partitioned by {recorded_parts}, write declared "
-                    f"{tuple(partition_by)}. Layout is fixed at version 0; "
-                    "pass partition_by=() to inherit it"
-                )
-            layout = recorded_parts
-            if mode == "overwrite":
-                for f in snapshot_files(table):
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": f,
-                                "deletionTimestamp": 0,
-                                "dataChange": True,
-                            }
+        try:  # any failure of an attempt removes its staged files (no orphans)
+            if txn is not None and os.path.isdir(_log_path(table)):
+                seen = last_txn_version(table, txn[0])
+                if seen is not None and seen >= txn[1]:
+                    _remove_staged(table, adds or [])  # staged in a lost-race attempt
+                    return None
+            version = _next_version(table)  # refuses gapped logs
+            actions: list[dict] = []
+            mapped_meta: dict | None = None
+            df_eff = df  # generated columns may extend this per attempt
+            gen_key = ""
+            if version == 0:
+                actions.append({"protocol": dict(_BASE_PROTOCOL)})
+                actions.append(
+                    {
+                        "metaData": {
+                            "id": uuid.uuid4().hex,
+                            "format": {"provider": "parquet", "options": {}},
+                            "schemaString": df.schema.json(),
+                            "partitionColumns": list(partition_by),
+                            "configuration": {},
+                            "createdTime": 0,
                         }
-                    )
-        mapping_key = (
-            None if mapped_meta is None else mapped_meta["schemaString"],
-            gen_key,
-        )
-        if adds is not None and (
-            staged_layout != layout or staged_mapping != mapping_key
-        ):
-            # lost a CREATE race to a winner with a different layout or
-            # column mapping: the staged files' hive paths /
-            # partitionValues / physical column names are wrong
-            _remove_staged(table, adds)
-            adds = None
-        if adds is None:  # stage ONCE; retries recommit the same files
-            stage_df, stage_stats = df_eff, stats_cols
-            if mapped_meta is not None:
-                # column mapping: data files store PHYSICAL names; the
-                # caller's frame (and stats_cols) speak logical
-                from pyspark.sql import functions as F
-                from pyspark.sql.types import StructType as _ST
-
-                fields = _ST.fromJson(
-                    json.loads(mapped_meta["schemaString"])
-                ).fields
-                phys_of = {f.name: _physical_name(f) for f in fields}
-                stage_df = df_eff.select(
-                    *[F.col(n).alias(phys_of[n]) for n in df_eff.columns]
+                    }
                 )
-                stage_stats = tuple(phys_of.get(c, c) for c in stats_cols)
-            adds = _stage_files(
-                stage_df, table, stage_stats, partition_by=layout
-            )
-            staged_layout = layout
-            staged_mapping = mapping_key
-        actions.extend({"add": a} for a in adds)
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
-        actions.append(
-            {
-                "commitInfo": {
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": mode.upper()},
-                    "timestamp": 0,
-                }
-            }
-        )
-        try:
-            _commit(table, version, actions)
-        except FileExistsError:
-            if attempt + 1 < attempts:
+                layout = tuple(partition_by)
+            else:
+                # ONE metadata walk per commit (schema + layout both come off
+                # it) — with checkpointing every N commits the walk is O(tail),
+                # and not repeating it keeps an N-commit append loop O(N·tail)
+                meta = _table_metadata(table)
+                if mode == "overwrite":
+                    _refuse_append_only(meta, "write_delta(mode='overwrite')")
+                # generated columns: compute absent, verify present
+                df_eff = _apply_generated_columns(df, meta)
+                gen_key = json.dumps(_generated_columns(meta), sort_keys=True)
+                recorded = None if meta is None else json.loads(meta["schemaString"])
+                proposed = json.loads(df_eff.schema.json())
+                if recorded is not None and _schema_shape(recorded) != _schema_shape(proposed):
+                    if merge_schema and _mapping_on(meta):
+                        raise ValueError(
+                            "schema evolution on a column-mapped table is not "
+                            "supported (new fields need column-id assignment)"
+                        )
+                    if not (merge_schema and _is_additive_evolution(recorded, proposed)):
+                        raise ValueError(
+                            f"schema mismatch writing to {table} (mode={mode}): the "
+                            "table's metaData schema differs from the DataFrame's in "
+                            "field names or types. Append and overwrite both enforce "
+                            "the recorded schema; pass merge_schema=True for the "
+                            "additive case (every recorded field kept with its "
+                            "recorded shape, new fields added) — drops, renames, "
+                            "and type changes always raise"
+                        )
+                    actions.append({"metaData": {**meta, "schemaString": df_eff.schema.json()}})
+                # CHECK constraints (re-read per attempt: the winner of a
+                # lost race may have added one)
+                _check_constraints(df_eff, meta)
+                mapped_meta = meta if _mapping_on(meta) else None
+                layout = () if meta is None else tuple(meta.get("partitionColumns", []))
+                if partition_by and tuple(partition_by) != layout:
+                    raise ValueError(
+                        f"partition mismatch writing to {table}: table is "
+                        f"partitioned by {layout}, write declared "
+                        f"{tuple(partition_by)}. Layout is fixed at version 0; "
+                        "pass partition_by=() to inherit it"
+                    )
+                if mode == "overwrite":
+                    actions.extend(_remove_action(f, True) for f in snapshot_files(table))
+            key = (layout, None if mapped_meta is None else mapped_meta["schemaString"], gen_key)
+            if adds is not None and staged_key != key:
+                # lost a CREATE race to a winner with a different layout or
+                # column mapping: the staged files' hive paths /
+                # partitionValues / physical column names are wrong
+                _remove_staged(table, adds)
+                adds = None
+            if adds is None:  # stage ONCE; retries recommit the same files
+                stage_df, stage_stats = df_eff, stats_cols
+                if mapped_meta is not None:
+                    # column mapping: data files store PHYSICAL names; the
+                    # caller's frame (and stats_cols) speak logical
+                    from pyspark.sql import functions as F
+
+                    phys_of = _physical_names(mapped_meta)
+                    stage_df = df_eff.select(
+                        *[F.col(n).alias(phys_of[n]) for n in df_eff.columns]
+                    )
+                    stage_stats = tuple(phys_of.get(c, c) for c in stats_cols)
+                adds = _stage_files(stage_df, table, stage_stats, partition_by=layout)
+                staged_key = key
+            actions.extend({"add": a} for a in adds)
+            if txn is not None:
+                actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
+            return _commit_op(table, version, actions, "WRITE", {"mode": mode.upper()})
+        except Exception as exc:
+            if isinstance(exc, FileExistsError) and attempt + 1 < attempts:
                 continue  # lost the version race: re-validate, re-commit
-            _remove_staged(table, adds)
+            _remove_staged(table, adds or [])
             raise
-        except Exception:
-            _remove_staged(table, adds)  # failed publish: no orphans
-            raise
-        return version
 
 
 def _schema_shape(schema_dict):
@@ -616,94 +597,70 @@ def _check_contiguous(table: str, versions: list[int]) -> None:
         )
 
 
-def _table_metadata(table: str, version: int | None = None) -> dict | None:
-    """The table's metaData action AS OF ``version`` (None = latest):
-    the NEWEST metaData action at-or-below the version wins — schema
-    evolution commits a fresh metaData action, and time travel must
-    read each snapshot under the schema it was written with (real
-    Delta replay semantics). For a target at-or-above the checkpoint,
-    only the JSON TAIL after the checkpoint is scanned (newest-first)
-    before falling back to the checkpoint's carried metaData — the
-    scan is O(tail), and checkpointing every N commits bounds it the
-    same way it bounds replay. Time travel below the checkpoint walks
-    the retained JSON chain down from the target. A missing or corrupt
-    version file inside the needed range RAISES (a swallowed parse
-    error here would silently resolve an evolved table to its older
-    schema — the guess this module never makes)."""
-    versions = _list_versions(table)
+def _newest(table: str, kind: str, version: int | None = None) -> dict | None:
+    """The newest ``kind`` action ("metaData" or "protocol") AS OF
+    ``version`` (None = latest): the NEWEST one at-or-below the version
+    wins — schema evolution commits a fresh metaData action and feature
+    commits upgrade the protocol, and time travel must read each
+    snapshot under the actions it was written with (real Delta replay
+    semantics). For a target at-or-above the checkpoint, only the JSON
+    TAIL after the checkpoint is scanned (newest-first) before falling
+    back to the checkpoint's carried action — the scan is O(tail), and
+    checkpointing every N commits bounds it the same way it bounds
+    replay. Time travel below the checkpoint walks the retained JSON
+    chain down from the target. A missing or corrupt version file
+    inside the needed range RAISES (a swallowed parse error here would
+    silently resolve an evolved table to its older schema — the guess
+    this module never makes)."""
     cp = _last_checkpoint(table)
-    cpv = None if cp is None else cp["version"]
-    if version is None:
-        version = max(versions[-1] if versions else -1, cpv if cpv is not None else -1)
-    lo = cpv if (cpv is not None and version >= cpv) else -1
-    for v in (v for v in reversed(versions) if lo < v <= version):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    return action["metaData"]
-    if cpv is not None and cpv <= version:
-        meta, _, _ = _read_checkpoint(table, cp)
-        return meta
+    top = float("inf") if version is None else version
+    lo = cp["version"] if (cp is not None and top >= cp["version"]) else -1
+    for v in reversed(_list_versions(table)):
+        if lo < v <= top:
+            for action in _actions(table, v):
+                if kind in action:
+                    return action[kind]
+    if cp is not None and cp["version"] <= top:
+        meta, proto, _ = _read_checkpoint(table, cp)
+        return meta if kind == "metaData" else proto
     return None
 
 
+def _table_metadata(table: str, version: int | None = None) -> dict | None:
+    """The table's metaData action AS OF ``version`` (see :func:`_newest`)."""
+    return _newest(table, "metaData", version)
+
+
+def _require_metadata(table: str, version: int | None = None) -> dict:
+    meta = _newest(table, "metaData", version)
+    if meta is None:
+        raise ValueError(f"no metaData action in version 0 of {table}")
+    return meta
+
+
 def _table_protocol(table: str, version: int | None = None) -> dict:
-    """The table's protocol action AS OF ``version`` — newest at-or-
-    below wins (feature commits like CHECK constraints and column
-    mapping upgrade it); falls back to the checkpoint's carried
-    protocol, then to the module's base (1, 2)."""
-    versions = _list_versions(table)
-    cp = _last_checkpoint(table)
-    cpv = None if cp is None else cp["version"]
-    if version is None:
-        version = max(versions[-1] if versions else -1, cpv if cpv is not None else -1)
-    lo = cpv if (cpv is not None and version >= cpv) else -1
-    for v in (v for v in reversed(versions) if lo < v <= version):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    return dict(action["protocol"])
-    if cpv is not None and cpv <= version:
-        _, proto, _ = _read_checkpoint(table, cp)
-        if proto is not None:
-            return dict(proto)
-    return {"minReaderVersion": 1, "minWriterVersion": 2}
+    """The table's protocol action AS OF ``version`` (feature commits
+    like CHECK constraints and column mapping upgrade it), else the
+    module's base (1, 2)."""
+    return dict(_newest(table, "protocol", version) or _BASE_PROTOCOL)
 
 
 def partition_columns(table: str) -> list[str]:
     """The partition layout recorded at table creation (metaData's
     partitionColumns — [] for unpartitioned tables; schema evolution
     never changes it — the writer enforces that)."""
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action found for {table}")
-    return list(meta.get("partitionColumns", []))
+    return list(_require_metadata(table).get("partitionColumns", []))
 
 
-def _apply_version_file(table: str, v: int, live: dict[str, dict]) -> None:
-    with open(_version_file(table, v)) as fh:
-        for line in fh:
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "add" in action:
-                live[action["add"]["path"]] = action["add"]
-            elif "remove" in action:
-                live.pop(action["remove"]["path"], None)
+def _head(table: str, versions: list[int]) -> int:
+    """Newest version over the retained JSON and the checkpoint pointer
+    (-1: no commit)."""
+    cp = _last_checkpoint(table)
+    return max(versions[-1] if versions else -1, -1 if cp is None else cp["version"])
 
 
 def _latest_version(table: str) -> int:
-    versions = _list_versions(table)
-    cp = _last_checkpoint(table)
-    latest = versions[-1] if versions else -1
-    if cp is not None:
-        latest = max(latest, cp["version"])
+    latest = _head(table, _list_versions(table))
     if latest < 0:
         raise FileNotFoundError(f"not a Delta table (no {_LOG_DIR}): {table}")
     return latest
@@ -712,16 +669,14 @@ def _latest_version(table: str) -> int:
 def _next_version(table: str) -> int:
     """The version a new commit must claim: latest + 1 over the
     retained JSON and the checkpoint pointer, after refusing gapped
-    logs. THE one place the fold lives — write_delta/optimize/zorder
-    all route through it, so the claim-at-this-version O_EXCL link is
-    what turns any concurrent commit into an explicit conflict."""
+    logs. Every verb claims it BEFORE planning (the TOCTOU rule): a
+    commit landing between the claim and the publish then turns into
+    an explicit FileExistsError at the O_EXCL link, instead of a
+    commit computed against a stale snapshot — one that would clobber
+    a concurrent metaData change or resurrect overwritten rows."""
     versions = _list_versions(table)
     _check_contiguous(table, versions)
-    cp = _last_checkpoint(table)
-    latest = versions[-1] if versions else -1
-    if cp is not None:
-        latest = max(latest, cp["version"])
-    return latest + 1
+    return _head(table, versions) + 1
 
 
 def _replay(table: str, version: int | None = None) -> dict[str, dict]:
@@ -772,7 +727,11 @@ def _replay(table: str, version: int | None = None) -> dict[str, dict]:
             "checkpoint requires the retained JSON chain)"
         )
     for v in range(start, version + 1):
-        _apply_version_file(table, v, live)
+        for action in _actions(table, v):
+            if "add" in action:
+                live[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                live.pop(action["remove"]["path"], None)
     return live
 
 
@@ -866,23 +825,34 @@ def snapshot_files(
     provably-non-matching files are dropped, and the CALLER still owns
     applying the actual predicate to the surviving rows — files
     without stats on a column always survive."""
-    if partition_filter:
-        pcols = set(partition_columns(table))
-        bad = sorted(set(partition_filter) - pcols)
-        if bad:
-            raise ValueError(
-                f"partition_filter keys {bad} are not partition columns of "
-                f"{table} (partitioned by {sorted(pcols)})"
-            )
-    stats_filter = _translate_stats_filter(
-        _table_metadata(table, version), stats_filter
-    )
+    meta = _table_metadata(table, version) or {}
+    return [p for p, _ in _manifest(table, meta, version, partition_filter, stats_filter)]
+
+
+def _manifest(
+    table: str, meta: dict, version, partition_filter, stats_filter
+) -> list[tuple[str, dict]]:
+    """Sorted (path, add) entries of the snapshot at ``version`` that
+    survive ``partition_filter`` and ``stats_filter`` (validated against
+    ``meta``, the snapshot's metaData) — the scan manifest behind
+    :func:`snapshot_files` and :func:`read_delta`."""
+    pcols = meta.get("partitionColumns", [])
+    bad = sorted(set(partition_filter or ()) - set(pcols))
+    if bad:
+        raise ValueError(
+            f"partition_filter keys {bad} are not partition columns of "
+            f"{table} (partitioned by {sorted(pcols)})"
+        )
+    stats_filter = _translate_stats_filter(meta, stats_filter)
     _check_stats_filter(stats_filter)
     return sorted(
-        p
-        for p, add in _replay(table, version).items()
-        if _match_partition(add, partition_filter)
-        and not _stats_excludes(add, stats_filter)
+        (
+            (p, a)
+            for p, a in _replay(table, version).items()
+            if _match_partition(a, partition_filter)
+            and not _stats_excludes(a, stats_filter)
+        ),
+        key=lambda e: e[0],
     )
 
 
@@ -931,84 +901,66 @@ def read_delta(
     the DV's (file, row_index) set before entering the result — the
     protocol's read-side DV contract. DV-free files never pay the
     metadata-column or join cost."""
+    # one metadata walk serves both schema and layout (the layout is
+    # fixed at v0 and evolution metaData carries it forward unchanged)
+    meta = _require_metadata(table, version)
+    entries = _manifest(table, meta, version, partition_filter, stats_filter)
+    return _scan(spark, table, meta, entries)
+
+
+def _scan(spark, table: str, meta: dict, entries, rowmeta: bool = False) -> DataFrame:
+    """THE deletion-vector-aware scan: the LOGICALLY live rows of an
+    explicit list of a snapshot's (path, add) entries, under ``meta``'s
+    recorded schema. Files carrying a deletion vector are read THROUGH
+    it (their deleted rows anti-join the vector's (file, row_index) set
+    before the caller sees them, so no predicate or merge key can bind
+    a row that is already gone); DV-free files never pay the
+    metadata-column or join cost. ``rowmeta=True`` appends each row's
+    ``__delta_dv_file``/``__delta_dv_pos`` (file name, row index) — the
+    coordinates DELETE, MERGE and PURGE address rows by. Column-mapped
+    tables read physical file columns and alias them back to the
+    snapshot's logical names. Serves :func:`read_delta` (full
+    manifest), :func:`snapshot_diff` (symmetric-difference manifest),
+    DELETE and MERGE (all live files) and PURGE (the DV'd files)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    # one metadata walk serves both schema and layout (the layout is
-    # fixed at v0 and evolution metaData carries it forward unchanged)
-    meta = _table_metadata(table, version)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = meta.get("partitionColumns", [])
-    live = _replay(table, version)
-    if partition_filter:
-        bad = sorted(set(partition_filter) - set(pcols))
-        if bad:
-            raise ValueError(
-                f"partition_filter keys {bad} are not partition columns of "
-                f"{table} (partitioned by {sorted(pcols)})"
-            )
-    mapped = _mapping_on(meta)
-    stats_filter = _translate_stats_filter(meta, stats_filter)
-    _check_stats_filter(stats_filter)
-    entries = sorted(
-        (p, a)
-        for p, a in live.items()
-        if _match_partition(a, partition_filter)
-        and not _stats_excludes(a, stats_filter)
-    )
-    return _scan_subset(spark, table, meta, schema, entries)
-
-
-def _scan_subset(spark, table: str, meta: dict, schema, entries) -> DataFrame:
-    """Scan an explicit subset of a snapshot's (path, add) entries under
-    the snapshot's recorded schema — the shared engine of
-    :func:`read_delta` (full manifest) and :func:`snapshot_diff`
-    (symmetric-difference manifest). DV'd files are read through their
-    vectors; column-mapped tables alias physical file names back to the
-    snapshot's logical names."""
-    from pyspark.sql import functions as F
-
-    pcols = meta.get("partitionColumns", [])
     mapped = _mapping_on(meta)
     read_schema = _physical_schema(schema) if mapped else schema
     cols = [f.name for f in read_schema.fields]
+    row_cols = [
+        F.col("_metadata.file_name").alias("__delta_dv_file"),
+        F.col("_metadata.row_index").alias("__delta_dv_pos"),
+    ]
+    keep = [*cols, "__delta_dv_file", "__delta_dv_pos"] if rowmeta else cols
     plain = [os.path.join(table, p) for p, a in entries if "deletionVector" not in a]
     dvd = [(p, a["deletionVector"]) for p, a in entries if "deletionVector" in a]
+    if rowmeta or dvd:
+        _check_dv_reserved(cols)
     reader = spark.read.schema(read_schema)
-    if pcols:
+    if meta.get("partitionColumns"):
         reader = reader.option("basePath", table)
     parts = []
     if plain:
-        parts.append(reader.parquet(*plain).select(*cols))
+        parts.append(reader.parquet(*plain).select(*cols, *(row_cols if rowmeta else [])))
     if dvd:
-        _check_dv_reserved(cols)
         dv_rows = spark.read.parquet(
             *[os.path.join(table, dv["path"]) for _, dv in dvd]
         ).select("__delta_dv_file", "__delta_dv_pos")
-        scan = (
+        parts.append(
             reader.parquet(*[os.path.join(table, p) for p, _ in dvd])
-            .select(
-                *cols,
-                F.col("_metadata.file_name").alias("__delta_dv_file"),
-                F.col("_metadata.row_index").alias("__delta_dv_pos"),
-            )
+            .select(*cols, *row_cols)
             .join(dv_rows, ["__delta_dv_file", "__delta_dv_pos"], "left_anti")
-            .select(*cols)
+            .select(*keep)
         )
-        parts.append(scan)
     if not parts:
         return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = functools.reduce(DataFrame.unionByName, parts)
     if mapped:  # physical file names → the snapshot's logical names
         out = out.select(
-            *[
-                F.col(_physical_name(f)).alias(f.name)
-                for f in schema.fields
-            ]
+            *[F.col(_physical_name(f)).alias(f.name) for f in schema.fields],
+            *keep[len(cols):],
         )
     return out
 
@@ -1040,39 +992,30 @@ def snapshot_diff(
     raise — a diff across shapes has no well-defined row equality.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     if to_version is None:
         to_version = _latest_version(table)
-    m_from = _table_metadata(table, from_version)
-    m_to = _table_metadata(table, to_version)
-    if m_from is None or m_to is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
+    m_from = _require_metadata(table, from_version)
+    m_to = _require_metadata(table, to_version)
     if m_from["schemaString"] != m_to["schemaString"]:
         raise ValueError(
             f"snapshot_diff across a schema change (v{from_version} -> "
             f"v{to_version} of {table}): row equality is undefined across "
             "shapes; diff each side of the evolution commit separately"
         )
-    schema = StructType.fromJson(json.loads(m_to["schemaString"]))
-
-    def _key(p: str, a: dict) -> tuple[str, str]:
-        return (p, json.dumps(a.get("deletionVector"), sort_keys=True))
-
     live_f = _replay(table, from_version)
     live_t = _replay(table, to_version)
-    keys_f = {_key(p, a) for p, a in live_f.items()}
-    keys_t = {_key(p, a) for p, a in live_t.items()}
-    only_f = sorted(
-        ((p, a) for p, a in live_f.items() if _key(p, a) not in keys_t),
-        key=lambda e: e[0],
-    )
-    only_t = sorted(
-        ((p, a) for p, a in live_t.items() if _key(p, a) not in keys_f),
-        key=lambda e: e[0],
-    )
-    old = _scan_subset(spark, table, m_from, schema, only_f)
-    new = _scan_subset(spark, table, m_to, schema, only_t)
+
+    def only(live: dict, other: dict) -> list[tuple[str, dict]]:
+        # same path AND same deletionVector reference: provably identical
+        return sorted(
+            ((p, a) for p, a in live.items()
+             if p not in other or other[p].get("deletionVector") != a.get("deletionVector")),
+            key=lambda e: e[0],
+        )
+
+    old = _scan(spark, table, m_from, only(live_f, live_t))
+    new = _scan(spark, table, m_to, only(live_t, live_f))
     return (
         new.exceptAll(old)
         .withColumn("_change_type", F.lit("insert"))
@@ -1110,24 +1053,18 @@ def delete_delta_dv(spark: SparkSession, table: str, predicate: str) -> dict:
     metadata. The commit claims its version at plan time, so a
     concurrent commit conflicts explicitly."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
+    meta = _require_metadata(table)
     _refuse_mapping(meta, "delete_delta_dv")
     _refuse_append_only(meta, "delete_delta_dv")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = meta.get("partitionColumns", [])
     version = _next_version(table)  # claim at plan time (TOCTOU rule)
     live = _replay(table)
     if not live:
         return {"version": None, "deleted_rows": 0, "files": 0}
-    by_name = {os.path.basename(p): p for p in live}
     hits = (
         # scan reads THROUGH existing DVs: a row that is already
         # logically deleted must not match (and not re-count)
-        _scan_with_rowmeta(spark, table, schema, pcols, live)
+        _scan(spark, table, meta, sorted(live.items()), rowmeta=True)
         .where(F.expr(predicate))
         .select("__delta_dv_file", "__delta_dv_pos")
         # materialize the matched set ONCE (it is deleted-rows-sized);
@@ -1141,21 +1078,11 @@ def delete_delta_dv(spark: SparkSession, table: str, predicate: str) -> dict:
     }
     if not new_hits:
         return {"version": None, "deleted_rows": 0, "files": 0}
-    actions, new_adds = _stage_dv_actions(spark, table, hits, live, by_name, new_hits)
-    actions.append(
-        {
-            "commitInfo": {
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate, "mode": "DV"},
-                "timestamp": 0,
-            }
-        }
+    actions, sidecars = _stage_dv_actions(spark, table, hits, live, new_hits)
+    _commit_op(
+        table, version, actions, "DELETE", {"predicate": predicate, "mode": "DV"},
+        staged=sidecars,
     )
-    try:
-        _commit(table, version, actions)
-    except Exception:
-        _remove_staged(table, new_adds)
-        raise
     return {
         "version": version,
         "deleted_rows": sum(new_hits.values()),
@@ -1168,11 +1095,10 @@ def _stage_dv_actions(
     table: str,
     hits,
     live: dict[str, dict],
-    by_name: dict[str, str],
     new_hits: dict[str, int],
 ) -> tuple[list[dict], list[dict]]:
     """Stage one fresh deletion-vector sidecar per touched data file and
-    return ``(actions, new_sidecar_adds)``: per file a dataChange remove
+    return ``(actions, new_sidecars)``: per file a dataChange remove
     of its current add entry plus the same entry re-added carrying the
     new DV reference. ``hits`` is a (dv_file, row_index) DataFrame of
     NEWLY deleted rows and ``new_hits`` their count per touched file
@@ -1183,14 +1109,11 @@ def _stage_dv_actions(
     every recorded row is now deleted gets the remove alone — it
     leaves the snapshot, as in real Delta, instead of staying live
     behind a full-cardinality vector. Sidecar writes are distributed
-    (one hash partition per touched file); callers own the commitInfo
-    and the ``_commit`` (and must ``_remove_staged(new_sidecar_adds)``
-    on a failed publish)."""
-    import glob
-    import shutil
-
+    (one hash partition per touched file); callers commit with
+    ``staged=new_sidecars``."""
     from pyspark.sql import functions as F
 
+    by_name = {os.path.basename(p): p for p in live}
     touched = sorted(new_hits)
     old_sidecars = [
         os.path.join(table, live[by_name[t]]["deletionVector"]["path"])
@@ -1202,58 +1125,32 @@ def _stage_dv_actions(
         dv = dv.unionByName(
             spark.read.parquet(*old_sidecars).select("__delta_dv_file", "__delta_dv_pos")
         )
-    dv = dv.distinct()
-    stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
-    new_adds: list[dict] = []
-    try:
+    actions: list[dict] = []
+    n_deleted = {}
+    for t in touched:
+        old_add = live[by_name[t]]
+        actions.append(_remove_action(by_name[t], True))
+        n = new_hits[t] + old_add.get("deletionVector", {}).get("cardinality", 0)
+        if n != json.loads(old_add.get("stats") or "{}").get("numRecords"):
+            n_deleted[t] = n  # else every row is deleted: the remove retires it
+    with _stage_dir(table) as stage:
         (
-            dv.withColumn("__delta_dv_pf", F.col("__delta_dv_file"))
+            dv.distinct()
+            .withColumn("__delta_dv_pf", F.col("__delta_dv_file"))
             .repartition(len(touched), "__delta_dv_pf")
             .sortWithinPartitions("__delta_dv_pf", "__delta_dv_pos")
             .write.partitionBy("__delta_dv_pf")
             .mode("overwrite")
             .parquet(stage)
         )
-        actions: list[dict] = []
-        for t in touched:
-            old_add = live[by_name[t]]
-            n_deleted = new_hits[t] + old_add.get("deletionVector", {}).get("cardinality", 0)
-            actions.append(
-                {
-                    "remove": {
-                        "path": by_name[t],
-                        "deletionTimestamp": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
-            n_rows = json.loads(old_add.get("stats") or "{}").get("numRecords")
-            if n_deleted == n_rows:
-                continue  # every row deleted: the remove alone retires it
-            parts = sorted(glob.glob(os.path.join(stage, f"__delta_dv_pf={t}", "part-*.parquet")))
-            if len(parts) != 1:  # pragma: no cover - hash-group contract
-                raise RuntimeError(f"DV stage for {t} wrote {len(parts)} files")
-            rel = f"deletion-vector-{uuid.uuid4().hex}.parquet"
-            os.replace(parts[0], os.path.join(table, rel))
-            new_adds.append({"path": rel})
-            actions.append(
-                {
-                    "add": {
-                        **old_add,
-                        "dataChange": True,
-                        "deletionVector": {
-                            "path": rel,
-                            "cardinality": int(n_deleted),
-                        },
-                    }
-                }
-            )
-    except Exception:
-        _remove_staged(table, new_adds)
-        raise
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return actions, new_adds
+        moved = _move_staged(
+            table, stage, "__delta_dv_pf", dict.fromkeys(n_deleted, ""),
+            prefix="deletion-vector",
+        )
+    for t, n in n_deleted.items():
+        dv_ref = {"path": moved[t][0], "cardinality": int(n)}
+        actions.append({"add": {**live[by_name[t]], "dataChange": True, "deletionVector": dv_ref}})
+    return actions, [{"path": rel} for rel, _ in moved.values()]
 
 
 #: internal column names used by the DV machinery (sidecar schema and
@@ -1270,45 +1167,6 @@ def _check_dv_reserved(cols) -> None:
             f"table columns {clash} collide with the deletion-vector "
             f"machinery's reserved names {_DV_RESERVED}"
         )
-
-
-def _scan_with_rowmeta(spark, table: str, schema, pcols, live: dict[str, dict]):
-    """All LOGICALLY live rows of a snapshot with (dv_file, row_index)
-    metadata columns appended: files carrying a deletion vector are
-    read THROUGH it (their deleted rows anti-joined away before the
-    caller sees them), so predicate matches and merge-key matches can
-    never bind to a row that is already logically gone. DV-free files
-    skip the join entirely."""
-    from pyspark.sql import functions as F
-
-    cols = [f.name for f in schema.fields]
-    _check_dv_reserved(cols)
-    meta_cols = [
-        F.col("_metadata.file_name").alias("__delta_dv_file"),
-        F.col("_metadata.row_index").alias("__delta_dv_pos"),
-    ]
-    reader = spark.read.schema(schema)
-    if pcols:
-        reader = reader.option("basePath", table)
-    entries = sorted(live.items())
-    plain = [os.path.join(table, p) for p, a in entries if "deletionVector" not in a]
-    dvd = [(p, a["deletionVector"]) for p, a in entries if "deletionVector" in a]
-    parts = []
-    if plain:
-        parts.append(reader.parquet(*plain).select(*cols, *meta_cols))
-    if dvd:
-        dv_rows = spark.read.parquet(
-            *[os.path.join(table, dv["path"]) for _, dv in dvd]
-        ).select("__delta_dv_file", "__delta_dv_pos")
-        parts.append(
-            reader.parquet(*[os.path.join(table, p) for p, _ in dvd])
-            .select(*cols, *meta_cols)
-            .join(dv_rows, ["__delta_dv_file", "__delta_dv_pos"], "left_anti")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def merge_delta_dv(
@@ -1358,9 +1216,7 @@ def merge_delta_dv(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
+    meta = _require_metadata(table)
     _refuse_mapping(meta, "merge_delta_dv")
     _refuse_append_only(meta, "merge_delta_dv")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -1436,9 +1292,8 @@ def merge_delta_dv(
             "(Delta's multiple-source-row-matching error)"
         )
     live = _replay(table)
-    by_name = {os.path.basename(p): p for p in live}
     if live:
-        target_keys = _scan_with_rowmeta(spark, table, schema, pcols, live).select(
+        target_keys = _scan(spark, table, meta, sorted(live.items()), rowmeta=True).select(
             *on, "__delta_dv_file", "__delta_dv_pos"
         )
         merged = probe.join(target_keys, on, "left").localCheckpoint()
@@ -1466,36 +1321,27 @@ def merge_delta_dv(
             "files_touched": 0,
         }
     actions: list[dict] = []
-    new_sidecars: list[dict] = []
+    sidecars: list[dict] = []
     if new_hits:
         hits = merged.where(F.col("__delta_dv_file").isNotNull()).select(
             "__delta_dv_file", "__delta_dv_pos"
         )
-        actions, new_sidecars = _stage_dv_actions(
-            spark, table, hits, live, by_name, new_hits
-        )
-    new_adds = _stage_files(
-        merged.where(~F.col("__delta_del")).select(*cols),
-        table,
-        stats_cols,
-        partition_by=tuple(pcols),
-    )
-    actions.extend({"add": a} for a in new_adds)
-    actions.append(
-        {
-            "commitInfo": {
-                "operation": "MERGE",
-                "operationParameters": {"predicate": " AND ".join(on), "mode": "DV"},
-                "timestamp": 0,
-            }
-        }
-    )
+        actions, sidecars = _stage_dv_actions(spark, table, hits, live, new_hits)
     try:
-        _commit(table, version, actions)
+        new_adds = _stage_files(
+            merged.where(~F.col("__delta_del")).select(*cols),
+            table,
+            stats_cols,
+            partition_by=tuple(pcols),
+        )
     except Exception:
-        _remove_staged(table, new_sidecars)
-        _remove_staged(table, new_adds)
+        _remove_staged(table, sidecars)
         raise
+    actions.extend({"add": a} for a in new_adds)
+    _commit_op(
+        table, version, actions, "MERGE", {"predicate": " AND ".join(on), "mode": "DV"},
+        staged=sidecars + new_adds,
+    )
     return {
         "version": version,
         "updated": updated,
@@ -1534,16 +1380,11 @@ def restore_delta(
         raise ValueError(
             f"cannot restore {table} to version {version}: latest is {latest}"
         )
-    new_version = _next_version(table)  # claim at plan time (TOCTOU rule):
-    # a commit landing after the snapshot diff below would otherwise be
-    # silently un-restored by a stale plan; claiming first makes the
-    # interleaving an explicit FileExistsError conflict instead
+    new_version = _next_version(table)  # claim at plan time (TOCTOU rule)
     target = _replay(table, version)
     current = _replay(table)
-    meta_at = _table_metadata(table, version)
+    meta_at = _require_metadata(table, version)
     meta_cur = _table_metadata(table)
-    if meta_at is None:
-        raise ValueError(f"no metaData action at-or-below version {version}")
     _refuse_mapping(meta_cur, "restore_delta")
     _refuse_append_only(meta_cur, "restore_delta")
     _refuse_mapping(meta_at, "restore_delta")
@@ -1594,22 +1435,9 @@ def restore_delta(
     actions: list[dict] = []
     if not same_schema:
         actions.append({"metaData": {**meta_cur, "schemaString": meta_at["schemaString"]}})
-    for p in to_remove:
-        actions.append(
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
-        )
-    for p, a in sorted(to_add.items()):
-        actions.append({"add": {**a, "dataChange": True}})
-    actions.append(
-        {
-            "commitInfo": {
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-                "timestamp": 0,
-            }
-        }
-    )
-    _commit(table, new_version, actions)
+    actions.extend(_remove_action(p, True) for p in to_remove)
+    actions.extend({"add": {**a, "dataChange": True}} for _, a in sorted(to_add.items()))
+    _commit_op(table, new_version, actions, "RESTORE", {"version": version})
     return {
         "version": new_version,
         "restored_files": len(to_add),
@@ -1625,102 +1453,22 @@ def materialize_deletes(spark: SparkSession, table: str) -> dict:
     sidecars and superseded data files become vacuum-able. This is the
     step that re-enables ZORDER (which refuses DV'd files) and
     restores tight stats bounds. Returns
-    ``{"version": v | None, "files": n}``."""
-    import shutil
+    ``{"version": v | None, "files": n}``.
 
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
+    Runs as :func:`optimize_delta`'s one-job bin rewrite with one bin
+    per DV'd file, read through its vector; a file whose every row was
+    deleted rewrites to nothing and gets the remove alone."""
+    meta = _require_metadata(table)
     _refuse_mapping(meta, "materialize_deletes")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = meta.get("partitionColumns", [])
-    data_schema = StructType([f for f in schema.fields if f.name not in pcols])
-    version = _next_version(table)  # claim at plan time
-    live = _replay(table)
+    version = _next_version(table)  # claim at plan time (TOCTOU rule)
     targets = sorted(
-        (p, a) for p, a in live.items() if "deletionVector" in a
+        ((p, a) for p, a in _replay(table).items() if "deletionVector" in a),
+        key=lambda e: e[0],
     )
     if not targets:
         return {"version": None, "files": 0}
-    adds: list[dict] = []
-    removes: list[str] = []
-    try:
-        for p, a in targets:
-            stats_cols = tuple(
-                sorted(json.loads(a.get("stats", "{}")).get("minValues", {}))
-            )
-            dv_rows = spark.read.parquet(
-                os.path.join(table, a["deletionVector"]["path"])
-            ).select("__delta_dv_pos")
-            clean = (
-                spark.read.schema(data_schema)
-                .parquet(os.path.join(table, p))
-                .withColumn("__delta_dv_pos", F.col("_metadata.row_index"))
-                .join(dv_rows, "__delta_dv_pos", "left_anti")
-                .drop("__delta_dv_pos")
-            )
-            stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
-            try:
-                clean.coalesce(1).write.mode("overwrite").parquet(stage)
-                parts = sorted(
-                    f
-                    for f in os.listdir(stage)
-                    if f.startswith("part-") and f.endswith(".parquet")
-                )
-                if len(parts) != 1:  # pragma: no cover - coalesce(1) contract
-                    raise RuntimeError("purge rewrite produced multiple files")
-                src = os.path.join(stage, parts[0])
-                md = pq.ParquetFile(src).metadata
-                if md.num_rows == 0:
-                    # the vector covered the WHOLE file: the purge of this
-                    # file is just its remove — committing a 0-row live
-                    # add would poison stats-only answers (empty min/max)
-                    # and leave junk live files forever
-                    removes.append(p)
-                    continue
-                # a shallow-cloned file has an ABSOLUTE source path: its
-                # purged rewrite must land under THIS table's root (the
-                # clone's copy-on-write), never back in the source dir
-                rel_dir = "" if os.path.isabs(p) else os.path.dirname(p)
-                name = f"part-{uuid.uuid4().hex}.parquet"
-                rel = f"{rel_dir}/{name}" if rel_dir else name
-                os.replace(src, os.path.join(table, rel))
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            stats = _file_stats(md, stats_cols)
-            adds.append(
-                {
-                    "path": rel,
-                    "partitionValues": dict(a.get("partitionValues") or {}),
-                    "size": os.path.getsize(os.path.join(table, rel)),
-                    "modificationTime": 0,
-                    "dataChange": False,
-                    **({"stats": json.dumps(stats)} if stats is not None else {}),
-                }
-            )
-            removes.append(p)
-        actions: list[dict] = [
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": False}}
-            for p in removes
-        ]
-        actions.extend({"add": a} for a in adds)
-        actions.append(
-            {
-                "commitInfo": {
-                    "operation": "PURGE",
-                    "operationParameters": {},
-                    "timestamp": 0,
-                }
-            }
-        )
-        _commit(table, version, actions)
-    except Exception:
-        _remove_staged(table, adds)
-        raise
+    adds = _rewrite_bins(spark, table, meta, [[e] for e in targets])
+    _commit_rewrite(table, version, [p for p, _ in targets], adds, "PURGE", {})
     return {"version": version, "files": len(targets)}
 
 
@@ -1737,6 +1485,15 @@ def _mapping_on(meta: dict | None) -> bool:
 
 def _physical_name(field) -> str:
     return (field.metadata or {}).get(_CM_PHYS_KEY, field.name)
+
+
+def _physical_names(meta: dict) -> dict[str, str]:
+    """Logical → physical column name of each field of ``meta``'s schema
+    (stats and data files of a column-mapped table speak physical)."""
+    return {
+        f["name"]: (f.get("metadata") or {}).get(_CM_PHYS_KEY, f["name"])
+        for f in json.loads(meta["schemaString"])["fields"]
+    }
 
 
 def _physical_schema(schema):
@@ -1781,34 +1538,39 @@ def _refuse_append_only(meta: dict | None, op: str) -> None:
         )
 
 
+def _alter(table: str, operation: str, parameters: dict, change, needs=None) -> int:
+    """The body of every metadata-only ALTER verb: claim the version,
+    read the metaData, let ``change`` validate it and return the new
+    one, add the protocol upgrade to ``needs`` = (reader, writer) when
+    the table is below it, and commit. Returns the commit version."""
+    version = _next_version(table)  # claim BEFORE the metadata read (TOCTOU rule)
+    actions: list[dict] = [{"metaData": change(_require_metadata(table))}]
+    if needs is not None:
+        proto = _table_protocol(table)
+        bumped = {
+            **proto,
+            "minReaderVersion": max(proto.get("minReaderVersion", 1), needs[0]),
+            "minWriterVersion": max(proto.get("minWriterVersion", 2), needs[1]),
+        }
+        if bumped != proto:
+            actions.insert(0, {"protocol": bumped})
+    return _commit_op(table, version, actions, operation, parameters)
+
+
 def set_append_only(table: str, enabled: bool = True) -> int:
     """ALTER TABLE SET TBLPROPERTIES ('delta.appendOnly' = ...): the
     ingest-ledger guard rail — with it set, appends are the ONLY
     commits that may touch visible rows, so an audit table cannot be
     silently rewritten. Returns the commit version."""
-    version = _next_version(table)  # claim before the metadata read
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    conf = dict(meta.get("configuration") or {})
-    conf["delta.appendOnly"] = "true" if enabled else "false"
-    _commit(
-        table,
-        version,
-        [
-            {"metaData": {**meta, "configuration": conf}},
-            {
-                "commitInfo": {
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": {"delta.appendOnly": conf["delta.appendOnly"]}
-                    },
-                    "timestamp": 0,
-                }
-            },
-        ],
+    value = "true" if enabled else "false"
+
+    def change(meta: dict) -> dict:
+        conf = {**(meta.get("configuration") or {}), "delta.appendOnly": value}
+        return {**meta, "configuration": conf}
+
+    return _alter(
+        table, "SET TBLPROPERTIES", {"properties": {"delta.appendOnly": value}}, change
     )
-    return version
 
 
 def enable_column_mapping(table: str) -> int:
@@ -1820,80 +1582,57 @@ def enable_column_mapping(table: str) -> int:
     logical schema is free to rename or drop without touching a byte.
     Partitioned tables are refused (hive-path derivation speaks
     physical names — out of scope)."""
-    version = _next_version(table)  # claim BEFORE the metadata
-    # read (TOCTOU rule): a commit landing in between would be
-    # clobbered by re-committing stale metaData; claiming first
-    # turns the interleaving into an explicit version conflict
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    if _mapping_on(meta):
-        raise ValueError(f"column mapping already enabled on {table}")
-    if meta.get("partitionColumns"):
-        raise ValueError(
-            "column mapping on partitioned tables is not supported"
-        )
-    gen = _generated_columns(meta)
-    if gen:
-        raise ValueError(
-            f"column mapping on a table with generated column(s) "
-            f"{sorted(gen)} is not supported: a later rename would unbind "
-            "their expressions"
-        )
-    schema = json.loads(meta["schemaString"])
-    for i, f in enumerate(schema["fields"], start=1):
-        md = dict(f.get("metadata") or {})
-        md[_CM_ID_KEY] = i
-        md[_CM_PHYS_KEY] = f["name"]
-        f["metadata"] = md
-    conf = dict(meta.get("configuration") or {})
-    conf[_CM_MODE_KEY] = "name"
-    conf["delta.columnMapping.maxColumnId"] = str(len(schema["fields"]))
-    proto = _table_protocol(table)
-    proto["minReaderVersion"] = max(proto.get("minReaderVersion", 1), 2)
-    proto["minWriterVersion"] = max(proto.get("minWriterVersion", 2), 5)
-    _commit(
-        table,
-        version,
-        [
-            {"protocol": proto},  # spec: columnMapping needs (2, 5)
-            {
-                "metaData": {
-                    **meta,
-                    "schemaString": json.dumps(schema),
-                    "configuration": conf,
-                }
-            },
-            {
-                "commitInfo": {
-                    "operation": "UPGRADE COLUMN MAPPING",
-                    "operationParameters": {"mode": "name"},
-                    "timestamp": 0,
-                }
-            },
-        ],
-    )
-    return version
+    def change(meta: dict) -> dict:
+        if _mapping_on(meta):
+            raise ValueError(f"column mapping already enabled on {table}")
+        if meta.get("partitionColumns"):
+            raise ValueError(
+                "column mapping on partitioned tables is not supported"
+            )
+        gen = _generated_columns(meta)
+        if gen:
+            raise ValueError(
+                f"column mapping on a table with generated column(s) "
+                f"{sorted(gen)} is not supported: a later rename would unbind "
+                "their expressions"
+            )
+        schema = json.loads(meta["schemaString"])
+        for i, f in enumerate(schema["fields"], start=1):
+            f["metadata"] = {**(f.get("metadata") or {}), _CM_ID_KEY: i, _CM_PHYS_KEY: f["name"]}
+        conf = {
+            **(meta.get("configuration") or {}),
+            _CM_MODE_KEY: "name",
+            "delta.columnMapping.maxColumnId": str(len(schema["fields"])),
+        }
+        return {**meta, "schemaString": json.dumps(schema), "configuration": conf}
+
+    # spec: columnMapping needs protocol (2, 5)
+    return _alter(table, "UPGRADE COLUMN MAPPING", {"mode": "name"}, change, needs=(2, 5))
 
 
-def _constraint_references(meta: dict, column: str) -> list[str]:
-    """Names of CHECK constraints and generated columns whose
-    expressions reference ``column`` — renaming or dropping it would
-    silently unbind them (generated hits are tagged ``generated:``)."""
+def _unreferenced_field(meta: dict, table: str, column: str, verb: str, op: str) -> dict:
+    """The parsed schema of a column-mapped table, after checking that
+    ``column`` exists and that no CHECK constraint or generated column
+    references it — renaming or dropping it would silently unbind them
+    (generated hits are tagged ``generated:``)."""
     import re
 
+    if not _mapping_on(meta):
+        raise ValueError(
+            f"{op} needs column mapping: run "
+            f"enable_column_mapping({table!r}) first"
+        )
     pat = re.compile(rf"\b{re.escape(column)}\b")
-    hits = sorted(
-        name
-        for name, expr in _table_constraints(meta).items()
-        if pat.search(expr)
-    )
-    hits += sorted(
-        f"generated:{name}"
-        for name, expr in _generated_columns(meta).items()
-        if pat.search(expr)
-    )
-    return hits
+    refs = sorted(n for n, e in _table_constraints(meta).items() if pat.search(e))
+    refs += sorted(f"generated:{n}" for n, e in _generated_columns(meta).items() if pat.search(e))
+    if refs:
+        raise ValueError(
+            f"cannot {verb} {column!r}: CHECK constraint(s) {refs} reference it"
+        )
+    schema = json.loads(meta["schemaString"])
+    if column not in [f["name"] for f in schema["fields"]]:
+        raise ValueError(f"no column {column!r} on {table}")
+    return schema
 
 
 def rename_column(table: str, old: str, new: str) -> int:
@@ -1902,47 +1641,16 @@ def rename_column(table: str, old: str, new: str) -> int:
     physicalName keeps pointing at the same parquet column. Requires
     column mapping; refuses when a CHECK constraint references the old
     name (its expression would silently stop binding)."""
-    version = _next_version(table)  # claim BEFORE the metadata
-    # read (TOCTOU rule): a commit landing in between would be
-    # clobbered by re-committing stale metaData; claiming first
-    # turns the interleaving into an explicit version conflict
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    if not _mapping_on(meta):
-        raise ValueError(
-            f"rename_column needs column mapping: run "
-            f"enable_column_mapping({table!r}) first"
-        )
-    refs = _constraint_references(meta, old)
-    if refs:
-        raise ValueError(
-            f"cannot rename {old!r}: CHECK constraint(s) {refs} reference it"
-        )
-    schema = json.loads(meta["schemaString"])
-    names = [f["name"] for f in schema["fields"]]
-    if old not in names:
-        raise ValueError(f"no column {old!r} on {table}")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists on {table}")
-    for f in schema["fields"]:
-        if f["name"] == old:
-            f["name"] = new
-    _commit(
-        table,
-        version,
-        [
-            {"metaData": {**meta, "schemaString": json.dumps(schema)}},
-            {
-                "commitInfo": {
-                    "operation": "RENAME COLUMN",
-                    "operationParameters": {"from": old, "to": new},
-                    "timestamp": 0,
-                }
-            },
-        ],
-    )
-    return version
+    def change(meta: dict) -> dict:
+        schema = _unreferenced_field(meta, table, old, "rename", "rename_column")
+        if new in [f["name"] for f in schema["fields"]]:
+            raise ValueError(f"column {new!r} already exists on {table}")
+        for f in schema["fields"]:
+            if f["name"] == old:
+                f["name"] = new
+        return {**meta, "schemaString": json.dumps(schema)}
+
+    return _alter(table, "RENAME COLUMN", {"from": old, "to": new}, change)
 
 
 def drop_column(table: str, name: str) -> int:
@@ -1951,45 +1659,14 @@ def drop_column(table: str, name: str) -> int:
     physical column, and time travel below the drop still sees it).
     Requires column mapping; refuses constraint-referenced columns and
     dropping the last column."""
-    version = _next_version(table)  # claim BEFORE the metadata
-    # read (TOCTOU rule): a commit landing in between would be
-    # clobbered by re-committing stale metaData; claiming first
-    # turns the interleaving into an explicit version conflict
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    if not _mapping_on(meta):
-        raise ValueError(
-            f"drop_column needs column mapping: run "
-            f"enable_column_mapping({table!r}) first"
-        )
-    refs = _constraint_references(meta, name)
-    if refs:
-        raise ValueError(
-            f"cannot drop {name!r}: CHECK constraint(s) {refs} reference it"
-        )
-    schema = json.loads(meta["schemaString"])
-    names = [f["name"] for f in schema["fields"]]
-    if name not in names:
-        raise ValueError(f"no column {name!r} on {table}")
-    if len(names) == 1:
-        raise ValueError("cannot drop the last column")
-    schema["fields"] = [f for f in schema["fields"] if f["name"] != name]
-    _commit(
-        table,
-        version,
-        [
-            {"metaData": {**meta, "schemaString": json.dumps(schema)}},
-            {
-                "commitInfo": {
-                    "operation": "DROP COLUMN",
-                    "operationParameters": {"name": name},
-                    "timestamp": 0,
-                }
-            },
-        ],
-    )
-    return version
+    def change(meta: dict) -> dict:
+        schema = _unreferenced_field(meta, table, name, "drop", "drop_column")
+        if len(schema["fields"]) == 1:
+            raise ValueError("cannot drop the last column")
+        schema["fields"] = [f for f in schema["fields"] if f["name"] != name]
+        return {**meta, "schemaString": json.dumps(schema)}
+
+    return _alter(table, "DROP COLUMN", {"name": name}, change)
 
 
 def _translate_stats_filter(meta: dict | None, stats_filter):
@@ -1998,12 +1675,7 @@ def _translate_stats_filter(meta: dict | None, stats_filter):
     skipping keeps working after a rename (identity when unmapped)."""
     if not stats_filter or not _mapping_on(meta):
         return stats_filter
-    from pyspark.sql.types import StructType as _ST
-
-    phys_of = {
-        f.name: _physical_name(f)
-        for f in _ST.fromJson(json.loads(meta["schemaString"])).fields
-    }
+    phys_of = _physical_names(meta)
     return [(phys_of.get(c, c), op, v) for c, op, v in stats_filter]
 
 
@@ -2033,59 +1705,42 @@ def set_generated_column(spark: SparkSession, table: str, name: str, expr: str) 
     is a lie every downstream consumer inherits). Current rows are
     validated first, like :func:`add_constraint`. The expression may
     reference any non-generated column of the row."""
+    import re
+
     from pyspark.sql import functions as F
 
-    version = _next_version(table)  # claim BEFORE the metadata
-    # read (TOCTOU rule): a commit landing in between would be
-    # clobbered by re-committing stale metaData; claiming first
-    # turns the interleaving into an explicit version conflict
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    _refuse_mapping(meta, "set_generated_column")
-    schema = json.loads(meta["schemaString"])
-    field = next((f for f in schema["fields"] if f["name"] == name), None)
-    if field is None:
-        raise ValueError(f"no column {name!r} on {table}")
-    if _GEN_KEY in (field.get("metadata") or {}):
-        raise ValueError(f"column {name!r} is already generated")
-    import re as _re
-
-    existing_gen = _generated_columns(meta)
-    for ref in [name, *existing_gen]:
-        if _re.search(rf"\b{_re.escape(ref)}\b", expr):
+    def change(meta: dict) -> dict:
+        _refuse_mapping(meta, "set_generated_column")
+        schema = json.loads(meta["schemaString"])
+        field = next((f for f in schema["fields"] if f["name"] == name), None)
+        if field is None:
+            raise ValueError(f"no column {name!r} on {table}")
+        if _GEN_KEY in (field.get("metadata") or {}):
+            raise ValueError(f"column {name!r} is already generated")
+        for ref in [name, *_generated_columns(meta)]:
+            if re.search(rf"\b{re.escape(ref)}\b", expr):
+                raise ValueError(
+                    f"generation expression for {name!r} references {ref!r}: "
+                    "expressions may only use plain (non-generated, non-self) "
+                    "columns — chained or self-referencing generation breaks "
+                    "writes that omit the columns"
+                )
+        existing = read_delta(spark, table)
+        n_bad = existing.where(
+            F.expr(f"({expr}) IS DISTINCT FROM {name}")
+        ).count()
+        if n_bad:
             raise ValueError(
-                f"generation expression for {name!r} references {ref!r}: "
-                "expressions may only use plain (non-generated, non-self) "
-                "columns — chained or self-referencing generation breaks "
-                "writes that omit the columns"
+                f"cannot declare {name!r} generated from ({expr}): {n_bad} "
+                "existing row(s) diverge from the expression"
             )
-    existing = read_delta(spark, table)
-    n_bad = existing.where(
-        F.expr(f"({expr}) IS DISTINCT FROM {name}")
-    ).count()
-    if n_bad:
-        raise ValueError(
-            f"cannot declare {name!r} generated from ({expr}): {n_bad} "
-            "existing row(s) diverge from the expression"
-        )
-    field["metadata"] = {**(field.get("metadata") or {}), _GEN_KEY: expr}
-    proto = _table_protocol(table)
-    actions: list[dict] = []
-    if proto.get("minWriterVersion", 2) < 4:  # spec: generated cols → 4
-        actions.append({"protocol": {**proto, "minWriterVersion": 4}})
-    actions.append({"metaData": {**meta, "schemaString": json.dumps(schema)}})
-    actions.append(
-        {
-            "commitInfo": {
-                "operation": "SET GENERATED COLUMN",
-                "operationParameters": {"name": name, "expr": expr},
-                "timestamp": 0,
-            }
-        }
+        field["metadata"] = {**(field.get("metadata") or {}), _GEN_KEY: expr}
+        return {**meta, "schemaString": json.dumps(schema)}
+
+    # spec: generated columns need writer version 4
+    return _alter(
+        table, "SET GENERATED COLUMN", {"name": name, "expr": expr}, change, needs=(1, 4)
     )
-    _commit(table, version, actions)
-    return version
 
 
 def _apply_generated_columns(df: DataFrame, meta: dict | None) -> DataFrame:
@@ -2188,79 +1843,36 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
     filter pass over the WRITE's rows only, never the table."""
     from pyspark.sql import functions as F
 
-    version = _next_version(table)  # claim BEFORE the metadata
-    # read (TOCTOU rule): a commit landing in between would be
-    # clobbered by re-committing stale metaData; claiming first
-    # turns the interleaving into an explicit version conflict
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    if name in _table_constraints(meta):
-        raise ValueError(f"constraint {name!r} already exists on {table}")
-    existing = read_delta(spark, table)
-    n_bad = existing.where(F.expr(f"NOT coalesce(({expr}), true)")).count()
-    if n_bad:
-        raise ValueError(
-            f"cannot add constraint {name!r} to {table}: {n_bad} existing "
-            f"row(s) violate CHECK ({expr})"
-        )
-    conf = dict(meta.get("configuration") or {})
-    conf[f"delta.constraints.{name}"] = expr
-    proto = _table_protocol(table)
-    actions: list[dict] = []
-    if proto.get("minWriterVersion", 2) < 3:  # spec: CHECKs need writer 3
-        actions.append(
-            {"protocol": {**proto, "minWriterVersion": 3}}
-        )
-    actions.append({"metaData": {**meta, "configuration": conf}})
-    _commit(
-        table,
-        version,
-        actions
-        + [
-            {
-                "commitInfo": {
-                    "operation": "ADD CONSTRAINT",
-                    "operationParameters": {"name": name, "expr": expr},
-                    "timestamp": 0,
-                }
-            },
-        ],
+    def change(meta: dict) -> dict:
+        if name in _table_constraints(meta):
+            raise ValueError(f"constraint {name!r} already exists on {table}")
+        existing = read_delta(spark, table)
+        n_bad = existing.where(F.expr(f"NOT coalesce(({expr}), true)")).count()
+        if n_bad:
+            raise ValueError(
+                f"cannot add constraint {name!r} to {table}: {n_bad} existing "
+                f"row(s) violate CHECK ({expr})"
+            )
+        conf = {**(meta.get("configuration") or {}), f"delta.constraints.{name}": expr}
+        return {**meta, "configuration": conf}
+
+    # spec: CHECK constraints need writer version 3
+    return _alter(
+        table, "ADD CONSTRAINT", {"name": name, "expr": expr}, change, needs=(1, 3)
     )
-    return version
 
 
 def drop_constraint(table: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: removes the recorded check (a
     metaData-only commit). Unknown names raise — silently 'dropping'
     a typo would leave the real constraint enforced."""
-    version = _next_version(table)  # claim BEFORE the metadata
-    # read (TOCTOU rule): a commit landing in between would be
-    # clobbered by re-committing stale metaData; claiming first
-    # turns the interleaving into an explicit version conflict
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
-    key = f"delta.constraints.{name}"
-    conf = dict(meta.get("configuration") or {})
-    if key not in conf:
-        raise ValueError(f"no constraint {name!r} on {table}")
-    del conf[key]
-    _commit(
-        table,
-        version,
-        [
-            {"metaData": {**meta, "configuration": conf}},
-            {
-                "commitInfo": {
-                    "operation": "DROP CONSTRAINT",
-                    "operationParameters": {"name": name},
-                    "timestamp": 0,
-                }
-            },
-        ],
-    )
-    return version
+    def change(meta: dict) -> dict:
+        conf = dict(meta.get("configuration") or {})
+        if conf.pop(f"delta.constraints.{name}", None) is None:
+            raise ValueError(f"no constraint {name!r} on {table}")
+        return {**meta, "configuration": conf}
+
+    return _alter(table, "DROP CONSTRAINT", {"name": name}, change)
 
 
 def clone_delta(src: str, dst: str, version: int | None = None) -> dict:
@@ -2282,9 +1894,7 @@ def clone_delta(src: str, dst: str, version: int | None = None) -> dict:
     refused: the reader derives hive partition values under the
     TABLE's basePath, which cloned absolute paths live outside of
     (DEEP clone / path-rewrite is the out-of-scope fix)."""
-    meta = _table_metadata(src, version)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {src}")
+    meta = _require_metadata(src, version)
     _refuse_mapping(meta, "clone_delta")
     if meta.get("partitionColumns"):
         raise ValueError(
@@ -2321,23 +1931,15 @@ def clone_delta(src: str, dst: str, version: int | None = None) -> dict:
             }
         actions.append({"add": entry})
         n_files += 1
-    actions.append(
-        {
-            "commitInfo": {
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src_root,
-                    "sourceVersion": (
-                        _latest_version(src) if version is None else version
-                    ),
-                    "isShallow": True,
-                },
-                "timestamp": 0,
-            }
-        }
-    )
     os.makedirs(dst, exist_ok=True)
-    _commit(dst, 0, actions)
+    _commit_op(
+        dst, 0, actions, "CLONE",
+        {
+            "source": src_root,
+            "sourceVersion": _latest_version(src) if version is None else version,
+            "isShallow": True,
+        },
+    )
     return {"version": 0, "files": n_files}
 
 
@@ -2361,25 +1963,13 @@ def vacuum_delta(table: str, retention_seconds: float = 24 * 3600) -> list[str]:
 
     _check_contiguous(table, _list_versions(table))
     cutoff = time.time() - retention_seconds
-    live = set()
     cp = _last_checkpoint(table)
-    if cp is not None:  # cleaned-prefix history survives via the checkpoint
-        _, _, adds = _read_checkpoint(table, cp)
-        live.update(a["path"] for a in adds)
-        live.update(
-            a["deletionVector"]["path"] for a in adds if a.get("deletionVector")
-        )
-    for v in _list_versions(table):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    live.add(action["add"]["path"])
-                    dv = action["add"].get("deletionVector")
-                    if dv:  # sidecar stays reachable for time travel
-                        live.add(dv["path"])
+    # cleaned-prefix history survives via the checkpoint
+    adds = [] if cp is None else _read_checkpoint(table, cp)[2]
+    adds += [a["add"] for v in _list_versions(table) for a in _actions(table, v) if "add" in a]
+    live = {a["path"] for a in adds}
+    # a sidecar stays reachable for time travel
+    live.update(a["deletionVector"]["path"] for a in adds if a.get("deletionVector"))
     reaped = []
     for f in glob.glob(os.path.join(table, "**", "part-*.parquet"), recursive=True):
         rel = os.path.relpath(f, table).replace(os.sep, "/")
@@ -2431,33 +2021,11 @@ def optimize_delta(
     race it raises with the staged files removed (the plan was computed
     against a stale snapshot — a remove-carrying commit must re-plan,
     never blind-retry; blind appends are the only commuting commits)."""
-    import glob
-    import shutil
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
+    meta = _require_metadata(table)
     _refuse_mapping(meta, "optimize_delta")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = meta.get("partitionColumns", [])
-    data_schema = StructType([f for f in schema.fields if f.name not in pcols])
-
-    # claim the version AT PLAN TIME: the plan is computed against this
-    # snapshot, and any commit landing in between must turn into an
-    # explicit O_EXCL conflict at _commit — a remove-carrying commit
-    # built over a stale snapshot would resurrect overwritten rows
-    version = _next_version(table)
-    groups: dict[tuple, list[tuple[str, dict]]] = {}
-    for path, add in sorted(_replay(table).items()):
-        key = tuple(sorted((add.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append((path, add))
-
-    plan: list[tuple[tuple, list[tuple[str, dict]]]] = []  # (partition, bin)
-    for key, files in sorted(groups.items()):
+    version = _next_version(table)  # claim at plan time (TOCTOU rule)
+    plan: list[list[tuple[str, dict]]] = []  # bins, each within one partition
+    for files in _partition_groups(_replay(table)):
         # DV-carrying files are skipped: compacting one from its raw
         # bytes would resurrect deleted rows — materialize_deletes is
         # the rewrite that applies the DV first
@@ -2477,109 +2045,85 @@ def optimize_delta(
             cur_bytes += a.get("size", 0)
         if cur:
             bins.append(cur)
-        plan.extend((key, b) for b in bins if len(b) >= 2)  # 1-file bins are optimal
-
-    removes: list[str] = []
-    adds: list[dict] = []
-    stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
-    try:
-        if plan:
-            # ONE job rewrites every bin: rows are tagged with their
-            # input file's bin and hash-clustered by it, so each bin is
-            # written by exactly one task into its own stage dir. The
-            # file → bin map arrives as one JSON parameter the optimizer
-            # folds, so building it runs no Spark job: 0.3 s less per
-            # call than a createDataFrame of the list (8-bin table,
-            # sf0.1, 4 cores)
-            bin_of = spark.sql(
-                "SELECT inline(from_json(?, 'array<struct<"
-                "__delta_opt_file: string, __delta_opt_bin: int>>'))",
-                args=[
-                    json.dumps(
-                        [
-                            {
-                                "__delta_opt_file": os.path.basename(p),
-                                "__delta_opt_bin": i,
-                            }
-                            for i, (_, b) in enumerate(plan)
-                            for p, _ in b
-                        ]
-                    )
-                ],
-            )
-            (
-                spark.read.schema(data_schema)
-                .parquet(*[os.path.join(table, p) for _, b in plan for p, _ in b])
-                .withColumn("__delta_opt_file", F.col("_metadata.file_name"))
-                .join(F.broadcast(bin_of), "__delta_opt_file")
-                .drop("__delta_opt_file")
-                .repartition(len(plan), "__delta_opt_bin")
-                .write.partitionBy("__delta_opt_bin")
-                .mode("overwrite")
-                .parquet(stage)
-            )
-        for i, (key, b) in enumerate(plan):
-            # preserve whatever stats the inputs carried
-            stats_cols = tuple(
-                sorted(
-                    {
-                        c
-                        for _, a in b
-                        for c in json.loads(a.get("stats", "{}")).get(
-                            "minValues", {}
-                        )
-                    }
-                )
-            )
-            paths = [p for p, _ in b]
-            parts = glob.glob(os.path.join(stage, f"__delta_opt_bin={i}", "part-*.parquet"))
-            if len(parts) != 1:  # pragma: no cover - hash-group contract
-                raise RuntimeError(f"OPTIMIZE bin rewrite produced {len(parts)} files")
-            md = pq.ParquetFile(parts[0]).metadata
-            # same partitionValues ⇒ same hive dir as the inputs:
-            # reuse it verbatim, no re-encoding to get wrong.
-            # A shallow-cloned input has an ABSOLUTE source
-            # path: its rewrite must land under THIS table's
-            # root, never back in the source dir (r7 review)
-            rel_dir = "" if os.path.isabs(paths[0]) else os.path.dirname(paths[0])
-            name = f"part-{uuid.uuid4().hex}.parquet"
-            rel = f"{rel_dir}/{name}" if rel_dir else name
-            os.replace(parts[0], os.path.join(table, rel))
-            stats = _file_stats(md, stats_cols)
-            adds.append(
-                {
-                    "path": rel,
-                    "partitionValues": dict(key),
-                    "size": os.path.getsize(os.path.join(table, rel)),
-                    "modificationTime": 0,
-                    "dataChange": False,
-                    **({"stats": json.dumps(stats)} if stats is not None else {}),
-                }
-            )
-            removes.extend(paths)
-        if not adds:
-            return {"version": None, "removed": 0, "added": 0}
-        actions: list[dict] = [
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": False}}
-            for p in removes
-        ]
-        actions.extend({"add": a} for a in adds)
-        actions.append(
-            {
-                "commitInfo": {
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {"targetSize": target_bytes},
-                    "timestamp": 0,
-                }
-            }
-        )
-        _commit(table, version, actions)  # version claimed at plan time
-    except Exception:
-        _remove_staged(table, adds)
-        raise
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        plan.extend(b for b in bins if len(b) >= 2)  # 1-file bins are optimal
+    if not plan:
+        return {"version": None, "removed": 0, "added": 0}
+    adds = _rewrite_bins(spark, table, meta, plan)
+    removes = [p for b in plan for p, _ in b]
+    _commit_rewrite(table, version, removes, adds, "OPTIMIZE", {"targetSize": target_bytes})
     return {"version": version, "removed": len(removes), "added": len(adds)}
+
+
+def _partition_groups(live: dict[str, dict]) -> list[list[tuple[str, dict]]]:
+    """Live (path, add) entries grouped by partition, in partition and
+    path order."""
+    groups: dict[tuple, list[tuple[str, dict]]] = {}
+    for path, add in sorted(live.items(), key=lambda e: e[0]):
+        key = tuple(sorted((add.get("partitionValues") or {}).items()))
+        groups.setdefault(key, []).append((path, add))
+    return [groups[k] for k in sorted(groups)]
+
+
+def _rewrite_bins(spark, table: str, meta: dict, bins) -> list[dict]:
+    """ONE Spark job rewrites every bin (a list of (path, add) entries
+    of one partition) as one file, read through the entries' deletion
+    vectors (:func:`_scan`): rows are tagged with their input file's
+    bin and hash-clustered by it, so exactly one task writes each bin
+    into its own stage dir, and each task scans and writes only its
+    bin's bytes. Returns the rewrites' add actions (``dataChange:
+    false``, the inputs' partitionValues and stats columns carried
+    forward, each file in its inputs' dir); a bin whose every row was
+    deleted writes nothing and has none. The file → bin map arrives as
+    one JSON parameter the optimizer folds, so building it runs no
+    Spark job: 0.3 s less per call than a createDataFrame of the list
+    (8-bin table, sf0.1, 4 cores)."""
+    from pyspark.sql import functions as F
+
+    bin_of = spark.sql(
+        "SELECT inline(from_json(?, 'array<struct<"
+        "__delta_dv_file: string, __delta_opt_bin: int>>'))",
+        args=[
+            json.dumps(
+                [
+                    {"__delta_dv_file": os.path.basename(p), "__delta_opt_bin": i}
+                    for i, b in enumerate(bins)
+                    for p, _ in b
+                ]
+            )
+        ],
+    )
+    rows = _scan(spark, table, meta, [e for b in bins for e in b], rowmeta=True)
+    with _stage_dir(table) as stage:
+        (
+            rows.drop(*meta.get("partitionColumns", []), "__delta_dv_pos")
+            .join(F.broadcast(bin_of), "__delta_dv_file")
+            .drop("__delta_dv_file")
+            .repartition(len(bins), "__delta_opt_bin")
+            .write.partitionBy("__delta_opt_bin")
+            .mode("overwrite")
+            .parquet(stage)
+        )
+        moved = _move_staged(
+            table, stage, "__delta_opt_bin", {i: b[0][0] for i, b in enumerate(bins)}
+        )
+    adds = []
+    for i, (rel, md) in moved.items():
+        stats_cols = sorted(
+            {c for _, a in bins[i] for c in json.loads(a.get("stats", "{}")).get("minValues", {})}
+        )
+        pvals = dict(bins[i][0][1].get("partitionValues") or {})
+        adds.append(_add_action(table, rel, md, pvals, stats_cols, False))
+    return adds
+
+
+def _commit_rewrite(
+    table: str, version: int, removed: list[str], adds: list[dict], operation, parameters
+) -> int:
+    """Commit a layout-only rewrite: ``dataChange: false`` removes of
+    the inputs plus the rewrites' adds — the snapshot's rows are
+    untouched, so incremental readers skip the commit."""
+    actions = [_remove_action(p, False) for p in removed] + [{"add": a} for a in adds]
+    return _commit_op(table, version, actions, operation, parameters, staged=adds)
 
 
 def zorder_key(cols: tuple[str, ...], bits: int = 21):
@@ -2641,9 +2185,7 @@ def zorder_delta(
 
     if n_files < 1:
         raise ValueError("n_files must be >= 1")
-    meta = _table_metadata(table)
-    if meta is None:
-        raise ValueError(f"no metaData action in version 0 of {table}")
+    meta = _require_metadata(table)
     _refuse_mapping(meta, "zorder_delta")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = meta.get("partitionColumns", [])
@@ -2651,8 +2193,7 @@ def zorder_delta(
         raise ValueError("cannot z-order by a partition column")
     data_schema = StructType([f for f in schema.fields if f.name not in pcols])
 
-    # claim the version at plan time (same TOCTOU rule as optimize_delta)
-    version = _next_version(table)
+    version = _next_version(table)  # claim at plan time (TOCTOU rule)
     # the DV guard runs on the SAME post-claim replay the plan uses — a
     # guard on an earlier replay would miss a delete_delta_dv commit
     # landing in between, and the clustering would resurrect its rows
@@ -2663,15 +2204,11 @@ def zorder_delta(
             "clustering reads raw file bytes and would resurrect deleted "
             "rows; run materialize_deletes first"
         )
-    groups: dict[tuple, list[str]] = {}
-    for path, add in sorted(live_adds.items()):
-        key = tuple(sorted((add.get("partitionValues") or {}).items()))
-        groups.setdefault(key, []).append(path)
-
     removes: list[str] = []
     adds: list[dict] = []
     try:
-        for key, paths in sorted(groups.items()):
+        for files in _partition_groups(live_adds):
+            paths = [p for p, _ in files]
             df = spark.read.schema(data_schema).parquet(
                 *[os.path.join(table, p) for p in paths]
             )
@@ -2692,8 +2229,7 @@ def zorder_delta(
                 )
                 .drop("__rn")
             )
-            stage = os.path.join(table, f".stage-{uuid.uuid4().hex}")
-            try:
+            with _stage_dir(table) as stage:
                 (
                     clustered.repartition(k, "__zfile")
                     .sortWithinPartitions("__zfile", "__zkey", tiebreak)
@@ -2702,76 +2238,22 @@ def zorder_delta(
                     .mode("overwrite")
                     .parquet(stage)
                 )
-                import glob
-
-                import pyarrow.parquet as pq
-
-                for zdir in sorted(os.listdir(stage)):
-                    if not zdir.startswith("__zfile="):
-                        continue
-                    parts = sorted(
-                        glob.glob(os.path.join(stage, zdir, "part-*.parquet"))
-                    )
-                    if len(parts) != 1:  # pragma: no cover - hash-group contract
-                        raise RuntimeError(
-                            f"z-order bucket {zdir} wrote {len(parts)} files"
-                        )
-                    md = pq.ParquetFile(parts[0]).metadata
-                    if md.num_rows == 0:  # pragma: no cover
-                        continue
-                    # cloned inputs carry absolute source paths: the
-                    # clustered rewrite is copy-on-write into THIS root
-                    rel_dir = (
-                        ""
-                        if os.path.isabs(paths[0])
-                        else os.path.dirname(paths[0])
-                    )
-                    name = f"part-{uuid.uuid4().hex}.parquet"
-                    rel = f"{rel_dir}/{name}" if rel_dir else name
-                    os.replace(parts[0], os.path.join(table, rel))
-                    stats = _file_stats(md, tuple(zorder_by))
-                    adds.append(
-                        {
-                            "path": rel,
-                            "partitionValues": dict(key),
-                            "size": os.path.getsize(os.path.join(table, rel)),
-                            "modificationTime": 0,
-                            "dataChange": False,
-                            **(
-                                {"stats": json.dumps(stats)}
-                                if stats is not None
-                                else {}
-                            ),
-                        }
-                    )
-            finally:
-                import shutil
-
-                shutil.rmtree(stage, ignore_errors=True)
+                moved = _move_staged(table, stage, "__zfile", dict.fromkeys(range(k), paths[0]))
+            pvals = dict(files[0][1].get("partitionValues") or {})
+            adds.extend(
+                _add_action(table, rel, md, pvals, tuple(zorder_by), False)
+                for rel, md in moved.values()
+            )
             removes.extend(paths)
-        if not adds:
-            return {"version": None, "files": 0}
-        actions: list[dict] = [
-            {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": False}}
-            for p in removes
-        ]
-        actions.extend({"add": a} for a in adds)
-        actions.append(
-            {
-                "commitInfo": {
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "zOrderBy": list(zorder_by),
-                        "targetFiles": n_files,
-                    },
-                    "timestamp": 0,
-                }
-            }
-        )
-        _commit(table, version, actions)  # version claimed at plan time
     except Exception:
         _remove_staged(table, adds)
         raise
+    if not adds:
+        return {"version": None, "files": 0}
+    _commit_rewrite(
+        table, version, removes, adds, "OPTIMIZE",
+        {"zOrderBy": list(zorder_by), "targetFiles": n_files},
+    )
     return {"version": version, "files": len(adds)}
 
 
@@ -2831,40 +2313,29 @@ def delta_changes(
                 "commit did"
             )
         files: list[str] = []
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action and action["add"].get("dataChange", True):
-                    files.append(action["add"]["path"])
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    raise ValueError(
-                        f"version {v} of {table} removes data (overwrite/"
-                        "delete): this append-only change feed cannot "
-                        "represent it — full CDF is out of scope"
-                    )
-                elif (
-                    action.get("commitInfo", {}).get("operation") == "RESTORE"
-                ):
-                    # a restore that only re-adds (e.g. reverting a DV
-                    # delete) carries no remove action, but its adds are
-                    # files whose rows consumers already processed —
-                    # delivering them again is the same double-count the
-                    # remove rule guards against
-                    raise ValueError(
-                        f"version {v} of {table} is a RESTORE: its adds "
-                        "re-deliver previously-consumed rows, which this "
-                        "append-only change feed cannot represent"
-                    )
+        for action in _actions(table, v):
+            if "add" in action and action["add"].get("dataChange", True):
+                files.append(action["add"]["path"])
+            elif "remove" in action and action["remove"].get("dataChange", True):
+                raise ValueError(
+                    f"version {v} of {table} removes data (overwrite/"
+                    "delete): this append-only change feed cannot "
+                    "represent it — full CDF is out of scope"
+                )
+            elif action.get("commitInfo", {}).get("operation") == "RESTORE":
+                # a restore that only re-adds (e.g. reverting a DV
+                # delete) carries no remove action, but its adds are
+                # files whose rows consumers already processed —
+                # delivering them again is the same double-count the
+                # remove rule guards against
+                raise ValueError(
+                    f"version {v} of {table} is a RESTORE: its adds "
+                    "re-deliver previously-consumed rows, which this "
+                    "append-only change feed cannot represent"
+                )
         if files:
             per_version.append((v, files))
-    meta = _table_metadata(table, to_version)
-    if meta is None:
-        raise ValueError(f"no metaData action at-or-below version "
-                         f"{to_version} of {table}")
+    meta = _require_metadata(table, to_version)
     _refuse_mapping(meta, "delta_changes")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = meta.get("partitionColumns", [])
@@ -2896,15 +2367,11 @@ def high_water_mark(table: str, col: str, version: int | None = None):
     wrongness this helper refuses (falling back to a scan is the
     caller's choice)."""
     meta = _table_metadata(table, version)
-    if _mapping_on(meta):
-        from pyspark.sql.types import StructType as _ST
-
-        for f in _ST.fromJson(json.loads(meta["schemaString"])).fields:
-            if f.name == col:  # stats are keyed by PHYSICAL name
-                col = _physical_name(f)
-                break
-        else:
+    if _mapping_on(meta):  # stats are keyed by PHYSICAL name
+        phys_of = _physical_names(meta)
+        if col not in phys_of:
             raise ValueError(f"no column {col!r} on {table}")
+        col = phys_of[col]
     maxes = []
     for add in _replay(table, version).values():
         stats = json.loads(add["stats"]) if "stats" in add else None
@@ -2945,18 +2412,16 @@ def history(table: str, allow_truncated: bool = False) -> list[dict]:
         )
     out = []
     for v in versions:
-        adds = removes = 0
-        op = None
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                adds += "add" in action
-                removes += "remove" in action
-                if "commitInfo" in action:
-                    op = action["commitInfo"].get("operation")
-        row = {"version": v, "operation": op, "adds": adds, "removes": removes}
+        actions = _actions(table, v)
+        row = {
+            "version": v,
+            "operation": next(
+                (a["commitInfo"].get("operation") for a in actions if "commitInfo" in a),
+                None,
+            ),
+            "adds": sum("add" in a for a in actions),
+            "removes": sum("remove" in a for a in actions),
+        }
         if v == versions[0] and truncated_below is not None:
             row["truncated_below"] = truncated_below
         out.append(row)
@@ -3086,9 +2551,7 @@ def checkpoint_delta(table: str, version: int | None = None) -> int:
     if existing is not None and version <= existing["version"]:
         return version
     live = _replay(table, version)  # raises on gaps / cleaned prefixes
-    meta = _table_metadata(table, version)  # schema AS OF the checkpoint
-    if meta is None:
-        raise ValueError(f"no metaData action found for {table}")
+    meta = _require_metadata(table, version)  # schema AS OF the checkpoint
     proto_row = _table_protocol(table, version)
     meta_row = {
         "id": meta["id"],

@@ -58,39 +58,23 @@ def _commit_codes(coded: DataFrame, path: str, mode: str) -> None:
     )
 
 
-def write_embeddings_ivfpq(res: DataFrame, path: str, centroids, books) -> None:
-    """Write the residual IVF-PQ store — the FAISS IndexIVFPQ layout
-    re-expressed as a lakehouse table: ``res`` is the residual frame
-    (`queries.scale_paths.residual_frame`: vec_id, cell, embedding =
-    vec − assigned coarse centroid); each residual is PQ-encoded to m
-    small ints and committed as (vec_id, codes) rows of a Delta table
-    PARTITIONED BY cell, with an ``_ivfpq_index.json`` sidecar holding
-    the k×dim coarse centroids and the (m, ksub, dsub) codebooks — the
-    entire index metadata. Fit once, write once, query many: a probe
-    never re-fits and never touches the raw vectors.
-
-    Scale shape: one scan + one Arrow encode pass (the `cell` column
-    rides through the kernel — no re-attach join) + one partitioned
-    commit; stored rows are m bytes of codes instead of 256 bytes of
-    float32×64."""
-    from ..queries.scale_paths import pq_encode
-
-    _commit_codes(
-        pq_encode(res.select("vec_id", "cell", "embedding"), books), path, "overwrite"
-    )
-    _write_ivfpq_sidecar(path, centroids, books)
-
-
 def write_ivfpq_store(raw: DataFrame, path: str, centroids, books) -> None:
-    """Build the residual IVF-PQ store straight from RAW (vec_id,
-    embedding) vectors — the r14 fused form of
-    :func:`write_embeddings_ivfpq`: assign, residual-quantize, and
-    PQ-encode run as ONE Arrow kernel pass
+    """Build the residual IVF-PQ store — the FAISS IndexIVFPQ layout
+    re-expressed as a lakehouse table — straight from RAW (vec_id,
+    embedding) vectors: each residual (vec − assigned coarse centroid)
+    is PQ-encoded to m small ints and committed as (vec_id, codes) rows
+    of a Delta table PARTITIONED BY cell, with an ``_ivfpq_index.json``
+    sidecar holding the k×dim coarse centroids and the (m, ksub, dsub)
+    codebooks — the entire index metadata. Fit once, write once, query
+    many: a probe never re-fits and never touches the raw vectors.
+
+    Assign, residual-quantize, and PQ-encode run as ONE Arrow kernel pass
     (`queries.scale_paths.residual_encode`), so the build never
     materializes a corpus-sized residual frame and each 256-byte
     embedding crosses the Python boundary exactly once (guide §4.2).
     Store layout, sidecar, and every stored byte are identical to the
-    two-pass form (kernel A/B'd bit-identical at sf0.1)."""
+    two-pass form (`queries.scale_paths.residual_frame`, then
+    `pq_encode`), which the tests keep as the reference."""
     from ..queries.scale_paths import residual_encode
 
     _commit_codes(residual_encode(raw, centroids, books), path, "overwrite")

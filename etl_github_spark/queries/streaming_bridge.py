@@ -374,16 +374,42 @@ def stream_heavy_hitters_replay(spark, sf_dir):
 _SLICE_US = (1704931200000000, 1705795200000000)  # 2024-01-11, 2024-01-21 UTC
 
 
-def _staged_event_stream(spark, sf_dir, cols, schema_ddl, root):
-    """Write the events fixture as three event-time-ordered parquet
-    files and open them as a file-source stream with one file per
-    micro-batch. Files get strictly increasing mtimes: FileStreamSource
-    orders batches by modification time, and the order-sensitive
-    stateful bridges need batch order == event-time order to converge
-    to their batch oracles."""
+#: event times of the off-range watermark SENTINEL rows (far past every
+#: fixture event): the first raises the watermark past all real data,
+#: the second's batch runs the eviction the first one enabled
+_LATE_WM_US = 1709251200000000  # 2024-03-01 UTC — sentinel A event time
+_LATE_WM2_US = 1709337600000000  # 2024-03-02 UTC — sentinel B event time
+
+
+def _staged_event_stream(
+    spark, sf_dir, root, cols, schema_ddl, sentinels=(), order=("b=0", "b=1", "b=2")
+):
+    """Stage the events fixture as a file-source stream with one file
+    per micro-batch, in an explicit arrival ORDER: 'b=0', 'b=1', 'b=2'
+    are the three event-time slices (split at ``_SLICE_US``), 'sent<i>'
+    the i-th SENTINEL file. Files get strictly increasing mtimes in
+    ``order``: FileStreamSource orders batches by modification time, so
+    the default order makes batch order == event-time order, which the
+    order-sensitive stateful bridges need to converge to their batch
+    oracles. ``cols`` must include ts_us.
+
+    ``sentinels`` lists the rows (tuples matching ``schema_ddl``) of
+    each sentinel file. Sentinels serve two purposes (see
+    stream_late_data_audit): interposing a batch so a later slice is
+    judged against the watermark earlier data established (the filter
+    watermark runs one batch behind the reported one), and advancing
+    the final watermark so append mode flushes remaining state — the
+    watermark only advances at a batch END and availableNow runs no
+    closing no-data batch, so the flush needs TWO trailing sentinels:
+    the first raises the watermark, the second's batch evicts. Sentinel
+    files are written by pyarrow directly (driver-local, zero Spark
+    jobs); FileStreamSource only needs the schema to match the DDL."""
     import glob
     import os
     import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     base = (
         T(spark, sf_dir, "events")
@@ -402,7 +428,6 @@ def _staged_event_stream(spark, sf_dir, cols, schema_ddl, root):
     )
     stream_dir = os.path.join(root, "in")
     os.makedirs(stream_dir)
-    now = time.time()
     # ONE scan + one 3-partition shuffle writes all three slices
     # (repartition by the slice key → exactly one part file per b=
     # directory); the per-slice filter+coalesce(1) alternative costs
@@ -411,13 +436,26 @@ def _staged_event_stream(spark, sf_dir, cols, schema_ddl, root):
     base.withColumn("b", b_expr).repartition(3, F.col("b")).write.partitionBy(
         "b"
     ).mode("overwrite").parquet(stage)
-    for b in range(3):
-        parts = glob.glob(os.path.join(stage, f"b={b}", "part-*.parquet"))
+    arrow = {"long": pa.int64(), "bigint": pa.int64(), "string": pa.string()}
+    fields = [f.strip().rsplit(" ", 1) for f in schema_ddl.split(",")]
+    arrow_schema = pa.schema([(n, arrow[t.lower()]) for n, t in fields])
+    for i, rows in enumerate(sentinels):
+        os.makedirs(os.path.join(stage, f"sent{i}"))
+        pq.write_table(
+            pa.table(
+                {n: [r[j] for r in rows] for j, (n, _) in enumerate(fields)},
+                schema=arrow_schema,
+            ),
+            os.path.join(stage, f"sent{i}", "part-0.parquet"),
+        )
+    now = time.time()
+    for i, sub in enumerate(order):
+        parts = glob.glob(os.path.join(stage, sub, "part-*.parquet"))
         if len(parts) != 1:  # empty or multi-file slice breaks batch order
-            raise AssertionError(f"slice {b}: expected 1 staged file, got {parts}")
-        dest = os.path.join(stream_dir, f"b{b}.parquet")
+            raise AssertionError(f"slice {sub}: expected 1 staged file, got {parts}")
+        dest = os.path.join(stream_dir, f"f{i}.parquet")
         os.replace(parts[0], dest)
-        os.utime(dest, (now + 30 * b, now + 30 * b))
+        os.utime(dest, (now - 60 + i, now - 60 + i))
     return (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", 1)
@@ -499,9 +537,9 @@ def stream_attribution_replay(spark, sf_dir):
         stream = _staged_event_stream(
             rs,
             sf_dir,
+            root,
             ["event_id", "user_id", "event_type", "ts_us"],
             "event_id long, user_id long, event_type string, ts_us long",
-            root,
         )
         rows = [
             tuple(r)
@@ -581,11 +619,7 @@ def stream_spike_gate_replay(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_spike_")
     try:
         stream = _staged_event_stream(
-            rs,
-            sf_dir,
-            ["event_type", "ts_us"],
-            "event_type string, ts_us long",
-            root,
+            rs, sf_dir, root, ["event_type", "ts_us"], "event_type string, ts_us long"
         )
         rows = [
             tuple(r)
@@ -647,7 +681,7 @@ def stream_interval_join_replay(spark, sf_dir):
     try:
         cols = ["event_id", "user_id", "event_type", "ts_us"]
         ddl = "event_id long, user_id long, event_type string, ts_us long"
-        src = _staged_event_stream(rs, sf_dir, cols, ddl, root)
+        src = _staged_event_stream(rs, sf_dir, root, cols, ddl)
         # ONE staged source feeds BOTH join sides (r14; guide §6 —
         # file listing/discovery and offset tracking run once per
         # micro-batch instead of twice). The join is still a genuine
@@ -708,11 +742,11 @@ def stream_outer_join_replay(spark, sf_dir):
     of streaming joins inner joins never exercise: an unmatched
     purchase emits its null-click row ONLY when the watermark proves no
     future click can still match it. The replay stages the three real
-    event-time slices plus a SENTINEL batch 3 h past the last real
-    event (one sentinel purchase + click on user −1, filtered from the
-    output): the sentinel advances both sides' watermarks beyond every
-    real purchase, so Spark's no-data batch flushes ALL pending outer
-    rows and the replay converges exactly to the batch LEFT JOIN. Lose
+    event-time slices plus two SENTINEL batches far past the last real
+    event (a sentinel purchase + click on user −1 each, filtered from
+    the output): they advance both sides' watermarks beyond every real
+    purchase and then flush ALL pending outer rows, so the replay
+    converges exactly to the batch LEFT JOIN. Lose
     state too early → matched pairs missing; never flush → null rows
     missing; flush unmatched rows that HAD matches → phantom nulls.
     Each failure flips the hash.
@@ -722,10 +756,8 @@ def stream_outer_join_replay(spark, sf_dir):
     own rows by user — plus outer-row emission bounded by watermark
     progress (the production form of "when do I stop waiting").
     """
-    import os
     import shutil
     import tempfile
-    import time
 
     from ..streaming.joins import stream_stream_interval_join
 
@@ -734,61 +766,22 @@ def stream_outer_join_replay(spark, sf_dir):
     try:
         cols = ["event_id", "user_id", "event_type", "ts_us"]
         ddl = "event_id long, user_id long, event_type string, ts_us long"
-        src = _staged_event_stream(rs, sf_dir, cols, ddl, root)
-        stream_dir = os.path.join(root, "in")
-        # sentinel batch: one purchase + click 3 h past the last real
-        # event — pushes wm(final) 2 h past every real purchase, so the
-        # closing no-data batch flushes every pending outer row
-        # global max ts == max of the tail slice (b2 holds everything
-        # >= _SLICE_US[1] by construction) — the parquet FOOTER stats of
-        # the staged file carry the exact column max: no scan, no job
-        import pyarrow.parquet as pq
-
-        meta = pq.ParquetFile(os.path.join(stream_dir, "b2.parquet")).metadata
-        ts_idx = meta.schema.names.index("ts_us")
-        max_us = max(
-            meta.row_group(g).column(ts_idx).statistics.max
-            for g in range(meta.num_row_groups)
+        # TWO sentinel batches, each one purchase + click on user -1 far
+        # past every real event: the first pushes both sides' watermarks
+        # past every real purchase, the second's batch flushes every
+        # pending outer row (see _staged_event_stream)
+        src = _staged_event_stream(
+            rs, sf_dir, root, cols, ddl,
+            sentinels=[
+                [(-2 * i, -1, "purchase", ts), (-2 * i - 1, -1, "click", ts)]
+                for i, ts in ((1, _LATE_WM_US), (2, _LATE_WM2_US))
+            ],
+            order=["b=0", "b=1", "b=2", "sent0", "sent1"],
         )
-        # TWO sentinel batches: the watermark only advances at a batch
-        # END, and availableNow runs no closing no-data batch — so the
-        # flush of rows near max_us happens while PROCESSING the batch
-        # after the one that raised the watermark past them. The 2-row
-        # sentinel files are written by pyarrow directly (driver-local,
-        # zero Spark jobs); FileStreamSource only needs the schema to
-        # match the declared DDL.
-        import pyarrow as pa
 
-        arrow_schema = pa.schema(
-            [
-                ("event_id", pa.int64()),
-                ("user_id", pa.int64()),
-                ("event_type", pa.string()),
-                ("ts_us", pa.int64()),
-            ]
-        )
-        for i in (1, 2):
-            s_us = max_us + 3 * i * 3600 * 1_000_000
-            dest = os.path.join(stream_dir, f"b{2 + i}.parquet")
-            tbl = pa.table(
-                {
-                    "event_id": [-2 * i, -2 * i - 1],
-                    "user_id": [-1, -1],
-                    "event_type": ["purchase", "click"],
-                    "ts_us": [s_us, s_us],
-                },
-                schema=arrow_schema,
-            )
-            pq.write_table(tbl, dest)
-            os.utime(dest, (time.time() + 120 * i, time.time() + 120 * i))
-
-        # ONE staged source feeds BOTH join sides (r14; the interval-join
-        # note): file discovery runs at query START, so the sentinel
-        # files written above are seen even though `src` was constructed
-        # first, exactly as the former second reader saw them. Each
-        # branch keeps its own watermark node and state buffer; batch
-        # contents are identical to the two-source form (ordered oracle
-        # re-verified at both SFs).
+        # ONE staged source feeds BOTH join sides (the interval-join
+        # note): each branch keeps its own watermark node and state
+        # buffer; batch contents are identical to the two-source form.
         left = src.where(F.col("event_type") == "purchase").select(
             "user_id",
             F.col("event_id").alias("p_id"),
@@ -871,7 +864,7 @@ def stream_delta_sink_exactly_once(spark, sf_dir):
         ddl = "event_id long, event_type string, ts_us long"
         for run in (1, 2):  # run 2 = full replay from a fresh checkpoint
             src = (
-                _staged_event_stream(spark, sf_dir, cols, ddl, root)
+                _staged_event_stream(spark, sf_dir, root, cols, ddl)
                 if run == 1
                 else spark.readStream.schema(ddl)
                 .option("maxFilesPerTrigger", 1)
@@ -984,18 +977,14 @@ def stream_delta_source_replay(spark, sf_dir):
         # the LOG enumerates each commit's files (commit order = the
         # stream's offset order); stage them with monotone mtimes so
         # FileStreamSource delivers one commit per micro-batch
-        import json as _json
+        from ..io.delta_log import _actions, _list_versions
 
-        from ..io.delta_log import _list_versions, _version_file
-
-        file_version: dict[str, int] = {}
-        for v in _list_versions(table):
-            with open(_version_file(table, v)) as fh:
-                for line in fh:
-                    if line.strip():
-                        a = _json.loads(line)
-                        if "add" in a:
-                            file_version[os.path.basename(a["add"]["path"])] = v
+        file_version = {
+            os.path.basename(a["add"]["path"]): v
+            for v in _list_versions(table)
+            for a in _actions(table, v)
+            if "add" in a
+        }
         stream_dir = os.path.join(root, "in")
         os.makedirs(stream_dir)
         now = time.time()
@@ -1129,9 +1118,9 @@ def stream_scd2_replay(spark, sf_dir):
         stream = _staged_event_stream(
             spark,
             sf_dir,
+            root,
             ["event_id", "user_id", "event_type", "ts_us"],
             "event_id long, user_id long, event_type string, ts_us long",
-            root,
         )
         # seq widens event time with an event_id low word: fixture
         # timestamps are tie-free per user, but the sink's
@@ -1167,76 +1156,6 @@ def stream_scd2_replay(spark, sf_dir):
         rows,
         "user_id long, tier string, valid_from long, valid_to long, "
         "is_current int",
-    )
-
-
-_LATE_WM_US = 1709251200000000  # 2024-03-01 UTC — sentinel A event time
-_LATE_WM2_US = 1709337600000000  # 2024-03-02 UTC — sentinel B event time
-
-
-def _staged_sentinel_stream(spark, sf_dir, root, cols, schema_ddl, sentinels,
-                            order):
-    """Stage the events fixture as a file stream with explicit arrival
-    ORDER over the three event-time slices plus off-range sentinel
-    rows. Sentinels serve two purposes (see stream_late_data_audit):
-    interposing a batch so a later slice is judged against the
-    watermark earlier data established (the filter watermark runs one
-    batch behind the reported one — the same stall the outer-join
-    replay pins), and advancing the final watermark so append mode
-    flushes remaining state before the replay ends. ``cols`` must
-    include ts_us; ``sentinels`` are rows matching ``schema_ddl``;
-    ``order`` interleaves 'b=0','b=1','b=2' (the slices) with
-    'sent<i>' (the i-th sentinel)."""
-    import glob
-    import os
-    import time
-
-    base = T(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    ).select(*cols)
-    b_expr = (
-        F.when(F.col("ts_us") < _SLICE_US[0], 0)
-        .when(F.col("ts_us") >= _SLICE_US[1], 1)
-        .otherwise(2)
-    )
-    stage = os.path.join(root, "stage_all")
-    stream_dir = os.path.join(root, "in")
-    os.makedirs(stream_dir)
-    base.withColumn("b", b_expr).repartition(3, F.col("b")).write.partitionBy(
-        "b"
-    ).mode("overwrite").parquet(stage)
-    # sentinel files are written by pyarrow directly (driver-local, zero
-    # Spark jobs — same trick as the outer-join replay); FileStreamSource
-    # only needs the file schema to match the declared DDL
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    _ARROW = {"long": pa.int64(), "bigint": pa.int64(), "string": pa.string()}
-    fields = [f.strip().rsplit(" ", 1) for f in schema_ddl.split(",")]
-    arrow_schema = pa.schema([(n, _ARROW[t.lower()]) for n, t in fields])
-    for i, row in enumerate(sentinels):
-        os.makedirs(os.path.join(stage, f"sent{i}"), exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {n: [v] for (n, _), v in zip(fields, row)}, schema=arrow_schema
-            ),
-            os.path.join(stage, f"sent{i}", "part-0.parquet"),
-        )
-    now = time.time()
-    for i, sub in enumerate(order):
-        parts = glob.glob(os.path.join(stage, sub, "part-*.parquet"))
-        if len(parts) != 1:
-            raise AssertionError(f"slice {sub}: expected 1 staged file, got {parts}")
-        dest = os.path.join(stream_dir, f"f{i}.parquet")
-        os.replace(parts[0], dest)
-        os.utime(dest, (now - 60 + i, now - 60 + i))
-    return (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
     )
 
 
@@ -1289,12 +1208,13 @@ def stream_late_data_audit(spark, sf_dir):
     rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_late_")
     try:
-        stream = _staged_sentinel_stream(
+        stream = _staged_event_stream(
             rs, sf_dir, root,
             cols=["event_id", "event_type", "ts_us"],
             schema_ddl="event_id long, event_type string, ts_us long",
-            sentinels=[(-1, "__wm", _LATE_WM_US), (-1, "__wm", _LATE_WM2_US)],
-            order=["b=0", "b=1", "sent0", "b=2", "sent1"],
+            sentinels=[[(-1, "__wm", _LATE_WM_US)], [(-1, "__wm", _LATE_WM2_US)]],
+            # the middle slice arrives after the tail, behind a sentinel
+            order=["b=0", "b=2", "sent0", "b=1", "sent1"],
         )
         agg = (
             stream.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
@@ -1347,7 +1267,7 @@ def stream_session_append_replay(spark, sf_dir):
     an open session and merge-on-arrival both happen mid-stream — and
     two off-range sentinels then walk the watermark past every real
     session so the closed set flushes before the bounded replay ends
-    (per the one-batch eviction stall `_staged_sentinel_stream`
+    (per the one-batch eviction stall `_staged_event_stream`
     documents). The oracle is the batch gaps-and-islands closed form
     verbatim: a session emitted early (before its gap was provably
     over), split at a batch boundary, or withheld at the end each
@@ -1363,12 +1283,12 @@ def stream_session_append_replay(spark, sf_dir):
     rs = stream_session(spark, _STATE_PARTS)
     root = tempfile.mkdtemp(prefix="stream_sess_append_")
     try:
-        stream = _staged_sentinel_stream(
+        stream = _staged_event_stream(
             rs, sf_dir, root,
             cols=["event_id", "user_id", "ts_us"],
             schema_ddl="event_id long, user_id long, ts_us long",
-            sentinels=[(-1, -1, _LATE_WM_US), (-1, -1, _LATE_WM2_US)],
-            order=["b=0", "b=1", "b=2", "sent0", "sent1"],
+            sentinels=[[(-1, -1, _LATE_WM_US)], [(-1, -1, _LATE_WM2_US)]],
+            order=["b=0", "b=2", "b=1", "sent0", "sent1"],
         )
         agg = (
             stream.withColumn("ts", F.timestamp_micros(F.col("ts_us")))

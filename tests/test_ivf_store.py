@@ -12,8 +12,21 @@ from pyspark.sql import functions as F
 from .conftest import SF_SMALL
 
 
+def write_embeddings_ivfpq(res, path, centroids, books) -> None:
+    """The two-pass IVF-PQ store build the fused `write_ivfpq_store` is
+    pinned bit-identical to: ``res`` is the residual frame
+    (`queries.scale_paths.residual_frame`), PQ-encoded and committed
+    with the same sidecar."""
+    from etl_github_spark.io.ivf_store import _commit_codes, _write_ivfpq_sidecar
+    from etl_github_spark.queries.scale_paths import pq_encode
+
+    _commit_codes(
+        pq_encode(res.select("vec_id", "cell", "embedding"), books), path, "overwrite"
+    )
+    _write_ivfpq_sidecar(path, centroids, books)
+
+
 def _build_ivfpq(spark, tmp_path):
-    from etl_github_spark.io.ivf_store import write_embeddings_ivfpq
     from etl_github_spark.io.tables import load_table
     from etl_github_spark.queries.scale_paths import (
         lloyd_fit,
@@ -85,7 +98,7 @@ def test_ivfpq_store_probe_prunes_partitions(spark, tmp_path):
 def test_ivfpq_index_sidecar_roundtrips_exactly(spark, tmp_path):
     """json round-trips doubles exactly: the read-back index must be
     bit-identical to the fitted one (probe choice + ADC tables replay)."""
-    from etl_github_spark.io.ivf_store import read_ivfpq_index, write_embeddings_ivfpq
+    from etl_github_spark.io.ivf_store import read_ivfpq_index
     from etl_github_spark.io.tables import load_table
     from etl_github_spark.queries.scale_paths import (
         lloyd_fit,
@@ -114,7 +127,6 @@ def test_ivfpq_append_with_stored_index_matches_full_build(spark, tmp_path):
     from etl_github_spark.io.ivf_store import (
         append_embeddings_ivfpq,
         ivfpq_probe_topk,
-        write_embeddings_ivfpq,
     )
     from etl_github_spark.io.tables import load_table
     from etl_github_spark.queries.scale_paths import (
@@ -168,7 +180,6 @@ def test_ivfpq_compact_reduces_files_and_preserves_probe(spark, tmp_path):
         pq_fit,
         residual_frame,
     )
-    from etl_github_spark.io.ivf_store import write_embeddings_ivfpq
 
     centroids = lloyd_fit(base, k=8, iters=3)
     res = residual_frame(spark, base, centroids)
@@ -251,7 +262,6 @@ def test_write_ivfpq_store_matches_two_pass_write(spark, tmp_path):
     from etl_github_spark.io.delta_log import read_delta
     from etl_github_spark.io.ivf_store import (
         read_ivfpq_index,
-        write_embeddings_ivfpq,
         write_ivfpq_store,
     )
     from etl_github_spark.io.tables import load_table

@@ -1456,6 +1456,59 @@ def test_delta_deletion_vectors_lifecycle(spark, tmp_path):
     assert delta_changes(spark, table, from_version=2).count() == 0
 
 
+def test_purge_rewrites_every_dv_file_in_one_job(spark, tmp_path):
+    """PURGE is one bin rewrite, not one rewrite job per DV'd file: over
+    two and over four DV'd files it runs the same number of Spark jobs
+    (counted per job group with the status tracker), and the logical
+    rows stay the same."""
+    from etl_github_spark.io.delta_log import (
+        _replay,
+        delete_delta_dv,
+        materialize_deletes,
+        read_delta,
+        write_delta,
+    )
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 4):
+        table = str(tmp_path / f"purge{n}")
+        df = spark.range(40 * n).selectExpr("id", "id * 2 AS v").repartition(n)
+        write_delta(df, table, stats_cols=("id",))
+        delete_delta_dv(spark, table, "id % 3 = 0")
+        assert sum("deletionVector" in a for a in _replay(table).values()) == n
+        want = sorted(r["id"] for r in read_delta(spark, table).collect())
+        sc.setJobGroup(f"purge-{n}", "materialize_deletes")
+        try:
+            assert materialize_deletes(spark, table)["files"] == n
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"purge-{n}"))
+        assert sorted(r["id"] for r in read_delta(spark, table).collect()) == want
+        assert not any("deletionVector" in a for a in _replay(table).values())
+    assert jobs[2] == jobs[4], jobs
+
+
+def test_read_delta_reads_row_metadata_only_through_deletion_vectors(
+    spark, tmp_path, capsys
+):
+    """A table with no deletion vectors scans its files plainly: the
+    physical plan of read_delta reads no `_metadata` column. Once a
+    file carries a vector, the scan reads its row index to apply it."""
+    from etl_github_spark.io.delta_log import delete_delta_dv, read_delta, write_delta
+
+    table = str(tmp_path / "plain")
+    write_delta(spark.range(20).selectExpr("id", "id * 2 AS v").coalesce(1), table)
+
+    def plan() -> str:
+        read_delta(spark, table).explain(mode="formatted")
+        return capsys.readouterr().out
+
+    assert "_metadata" not in plan()
+    delete_delta_dv(spark, table, "id < 5")
+    assert "row_index" in plan()
+
+
 def test_delta_dv_survives_checkpoint_and_vacuum(spark, tmp_path):
     """DV references round-trip through parquet checkpoints (replay
     from a cleaned log still filters), vacuum keeps referenced

@@ -797,8 +797,8 @@ def test_cc_storage_does_not_grow_with_diameter(spark):
     assert left[0] == left[1], left
 
 
-def _calls(tree):
-    """(call, names of the enclosing functions) for every call in tree."""
+def _scoped(tree):
+    """(node, names of the enclosing functions) for every node in tree."""
     import ast
 
     def walk(node, scope):
@@ -806,11 +806,17 @@ def _calls(tree):
             inner = scope
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 inner = (*scope, child.name)
-            if isinstance(child, ast.Call):
-                yield child, inner
+            yield child, inner
             yield from walk(child, inner)
 
     yield from walk(tree, ())
+
+
+def _calls(tree):
+    """(call, names of the enclosing functions) for every call in tree."""
+    import ast
+
+    return ((n, scope) for n, scope in _scoped(tree) if isinstance(n, ast.Call))
 
 
 def test_query_code_never_writes_session_conf():
@@ -941,3 +947,35 @@ def test_driver_boundary_tunes_an_adversarial_session(spark):
         errors = compare(adv, SF_ORACLE, name, queries[name], oracles[name])
         assert not errors, (name, errors)
     assert dict(spark.conf.getAll) == conf
+
+
+def test_delta_log_does_each_job_in_one_place():
+    """`io/delta_log.py` builds the `commitInfo` action in one function
+    (the commit step), opens a version file in one function (the log
+    reader), and calls `_commit` only from the commit step, so every
+    verb commits and reads the log the same way and the hand-written
+    copies cannot come back."""
+    import ast
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "etl_github_spark/io/delta_log.py"
+    infos, opens, commits = set(), set(), set()
+    for node, scope in _scoped(ast.parse(path.read_text())):
+        where = scope[0] if scope else "<module>"
+        if isinstance(node, ast.Dict) and any(
+            isinstance(k, ast.Constant) and k.value == "commitInfo" for k in node.keys
+        ):
+            infos.add(where)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+            if node.func.id == "_commit":
+                commits.add(where)
+            if (
+                node.func.id == "open"
+                and node.args
+                and isinstance(node.args[0], ast.Call)
+                and getattr(node.args[0].func, "id", None) == "_version_file"
+            ):
+                opens.add(where)
+    assert len(infos) == 1, f"commitInfo actions built in {sorted(infos)}"
+    assert len(opens) == 1, f"version files opened in {sorted(opens)}"
+    assert commits == infos, f"_commit called from {sorted(commits)}, not the commit step"

@@ -4,12 +4,16 @@ package itself, ``bench.py``, ``__spark_entry__.py``, ``tools_*.py`` and
 ``perfbench/``), unless it is a registered ``@query`` or on the keep-list
 below with a reason.
 
-A reference is a Name, an Attribute, an imported name, or an identifier
-inside a string literal (``getattr``-style lookups, registry names).
-An import inside a package ``__init__.py`` is not a reference: a
-re-export exposes a name, it does not call it.
-Docstrings do not count: prose that mentions a helper does not call it.
-Tests do not count either: a helper only its own test calls is dead.
+A reference is a Name, an Attribute, an imported name, or a string
+literal that is, stripped, exactly an identifier or a dotted name
+(``getattr``-style lookups, registry names). Prose inside a string
+(an error message naming a verb) is not a reference, and neither are
+docstrings. A use inside the definition's own body does not count
+(``_refuse_mapping(meta, "materialize_deletes")`` inside
+``materialize_deletes``), and an import inside a package
+``__init__.py`` is not a reference either: a re-export exposes a name,
+it does not call it. Tests do not count: a helper only its own test
+calls is dead.
 """
 
 from __future__ import annotations
@@ -27,8 +31,12 @@ KEEP = {
         "production entry point for the real GH Archive source (needs network)",
     "etl_github_spark.io.delta_log.drop_constraint":
         "inverse of add_constraint; public Delta table-property API",
-    "etl_github_spark.io.ivf_store.write_embeddings_ivfpq":
-        "two-pass IVF-PQ writer; tests pin the fused writer bit-identical to it",
+    "etl_github_spark.io.delta_log.partition_columns":
+        "public accessor of the layout recorded at version 0; read_delta and "
+        "snapshot_files take it from the metaData they already hold",
+    "etl_github_spark.io.delta_log.materialize_deletes":
+        "the public PURGE verb, and the only way to re-enable zorder_delta "
+        "on a table with deletion vectors",
     "etl_github_spark.streaming.cdc.stream_cdc_apply":
         "streaming CDC sink; its batch step apply_cdc_batch is driver-checked",
 }
@@ -53,25 +61,39 @@ def _docstring_ids(tree: ast.AST) -> set[int]:
     return out
 
 
+_DOTTED = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
+
+
+def _names_in(node: ast.AST, docs: set[int], reexport: bool) -> set[str]:
+    names: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias) and not reexport:
+            names.add(n.name.rsplit(".", 1)[-1])
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docs
+            and _DOTTED.fullmatch(n.value.strip())
+        ):
+            names.update(n.value.strip().split("."))
+    return names
+
+
 def _referenced_names() -> set[str]:
     names: set[str] = set()
     for path in _production_files():
         tree = ast.parse(path.read_text(), str(path))
         docs = _docstring_ids(tree)
         reexport = path.name == "__init__.py"
-        for n in ast.walk(tree):
-            if isinstance(n, ast.Name):
-                names.add(n.id)
-            elif isinstance(n, ast.Attribute):
-                names.add(n.attr)
-            elif isinstance(n, ast.alias) and not reexport:
-                names.add(n.name.rsplit(".", 1)[-1])
-            elif (
-                isinstance(n, ast.Constant)
-                and isinstance(n.value, str)
-                and id(n) not in docs
-            ):
-                names.update(re.findall(r"[A-Za-z_]\w*", n.value))
+        for node in tree.body:
+            used = _names_in(node, docs, reexport)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                used.discard(node.name)  # a definition does not keep itself alive
+            names |= used
     return names
 
 
