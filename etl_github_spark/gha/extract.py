@@ -38,11 +38,16 @@ def parse_raw_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     Rows whose JSON parses but lacks the envelope fields are also
     dropped, matching the handlers' KeyError-→-skip behavior
     (preprocess.py:133-136).
+
+    ``inline(array(j))`` unpacks the struct through a generator, which
+    Catalyst pushes no filter below: with a plain ``select("j.*")`` the
+    filters move under the projection and ``from_json`` runs twice per
+    valid line, once in the filter and once in the projection.
     """
     return (
         _parsed(lines, value_col)
-        .where(F.col(f"j.{CORRUPT_COL}").isNull())
-        .select("j.*")
+        .select(F.inline(F.array("j")))
+        .where(F.col(CORRUPT_COL).isNull())
         .drop(CORRUPT_COL)
         .where(
             F.col("type").isNotNull()

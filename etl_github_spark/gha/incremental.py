@@ -6,11 +6,14 @@ preprocess.py:178-190) and caps the window at now-1h so partially
 published hours are never ingested (T2 — a hand-rolled completeness
 watermark).
 
-Spark equivalent: ``agg(max(created_at))`` on the sink. On the plain
-Parquet lake this is a FULL scan of the column: Spark's DSv1 parquet
-path does not answer ``max`` from footer statistics. A log-only answer
-needs add-action stats (``delta_log.high_water_mark``), which ROADMAP
-item 1 moves the lake onto.
+Spark equivalent: ``agg(max(created_at))`` on the sink, read with the
+fixed one-column schema ``created_at TIMESTAMP`` that every GHA table
+carries, so no schema-inference job runs: 2 Spark jobs per call (the
+partial-max stage and the final result). On the plain Parquet lake this
+is still a FULL scan of the column: Spark's DSv1 parquet path does not
+answer ``max`` from footer statistics. A log-only answer needs
+add-action stats (``delta_log.high_water_mark``), which ROADMAP item 1
+moves the lake onto.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from pyspark.sql import functions as F
 from ..io.sink import read_table
 
 EPOCH = dt.datetime(2024, 2, 29, tzinfo=dt.timezone.utc)  # reference default start
+#: the one column the resume point needs, present in every GHA table
+_HW_SCHEMA = "created_at TIMESTAMP"
 _HOUR = dt.timedelta(hours=1)
 
 
@@ -34,7 +39,8 @@ def _ceil_hour(t: dt.datetime) -> dt.datetime:
 def high_water_mark(spark: SparkSession, table_path: str) -> dt.datetime | None:
     """max(created_at) of an ingested table (a full column scan)."""
     try:
-        row = read_table(spark, table_path).agg(F.max("created_at").alias("hw")).first()
+        table = read_table(spark, table_path, schema=_HW_SCHEMA)
+        row = table.agg(F.max("created_at").alias("hw")).first()
     except Exception:  # table does not exist yet → full backfill
         return None
     if row is None or row["hw"] is None:

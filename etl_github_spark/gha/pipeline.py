@@ -9,7 +9,7 @@ parallelism, retries, and barriers are the engine's job (SURVEY.md §3).
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -240,32 +240,55 @@ def ingest_raw(
     six tables to ``outdir``.
 
     One cached parse feeds six partitioned writes — the Spark shape of
-    process_file + write_delta (preprocess.py:143-175). The cache is
-    materialized once (a count) and the six independent writes are then
-    submitted concurrently from driver threads: each is a separate job
-    over the same cached blocks, so the scheduler interleaves their
-    tasks and write/commit latencies overlap (~2× faster than serial
-    locally; on a cluster it keeps executors saturated while per-table
-    commits run).
-    """
-    from concurrent.futures import ThreadPoolExecutor
+    process_file + write_delta (preprocess.py:143-175). The six writes
+    are submitted concurrently (:func:`write_concurrently`), each as soon
+    as its frame is planned, and no action materializes the cache first:
+    whichever write reaches a partition first parses it into the cache,
+    and Spark's block lock makes the other writes wait for that block
+    instead of parsing it again, so each raw line is parsed once. The
+    scheduler interleaves the six jobs' tasks and their write/commit
+    latencies overlap.
 
+    A failure anywhere in the parse fails every write: each one needs
+    every cached partition, so a bad input file appends nothing.
+    """
     from pyspark import StorageLevel
 
     events = parse_raw_lines(raw).persist(StorageLevel.MEMORY_AND_DISK)
-    events.count()  # materialize once; the six jobs below read cached blocks
     try:
         out = {name: f"{outdir}/{name}" for name in EXTRACTORS}
-        with ThreadPoolExecutor(max_workers=len(EXTRACTORS)) as ex:
-            futs = [
-                ex.submit(write_table, df, out[name], mode, ("date",))
-                for name, df in extract_tables(events)
-            ]
-            for f in futs:
-                f.result()
+        write_concurrently(
+            spark,
+            ((df, out[name], mode, ("date",)) for name, df in extract_tables(events)),
+        )
         return out
     finally:
         events.unpersist()
+
+
+def write_concurrently(
+    spark: SparkSession, writes: Iterable[tuple[DataFrame, str, str, tuple[str, ...]]]
+) -> None:
+    """Run independent :func:`~..io.sink.write_table` calls, given as
+    ``(df, path, mode, partition_by)`` tuples, as concurrent Spark jobs
+    from driver threads, submitting each as ``writes`` yields it. The
+    threads inherit the caller's local properties, so a job group or
+    description the caller set covers every write. Returns when all
+    writes have finished; if any failed, raises the error of the first
+    failed one in submission order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    # with pinned threads off (PYSPARK_PIN_THREAD=false) PySpark returns
+    # the session itself: job groups are then not per-thread anyway
+    write = wrap(write_table) if callable(wrap) else write_table
+    # the widest caller writes one table per extractor
+    with ThreadPoolExecutor(max_workers=len(EXTRACTORS)) as ex:
+        futs = [ex.submit(write, *args) for args in writes]
+        for f in futs:
+            f.result()
 
 
 def ingest_urls(

@@ -15,23 +15,29 @@ def run_analytics(spark, lakedir: str, outdir: str) -> dict[str, str]:
     """The reference's full query_data flow (preprocess.py:209-244):
     read the lakehouse tables, run both keyword queries, overwrite the
     result tables (rm-and-rewrite in the reference → atomic
-    mode="overwrite" here, S6)."""
-    from ..io.sink import read_table, write_table
+    mode="overwrite" here, S6).
 
-    commit = read_table(spark, f"{lakedir}/commit")
-    comment = read_table(spark, f"{lakedir}/comment")
-    watch = read_table(spark, f"{lakedir}/watch")
+    The tables are read with their fixed ``TABLE_SCHEMAS``, so no
+    schema-inference job runs, and the two independent result writes
+    run as concurrent Spark jobs (``pipeline.write_concurrently``)."""
+    from ..io.sink import read_table
+    from .pipeline import write_concurrently
+    from .schemas import TABLE_SCHEMAS
+
+    commit, comment, watch = (
+        read_table(spark, f"{lakedir}/{t}", schema=TABLE_SCHEMAS[t])
+        for t in ("commit", "comment", "watch")
+    )
     out = {
         "commits": f"{outdir}/dask/commits",
         "comments": f"{outdir}/dask/comments",
     }
-    write_table(
-        keyword_commits(commit, watch), out["commits"],
-        mode="overwrite", partition_by=(),
-    )
-    write_table(
-        keyword_comments(comment, watch), out["comments"],
-        mode="overwrite", partition_by=(),
+    write_concurrently(
+        spark,
+        [
+            (keyword_commits(commit, watch), out["commits"], "overwrite", ()),
+            (keyword_comments(comment, watch), out["comments"], "overwrite", ()),
+        ],
     )
     return out
 

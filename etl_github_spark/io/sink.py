@@ -29,6 +29,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _FORMAT = "parquet"
 
@@ -80,9 +81,18 @@ def write_table(
     w.save(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Delta/Parquet-layout table scan (S5)."""
-    return spark.read.format(_FORMAT).load(path)
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> DataFrame:
+    """Delta/Parquet-layout table scan (S5). Without ``schema`` Spark
+    infers one from the file footers, which costs a Spark job per read;
+    a known ``schema`` (a ``StructType`` or DDL string) skips it. Hive
+    partition columns the schema leaves out are still discovered and
+    appended, and a missing ``path`` still raises."""
+    reader = spark.read.format(_FORMAT)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:

@@ -340,6 +340,7 @@ def gha_ingest_roundtrip(spark, sf_dir):
     import tempfile
 
     from ..gha.pipeline import ingest_files
+    from ..gha.schemas import TABLE_SCHEMAS
     from ..io.sink import read_table
 
     out = tempfile.mkdtemp(prefix="gha_rt_")
@@ -348,7 +349,8 @@ def gha_ingest_roundtrip(spark, sf_dir):
         ingest_files(spark, [FIXTURE], out, mode="overwrite")  # idempotent rerun
         rows = []
         for t in ("commit", "create", "pr", "comment", "watch", "fork"):
-            rows.append((t, read_table(spark, f"{out}/{t}").count()))
+            df = read_table(spark, f"{out}/{t}", schema=TABLE_SCHEMAS[t])
+            rows.append((t, df.count()))
     finally:
         shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, "tbl string, n_rows long")

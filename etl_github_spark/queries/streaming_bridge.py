@@ -1262,13 +1262,18 @@ def stream_session_append_replay(spark, sf_dir):
     shape `stream_sessionize_replay` (complete mode) deliberately
     sidesteps: a session row may only reach the sink after the
     watermark proves no future event can extend or merge it (event
-    time past end + gap). Three event-time-ordered slices build the
-    sessions across micro-batch boundaries — cross-batch EXTENSION of
-    an open session and merge-on-arrival both happen mid-stream — and
-    two off-range sentinels then walk the watermark past every real
-    session so the closed set flushes before the bounded replay ends
-    (per the one-batch eviction stall `_staged_event_stream`
-    documents). The oracle is the batch gaps-and-islands closed form
+    time past end + gap). Three event-time slices build the sessions
+    across micro-batch boundaries, and they do NOT arrive in event-time
+    order: the early slice (before 2024-01-11) first, then the tail
+    (2024-01-21 on), then the middle ten days. The middle slice is not
+    dropped as late only because the late-row filter uses the watermark
+    one batch behind the reported one (the stall `_staged_event_stream`
+    documents): it is judged against the early slice's watermark, not
+    the tail's, and joins the sessions still in state. Cross-batch
+    EXTENSION of an open session and merge-on-arrival both happen
+    mid-stream. Two off-range sentinels then walk the watermark past
+    every real session so the closed set flushes before the bounded
+    replay ends. The oracle is the batch gaps-and-islands closed form
     verbatim: a session emitted early (before its gap was provably
     over), split at a batch boundary, or withheld at the end each
     flips the hash.

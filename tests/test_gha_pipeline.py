@@ -361,3 +361,97 @@ def test_split_landing_line_longer_than_shard_bytes(spark, tmp_path):
         assert data.endswith(b"\n")
         for line in data[:-1].split(b"\n"):
             json.loads(line)
+
+
+def _group_jobs(sc, group, fn, *args):
+    """Run ``fn(*args)`` under a job group; the number of Spark jobs the
+    group saw. The status store fills from the listener bus, so the
+    count is read until two reads 0.1 s apart agree."""
+    import time
+
+    sc.setJobGroup(group, group)
+    try:
+        fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    seen = -1
+    for _ in range(50):
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n == seen:
+            break
+        seen = n
+        time.sleep(0.1)
+    return seen
+
+
+def test_hour_refresh_jobs_follow_the_caller_job_group(spark, tmp_path):
+    """One hourly refresh (ingest one fixture hour, the high-water mark,
+    the analytics) under the caller's job group: the writes submitted
+    from ingest_raw's and run_analytics' driver threads are counted in
+    the group, and no call runs a schema-inference or cache-filling job
+    (ingest: six writes; high-water mark: the partial and final max;
+    analytics: two keyword writes, each with its watch aggregation and
+    broadcast)."""
+    from etl_github_spark.gha.incremental import high_water_mark
+    from etl_github_spark.gha.queries import run_analytics
+
+    sc = spark.sparkContext
+    lake, out = str(tmp_path / "lake"), str(tmp_path / "out")
+    hour = write_fixture(tmp_path / "in", n_files=1)
+    jobs = {
+        "ingest_files": _group_jobs(sc, "hour-ingest", ingest_files, spark, hour, lake),
+        "high_water_mark": _group_jobs(
+            sc, "hour-hw", high_water_mark, spark, f"{lake}/comment"
+        ),
+        "run_analytics": _group_jobs(sc, "hour-analytics", run_analytics, spark, lake, out),
+    }
+    assert jobs == {"ingest_files": 6, "high_water_mark": 2, "run_analytics": 10}, jobs
+
+
+def test_ingest_parses_each_raw_line_once(spark, tmp_path):
+    """Every raw line goes through the parse exactly once across the six
+    table writes: a lost persist shows as six passes, a filter pushed
+    under the parse as about two."""
+    from etl_github_spark.gha.pipeline import ingest_raw
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(v):
+        acc.add(1)
+        return v
+
+    raw = spark.read.text(write_fixture(tmp_path / "in", n_files=1))
+    n_lines = raw.count()
+    ingest_raw(spark, raw.select(counted("value").alias("value")), str(tmp_path / "lake"))
+    assert acc.value == n_lines
+
+
+def test_bad_hour_appends_nothing(spark, tmp_path):
+    """An ingest whose inputs include a truncated gzip raises and appends
+    to no table: each of the six writes needs every parsed partition, so
+    all six fail. On a fresh lake no data file is left behind."""
+    import pytest
+
+    good, other = write_fixture(tmp_path / "in")
+    bad = tmp_path / "in" / "2024-03-01-0.json.gz"
+    data = open(other, "rb").read()
+    bad.write_bytes(data[: len(data) // 2])
+    lake = tmp_path / "lake"
+
+    with pytest.raises(Exception):
+        ingest_files(spark, [good, str(bad)], str(lake))
+    assert not [p for p in lake.rglob("*") if p.is_file() and p.name.startswith("part-")]
+
+    def counts():
+        return {
+            t: read_table(spark, f"{lake}/{t}", schema=s).count()
+            for t, s in TABLE_SCHEMAS.items()
+        }
+
+    ingest_files(spark, [good], str(lake))
+    before = counts()
+    with pytest.raises(Exception):
+        ingest_files(spark, [good, str(bad)], str(lake))
+    assert counts() == before
