@@ -1,13 +1,13 @@
 """Raw NDJSON parsing + the six per-table extractors as column plans.
 
 Every reference handler (preprocess.py:40-108) is a Python function over
-a dict; here each compiles to pure column expressions — zero UDFs, fully
-inside whole-stage codegen (SURVEY.md §2.7).
+a dict; here each compiles to pure SQL column expressions — zero UDFs,
+fully inside whole-stage codegen (SURVEY.md §2.7).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -23,6 +23,12 @@ _RAW_WITH_CORRUPT = StructType(
     list(RAW_EVENT_SCHEMA.fields) + [StructField(CORRUPT_COL, StringType())]
 )
 _PARSE_OPTS = {"columnNameOfCorruptRecord": CORRUPT_COL}
+
+
+# The filters and projections below are SQL expression strings: every
+# Column built in Python costs py4j round trips, and each ingest plans
+# the envelope filter and six extractors, so one string per expression
+# keeps that driver-side planning short.
 
 
 def _parsed(lines: DataFrame, value_col: str) -> DataFrame:
@@ -46,102 +52,88 @@ def parse_raw_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """
     return (
         _parsed(lines, value_col)
-        .select(F.inline(F.array("j")))
-        .where(F.col(CORRUPT_COL).isNull())
-        .drop(CORRUPT_COL)
+        .selectExpr("inline(array(j))")
         .where(
-            F.col("type").isNotNull()
-            & F.col("created_at").isNotNull()
-            & F.col("actor.login").isNotNull()
-            & F.col("repo.name").isNotNull()
+            f"{CORRUPT_COL} IS NULL AND type IS NOT NULL AND created_at IS NOT NULL"
+            " AND actor.login IS NOT NULL AND repo.name IS NOT NULL"
         )
+        .drop(CORRUPT_COL)
     )
 
 
-def _common() -> list[Column]:
-    # actor.login → username, repo.name → repo (every handler,
-    # preprocess.py:42-44,53-55,...)
-    return [
-        F.col("actor.login").alias("username"),
-        F.col("repo.name").alias("repo"),
-    ]
+#: actor.login → username, repo.name → repo (every handler,
+#: preprocess.py:42-44,53-55,...)
+_WHO = ("actor.login AS username", "repo.name AS repo")
 
-
-def _ts_date(src: Column | str = "created_at") -> list[Column]:
-    # fromisoformat parse (preprocess.py:47 etc) + derived partition date
-    # (preprocess.py:160-161). to_timestamp handles the +00:00 offset;
-    # session TZ is pinned UTC (session.py).
-    src = F.col(src) if isinstance(src, str) else src
-    ts = F.to_timestamp(src)
-    return [ts.alias("created_at"), F.to_date(ts).alias("date")]
+#: fromisoformat parse (preprocess.py:47 etc) + derived partition date
+#: (preprocess.py:160-161). to_timestamp handles the +00:00 offset;
+#: session TZ is pinned UTC (session.py). The date comes from the parsed
+#: timestamp, not the string: to_date on the string keeps the local
+#: date of the offset.
+_WHEN = (
+    "to_timestamp(created_at) AS created_at",
+    "to_date(to_timestamp(created_at)) AS date",
+)
 
 
 def extract_commits(events: DataFrame) -> DataFrame:
     """PushEvent → one row per commit (explode; preprocess.py:40-48)."""
     return (
-        events.where(F.col("type") == "PushEvent")
-        .select(*_common(), F.explode("payload.commits").alias("c"), "created_at")
-        .select(
-            "username",
-            "repo",
-            F.col("c.sha").alias("sha"),
-            F.col("c.message").alias("message"),
-            *_ts_date(),
-        )
+        events.where("type = 'PushEvent'")
+        .selectExpr(*_WHO, "explode(payload.commits) AS c", "created_at")
+        .selectExpr("username", "repo", "c.sha AS sha", "c.message AS message", *_WHEN)
     )
 
 
 def extract_creates(events: DataFrame) -> DataFrame:
     """CreateEvent (preprocess.py:51-59)."""
-    return events.where(F.col("type") == "CreateEvent").select(
-        *_common(),
-        F.col("payload.ref_type").alias("type"),
-        F.col("payload.ref").alias("name"),
-        F.col("payload.description").alias("description"),
-        *_ts_date(),
+    return events.where("type = 'CreateEvent'").selectExpr(
+        *_WHO,
+        "payload.ref_type AS type",
+        "payload.ref AS name",
+        "payload.description AS description",
+        *_WHEN,
     )
 
 
 def extract_prs(events: DataFrame) -> DataFrame:
     """PullRequestEvent (preprocess.py:62-75)."""
-    return events.where(F.col("type") == "PullRequestEvent").select(
-        *_common(),
-        F.col("payload.action").alias("action"),
-        F.col("payload.number").alias("number"),
-        F.col("payload.pull_request.title").alias("title"),
-        F.col("payload.pull_request.user.login").alias("author"),
-        F.col("payload.pull_request.body").alias("body"),
-        F.to_timestamp("payload.pull_request.created_at").alias("pr_created_at"),
-        *_ts_date(),
+    return events.where("type = 'PullRequestEvent'").selectExpr(
+        *_WHO,
+        "payload.action AS action",
+        "payload.number AS number",
+        "payload.pull_request.title AS title",
+        "payload.pull_request.user.login AS author",
+        "payload.pull_request.body AS body",
+        "to_timestamp(payload.pull_request.created_at) AS pr_created_at",
+        *_WHEN,
     )
 
 
 def extract_comments(events: DataFrame) -> DataFrame:
     """IssueCommentEvent (preprocess.py:78-91)."""
-    return events.where(F.col("type") == "IssueCommentEvent").select(
-        *_common(),
-        F.col("payload.issue.number").alias("number"),
-        F.col("payload.issue.title").alias("title"),
-        F.col("payload.issue.user.login").alias("author"),
-        F.to_timestamp("payload.issue.created_at").alias("issue_created_at"),
-        F.col("payload.comment.body").alias("comment"),
-        F.col("payload.comment.author_association").alias("association"),
-        *_ts_date(),
+    return events.where("type = 'IssueCommentEvent'").selectExpr(
+        *_WHO,
+        "payload.issue.number AS number",
+        "payload.issue.title AS title",
+        "payload.issue.user.login AS author",
+        "to_timestamp(payload.issue.created_at) AS issue_created_at",
+        "payload.comment.body AS comment",
+        "payload.comment.author_association AS association",
+        *_WHEN,
     )
 
 
 def extract_watches(events: DataFrame) -> DataFrame:
     """WatchEvent (preprocess.py:94-100)."""
-    return events.where(F.col("type") == "WatchEvent").select(
-        *_common(),
-        F.col("payload.action").alias("action"),
-        *_ts_date(),
+    return events.where("type = 'WatchEvent'").selectExpr(
+        *_WHO, "payload.action AS action", *_WHEN
     )
 
 
 def extract_forks(events: DataFrame) -> DataFrame:
     """ForkEvent (preprocess.py:103-108)."""
-    return events.where(F.col("type") == "ForkEvent").select(*_common(), *_ts_date())
+    return events.where("type = 'ForkEvent'").selectExpr(*_WHO, *_WHEN)
 
 
 EXTRACTORS = {

@@ -6,29 +6,28 @@ preprocess.py:178-190) and caps the window at now-1h so partially
 published hours are never ingested (T2 — a hand-rolled completeness
 watermark).
 
-Spark equivalent: ``agg(max(created_at))`` on the sink, read with the
-fixed one-column schema ``created_at TIMESTAMP`` that every GHA table
-carries, so no schema-inference job runs: 2 Spark jobs per call (the
-partial-max stage and the final result). On the plain Parquet lake this
-is still a FULL scan of the column: Spark's DSv1 parquet path does not
-answer ``max`` from footer statistics. A log-only answer needs
-add-action stats (``delta_log.high_water_mark``), which ROADMAP item 1
-moves the lake onto.
+Here the resume point runs no Spark job. Every GHA table is partitioned
+by ``date = to_date(created_at)``, so ``max(created_at)`` lies in the
+newest ``date=`` partition, and the driver reads that one column of that
+one partition with pyarrow. The footers cannot answer it: Spark writes
+timestamps as INT96, which carries no Parquet min/max statistics. The
+lake must be a driver-visible POSIX path, as ``io.delta_log`` assumes.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import re
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from ..io.sink import read_table
 
 EPOCH = dt.datetime(2024, 2, 29, tzinfo=dt.timezone.utc)  # reference default start
-#: the one column the resume point needs, present in every GHA table
-_HW_SCHEMA = "created_at TIMESTAMP"
 _HOUR = dt.timedelta(hours=1)
+#: a partition directory of a GHA table; anything else at the table root
+#: (``_temporary``, ``__HIVE_DEFAULT_PARTITION__``, staging dirs) holds
+#: no committed rows of a date
+_DATE_PART = re.compile(r"date=\d{4}-\d{2}-\d{2}")
 
 
 def _ceil_hour(t: dt.datetime) -> dt.datetime:
@@ -37,16 +36,36 @@ def _ceil_hour(t: dt.datetime) -> dt.datetime:
 
 
 def high_water_mark(spark: SparkSession, table_path: str) -> dt.datetime | None:
-    """max(created_at) of an ingested table (a full column scan)."""
+    """max(created_at) of an ingested table, read on the driver from the
+    newest ``date=`` partition that holds data files (no Spark job;
+    ``spark`` is unused). None only when ``table_path`` does not exist
+    or holds no rows; an unreadable data file raises, because treating
+    it as "no table" would re-ingest every hour since :data:`EPOCH`."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     try:
-        table = read_table(spark, table_path, schema=_HW_SCHEMA)
-        row = table.agg(F.max("created_at").alias("hw")).first()
-    except Exception:  # table does not exist yet → full backfill
+        names = os.listdir(table_path)
+    except FileNotFoundError:  # table does not exist yet → full backfill
         return None
-    if row is None or row["hw"] is None:
-        return None
-    hw = row["hw"]
-    return hw.replace(tzinfo=dt.timezone.utc) if hw.tzinfo is None else hw
+    for part in sorted(filter(_DATE_PART.fullmatch, names), reverse=True):
+        part_dir = os.path.join(table_path, part)
+        # Spark's own rule for data files: names starting "_" or "." are
+        # markers and checksums (_SUCCESS, .part-*.crc)
+        files = [
+            os.path.join(part_dir, f)
+            for f in os.listdir(part_dir)
+            if not f.startswith(("_", "."))
+        ]
+        if not files:
+            continue
+        col = pq.read_table(
+            files, columns=["created_at"], coerce_int96_timestamp_unit="us"
+        )["created_at"]
+        hw = pc.max(col).as_py()
+        if hw is not None:  # stored as UTC instants, read back naive
+            return hw.replace(tzinfo=dt.timezone.utc)
+    return None
 
 
 def parse_start_stop(

@@ -217,8 +217,8 @@ _KW_COMMITS_SQL = f"""
 def gha_keyword_commits(spark, sf_dir):
     """The reference's FLAGSHIP "dask commits" query end-to-end from the
     raw NDJSON fixture (preprocess.py:209-230): raw lines → parse →
-    commits + watches extraction → popularity agg + HAVING → broadcast
-    join → bot filter, keyword substring, org-prefix exclusion. One
+    commits + watches extraction → popularity agg + HAVING → shuffled
+    hash join → bot filter, keyword substring, org-prefix exclusion. One
     driver hash covers the reference's entire raw→answer path; the
     fixture was designed for exactly these edges (bot author, dask/-org
     repo, leading-space keyword, unpopular repo — each must be
@@ -227,7 +227,8 @@ def gha_keyword_commits(spark, sf_dir):
     `flagship_popular_user_clicks` carries the same query SHAPE on the
     driver's fixture tables at volume; this entry pins the shape on the
     reference's own raw format. Scale shape: popularity aggregate is
-    combinable and broadcast; everything else is scan-side projection.
+    combinable and hash-joined, not broadcast (it grows with the watch
+    table); everything else is scan-side projection.
     """
     raw = _raw(spark)
     from ..gha.queries import keyword_commits

@@ -390,9 +390,9 @@ def test_hour_refresh_jobs_follow_the_caller_job_group(spark, tmp_path):
     the analytics) under the caller's job group: the writes submitted
     from ingest_raw's and run_analytics' driver threads are counted in
     the group, and no call runs a schema-inference or cache-filling job
-    (ingest: six writes; high-water mark: the partial and final max;
-    analytics: two keyword writes, each with its watch aggregation and
-    broadcast)."""
+    (ingest: six writes; high-water mark: none, it reads the newest
+    partition on the driver; analytics: per keyword query the watch
+    aggregation's and the hit scan's shuffle, then the join-and-write)."""
     from etl_github_spark.gha.incremental import high_water_mark
     from etl_github_spark.gha.queries import run_analytics
 
@@ -406,7 +406,7 @@ def test_hour_refresh_jobs_follow_the_caller_job_group(spark, tmp_path):
         ),
         "run_analytics": _group_jobs(sc, "hour-analytics", run_analytics, spark, lake, out),
     }
-    assert jobs == {"ingest_files": 6, "high_water_mark": 2, "run_analytics": 10}, jobs
+    assert jobs == {"ingest_files": 6, "high_water_mark": 0, "run_analytics": 6}, jobs
 
 
 def test_ingest_parses_each_raw_line_once(spark, tmp_path):
@@ -455,3 +455,100 @@ def test_bad_hour_appends_nothing(spark, tmp_path):
     with pytest.raises(Exception):
         ingest_files(spark, [good, str(bad)], str(lake))
     assert counts() == before
+
+
+def test_high_water_mark_reads_the_newest_date_partition(spark, tmp_path):
+    """The resume point equals Spark's max(created_at) on every table of
+    a lake that crosses midnight; entries that are not a ``date=`` day
+    are skipped; a missing table is None, an unreadable file raises."""
+    import pyarrow as pa
+    import pytest
+
+    from etl_github_spark.gha.incremental import high_water_mark
+
+    lake = tmp_path / "lake"
+    ingest_files(spark, write_fixture(tmp_path / "in"), str(lake))
+    dates = {p.name for p in (lake / "commit").iterdir() if p.is_dir()}
+    assert dates == {"date=2024-02-29", "date=2024-03-01"}
+    for t, schema in TABLE_SCHEMAS.items():
+        table = read_table(spark, str(lake / t), schema=schema)
+        want = table.agg(F.max("created_at")).first()[0].replace(tzinfo=dt.timezone.utc)
+        assert high_water_mark(spark, str(lake / t)) == want, t
+
+    comment = lake / "comment"
+    hw = high_water_mark(spark, str(comment))
+    junk = ("_temporary", ".stage-1", "date=__HIVE_DEFAULT_PARTITION__", "date=2099-01-01.x", "x")
+    for entry in junk:
+        (comment / entry).mkdir()
+        (comment / entry / "part-00000.parquet").write_bytes(b"not parquet")
+    assert high_water_mark(spark, str(comment)) == hw
+
+    assert high_water_mark(spark, str(tmp_path / "no-such-table")) is None
+
+    newest = max(p for p in comment.glob("date=2024-*"))
+    next(newest.glob("part-*.parquet")).write_bytes(b"not parquet")
+    with pytest.raises(pa.ArrowInvalid):
+        high_water_mark(spark, str(comment))
+
+
+def test_keyword_queries_shuffle_hash_join_and_sort_each_file(spark, tmp_path):
+    """Both keyword frames join the popular repos without a broadcast and
+    sort without a range-partitioning exchange; every file run_analytics
+    writes is sorted by ``count`` descending."""
+    import contextlib
+    import io
+    import json
+
+    import pyarrow.parquet as pq
+
+    from etl_github_spark.gha.queries import run_analytics
+
+    from .gha_fixture import _ev
+
+    ts = "2024-03-01T05:00:00+00:00"
+    events = []
+    for i in range(12):
+        repo = f"org/r{i:02d}"
+        events += [
+            _ev("WatchEvent", ts, f"w{j}", repo, {"action": "started"}) for j in range(5 + i)
+        ]
+        events += [
+            _ev("PushEvent", ts, f"u{j}", repo, {"commits": [{"sha": "s", "message": "try dask"}]})
+            for j in range(3)
+        ]
+        events += [
+            _ev("IssueCommentEvent", ts, f"u{j}", repo, {"comment": {"body": "a dask issue"}})
+            for j in range(2)
+        ]
+    src = tmp_path / "in" / "2024-03-01-5.json"
+    src.parent.mkdir()
+    src.write_text("".join(json.dumps(e) + "\n" for e in events))
+    lake, out = str(tmp_path / "lake"), str(tmp_path / "out")
+    ingest_files(spark, [str(src)], lake)
+
+    watch = read_table(spark, f"{lake}/watch", schema=TABLE_SCHEMAS["watch"])
+    frames = {
+        "commits": keyword_commits(
+            read_table(spark, f"{lake}/commit", schema=TABLE_SCHEMAS["commit"]), watch
+        ),
+        "comments": keyword_comments(
+            read_table(spark, f"{lake}/comment", schema=TABLE_SCHEMAS["comment"]), watch
+        ),
+    }
+    for name, df in frames.items():
+        df.collect()  # the explain below then shows the executed (final) plan
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        assert "isFinalPlan=true" in plan, name
+        assert "ShuffledHashJoin" in plan, name
+        assert "RangePartitioning" not in plan and "BroadcastExchange" not in plan, name
+
+    run_analytics(spark, lake, out)
+    # org/r00 has 5 watches, not more than 5: 11 popular repos
+    for name, n_rows in (("commits", 3 * 11), ("comments", 2 * 11)):
+        files = sorted((tmp_path / "out" / "dask" / name).glob("part-*.parquet"))
+        counts = [pq.read_table(f)["count"].to_pylist() for f in files]
+        assert sum(map(len, counts)) == n_rows, name
+        assert all(c == sorted(c, reverse=True) for c in counts), name
