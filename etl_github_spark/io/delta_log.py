@@ -76,6 +76,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 _LOG_DIR = "_delta_log"
 
@@ -955,7 +957,7 @@ def _scan(spark, table: str, meta: dict, entries, rowmeta: bool = False) -> Data
             .select(*keep)
         )
     if not parts:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out = functools.reduce(DataFrame.unionByName, parts)
     if mapped:  # physical file names → the snapshot's logical names
         out = out.select(
@@ -2075,7 +2077,7 @@ def _rewrite_bins(spark, table: str, meta: dict, bins) -> list[dict]:
     forward, each file in its inputs' dir); a bin whose every row was
     deleted writes nothing and has none. The file → bin map arrives as
     one JSON parameter the optimizer folds, so building it runs no
-    Spark job: 0.3 s less per call than a createDataFrame of the list
+    Spark job: 0.3 s less per call than a frame parallelized from the list
     (8-bin table, sf0.1, 4 cores)."""
     from pyspark.sql import functions as F
 
@@ -2351,8 +2353,8 @@ def delta_changes(
         )
         out = part if out is None else out.unionByName(part)
     if out is None:
-        return spark.createDataFrame(
-            [], schema.add("_commit_version", "long")
+        return local_frame(
+            spark, [], schema.add("_commit_version", "long")
         )
     return out
 

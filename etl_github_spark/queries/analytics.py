@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import T, fxp, par
 from .registry import query
 
@@ -1049,8 +1050,8 @@ def analytics_concurrent_sessions(spark, sf_dir):
     for b in sorted(bsums):
         off[b] = acc
         acc += bsums[b]
-    offsets = points.sparkSession.createDataFrame(
-        list(off.items()), "bucket date, offset long"
+    offsets = local_frame(
+        points.sparkSession, list(off.items()), "bucket date, offset long"
     )
     w = (
         Window.partitionBy("bucket")
@@ -3103,8 +3104,8 @@ def analytics_shapley_attribution(spark, sf_dir):
         .groupBy("s")
         .agg(F.coalesce(F.sum("conv_n"), F.lit(0)).cast("long").alias("v"))
     )
-    ch = spark.createDataFrame(
-        [("view", 1), ("click", 2), ("signup", 4)], "channel string, bit int"
+    ch = local_frame(
+        spark, [("view", 1), ("click", 2), ("signup", 4)], "channel string, bit int"
     )
     w = F.expr(
         "CASE (s & 1) + ((s >> 1) & 1) + ((s >> 2) & 1) "

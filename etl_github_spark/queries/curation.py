@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..session import local_frame
 from ._util import T, par
 from .registry import query
 
@@ -747,7 +748,7 @@ def curate_mix_temperature(spark, sf_dir):
         (src, int(math.floor(budget * math.sqrt(float(n)) / s)))
         for src, n in cnt.items()
     ]
-    tgt_df = d.sparkSession.createDataFrame(tgt, "source string, target long")
+    tgt_df = local_frame(d.sparkSession, tgt, "source string, target long")
     w = Window.partitionBy("source").orderBy(F.md5("text"), "doc_id")
     return (
         d.select("doc_id", "source", "text")

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
 from ._util import T, par
 from .registry import query
 
@@ -1942,8 +1943,8 @@ def dedup_lsh_store_pairs(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "doc_a long, doc_b long, est_jaccard double"
+    return local_frame(
+        spark, rows, "doc_a long, doc_b long, est_jaccard double"
     )
 
 
@@ -1984,8 +1985,8 @@ def dedup_lsh_store_upsert(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "doc_a long, doc_b long, est_jaccard double"
+    return local_frame(
+        spark, rows, "doc_a long, doc_b long, est_jaccard double"
     )
 
 
@@ -2030,8 +2031,8 @@ def dedup_lsh_store_compact(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "doc_a long, doc_b long, est_jaccard double"
+    return local_frame(
+        spark, rows, "doc_a long, doc_b long, est_jaccard double"
     )
 
 
@@ -2101,7 +2102,7 @@ def dedup_lsh_store_judge(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id long, max_agree long, kept boolean")
+    return local_frame(spark, rows, "doc_id long, max_agree long, kept boolean")
 
 
 def _md5_lsh_delta_sql() -> str:
@@ -2161,6 +2162,6 @@ def dedup_lsh_store_delta(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "doc_a long, doc_b long, est_jaccard double"
+    return local_frame(
+        spark, rows, "doc_a long, doc_b long, est_jaccard double"
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import T, par
 from .registry import query
 
@@ -167,6 +168,6 @@ def pipeline_index_freshness(spark, sf_dir):
     finally:
         shutil.rmtree(lsh_path, ignore_errors=True)
         shutil.rmtree(ann_path, ignore_errors=True)
-    return spark.createDataFrame(
-        lsh_rows + ann_rows, "stage string, id long, score double, flag boolean"
+    return local_frame(
+        spark, lsh_rows + ann_rows, "stage string, id long, score double, flag boolean"
     )

@@ -46,6 +46,7 @@ from ..gha.extract import (
     extract_watches,
     parse_raw_lines,
 )
+from ..session import local_frame
 from .registry import query
 
 #: the checked-in raw fixture — the single source both engines read.
@@ -354,4 +355,4 @@ def gha_ingest_roundtrip(spark, sf_dir):
             rows.append((t, df.count()))
     finally:
         shutil.rmtree(out, ignore_errors=True)
-    return spark.createDataFrame(rows, "tbl string, n_rows long")
+    return local_frame(spark, rows, "tbl string, n_rows long")

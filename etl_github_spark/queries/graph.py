@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import rebase, release
+from ..session import local_frame, rebase, release
 from ._util import T, loop_frame
 from .registry import query
 
@@ -596,7 +596,7 @@ def graph_bfs_shortest_paths(spark, sf_dir, max_hops: int = 4):
     edges = und.unionAll(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=False)
-    visited = und.sparkSession.createDataFrame([("C1", 0)], "node string, dist int")
+    visited = local_frame(und.sparkSession, [("C1", 0)], "node string, dist int")
     frontier = visited
     spent = [und, edges]
     for h in range(1, max_hops + 1):

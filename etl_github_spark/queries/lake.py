@@ -20,6 +20,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import T, fxp
 from .registry import query
 
@@ -62,7 +63,7 @@ def lake_versioned_timetravel(spark, sf_dir):
         rows = [(v + 1, read_delta(spark, path, version=v).count()) for v in (0, 1)]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "version int, n_rows long")
+    return local_frame(spark, rows, "version int, n_rows long")
 
 
 @query(
@@ -107,7 +108,7 @@ def lake_matview_refresh(spark, sf_dir):
     rows = [(r2["event_type"], r2["cnt"], r2["sum_cents"]) for r2 in out.collect()]
     shutil.rmtree(table, ignore_errors=True)
     shutil.rmtree(view, ignore_errors=True)
-    return spark.createDataFrame(rows, "event_type string, cnt long, sum_cents long")
+    return local_frame(spark, rows, "event_type string, cnt long, sum_cents long")
 
 
 @query(
@@ -162,7 +163,7 @@ def lake_merge_upsert(spark, sf_dir):
     )
     rows = [(r["event_type"], r["n_rows"], r["sum_cents"]) for r in out.collect()]
     shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "event_type string, n_rows long, sum_cents long")
+    return local_frame(spark, rows, "event_type string, n_rows long, sum_cents long")
 
 
 @query(
@@ -229,8 +230,8 @@ def lake_schema_evolution(spark, sf_dir):
         for r in out.collect()
     ]
     shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_rows long, n_with_cents long, sum_cents long"
+    return local_frame(
+        spark, rows, "event_type string, n_rows long, n_with_cents long, sum_cents long"
     )
 
 
@@ -293,7 +294,7 @@ def lake_scd2_history(spark, sf_dir):
     )
     rows = [(r["segment"], r["is_current"], r["n_rows"]) for r in out.collect()]
     shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "segment string, is_current int, n_rows long")
+    return local_frame(spark, rows, "segment string, is_current int, n_rows long")
 
 
 @query(
@@ -346,8 +347,8 @@ def lake_write_observed(spark, sf_dir):
     def _i(v):
         return None if v is None else int(v)
 
-    return spark.createDataFrame(
-        [(int(m["n_rows"]), _i(m["sum_cents"]), _i(m["max_event_id"]))],
+    return local_frame(
+        spark, [(int(m["n_rows"]), _i(m["sum_cents"]), _i(m["max_event_id"]))],
         "n_rows long, sum_cents long, max_event_id long",
     )
 
@@ -422,8 +423,8 @@ def lake_cdc_apply(spark, sf_dir):
             (F.col("cents") + 100).alias("cents"),
         ))
         dels = batch("D", 3, c.where(F.col("k") % 7 == 0))
-        absent = batch("D", 3, spark.createDataFrame(
-            [(-1, None, None), (-2, None, None)], "k long, segment string, cents long"
+        absent = batch("D", 3, local_frame(
+            spark, [(-1, None, None), (-2, None, None)], "k long, segment string, cents long"
         ))
         change = upd1.unionByName(upd2).unionByName(dels).unionByName(absent)
         apply_cdc_batch(change, path, ("k",), "segment")
@@ -439,7 +440,7 @@ def lake_cdc_apply(spark, sf_dir):
         rows = [(r["segment"], r["n_rows"], r["sum_cents"]) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "segment string, n_rows long, sum_cents long")
+    return local_frame(spark, rows, "segment string, n_rows long, sum_cents long")
 
 
 @query(
@@ -507,8 +508,8 @@ def lake_compact_roundtrip(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "date date, n_rows long, n_users long, sum_event_id long"
+    return local_frame(
+        spark, rows, "date date, n_rows long, n_users long, sum_event_id long"
     )
 
 
@@ -569,8 +570,8 @@ def join_bucketed_colocated(spark, sf_dir):
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n_lines long, revenue_cents long"
+    return local_frame(
+        spark, rows, "o_orderstatus string, n_lines long, revenue_cents long"
     )
 
 
@@ -641,8 +642,8 @@ def lake_delta_log_scan(spark, sf_dir):
             rows.append((v, agg["n"], agg["s"], int(hwm)))
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "version int, n_rows long, sum_event_id long, hwm_event_id long"
+    return local_frame(
+        spark, rows, "version int, n_rows long, sum_event_id long, hwm_event_id long"
     )
 
 
@@ -717,7 +718,7 @@ def lake_delta_partitioned(spark, sf_dir):
             rows.append((day, agg["n"], agg["s"]))
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "day string, n_rows long, sum_event_id long")
+    return local_frame(spark, rows, "day string, n_rows long, sum_event_id long")
 
 
 @query(
@@ -780,8 +781,8 @@ def lake_delta_checkpoint(spark, sf_dir):
             rows.append((v, agg["n"], agg["s"]))
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "version int, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "version int, n_rows long, sum_event_id long"
     )
 
 
@@ -863,8 +864,8 @@ def lake_delta_stats_skip(spark, sf_dir):
         rows = [(len(kept) + len(pruned), len(pruned), agg["n"], agg["s"])]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "n_files_total int, n_files_pruned int, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "n_files_total int, n_files_pruned int, n_rows long, sum_event_id long"
     )
 
 
@@ -922,7 +923,7 @@ def lake_delta_evolution(spark, sf_dir):
         rows.append((1, agg["n"], agg["t"]))
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "version int, n_rows long, n_typed long")
+    return local_frame(spark, rows, "version int, n_rows long, n_typed long")
 
 
 @query(
@@ -1011,8 +1012,8 @@ def lake_delta_optimize(spark, sf_dir):
             rows.append((d, before[d], after, agg["n"], agg["s"]))
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "day string, n_files_before int, n_files_after int, "
         "n_rows long, sum_event_id long",
     )
@@ -1078,8 +1079,8 @@ def lake_delta_change_feed(spark, sf_dir):
         rows = [tuple(r) for r in feed.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "commit_version int, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "commit_version int, n_rows long, sum_event_id long"
     )
 
 
@@ -1199,8 +1200,8 @@ def lake_delta_zorder_skip(spark, sf_dir):
         rows = [(8, len(kept), agg["n"], agg["s"])]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "n_files int, n_files_kept int, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "n_files int, n_files_kept int, n_rows long, sum_event_id long"
     )
 
 
@@ -1257,8 +1258,8 @@ def lake_matview_delta_feed(spark, sf_dir):
     finally:
         shutil.rmtree(table, ignore_errors=True)
         shutil.rmtree(view, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, cnt long, sum_cents long"
+    return local_frame(
+        spark, rows, "event_type string, cnt long, sum_cents long"
     )
 
 
@@ -1332,8 +1333,8 @@ def lake_delta_delete_dv(spark, sf_dir):
             rows.extend((label, r["event_type"], r["n"], r["s"]) for r in snap.collect())
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "snapshot string, event_type string, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "snapshot string, event_type string, n_rows long, sum_event_id long"
     )
 
 
@@ -1445,8 +1446,8 @@ def lake_delta_merge(spark, sf_dir):
             )
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "snapshot string, event_type string, n_rows long, sum_cents long"
+    return local_frame(
+        spark, rows, "snapshot string, event_type string, n_rows long, sum_cents long"
     )
 
 
@@ -1513,8 +1514,8 @@ def lake_delta_restore(spark, sf_dir):
             )
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "snapshot string, event_type string, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "snapshot string, event_type string, n_rows long, sum_event_id long"
     )
 
 
@@ -1605,8 +1606,8 @@ def lake_delta_clone(spark, sf_dir):
             )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "snapshot string, event_type string, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "snapshot string, event_type string, n_rows long, sum_event_id long"
     )
 
 
@@ -1703,8 +1704,8 @@ def lake_delta_constraints(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_rows long, sum_cents long"
+    return local_frame(
+        spark, rows, "event_type string, n_rows long, sum_cents long"
     )
 
 
@@ -1802,8 +1803,8 @@ def lake_delta_column_mapping(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_rows long, sum_cents long"
+    return local_frame(
+        spark, rows, "event_type string, n_rows long, sum_cents long"
     )
 
 
@@ -1902,8 +1903,8 @@ def lake_delta_generated(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_rows long, sum_cents long"
+    return local_frame(
+        spark, rows, "event_type string, n_rows long, sum_cents long"
     )
 
 
@@ -1971,8 +1972,8 @@ def lake_delta_commit_history(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "version int, operation string, n_files_added long, "
         "n_files_removed long, n_rows long",
     )
@@ -2051,8 +2052,8 @@ def lake_delta_snapshot_diff(spark, sf_dir):
             rows += [(lbl, r[0], r[1], r[2]) for r in d.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "diff string, change_op string, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "diff string, change_op string, n_rows long, sum_event_id long"
     )
 
 
@@ -2146,6 +2147,6 @@ def lake_delta_append_only(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "phase string, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "phase string, n_rows long, sum_event_id long"
     )

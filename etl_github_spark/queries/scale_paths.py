@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import T, fxp, par
 from .registry import query
 
@@ -584,7 +585,7 @@ def _probe_cell_store(spark, write_fn, probe, q_vec, prefix: str):
         rows = [(r["vec_id"], r["cos_sim"]) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "vec_id long, cos_sim double")
+    return local_frame(spark, rows, "vec_id long, cos_sim double")
 
 
 @query("sim_ivf_store_probe", sql=_ivf_topk_sql(), tags=("similarity", "topk", "ivf", "storage"))
@@ -1132,8 +1133,8 @@ def sim_silhouette_kmeans(spark, sf_dir, k: int = 8):
     emb = par(T(spark, sf_dir, "embeddings"))
     centroids = lloyd_fit(emb, k=k, iters=3)
 
-    cents = spark.createDataFrame(
-        [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
+    cents = local_frame(
+        spark, [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
         "cell int, c array<double>",
     )
     e = emb.select(
@@ -1968,8 +1969,8 @@ def curate_kcenter_diversity(spark, sf_dir, k: int = 8):
             )
     finally:
         cached.unpersist()
-    return spark.createDataFrame(
-        [(r, vid) for r, vid, _ in sel], "sel_round int, vec_id long"
+    return local_frame(
+        spark, [(r, vid) for r, vid, _ in sel], "sel_round int, vec_id long"
     ).orderBy("sel_round")
 
 
@@ -2839,7 +2840,7 @@ def sim_ivfpq_store_probe(spark, sf_dir, k: int = 8, nprobe: int = 3,
         rows = [(r["vec_id"], r["approx_d2"]) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "vec_id long, approx_d2 double")
+    return local_frame(spark, rows, "vec_id long, approx_d2 double")
 
 
 def _ivfpq_base_fit(spark, sf_dir, k, m, ksub):
@@ -2905,7 +2906,7 @@ def sim_ivfpq_store_upsert(spark, sf_dir, k: int = 8, nprobe: int = 3,
         rows = [(r["vec_id"], r["approx_d2"]) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "vec_id long, approx_d2 double")
+    return local_frame(spark, rows, "vec_id long, approx_d2 double")
 
 
 @query(
@@ -2952,7 +2953,7 @@ def sim_ivfpq_store_compact(spark, sf_dir, k: int = 8, nprobe: int = 3,
         rows = [(r["vec_id"], r["approx_d2"]) for r in out.collect()]
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(rows, "vec_id long, approx_d2 double")
+    return local_frame(spark, rows, "vec_id long, approx_d2 double")
 
 
 _CELL_BUDGET = 64  # target vectors per quantizer cell (auto-k fit)

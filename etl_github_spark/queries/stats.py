@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import T, davg, davg_sql, par
 from .registry import query
 
@@ -1068,7 +1069,7 @@ def stat_embedding_pca_power(spark, sf_dir):
         md = max(max(abs(x) for x in w) // _PCA_S, 1)
         v = [tdiv(x, md) for x in w]
     out = [(j + 1, v[j], md) for j in range(dim)]
-    return spark.createDataFrame(out, "dim_idx int, v_q6 long, eig_scaled long")
+    return local_frame(spark, out, "dim_idx int, v_q6 long, eig_scaled long")
 
 
 @query(

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..session import drop_clone_listener, stream_session
+from ..session import drop_clone_listener, local_frame, stream_session
 from ._util import T
 from .registry import query
 
@@ -66,7 +66,7 @@ def stream_hourly_counts_replay(spark, sf_dir):
         F.col("cnt").alias("n"),
     )
     rows = [tuple(r) for r in _replay(agg, "stream_hourly_replay")]
-    return spark.createDataFrame(rows, "hour_start timestamp, event_type string, n long")
+    return local_frame(spark, rows, "hour_start timestamp, event_type string, n long")
 
 
 def _replay(agg_df, sink: str, mode: str = "complete"):
@@ -177,8 +177,8 @@ def stream_sessionize_replay(spark, sf_dir):
         .select("user_id", "session_start", "session_end", "n_events")
     )
     rows = [tuple(r) for r in _replay(agg, "stream_sessionize")]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "user_id long, session_start timestamp, session_end timestamp, n_events long",
     )
 
@@ -218,7 +218,7 @@ def stream_dedup_replay(spark, sf_dir):
     )
     agg = ded.groupBy("event_type").agg(F.count("*").cast("long").alias("n_user_days"))
     rows = [tuple(r) for r in _replay(agg, "stream_dedup")]
-    return spark.createDataFrame(rows, "event_type string, n_user_days long")
+    return local_frame(spark, rows, "event_type string, n_user_days long")
 
 
 @query(
@@ -273,7 +273,7 @@ def stream_corpus_dedup_replay(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("n_new"))
     )
     rows = [tuple(r) for r in _replay(agg, "stream_corpus_dedup")]
-    return spark.createDataFrame(rows, "bucket string, n_new long")
+    return local_frame(spark, rows, "bucket string, n_new long")
 
 
 @query(
@@ -362,8 +362,8 @@ def stream_heavy_hitters_replay(spark, sf_dir):
     for shard, _, _, n_shard in rows:
         latest_n[shard] = max(latest_n[shard], n_shard)
     final = [r for r in rows if r[3] == latest_n[r[0]]]
-    return spark.createDataFrame(
-        final, "shard int, tok string, lower_bound long, n_shard long"
+    return local_frame(
+        spark, final, "shard int, tok string, lower_bound long, n_shard long"
     )
 
 
@@ -549,8 +549,8 @@ def stream_attribution_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "purchase_id long, user_id long, attributed_event_id long, "
         "attributed_type string, gap_us long",
     )
@@ -628,8 +628,8 @@ def stream_spike_gate_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, batch_count long, ewma double, is_spike boolean"
+    return local_frame(
+        spark, rows, "event_type string, batch_count long, ewma double, is_spike boolean"
     )
 
 
@@ -715,8 +715,8 @@ def stream_interval_join_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "purchase_id long, click_id long, gap_us long"
+    return local_frame(
+        spark, rows, "purchase_id long, click_id long, gap_us long"
     )
 
 
@@ -813,8 +813,8 @@ def stream_outer_join_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "purchase_id long, click_id long, gap_us long"
+    return local_frame(
+        spark, rows, "purchase_id long, click_id long, gap_us long"
     )
 
 
@@ -897,8 +897,8 @@ def stream_delta_sink_exactly_once(spark, sf_dir):
         rows = [tuple(r) for r in out.collect()]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_rows long, sum_event_id long"
+    return local_frame(
+        spark, rows, "event_type string, n_rows long, sum_event_id long"
     )
 
 
@@ -992,8 +992,8 @@ def stream_delta_source_replay(spark, sf_dir):
             dest = os.path.join(stream_dir, name)
             os.link(os.path.join(table, name), dest)
             os.utime(dest, (now + 30 * v,) * 2)
-        vmap = rs.createDataFrame(
-            list(file_version.items()), "fname string, commit_version long"
+        vmap = local_frame(
+            rs, list(file_version.items()), "fname string, commit_version long"
         )
         src = (
             rs.readStream.schema("event_id long, event_type string")
@@ -1019,8 +1019,8 @@ def stream_delta_source_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "commit_version long, event_type string, n_rows long, sum_event_id long",
     )
 
@@ -1152,8 +1152,8 @@ def stream_scd2_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "user_id long, tier string, valid_from long, valid_to long, "
         "is_current int",
     )
@@ -1230,8 +1230,8 @@ def stream_late_data_audit(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "hour_start timestamp, event_type string, n long"
+    return local_frame(
+        spark, rows, "hour_start timestamp, event_type string, n long"
     )
 
 
@@ -1313,8 +1313,8 @@ def stream_session_append_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "user_id long, session_start timestamp, session_end timestamp, n_events long",
     )
 
@@ -1395,7 +1395,7 @@ def stream_neardup_replay(spark, sf_dir):
     corpus_sigs = rows.where(F.col("band") == 0).select("doc_id", "sig")
     out = stream_neardup_against_corpus(stream, corpus_bands, corpus_sigs)
     rows = [tuple(r) for r in _replay(out, "stream_neardup")]
-    return spark.createDataFrame(rows, "doc_id long, max_agree long, kept boolean")
+    return local_frame(spark, rows, "doc_id long, max_agree long, kept boolean")
 
 
 #: synthetic event-time base for the documents stream (2024-01-01 UTC)
@@ -1541,6 +1541,6 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "doc_id long, window_start timestamp, max_agree long, kept boolean"
+    return local_frame(
+        spark, rows, "doc_id long, window_start timestamp, max_agree long, kept boolean"
     )

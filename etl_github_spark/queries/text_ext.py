@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import T, par
 from .registry import query
 
@@ -712,8 +713,8 @@ def text_bpe_train_merges(spark, sf_dir):
     knob: rounds are sequential by definition, each O(vocab).
     """
     steps, _seq = _bpe_train(spark, sf_dir, _BPE_TRAIN_K)
-    return spark.createDataFrame(
-        steps, "step int, left_sym string, right_sym string, pair_count long"
+    return local_frame(
+        spark, steps, "step int, left_sym string, right_sym string, pair_count long"
     )
 
 

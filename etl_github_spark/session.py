@@ -11,13 +11,18 @@ This module is also the one door to Spark internals: :func:`rebase`,
 uses of private Spark APIs (py4j handles and JVM reflection), so a
 Spark upgrade that moves one breaks here and in its test, not silently
 inside a loop query (``tests/test_new_invariants.py`` fails on a
-private handle anywhere else in the package).
+private handle anywhere else in the package). Driver-built frames go
+through :func:`local_frame` only, and run as ``python -m``, the module
+is the PySpark daemon that sessions built from :data:`BUILDER_CONF`
+fork their Python workers from (see :func:`keep_unchanged_archives`).
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import threading
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -53,6 +58,13 @@ BUILDER_CONF = {
     "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # Python workers fork from this module's daemon (`__main__` below),
+    # which stops every task from re-reading pyspark.zip's directory.
+    # The checkout root on the workers' path makes the module importable
+    # whatever the JVM's working directory is; Spark merges it with the
+    # pyspark zips.
+    "spark.python.daemon.module": "etl_github_spark.session",
+    "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parents[1]),
 }
 
 
@@ -155,3 +167,70 @@ def get_spark(app_name: str = "etl-github-spark", master: str | None = None) -> 
     for k, v in {**BUILDER_CONF, **RUNTIME_CONF}.items():
         b = b.config(k, v)
     return tune(b.getOrCreate())
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame of the driver-built ``rows`` (``schema`` a ``StructType``
+    or DDL string), equal to ``createDataFrame(rows, schema)`` of a list.
+    Built as an Arrow table, it becomes a ``LocalRelation`` (below
+    ``spark.sql.execution.arrow.localRelationThreshold``) that collects on
+    the driver with no Spark job, where a parallelized list needs a
+    4-task job. The rows go through ``schema.toInternal``, the conversion
+    the list path makes, so timestamps and dates become the same epoch
+    microseconds and days on any session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    rows = [schema.toInternal(r) for r in rows]
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
+
+
+def keep_unchanged_archives() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed since this process last read
+    it, by its ``(st_mtime_ns, st_size, st_ino)``. PySpark's worker calls
+    ``importlib.invalidate_caches()`` at the start of every task; on
+    CPython before 3.13 that re-reads the whole directory of pyspark.zip
+    (about 1,300 entries) once per zipimporter, one per imported
+    subpackage: 16 reads, most of a short task's fixed cost. 3.13 made
+    the call lazy, so there this patches nothing. The directories already
+    imported from are read once here, so forked workers start with
+    nothing to re-read."""
+    import zipimport
+
+    if sys.version_info >= (3, 13):
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+    last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        seen = last_read.get(self.archive)
+        if seen is not None and seen[0] == key:
+            self._files = zipimport._zip_directory_cache[self.archive] = seen[1]
+            return
+        reread(self)
+        last_read[self.archive] = (key, self._files)
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches()
+
+
+if __name__ == "__main__":
+    # The PySpark daemon (`spark.python.daemon.module`): workers fork from
+    # it and inherit the patch.
+    keep_unchanged_archives()
+    from pyspark.daemon import manager
+
+    manager()

@@ -900,23 +900,30 @@ def test_stream_replays_do_not_grow_the_listener_bus(spark):
 
 def test_spark_internals_only_in_session_module():
     """Private Spark handles (py4j `_jvm`/`_jdf`/`_jsq`/`_jsc`/
-    `_jsparkSession`) and JVM reflection (`getDeclaredField`) appear in
-    `session.py` only, so a Spark upgrade that moves one breaks one
-    module and its tests, not a loop query somewhere else."""
+    `_jsparkSession`), JVM reflection (`getDeclaredField`), the Python
+    worker's import machinery (`zipimport`, `pyspark.daemon`) and frames
+    built from driver rows (`createDataFrame(`, which `local_frame`
+    wraps) appear in `session.py` only, so a Spark upgrade that moves
+    one breaks one module and its tests, not a loop query somewhere
+    else."""
     import ast
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "etl_github_spark"
     private = {"_jvm", "_jdf", "_jsq", "_jsc", "_jsparkSession", "getDeclaredField"}
+    texts = ("zipimport", "pyspark.daemon", "createDataFrame(")
     hits = []
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
         if rel == "session.py":
             continue
-        for n in ast.walk(ast.parse(path.read_text())):
+        src = path.read_text()
+        for n in ast.walk(ast.parse(src)):
             name = n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
             if name in private:
                 hits.append(f"{rel}:{n.lineno} {name}")
+        for lineno, line in enumerate(src.splitlines(), 1):
+            hits += [f"{rel}:{lineno} {t}" for t in texts if t in line]
     assert not hits, f"Spark internals outside session.py: {hits}"
 
 
