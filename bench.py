@@ -790,20 +790,6 @@ def main() -> None:
         print(f"BENCH ERROR lake_multi_append: {e}", file=sys.stderr)
         extended["lake_multi_append_commit"] = -1.0
 
-    # round 5 re-seated dedup_minhash_lsh on the oracle-replayable
-    # md5/affine family (~35% slower than xxhash64); time the unregistered
-    # production variant too so round-over-round headline deltas stay
-    # attributable to the family change vs the host.
-    try:
-        from etl_github_spark.queries.dedup import minhash_lsh_xxhash
-
-        extended["minhash_lsh_xxhash_production"] = min(
-            _time_fn(spark, minhash_lsh_xxhash, sf_dir)
-        )
-    except Exception as e:  # pragma: no cover
-        print(f"BENCH ERROR minhash_lsh_xxhash: {e}", file=sys.stderr)
-        extended["minhash_lsh_xxhash_production"] = -1.0
-
     # round 9: the amortized ANN number — store built once (untimed),
     # query path timed alone. Compare against sim_ivfpq_residual_topk
     # (which refits per call) to see the fit/query split.

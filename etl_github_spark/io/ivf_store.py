@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .delta_log import optimize_delta, read_delta, snapshot_files, write_delta
-from .lsh_store import _cluster_for_write
-from .sink import write_sidecar
+from .sink import cluster_for_write, write_sidecar
 
 
 def probe_cells(centroids, q_vec, nprobe: int) -> list[int]:
@@ -51,7 +50,7 @@ def _commit_codes(coded: DataFrame, path: str, mode: str) -> None:
     """One Delta commit of (vec_id, codes, cell) rows, partitioned by
     cell and clustered so each write lands one file per cell."""
     write_delta(
-        _cluster_for_write(coded.select("vec_id", "codes", "cell"), "cell", "vec_id"),
+        cluster_for_write(coded.select("vec_id", "codes", "cell"), ("cell",), "vec_id"),
         path,
         mode=mode,
         partition_by=("cell",),

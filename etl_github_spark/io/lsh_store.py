@@ -22,8 +22,8 @@ incremental ingest) from the store. This module is that storage half:
   single O(corpus) task.
 - ``_lsh_index.json`` — the family sidecar (n_hashes, band count, rows
   per band, family name, sig bucket count). The hash family itself is
-  the module-constant md5/affine chain (`queries.dedup._md5_band_rows`
-  — shared with the batch AND streaming paths), so unlike the IVF
+  the module-constant md5/affine chain of `etl_github_spark/minhash.py`
+  (shared with the batch AND streaming paths), so unlike the IVF
   store there is nothing to fit: the sidecar exists to REFUSE appends
   from a mismatched family/layout, the drift that would silently
   corrupt an index. Published by `io.sink.write_sidecar` (temp file +
@@ -58,58 +58,34 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import minhash as mh
 from .delta_log import optimize_delta, read_delta, snapshot_files, write_delta
-from .sink import write_sidecar
+from .sink import cluster_for_write, write_sidecar
 
 _SIG_BUCKETS = 16
 
 
-def _cluster_for_write(df: DataFrame, part_col: str, id_col: str = "doc_id") -> DataFrame:
-    """Single-column wrapper over :func:`io.sink.cluster_for_write`
-    (the shared salted keyed-repartition that makes output file count
-    track data volume instead of ``tasks × partition-values`` — see
-    that docstring). Measured here at sf0.1: 256 band + 508 sig files
-    per store build → 24, append 9.1 s → 2.5 s."""
-    from .sink import cluster_for_write
-
-    return cluster_for_write(df, (part_col,), id_col)
-
-
 def _family_meta() -> dict:
-    from ..queries.dedup import _BAND_SIZE, _N_HASHES
-
     return {
         "family": "md5-affine",
-        "n_hashes": _N_HASHES,
-        "band_size": _BAND_SIZE,
-        "n_bands": _N_HASHES // _BAND_SIZE,
+        "n_hashes": mh.N_HASHES,
+        "band_size": mh.BAND_SIZE,
+        "n_bands": mh.N_HASHES // mh.BAND_SIZE,
         "sig_buckets": _SIG_BUCKETS,
     }
 
 
-def _band_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(bands, sigs) frames for ``docs`` under the shared md5/affine
-    family — one banding pass, signatures split out so they are stored
-    once per doc instead of once per band row. ``sigs`` carries the
-    ``sbucket`` partition column for the bucketed sink."""
-    from ..queries.dedup import _md5_band_rows
-
-    rows = _md5_band_rows(docs, with_sig=True)
-    rows = rows.localCheckpoint(eager=False)  # bands + sigs sinks share one pass
-    bands = rows.select("doc_id", "band", "bucket")
-    sigs = rows.where(F.col("band") == 0).select(
-        "doc_id", "sig", F.pmod(F.hash("doc_id"), F.lit(_SIG_BUCKETS)).alias("sbucket")
-    )
-    return bands, sigs
-
-
 def _commit_bands(docs: DataFrame, path: str, mode: str) -> None:
-    """Band ``docs`` once and commit the rows to ``bands/`` and
-    ``sigs/``, each clustered so a write lands one file per partition."""
-    bands, sigs = _band_frames(docs)
+    """Band ``docs`` once (`minhash.split_bands`) and commit the rows to
+    ``bands/`` and ``sigs/`` (with its ``sbucket`` partition column),
+    each clustered by `io.sink.cluster_for_write` so a write lands one
+    file per partition (measured at sf0.1: 256 band + 508 sig files per
+    store build → 24, append 9.1 s → 2.5 s)."""
+    bands, sigs = mh.split_bands(docs)
+    sigs = sigs.withColumn("sbucket", F.pmod(F.hash("doc_id"), F.lit(_SIG_BUCKETS)))
     for name, frame, part in (("bands", bands, "band"), ("sigs", sigs, "sbucket")):
         write_delta(
-            _cluster_for_write(frame, part),
+            cluster_for_write(frame, (part,), "doc_id"),
             os.path.join(path, name),
             mode=mode,
             partition_by=(part,),
@@ -190,41 +166,8 @@ def store_neardup_pairs(spark: SparkSession, path: str) -> DataFrame:
     the integer compare). Exactly `dedup_minhash_lsh`'s output — the
     store is an execution strategy, not a semantics change, so the SAME
     oracle SQL hashes both."""
-    from ..queries.dedup import _N_HASHES
-
-    bands = read_delta(spark, os.path.join(path, "bands"))
-    sigs = _read_sigs(spark, path)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (agree.cast("double") / _N_HASHES).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= 0.5)
-    )
+    cand = mh.collisions(read_delta(spark, os.path.join(path, "bands"))).distinct()
+    return mh.est_pairs(cand, _read_sigs(spark, path))
 
 
 def store_judge_docs(spark: SparkSession, path: str, docs: DataFrame) -> DataFrame:
@@ -246,11 +189,8 @@ def store_judge_docs(spark: SparkSession, path: str, docs: DataFrame) -> DataFra
     collide. Collision-free batch docs re-enter via a left-outer join
     of the batch's own signature table against the per-doc maxima
     (agree = 0, kept = true)."""
-    from ..queries.dedup import _N_HASHES
-
     _check_family(path)
-    inc_bands, inc_sigs = _band_frames(docs)
-    inc_sigs = inc_sigs.select("doc_id", "sig")
+    inc_bands, inc_sigs = mh.split_bands(docs)
     store_bands = read_delta(spark, os.path.join(path, "bands")).select(
         F.col("doc_id").alias("c_doc"), "band", "bucket"
     )
@@ -262,29 +202,17 @@ def store_judge_docs(spark: SparkSession, path: str, docs: DataFrame) -> DataFra
     store_sigs = _read_sigs(spark, path).select(
         F.col("doc_id").alias("c_doc"), F.col("sig").alias("c_sig")
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig", "c_sig", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
     hits = (
         cand.join(store_sigs, "c_doc")
         .join(inc_sigs, "doc_id")
-        .select("doc_id", agree.alias("agree"))
+        .select("doc_id", mh.agreement("sig", "c_sig").alias("agree"))
         .groupBy("doc_id")
         .agg(F.max("agree").alias("agree"))
     )
     return (
         inc_sigs.select("doc_id")
         .join(hits, "doc_id", "left_outer")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("agree"), F.lit(0)).cast("long").alias("max_agree"),
-            (F.coalesce(F.col("agree"), F.lit(0)) * 2 < F.lit(_N_HASHES)).alias(
-                "kept"
-            ),
-        )
+        .select("doc_id", *mh.verdict(F.coalesce(F.col("agree"), F.lit(0))))
     )
 
 
@@ -306,11 +234,8 @@ def store_delta_pairs(spark: SparkSession, path: str, docs: DataFrame) -> DataFr
     so downstream consumers cannot tell delta rows from bootstrap
     rows. Assumes batch doc_ids are disjoint from the store's (the
     append contract)."""
-    from ..queries.dedup import _N_HASHES
-
     _check_family(path)
-    inc_bands, inc_sigs = _band_frames(docs)
-    inc_sigs = inc_sigs.select("doc_id", "sig")
+    inc_bands, inc_sigs = mh.split_bands(docs)
     store_bands = read_delta(spark, os.path.join(path, "bands")).select(
         F.col("doc_id").alias("s_doc"), "band", "bucket"
     )
@@ -321,31 +246,6 @@ def store_delta_pairs(spark: SparkSession, path: str, docs: DataFrame) -> DataFr
             F.greatest("doc_id", "s_doc").alias("doc_b"),
         )
     )
-    a, b = inc_bands.alias("a"), inc_bands.alias("b")
-    intra = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    cand = cross.unionByName(intra).distinct()
-    sigs = _read_sigs(spark, path).unionByName(inc_sigs)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (agree.cast("double") / _N_HASHES).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= 0.5)
-    )
+    cand = cross.unionByName(mh.collisions(inc_bands)).distinct()
+    return mh.est_pairs(cand, _read_sigs(spark, path).unionByName(inc_sigs))
 

@@ -105,3 +105,74 @@ def loop_frame(df: DataFrame, n_rows: int) -> DataFrame:
     spark = df.sparkSession
     return rebase(df, private_session(spark, loop_width(spark, n_rows)))
 
+
+_HAMMING_RADIUS = 3     # pigeonhole: d <= 3 with 4 bands => one band equal
+_HAMMING_BANDS = 4
+_HAMMING_BAND_BITS = 15  # 4 × 15 bits tile a 60-bit hash
+
+
+def hamming_pairs(frame: DataFrame, col: str) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair of ``frame``'s (doc_id,
+    ``col``) rows whose 60-bit hashes (SimHash, pHash) lie within Hamming
+    distance 3: 4 × 15-bit band rows per doc, a (band, bv) self-join
+    (pigeonhole: a pair within distance 3 shares at least one band
+    exactly), distinct
+    candidates, then the xor+popcount check. ``frame`` feeds all four
+    band selects — the caller checkpoints it."""
+    mask = (1 << _HAMMING_BAND_BITS) - 1
+    bands = None
+    for b in range(_HAMMING_BANDS):
+        part = frame.select(
+            "doc_id",
+            col,
+            F.lit(b).alias("band"),
+            F.shiftright(col, b * _HAMMING_BAND_BITS).bitwiseAND(F.lit(mask)).alias("bv"),
+        )
+        bands = part if bands is None else bands.unionByName(part)
+    a, b_ = bands.alias("a"), bands.alias("b")
+    cand = (
+        a.join(
+            b_,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bv") == F.col("b.bv"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col(f"a.{col}").alias("h_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col(f"b.{col}").alias("h_b"),
+        )
+        .distinct()
+    )
+    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("long")
+    return cand.select("doc_a", "doc_b", ham.alias("hamming")).where(
+        ham <= _HAMMING_RADIUS
+    )
+
+
+def hamming_pairs_sql(src: str, col: str) -> str:
+    """DuckDB twin of :func:`hamming_pairs` over the CTE ``src``'s
+    (doc_id, ``col``) rows: the ``bands`` and ``cand`` CTEs and the
+    verifying SELECT, to follow the caller's own CTEs."""
+    band_rows = "\n      UNION ALL ".join(
+        f"SELECT doc_id, {col}, {b} AS band,"
+        f" ({col} >> {b * _HAMMING_BAND_BITS}) & {(1 << _HAMMING_BAND_BITS) - 1} AS bv"
+        f" FROM {src}"
+        for b in range(_HAMMING_BANDS)
+    )
+    return f"""
+    bands AS (
+      {band_rows}
+    ),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, a.{col} AS h_a,
+                      b.doc_id AS doc_b, b.{col} AS h_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
+    )
+    SELECT doc_a, doc_b,
+           CAST(bit_count(xor(h_a, h_b)) AS BIGINT) AS hamming
+    FROM cand
+    WHERE bit_count(xor(h_a, h_b)) <= {_HAMMING_RADIUS}
+    """

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..minhash import words
 from ._util import T, davg, davg_sql, dsum, dsum_sql, fxp, fxp_sql, par
 from .registry import query
 
@@ -539,11 +540,9 @@ def agg_countmin_tokens(spark, sf_dir):
     count is int64 → bit-exact parity, and the top-20 probe set is
     deterministically tie-broken (count desc, token).
     """
-    from .analytics import _words  # the shared whitespace tokenizer
-
     tok = (
         par(T(spark, sf_dir, "documents"))
-        .select(F.explode(_words()).alias("token"))
+        .select(F.explode(words()).alias("token"))
     )
     cnt = (
         tok.groupBy("token")

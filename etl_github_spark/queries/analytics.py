@@ -17,13 +17,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..minhash import words
 from ..session import local_frame
 from ._util import T, fxp, par
 from .registry import query
-
-
-def _words():
-    return F.split(F.col("text"), " ")
 
 
 @query(
@@ -71,7 +68,7 @@ def text_collocations_lift(spark, sf_dir):
     w = F.col("_w")
     t = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("_w"))
+        .select("doc_id", words().alias("_w"))
         .where(F.size(w) >= 2)
     )
     uni = t.select(F.explode(w).alias("w")).groupBy("w").agg(F.count("*").alias("c"))
@@ -269,7 +266,7 @@ def text_zipf_table(spark, sf_dir):
     """
     ranked = (
         par(T(spark, sf_dir, "documents"))
-        .select(F.explode(_words()).alias("word"))
+        .select(F.explode(words()).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select(

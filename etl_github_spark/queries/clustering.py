@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import minhash as mh
 from ..session import rebase, release
 from ._util import T, loop_frame, par
 from .dedup import JACCARD_PAIRS_SQL, dedup_jaccard_pairs
@@ -284,10 +285,8 @@ def _fuzzy_corpus_sql() -> str:
     """Oracle for the end-to-end fuzzy-dedup capstone: md5-family LSH
     candidates -> exact Jaccard verification on candidates only ->
     recursive-CTE components -> min-id survivors."""
-    from .dedup import _md5_lsh_cte
-
     return f"""
-    WITH RECURSIVE {_md5_lsh_cte()},
+    WITH RECURSIVE {mh.lsh_cte()},
     ver AS (
       SELECT c.doc_a, c.doc_b
       FROM cand c
@@ -329,14 +328,12 @@ def dedup_fuzzy_corpus(spark, sf_dir):
     the driver hash pins candidate generation, verification, and
     clustering together.
     """
-    from .dedup import _md5_minhash_candidates, _shingle_strings, _words
-
     docs = par(T(spark, sf_dir, "documents"))
-    cand = _md5_minhash_candidates(docs)
+    cand = mh.candidates(docs)
     sh = (
-        docs.select("doc_id", _words().alias("w"))
+        docs.select("doc_id", mh.words().alias("w"))
         .where(F.size("w") >= 3)
-        .select("doc_id", _shingle_strings(F.col("w")).alias("sh"))
+        .select("doc_id", mh.shingle_strings(F.col("w")).alias("sh"))
         .select("doc_id", "sh", F.size("sh").alias("n_sh"))
         .localCheckpoint(eager=False)  # verification joins it twice
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..session import local_frame
+from .. import minhash as mh
 from ._util import T, par
 from .registry import query
 
@@ -173,11 +174,11 @@ def curate_decontaminate(spark, sf_dir):
     joins the strings; counts agree short of a 64-bit collision —
     same contract as dedup_jaccard_pairs).
     """
-    from .dedup import _hashed_shingles, _words
+    from .dedup import _hashed_shingles
 
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", mh.words().alias("w"))
         .where(F.size("w") >= 3)
         .select("doc_id", _hashed_shingles(F.col("w")).alias("hs"))
     )
@@ -531,34 +532,16 @@ def _bloom_affine():
     """Fixed (a_i, b_i) affine coefficients for the bloom positions —
     the same splitmix-derived md5 family the LSH recall pin uses, with
     its own seed so the two sketches are independent."""
-    from .dedup import _affine_coeffs
-
-    return _affine_coeffs(_BLOOM_K, seed=11)
+    return mh.affine_coeffs(_BLOOM_K, seed=11)
 
 
 def _bloom_sql() -> str:
-    from .dedup import _MERSENNE_P as p
-
-    m = _BLOOM_BITS
+    p, m = mh.MERSENNE_P, _BLOOM_BITS
     pos_list = ", ".join(
-        f"(({a} * x + {b}) % {p}) % {m}" for a, b in _bloom_affine()
+        f"(({a} * xm + {b}) % {p}) % {m}" for a, b in _bloom_affine()
     )
     return f"""
-    WITH tok AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-      FROM tok WHERE len(toks) >= 3
-    ),
-    ex AS (SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS s FROM sh),
-    xm AS (
-      SELECT doc_id, n_sh, s,
-             CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % {p} AS x
-      FROM ex
-    ),
+    WITH {mh.shingle_ids_cte()},
     flat AS (
       SELECT doc_id, n_sh, s, unnest([{pos_list}]) AS pos FROM xm
     ),
@@ -608,23 +591,14 @@ def curate_decontaminate_bloom(spark, sf_dir):
     1<<63, so words are 32-bit on both sides) and therefore matches
     hash-exactly, false positives included.
     """
-    from .dedup import _MERSENNE_P, _shingle_strings, _words
-
-    p = F.lit(_MERSENNE_P).cast("long")
+    p = F.lit(mh.MERSENNE_P).cast("long")
     coeffs = _bloom_affine()
 
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", mh.words().alias("w"))
         .where(F.size("w") >= 3)
-        .select(
-            "doc_id",
-            F.transform(
-                _shingle_strings(F.col("w")),
-                lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-                % p,
-            ).alias("xs"),
-        )
+        .select("doc_id", mh.shingle_ids(F.col("w")).alias("xs"))
     )
 
     def positions(x):
@@ -653,7 +627,7 @@ def curate_decontaminate_bloom(spark, sf_dir):
     # arithmetic is bit-free of float concerns, so oracle parity is
     # unaffected. No join, no shuffle: the filter words ride in the
     # task closure.
-    pp, mm = _MERSENNE_P, _BLOOM_BITS
+    pp, mm = mh.MERSENNE_P, _BLOOM_BITS
 
     def run(batches):
         import pandas as pd
@@ -906,8 +880,6 @@ def curate_split_leakage(spark, sf_dir):
     shuffle-balanced; the repo's MinHash family is the cheaper
     screen when exact n-gram evidence isn't required.
     """
-    from .dedup import _shingle_strings
-
     d = (
         par(T(spark, sf_dir, "documents"))
         .select(
@@ -926,7 +898,7 @@ def curate_split_leakage(spark, sf_dir):
         "doc_id",
         "lang",
         "split",
-        F.explode(_shingle_strings(F.col("w"), n=8)).alias("sh"),
+        F.explode(mh.shingle_strings(F.col("w"), n=8)).alias("sh"),
     )
     sh = sh.localCheckpoint(eager=False)
     train_sh = sh.where(F.col("split") == "train").select("sh").distinct()

@@ -2,24 +2,29 @@
 n-gram-Jaccard near-dup (exhaustive-recall), MinHash-LSH (scale path),
 SimHash, duplicated-span coverage/trim, SemDeDup-style semantic prune.
 
-Everything registered here is oracle-checked. The canonical
-`dedup_minhash_lsh` uses the md5/affine hash family so DuckDB can
-replay the whole banding pipeline; the xxhash64 production-speed
-variant lives in :func:`minhash_lsh_xxhash` (unregistered — DuckDB has
-no xxhash64, so it is driver-unverifiable by construction) and is
-pinned against the canonical family by pytest.
+Everything registered here is oracle-checked. The MinHash-LSH queries
+run on the md5/affine family of `etl_github_spark/minhash.py`, which
+states every step in Spark and in DuckDB, so the oracle replays the
+whole banding pipeline.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import minhash as mh
+from ..io.lsh_store import (
+    append_bands_store,
+    compact_bands_store,
+    store_delta_pairs,
+    store_judge_docs,
+    store_neardup_pairs,
+    write_bands_store,
+)
+from ..minhash import words
 from ..session import local_frame
-from ._util import T, par
+from ._util import T, hamming_pairs, hamming_pairs_sql, par
 from .registry import query
-
-def _words():
-    return F.split(F.col("text"), " ")
 
 
 # shingle document-frequency cap for candidate generation: shingles hotter
@@ -159,7 +164,7 @@ def dedup_jaccard_pairs(spark, sf_dir, df_cap: int = _DF_CAP):
     # CSE'd: element_at(split(text), i) would re-split per element).
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", words().alias("w"))
         .where(F.size("w") >= 3)
     )
     # join on xxhash64(shingle) longs, not shingle strings: ~3× smaller
@@ -241,320 +246,14 @@ def dedup_embedding_cosine(spark, sf_dir):
     )
 
 
-# --- MinHash-LSH near-dup: the scale path (rows-only check) ----------------
-
-_N_HASHES = 32
-_BAND_SIZE = 4  # 8 bands × 4 rows
+# --- MinHash-LSH near-dup: the scale path ----------------------------------
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
-    """doc_id → array<long> MinHash signature over trigram shingles.
-
-    Hash family h_i(s) = xxhash64(i, xxhash64(s)): shingle strings are
-    hashed once, then n_hashes cheap long re-hashes run inside array
-    ``transform``/``array_min`` — a pure per-row projection with NO
-    explode and NO shuffle (the earlier explode+groupBy formulation
-    shuffled |docs|×n_hashes rows; this shuffles nothing).
-    """
-    base = _hashed_shingles(F.col("w"))
-    sig = F.array(
-        *[
-            F.array_min(F.transform("hs", lambda h, i=i: F.xxhash64(F.lit(i), h)))
-            for i in range(n_hashes)
-        ]
-    )
-    return (
-        docs.select("doc_id", _words().alias("w"))  # tokenize once per row
-        .where(F.size("w") >= 3)
-        .select("doc_id", base.alias("hs"))
-        .select("doc_id", sig.alias("sig"))
-    )
-
-
-def minhash_lsh_xxhash(spark, sf_dir):
-    """PRODUCTION-VARIANT candidate near-dup pairs via banded
-    MinHash-LSH over the xxhash64 family (fastest JVM-side hash).
-
-    Bands of the signature are hashed to buckets; only docs sharing a
-    band bucket are paired (estimated Jaccard from signature agreement).
-    This bounds the self-join to bucket-local pairs — the standard
-    trade of exact recall for scalability (vs dedup_jaccard_pairs).
-
-    NOT a registry entry: DuckDB has no xxhash64, so this family is
-    driver-unverifiable by construction and would permanently burn a
-    rotation slot as a rows-only row. The registry-canonical
-    :func:`dedup_minhash_lsh` runs the identical banded-LSH algorithm
-    over the md5/affine family (bit-identical in both engines) and
-    carries the driver hash; this function is pinned by pytest
-    (`tests/test_new_invariants.py`) against that canonical twin.
-    """
-    return _xxhash_lsh_candidates(par(T(spark, sf_dir, "documents")))
-
-
-def _xxhash_lsh_candidates(docs: DataFrame) -> DataFrame:
-    """xxhash64-family banded-LSH over any (doc_id, text) frame —
-    the reusable body of :func:`minhash_lsh_xxhash`."""
-    sig = minhash_signatures(docs)
-    n_bands = _N_HASHES // _BAND_SIZE
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * _BAND_SIZE + r] for r in range(_BAND_SIZE)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    bands = bands.localCheckpoint(eager=False)  # signature subtree: compute once
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("a.sig", "b.sig", lambda x, y: (x == y).cast("int")),
-                        lambda v: v == 1,
-                    )
-                ).cast("double")
-                / _N_HASHES
-            ).alias("est_jaccard"),
-        )
-        .distinct()
-    )
-    return cand.where(F.col("est_jaccard") >= 0.5)
-
-
-# --- driver-visible LSH recall pin -----------------------------------------
-#
-# The production MinHash family above uses xxhash64, which DuckDB cannot
-# evaluate — hence the rows-only check. For a *driver-verified* recall
-# contract we run the same banded-LSH algorithm over an
-# oracle-expressible hash family:
-#
-#   shingle id  x  = first 60 bits of md5(shingle)   (both engines)
-#   h_i(x)         = (a_i * (x mod p) + b_i) mod p,  p = 2^31 - 1
-#
-# a_i/b_i are fixed splitmix-derived constants, so Spark and DuckDB
-# compute bit-identical signatures, bands, and candidate sets. The
-# recall query below joins the exact-Jaccard truth set against these
-# candidates, making the recall number itself (including any banding
-# misses) a hash-checked driver row rather than a claim.
-
-_MERSENNE_P = 2**31 - 1
-
-
-def _affine_coeffs(n: int = _N_HASHES, seed: int = 7) -> list[tuple[int, int]]:
-    """Deterministic (a_i, b_i) pairs via splitmix64 — shared literal
-    constants for the Spark and DuckDB sides."""
-    out = []
-    x = seed & (2**64 - 1)
-    for _ in range(n):
-        pair = []
-        for _ in range(2):
-            x = (x + 0x9E3779B97F4A7C15) & (2**64 - 1)
-            z = x
-            z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & (2**64 - 1)
-            z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & (2**64 - 1)
-            z ^= z >> 31
-            pair.append(z % _MERSENNE_P)
-        a, b = pair
-        out.append((a if a > 0 else 1, b))
-    return out
-
-
-_AFFINE = _affine_coeffs()
-
-
-def _shingle_strings(words_col, n: int = 3):
-    """Distinct word n-gram shingles as an array<string> column (same
-    zip-of-slices construction as :func:`_hashed_shingles`, but keeping
-    the string so md5 can be applied engine-portably)."""
-    m = F.size(words_col) - (n - 1)
-    z = F.arrays_zip(*[F.slice(words_col, 1 + k, m) for k in range(n)])
-    return F.array_distinct(
-        F.transform(z, lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)]))
-    )
-
-
-def _md5_band_rows(
-    docs: DataFrame,
-    with_sig: bool = False,
-    band_size: int = _BAND_SIZE,
-    carry: tuple = (),
-) -> DataFrame:
-    """(doc_id[, sig], band, bucket[, *carry]) banded-MinHash rows under
-    the md5 family — pure map-side column expressions (shingle → md5
-    60-bit id → 32 affine min-hashes → band buckets; ``band_size`` rows
-    per band, 8×4 by default), so the SAME helper serves batch frames
-    AND streaming sources (`streaming/dedup.py::
-    stream_neardup_against_corpus`): nothing here shuffles, collects,
-    or checkpoints. ``carry`` columns ride through untouched (the
-    event-time variant threads its timestamp this way). Docs with fewer
-    than 3 tokens carry no signature and are filtered (both engines
-    replay the filter). Batch callers that self-join the result should
-    localCheckpoint it themselves."""
-    p = F.lit(_MERSENNE_P).cast("long")
-    xm = F.transform(
-        _shingle_strings(F.col("w")),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % p,
-    )
-    def _h(a: int, b: int):
-        # closure (not default-arg lambda: Spark reads lambda arity)
-        return lambda x: (F.lit(a) * x + F.lit(b)) % p
-
-    sig = F.array(*[F.array_min(F.transform("xs", _h(a, b))) for a, b in _AFFINE])
-    n_bands = _N_HASHES // band_size
-    c = list(carry)
-    return (
-        docs.select("doc_id", *c, _words().alias("w"))
-        .where(F.size("w") >= 3)
-        .select("doc_id", *c, xm.alias("xs"))
-        .select("doc_id", *c, sig.alias("sig"))
-        .select(
-            "doc_id",
-            *c,
-            "sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                ",",
-                                *[F.col("sig")[b * band_size + r] for r in range(band_size)],
-                            ).alias("bucket"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select(
-            "doc_id",
-            *c,
-            *(["sig"] if with_sig else []),
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-    )
-
-
-def _md5_minhash_candidates(
-    docs: DataFrame, with_est: bool = False, band_size: int = _BAND_SIZE
-) -> DataFrame:
-    """(doc_a, doc_b) banded-LSH candidate pairs under the md5 family.
-
-    With ``with_est`` the signature rides along through the band
-    explode (as in :func:`minhash_lsh_xxhash`) and the output gains an
-    ``est_jaccard`` column — fraction of agreeing signature components,
-    an exact k/32 double in both engines."""
-    bands = _md5_band_rows(docs, with_sig=with_est, band_size=band_size)
-    bands = bands.localCheckpoint(eager=False)  # signature subtree: compute once
-    a, b = bands.alias("a"), bands.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    if not with_est:
-        return joined.select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        ).distinct()
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("a.sig", "b.sig", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double")
-        / _N_HASHES
-    )
-    return joined.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        est.alias("est_jaccard"),
-    ).distinct()
-
-
-def _md5_sig_bands_cte() -> str:
-    """Shared DuckDB CTE chain through the `sig`/`bands` blocks of the
-    md5-family MinHash pipeline (shingles -> 60-bit md5 ids -> 32
-    affine min-hashes -> 8×4 band buckets). Callers append their own
-    candidate/verdict tail — the batch pair ops use `_md5_lsh_cte`'s
-    self-join cand block; `stream_neardup_replay` uses a stream×corpus
-    join with per-doc max agreement."""
-    p = _MERSENNE_P
-    sig_cols = ",\n             ".join(
-        f"min(({a} * xm + {b}) % {p}) AS s{i}" for i, (a, b) in enumerate(_AFFINE)
-    )
-    n_bands = _N_HASHES // _BAND_SIZE
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, concat_ws(','{cols}) AS bucket FROM sig".format(
-            b=b,
-            cols="".join(f", s{b * _BAND_SIZE + r}" for r in range(_BAND_SIZE)),
-        )
-        for b in range(n_bands)
-    )
+def _lsh_recall_sql() -> str:
+    """DuckDB twin of :func:`dedup_lsh_recall`: the exact-Jaccard truth
+    set left-joined to the banded candidates."""
     return f"""
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles,
-             len(list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS n_sh
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-      WHERE len(toks) >= 3
-    ),
-    ex AS (SELECT doc_id, n_sh, unnest(shingles) AS s FROM sh),
-    xm AS (
-      SELECT doc_id, n_sh,
-             CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % {p} AS xm
-      FROM ex
-    ),
-    sig AS (
-      SELECT doc_id,
-             {sig_cols}
-      FROM xm GROUP BY doc_id
-    ),
-    bands AS (
-      {band_selects}
-    )"""
-
-
-def _md5_lsh_cte() -> str:
-    """Shared DuckDB CTE chain for the md5-family LSH pipeline, through
-    the `cand` candidate-pair block (shingles -> md5 min-hash signatures
-    -> bands -> bucket-join candidates). Callers append their own tail
-    (recall join, verification, clustering)."""
-    return f"""{_md5_sig_bands_cte()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    )"""
-
-
-def _md5_minhash_sql() -> str:
-    """DuckDB twin of :func:`_md5_minhash_candidates` + the recall join."""
-    return f"""
-    WITH {_md5_lsh_cte()},
+    WITH {mh.lsh_cte()},
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              CAST(count(*) AS BIGINT) AS shared,
@@ -575,25 +274,7 @@ def _md5_minhash_sql() -> str:
     """
 
 
-def _md5_lsh_est_sql() -> str:
-    """DuckDB twin of the canonical ``dedup_minhash_lsh``: banded
-    candidates + per-pair signature-agreement estimate, thresholded at
-    est >= 0.5 via the integer compare ``agree*2 >= n_hashes``."""
-    agree = " + ".join(
-        f"(CASE WHEN a.s{i} = b.s{i} THEN 1 ELSE 0 END)" for i in range(_N_HASHES)
-    )
-    return f"""
-    WITH {_md5_lsh_cte()}
-    SELECT c.doc_a, c.doc_b,
-           CAST(({agree}) AS DOUBLE) / {_N_HASHES} AS est_jaccard
-    FROM cand c
-    JOIN sig a ON c.doc_a = a.doc_id
-    JOIN sig b ON c.doc_b = b.doc_id
-    WHERE ({agree}) * 2 >= {_N_HASHES}
-    """
-
-
-@query("dedup_minhash_lsh", sql=_md5_lsh_est_sql(), tags=("dedup", "neardup", "lsh"))
+@query("dedup_minhash_lsh", sql=mh.est_sql(), tags=("dedup", "neardup", "lsh"))
 def dedup_minhash_lsh(spark, sf_dir):
     """Candidate near-dup pairs via banded MinHash-LSH (8 bands × 4
     rows over a 32-component signature), estimated Jaccard >= 0.5.
@@ -601,15 +282,12 @@ def dedup_minhash_lsh(spark, sf_dir):
     Bands of the signature are bucketed; only docs sharing a band
     bucket are paired, so the self-join is bucket-local — never
     all-pairs (the standard recall-for-scalability trade vs
-    dedup_jaccard_pairs). The hash family is the md5/affine one
-    (md5(shingle) 60-bit id, h_i(x) = (a_i·x + b_i) mod (2^31−1) with
-    fixed splitmix-derived constants), bit-identical in Spark and
-    DuckDB, so the ENTIRE pipeline — signatures, bands, candidate
-    join, per-pair agreement estimate — is replayed by the oracle and
-    driver-hashed. The xxhash64 family (:func:`minhash_lsh_xxhash`) is
-    the production-speed variant, pinned by pytest against this one;
-    registering the verifiable family keeps `no_oracle` rows out of
-    every rotation window.
+    dedup_jaccard_pairs). The hash family is the md5/affine one of
+    `etl_github_spark/minhash.py` (md5(shingle) 60-bit id, h_i(x) =
+    (a_i·x + b_i) mod (2^31−1) with fixed splitmix-derived constants),
+    bit-identical in Spark and DuckDB, so the ENTIRE pipeline —
+    signatures, bands, candidate join, per-pair agreement estimate — is
+    replayed by the oracle and driver-hashed.
 
     est_jaccard is agree/32 — an exact dyadic double both engines
     represent identically; the >= 0.5 threshold is evaluated as the
@@ -621,12 +299,10 @@ def dedup_minhash_lsh(spark, sf_dir):
     both sides of the self-join.
     """
     docs = par(T(spark, sf_dir, "documents"))
-    return _md5_minhash_candidates(docs, with_est=True).where(
-        F.col("est_jaccard") >= 0.5
-    )
+    return mh.near(mh.candidates(docs, with_est=True))
 
 
-@query("dedup_lsh_recall", sql=_md5_minhash_sql(), tags=("dedup", "neardup", "lsh"))
+@query("dedup_lsh_recall", sql=_lsh_recall_sql(), tags=("dedup", "neardup", "lsh"))
 def dedup_lsh_recall(spark, sf_dir):
     """Recall of banded MinHash-LSH against the exact Jaccard truth set.
 
@@ -636,14 +312,11 @@ def dedup_lsh_recall(spark, sf_dir):
     both engines) surfaced the pair. The oracle recomputes the ENTIRE
     pipeline (shingles → signatures → bands → candidates → recall join)
     in DuckDB, so the driver hash pins the recall behavior itself —
-    including genuine banding misses — not just row counts. The
-    xxhash64 family in :func:`dedup_minhash_lsh` is the production
-    path; this family exists to make the contract falsifiable
-    cross-engine.
+    including genuine banding misses — not just row counts.
     """
     docs = par(T(spark, sf_dir, "documents"))
     truth = dedup_jaccard_pairs(spark, sf_dir).where(F.col("jaccard") >= 0.5)
-    cand = _md5_minhash_candidates(docs).withColumn("hit", F.lit(True))
+    cand = mh.candidates(docs).withColumn("hit", F.lit(True))
     return truth.join(cand, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",
@@ -701,7 +374,7 @@ def _simhash_frame(spark, sf_dir) -> DataFrame:
     """(doc_id, simhash): the shared 60-bit SimHash computation behind
     the bucket audit and the Hamming-radius pair ops."""
     docs = par(T(spark, sf_dir, "documents"))
-    w = docs.select("doc_id", F.explode(F.array_distinct(_words())).alias("word"))
+    w = docs.select("doc_id", F.explode(F.array_distinct(words())).alias("word"))
     h = w.select(
         "doc_id",
         F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("long").alias("h"),
@@ -844,7 +517,7 @@ def dedup_span_coverage(spark, sf_dir):
     w = F.col("_w")
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("_w"))
+        .select("doc_id", words().alias("_w"))
         .where(F.size(w) >= 4)
     )
     cov = (
@@ -920,7 +593,7 @@ def dedup_span_trim(spark, sf_dir):
     w = F.col("_w")
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("_w"))
+        .select("doc_id", words().alias("_w"))
         .where(F.size(w) >= 4)
     )
     dup_idx = (
@@ -1075,7 +748,7 @@ def dedup_containment_pairs(spark, sf_dir, df_cap: int = _DF_CAP):
     """
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", words().alias("w"))
         .where(F.size("w") >= 3)
     )
     sh = d.select("doc_id", F.explode(_hashed_shingles(F.col("w"))).alias("sh"))
@@ -1176,7 +849,7 @@ def dedup_prefix_groups(spark, sf_dir):
     w = F.col("_w")
     p = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("_w"))
+        .select("doc_id", words().alias("_w"))
         .where(F.size(w) >= _PREFIX_K)
         .select(
             "doc_id",
@@ -1264,7 +937,7 @@ def dedup_jaccard_prefix(spark, sf_dir):
     """
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", words().alias("w"))
         .where(F.size("w") >= 3)
     )
     docs = d.select(
@@ -1310,38 +983,9 @@ def dedup_jaccard_prefix(spark, sf_dir):
     )
 
 
-_HAMMING_RADIUS = 3     # pigeonhole: d <= 3 with 4 bands => one band equal
-_HAMMING_BANDS = 4
-_HAMMING_BAND_BITS = _SIMHASH_BITS // _HAMMING_BANDS  # 15
-
-
-def _simhash_hamming_sql() -> str:
-    band_rows = "\n      UNION ALL ".join(
-        f"SELECT doc_id, simhash, {b} AS band,"
-        f" (simhash >> {b * _HAMMING_BAND_BITS}) & {(1 << _HAMMING_BAND_BITS) - 1} AS bv"
-        f" FROM sim"
-        for b in range(_HAMMING_BANDS)
-    )
-    return f"""{_simhash_cte()},
-    bands AS (
-      {band_rows}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, a.simhash AS sim_a,
-                      b.doc_id AS doc_b, b.simhash AS sim_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-    FROM cand
-    WHERE bit_count(xor(sim_a, sim_b)) <= {_HAMMING_RADIUS}
-    """
-
-
 @query(
     "dedup_simhash_hamming",
-    sql=_simhash_hamming_sql(),
+    sql=f"{_simhash_cte()},{hamming_pairs_sql('sim', 'simhash')}",
     tags=("dedup", "neardup", "scale"),
 )
 def dedup_simhash_hamming(spark, sf_dir):
@@ -1361,39 +1005,7 @@ def dedup_simhash_hamming(spark, sf_dir):
     """
     sim = _simhash_frame(spark, sf_dir)
     sim = sim.localCheckpoint(eager=False)  # reused by all 4 band selects
-    mask = (1 << _HAMMING_BAND_BITS) - 1
-    bands = None
-    for b in range(_HAMMING_BANDS):
-        part = sim.select(
-            "doc_id",
-            "simhash",
-            F.lit(b).alias("band"),
-            F.shiftright("simhash", b * _HAMMING_BAND_BITS)
-            .bitwiseAND(F.lit(mask))
-            .alias("bv"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
-    return (
-        cand.select("doc_a", "doc_b", ham.alias("hamming"))
-        .where(ham <= _HAMMING_RADIUS)
-    )
+    return hamming_pairs(sim, "simhash")
 
 
 @query(
@@ -1531,7 +1143,7 @@ def dedup_threshold_sweep(spark, sf_dir, df_cap: int = _DF_CAP):
     """
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", words().alias("w"))
         .where(F.size("w") >= 3)
     )
     sh = d.select("doc_id", _hashed_shingles(F.col("w")).alias("hs")).select(
@@ -1830,9 +1442,9 @@ def _autoband_select(rows) -> tuple[int, int]:
     return int(best["bands"]), int(best["rows_per_band"])
 
 
-def _md5_lsh_autoband_sql() -> str:
+def _lsh_autoband_sql() -> str:
     """DuckDB twin of ``dedup_minhash_lsh_autoband``: the SAME banded
-    candidate + agreement-estimate pipeline as `_md5_lsh_est_sql`, but
+    candidate + agreement-estimate pipeline as `minhash.est_sql`, but
     the oracle also REPLAYS THE LAYOUT SELECTION — the 32-hash decision
     table and its argmin run as CTEs, and the final WHERE requires the
     selected layout to be the (8, 4) the static banding CTEs encode. If
@@ -1840,31 +1452,23 @@ def _md5_lsh_autoband_sql() -> str:
     layout wins, the oracle returns ZERO rows and the driver hash
     breaks loudly — the same falsifiability contract as the auto-k
     LIMIT-subquery replay in `scale_paths._semdedup_autok_sql`."""
-    agree = " + ".join(
-        f"(CASE WHEN a.s{i} = b.s{i} THEN 1 ELSE 0 END)" for i in range(_N_HASHES)
-    )
     return f"""
     WITH lshplan AS ({_lsh_plan_sql(_AUTOBAND_CONFIGS)}),
     sel AS (
       SELECT bands, rows_per_band FROM lshplan
       ORDER BY fp_nano_sum + fn_nano_sum, bands LIMIT 1
     ),
-    {_md5_lsh_cte()}
-    SELECT c.doc_a, c.doc_b,
-           CAST(({agree}) AS DOUBLE) / {_N_HASHES} AS est_jaccard,
-           s.bands, s.rows_per_band
-    FROM cand c
-    JOIN sig a ON c.doc_a = a.doc_id
-    JOIN sig b ON c.doc_b = b.doc_id
-    CROSS JOIN sel s
-    WHERE ({agree}) * 2 >= {_N_HASHES}
-      AND s.bands = 8 AND s.rows_per_band = 4
+    {mh.lsh_cte()},
+    est AS ({mh.est_select()})
+    SELECT e.doc_a, e.doc_b, e.est_jaccard, s.bands, s.rows_per_band
+    FROM est e CROSS JOIN sel s
+    WHERE s.bands = 8 AND s.rows_per_band = 4
     """
 
 
 @query(
     "dedup_minhash_lsh_autoband",
-    sql=_md5_lsh_autoband_sql(),
+    sql=_lsh_autoband_sql(),
     tags=("dedup", "neardup", "lsh", "planning"),
 )
 def dedup_minhash_lsh_autoband(spark, sf_dir):
@@ -1890,12 +1494,11 @@ def dedup_minhash_lsh_autoband(spark, sf_dir):
     signatures, band explode 8×|docs|, bucket-local candidate join.
     """
     b, r = _autoband_select(_autoband_choice_rows(spark))
-    if b * r != _N_HASHES:  # layout must tile the signature exactly
-        raise ValueError(f"autoband selected ({b},{r}) which does not tile {_N_HASHES}")
+    if b * r != mh.N_HASHES:  # layout must tile the signature exactly
+        raise ValueError(f"autoband selected ({b},{r}) which does not tile {mh.N_HASHES}")
     docs = par(T(spark, sf_dir, "documents"))
     return (
-        _md5_minhash_candidates(docs, with_est=True, band_size=r)
-        .where(F.col("est_jaccard") >= 0.5)
+        mh.near(mh.candidates(docs, with_est=True, band_size=r))
         .select(
             "doc_a",
             "doc_b",
@@ -1906,9 +1509,29 @@ def dedup_minhash_lsh_autoband(spark, sf_dir):
     )
 
 
+_PAIRS_SCHEMA = "doc_a long, doc_b long, est_jaccard double"
+
+
+def _from_store(spark, sf_dir, schema: str, steps) -> DataFrame:
+    """Run ``steps(docs, path)`` — store operators over the documents
+    table and a fresh temp store root, returning the answer frame — then
+    collect the answer, remove the store and hand the rows back as a
+    driver-built frame of ``schema``."""
+    import shutil
+    import tempfile
+
+    docs = par(T(spark, sf_dir, "documents"))
+    path = tempfile.mkdtemp(prefix="lsh_store_")
+    try:
+        rows = [tuple(r) for r in steps(docs, path).collect()]
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+    return local_frame(spark, rows, schema)
+
+
 @query(
     "dedup_lsh_store_pairs",
-    sql=_md5_lsh_est_sql(),
+    sql=mh.est_sql(),
     tags=("dedup", "neardup", "lsh", "storage"),
 )
 def dedup_lsh_store_pairs(spark, sf_dir):
@@ -1930,27 +1553,16 @@ def dedup_lsh_store_pairs(spark, sf_dir):
     Σ|bucket|² as the in-plan form; stored band rows are ~20 bytes vs
     the document text they replace.
     """
-    import shutil
-    import tempfile
-
-    from ..io.lsh_store import store_neardup_pairs, write_bands_store
-
-    docs = par(T(spark, sf_dir, "documents"))
-    path = tempfile.mkdtemp(prefix="lsh_store_")
-    try:
+    def steps(docs, path):
         write_bands_store(docs, path)
-        out = store_neardup_pairs(spark, path)
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return local_frame(
-        spark, rows, "doc_a long, doc_b long, est_jaccard double"
-    )
+        return store_neardup_pairs(spark, path)
+
+    return _from_store(spark, sf_dir, _PAIRS_SCHEMA, steps)
 
 
 @query(
     "dedup_lsh_store_upsert",
-    sql=_md5_lsh_est_sql(),
+    sql=mh.est_sql(),
     tags=("dedup", "neardup", "lsh", "storage", "incremental"),
 )
 def dedup_lsh_store_upsert(spark, sf_dir):
@@ -1967,32 +1579,17 @@ def dedup_lsh_store_upsert(spark, sf_dir):
     append, never a corpus rebuild (the stronger fit-free twin of
     `sim_ivfpq_store_upsert`'s sample-identity argument).
     """
-    import shutil
-    import tempfile
-
-    from ..io.lsh_store import (
-        append_bands_store,
-        store_neardup_pairs,
-        write_bands_store,
-    )
-
-    docs = par(T(spark, sf_dir, "documents"))
-    path = tempfile.mkdtemp(prefix="lsh_upsert_")
-    try:
+    def steps(docs, path):
         write_bands_store(docs.where(F.col("doc_id") % 2 == 0), path)
         append_bands_store(docs.where(F.col("doc_id") % 2 == 1), path)
-        out = store_neardup_pairs(spark, path)
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return local_frame(
-        spark, rows, "doc_a long, doc_b long, est_jaccard double"
-    )
+        return store_neardup_pairs(spark, path)
+
+    return _from_store(spark, sf_dir, _PAIRS_SCHEMA, steps)
 
 
 @query(
     "dedup_lsh_store_compact",
-    sql=_md5_lsh_est_sql(),
+    sql=mh.est_sql(),
     tags=("dedup", "neardup", "lsh", "storage", "compaction"),
 )
 def dedup_lsh_store_compact(spark, sf_dir):
@@ -2007,19 +1604,7 @@ def dedup_lsh_store_compact(spark, sf_dir):
     near-dup-index twin of the Delta OPTIMIZE contract
     (`lake_compact_roundtrip`) and of `sim_ivfpq_store_compact`.
     """
-    import shutil
-    import tempfile
-
-    from ..io.lsh_store import (
-        append_bands_store,
-        compact_bands_store,
-        store_neardup_pairs,
-        write_bands_store,
-    )
-
-    docs = par(T(spark, sf_dir, "documents"))
-    path = tempfile.mkdtemp(prefix="lsh_compact_")
-    try:
+    def steps(docs, path):
         write_bands_store(docs.where(F.col("doc_id") % 2 == 0), path)
         append_bands_store(docs.where(F.col("doc_id") % 2 == 1), path)
         stats = compact_bands_store(spark, path)
@@ -2027,49 +1612,14 @@ def dedup_lsh_store_compact(spark, sf_dir):
             raise RuntimeError(
                 f"compaction did not reduce file count: {stats}"
             )  # the query exists to pin this property — fail loudly
-        out = store_neardup_pairs(spark, path)
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return local_frame(
-        spark, rows, "doc_a long, doc_b long, est_jaccard double"
-    )
+        return store_neardup_pairs(spark, path)
 
-
-def _lsh_store_judge_sql() -> str:
-    """DuckDB twin of :func:`dedup_lsh_store_judge` — identical to the
-    streaming replay's oracle (`streaming_bridge._neardup_stream_sql`):
-    odd-id docs judged against the even-id corpus index, per-doc max
-    signature agreement, kept ⇔ agree·2 < 32. Stream, batch, and store
-    paths share one verdict contract; stating the SQL here (rather than
-    importing across the module boundary) keeps dedup.py self-contained
-    at import time."""
-    agree = " + ".join(
-        f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)"
-        for i in range(_N_HASHES)
-    )
-    return f"""
-    WITH {_md5_sig_bands_cte()},
-    hits AS (
-      SELECT a.doc_id, max({agree}) AS agree
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
-       AND a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-      JOIN sig sa ON sa.doc_id = a.doc_id
-      JOIN sig sb ON sb.doc_id = b.doc_id
-      GROUP BY a.doc_id
-    )
-    SELECT s.doc_id,
-           CAST(coalesce(h.agree, 0) AS BIGINT) AS max_agree,
-           coalesce(h.agree, 0) * 2 < {_N_HASHES} AS kept
-    FROM sig s LEFT JOIN hits h USING (doc_id)
-    WHERE s.doc_id % 2 = 1
-    """
+    return _from_store(spark, sf_dir, _PAIRS_SCHEMA, steps)
 
 
 @query(
     "dedup_lsh_store_judge",
-    sql=_lsh_store_judge_sql(),
+    sql=mh.judge_sql("doc_id % 2 = 1", "doc_id % 2 = 0"),
     tags=("dedup", "neardup", "lsh", "storage"),
 )
 def dedup_lsh_store_judge(spark, sf_dir):
@@ -2089,45 +1639,16 @@ def dedup_lsh_store_judge(spark, sf_dir):
     broadcast — no hint, same rule as the streaming layer); verdict
     state is one (doc, max) pair per batch doc.
     """
-    import shutil
-    import tempfile
-
-    from ..io.lsh_store import store_judge_docs, write_bands_store
-
-    docs = par(T(spark, sf_dir, "documents"))
-    path = tempfile.mkdtemp(prefix="lsh_judge_")
-    try:
+    def steps(docs, path):
         write_bands_store(docs.where(F.col("doc_id") % 2 == 0), path)
-        out = store_judge_docs(spark, path, docs.where(F.col("doc_id") % 2 == 1))
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return local_frame(spark, rows, "doc_id long, max_agree long, kept boolean")
+        return store_judge_docs(spark, path, docs.where(F.col("doc_id") % 2 == 1))
 
-
-def _md5_lsh_delta_sql() -> str:
-    """DuckDB twin of :func:`dedup_lsh_store_delta`: the canonical
-    est-SQL restricted to pairs TOUCHING the odd-id batch — exactly the
-    rows the incremental maintenance call must produce on top of the
-    even-store bootstrap."""
-    agree = " + ".join(
-        f"(CASE WHEN a.s{i} = b.s{i} THEN 1 ELSE 0 END)" for i in range(_N_HASHES)
-    )
-    return f"""
-    WITH {_md5_lsh_cte()}
-    SELECT c.doc_a, c.doc_b,
-           CAST(({agree}) AS DOUBLE) / {_N_HASHES} AS est_jaccard
-    FROM cand c
-    JOIN sig a ON c.doc_a = a.doc_id
-    JOIN sig b ON c.doc_b = b.doc_id
-    WHERE ({agree}) * 2 >= {_N_HASHES}
-      AND (c.doc_a % 2 = 1 OR c.doc_b % 2 = 1)
-    """
+    return _from_store(spark, sf_dir, "doc_id long, max_agree long, kept boolean", steps)
 
 
 @query(
     "dedup_lsh_store_delta",
-    sql=_md5_lsh_delta_sql(),
+    sql=mh.est_sql("AND (c.doc_a % 2 = 1 OR c.doc_b % 2 = 1)"),
     tags=("dedup", "neardup", "lsh", "storage", "incremental"),
 )
 def dedup_lsh_store_delta(spark, sf_dir):
@@ -2147,21 +1668,8 @@ def dedup_lsh_store_delta(spark, sf_dir):
     appends its delta rows. Nothing ever recomputes the store's own
     self-join.
     """
-    import shutil
-    import tempfile
-
-    from ..io.lsh_store import store_delta_pairs, write_bands_store
-
-    docs = par(T(spark, sf_dir, "documents"))
-    path = tempfile.mkdtemp(prefix="lsh_delta_")
-    try:
+    def steps(docs, path):
         write_bands_store(docs.where(F.col("doc_id") % 2 == 0), path)
-        out = store_delta_pairs(
-            spark, path, docs.where(F.col("doc_id") % 2 == 1)
-        )
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return local_frame(
-        spark, rows, "doc_a long, doc_b long, est_jaccard double"
-    )
+        return store_delta_pairs(spark, path, docs.where(F.col("doc_id") % 2 == 1))
+
+    return _from_store(spark, sf_dir, _PAIRS_SCHEMA, steps)

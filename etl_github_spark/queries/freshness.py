@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import minhash as mh
 from ..session import local_frame
 from ._util import T, par
 from .registry import query
@@ -43,30 +44,13 @@ def _freshness_sql() -> str:
     full-corpus IVF-PQ probe (same fit-sample identity as
     `sim_ivfpq_store_upsert`: vec_id%4==0 ⊂ evens, so build-even +
     append-odd replays the full-corpus fit bit for bit)."""
-    from .dedup import _N_HASHES, _md5_sig_bands_cte
     from .scale_paths import _ivfpq_residual_sql
 
-    agree = " + ".join(
-        f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)"
-        for i in range(_N_HASHES)
-    )
     return f"""
-    WITH {_md5_sig_bands_cte()},
-    hits AS (
-      SELECT a.doc_id, max({agree}) AS agree
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
-       AND a.doc_id % 3 = 2 AND b.doc_id % 3 < 2
-      JOIN sig sa ON sa.doc_id = a.doc_id
-      JOIN sig sb ON sb.doc_id = b.doc_id
-      GROUP BY a.doc_id
-    ),
-    lsh AS (
-      SELECT 'lsh_judge' AS stage, s.doc_id AS id,
-             CAST(coalesce(h.agree, 0) AS DOUBLE) AS score,
-             coalesce(h.agree, 0) * 2 < {_N_HASHES} AS flag
-      FROM sig s LEFT JOIN hits h USING (doc_id)
-      WHERE s.doc_id % 3 = 2
+    WITH lsh AS (
+      SELECT 'lsh_judge' AS stage, doc_id AS id,
+             CAST(max_agree AS DOUBLE) AS score, kept AS flag
+      FROM ({mh.judge_sql("doc_id % 3 = 2", "doc_id % 3 < 2")})
     ),
     ann AS (
       SELECT 'ann_topk' AS stage, vec_id AS id, approx_d2 AS score,

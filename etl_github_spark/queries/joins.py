@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..minhash import MERSENNE_P, affine_coeffs
 from ._util import T, fxp
 from .registry import query
 
@@ -471,16 +472,12 @@ def _bloom_coeffs():
     """The shared splitmix-derived affine family (dedup/curation use
     seeds 7/11) with its own seed, so the three sketches are
     independent but ONE generator defines them all."""
-    from .dedup import _affine_coeffs
-
-    return _affine_coeffs(4, seed=13)
+    return affine_coeffs(4, seed=13)
 
 
 def _bloom_positions(h):
-    from .dedup import _MERSENNE_P
-
     return [
-        ((F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE_P)) % F.lit(_BLOOM_BITS)
+        ((F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)) % F.lit(_BLOOM_BITS)
         for a, b in _bloom_coeffs()
     ]
 
@@ -499,8 +496,6 @@ def bloom_prefilter(fact, fact_col: str, keys, key_col: str):
     so mismatched column types would make every probe a silent false
     negative — exactly the bug class this helper promises away. The
     guard raises instead of guessing a cast."""
-    from .dedup import _MERSENNE_P
-
     f_type = fact.schema[fact_col].dataType
     k_type = keys.schema[key_col].dataType
     if f_type != k_type:
@@ -511,7 +506,7 @@ def bloom_prefilter(fact, fact_col: str, keys, key_col: str):
             "match; cast one side explicitly before calling"
         )
     n_hashes = len(_bloom_coeffs())
-    h_key = F.pmod(F.xxhash64(F.col(key_col)), F.lit(_MERSENNE_P))
+    h_key = F.pmod(F.xxhash64(F.col(key_col)), F.lit(MERSENNE_P))
     pos_rows = (
         keys.select(F.explode(F.array(*_bloom_positions(h_key))).alias("pos"))
         .distinct()
@@ -522,7 +517,7 @@ def bloom_prefilter(fact, fact_col: str, keys, key_col: str):
         words[row["pos"] // 32] |= 1 << (row["pos"] % 32)
     warr = F.array(*[F.lit(w) for w in words])
 
-    h_fact = F.pmod(F.xxhash64(F.col(fact_col)), F.lit(_MERSENNE_P))
+    h_fact = F.pmod(F.xxhash64(F.col(fact_col)), F.lit(MERSENNE_P))
     aux = ["__bw"] + [f"__p{i}" for i in range(n_hashes)]
     probed = fact.select(
         "*",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..minhash import words
 from ._util import T, par
 from .registry import query
 
@@ -31,10 +32,6 @@ _STOP = ("the", "a", "of")
 _EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 _LONGNUM = r"\b\d{13,16}\b"
-
-
-def _words():
-    return F.split(F.col("text"), " ")
 
 
 def _doc_stats(df):
@@ -77,7 +74,7 @@ def quality_gopher_stats(spark, sf_dir):
     (whole-stage codegen, no exchange); the token array is materialized
     once per row (`_w`) because lambda subexpressions are not CSE'd.
     """
-    d = T(spark, sf_dir, "documents").select("doc_id", "text", _words().alias("_w"))
+    d = T(spark, sf_dir, "documents").select("doc_id", "text", words().alias("_w"))
     return _doc_stats(d)
 
 
@@ -108,7 +105,7 @@ def quality_gopher_filter(spark, sf_dir):
     filters in-scan with zero shuffle.
     """
     s = _doc_stats(
-        T(spark, sf_dir, "documents").select("doc_id", "text", _words().alias("_w"))
+        T(spark, sf_dir, "documents").select("doc_id", "text", words().alias("_w"))
     )
     reason = (
         F.when((F.col("n_words") < 20) | (F.col("n_words") > 400), "word_count")
@@ -129,7 +126,7 @@ def _max_bigram_stats(df):
     ``prev`` sentinel is safe: every bigram contains the " " separator.
     """
     w = F.col("_w")
-    d = df.select("doc_id", _words().alias("_w")).where(F.size(w) >= 2)
+    d = df.select("doc_id", words().alias("_w")).where(F.size(w) >= 2)
     m = F.size(w) - 1
     bigrams = F.transform(
         F.arrays_zip(F.slice(w, 1, m), F.slice(w, 2, m)),
@@ -288,7 +285,7 @@ def quality_boilerplate_ngrams(spark, sf_dir):
     w = F.col("_w")
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("doc_id", _words().alias("_w"))
+        .select("doc_id", words().alias("_w"))
         .where(F.size(w) >= 3)
     )
     # zip-of-slices, not transform(sequence, i -> element_at(w, i)): the
@@ -348,7 +345,7 @@ def _chunk_kept(d):
     each chunk (min (doc_id, pos) struct). Split out so the lineage
     manifest can count surviving docs without paying the reassembly."""
     k = _CHUNK
-    d = d.select("doc_id", _words().alias("toks"))
+    d = d.select("doc_id", words().alias("toks"))
     n_chunks = F.expr(f"(size(toks) + {k - 1}) div {k}")
     chunks = d.select(
         "doc_id",
@@ -509,7 +506,7 @@ def curate_pipeline_full(spark, sf_dir):
         "lang",
         "source",
         "n_chars",
-        _words().alias("_w"),
+        words().alias("_w"),
     ).select(
         "doc_id",
         "text",
@@ -635,7 +632,7 @@ def quality_ngram_diversity(spark, sf_dir):
     w = F.col("_w")
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select("source", _words().alias("_w"))
+        .select("source", words().alias("_w"))
         .where(F.size(w) >= 3)
     )
     m = F.size(w) - 2
@@ -701,7 +698,7 @@ def _doc_hhi(df):
     """(doc_id, text) → (doc_id, n_words, hhi) via the sorted-run fold
     (see :func:`quality_word_concentration` for the 2r-1 identity)."""
     w = F.col("_w")
-    d = df.select("doc_id", _words().alias("_w"))
+    d = df.select("doc_id", words().alias("_w"))
     zero = F.lit(0).cast("long")
     run_of = lambda acc, x: (  # noqa: E731
         F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1).cast("long"))
@@ -795,7 +792,7 @@ def curate_semantic_pipeline(spark, sf_dir):
     from .dedup import _dup_span_positions
 
     docs = par(T(spark, sf_dir, "documents")).select("doc_id", "text")
-    s = _doc_stats(docs.select("doc_id", "text", _words().alias("_w")))
+    s = _doc_stats(docs.select("doc_id", "text", words().alias("_w")))
     keep1 = s.where(
         F.col("n_words").between(20, 400)
         & F.col("mean_word_len").between(2, 8)
@@ -805,7 +802,7 @@ def curate_semantic_pipeline(spark, sf_dir):
     w = F.col("_w")
     d = (
         docs.join(keep1, "doc_id", "semi")
-        .select("doc_id", _words().alias("_w"))
+        .select("doc_id", words().alias("_w"))
         .where(F.size(w) >= 4)
     )
     dup_idx = (
@@ -864,8 +861,8 @@ def quality_lang_confusion(spark, sf_dir):
     `text_lang_id_heuristic`; one (lang, predicted) partial+final
     count; the normalization window runs on the matrix, not the corpus.
     """
-    en_hits = F.size(F.filter(_words(), lambda w: (w == "the") | (w == "a")))
-    n_tokens = F.size(_words())
+    en_hits = F.size(F.filter(words(), lambda w: (w == "the") | (w == "a")))
+    n_tokens = F.size(words())
     t = par(T(spark, sf_dir, "documents")).select(
         "lang",
         F.when(en_hits * 20 >= n_tokens, "en_like").otherwise("other").alias("predicted"),
@@ -1272,7 +1269,7 @@ def curate_lineage_manifest(spark, sf_dir):
     n = F.size(w).cast("double")
     is_stop = lambda t: t.isin(*_STOP)  # noqa: E731
     st = docs.select(
-        "doc_id", "text", "lang", "source", "n_chars", _words().alias("_w")
+        "doc_id", "text", "lang", "source", "n_chars", words().alias("_w")
     ).select(
         "doc_id",
         "text",

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import minhash as mh
 from ..session import drop_clone_listener, local_frame, stream_session
 from ._util import T
 from .registry import query
@@ -1319,47 +1320,16 @@ def stream_session_append_replay(spark, sf_dir):
     )
 
 
-def _neardup_stream_sql() -> str:
-    """DuckDB twin of :func:`stream_neardup_replay`: the shared
-    md5-family sig/bands CTEs (`dedup._md5_sig_bands_cte`), a
-    stream×corpus band-bucket join (odd doc_ids stream, even are the
-    landed corpus), per-doc max signature agreement, and the integer
-    kept rule agree·2 < 32."""
-    from .dedup import _N_HASHES, _md5_sig_bands_cte
-
-    agree = " + ".join(
-        f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)"
-        for i in range(_N_HASHES)
-    )
-    return f"""
-    WITH {_md5_sig_bands_cte()},
-    hits AS (
-      SELECT a.doc_id, max({agree}) AS agree
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
-       AND a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-      JOIN sig sa ON sa.doc_id = a.doc_id
-      JOIN sig sb ON sb.doc_id = b.doc_id
-      GROUP BY a.doc_id
-    )
-    SELECT s.doc_id,
-           CAST(coalesce(h.agree, 0) AS BIGINT) AS max_agree,
-           coalesce(h.agree, 0) * 2 < {_N_HASHES} AS kept
-    FROM sig s LEFT JOIN hits h USING (doc_id)
-    WHERE s.doc_id % 2 = 1
-    """
-
-
 @query(
     "stream_neardup_replay",
-    sql=_neardup_stream_sql(),
+    sql=mh.judge_sql("doc_id % 2 = 1", "doc_id % 2 = 0"),
     tags=("streaming", "dedup", "neardup", "lsh", "bridge"),
 )
 def stream_neardup_replay(spark, sf_dir):
     """Streaming NEAR-dup detection against a landed corpus, under the
     driver hash: odd-doc_id documents stream in; the even half is the
     already-landed corpus whose banded-MinHash index
-    (`dedup._md5_band_rows`, the SAME md5/affine family as the batch
+    (`minhash.split_bands`, the SAME md5/affine family as the batch
     `dedup_minhash_lsh`) sits as the static join side.
     `streaming/dedup.py::stream_neardup_against_corpus` computes each
     arriving doc's signature map-side, collides it with the index on
@@ -1377,7 +1347,6 @@ def stream_neardup_replay(spark, sf_dir):
     state is one (doc, max) pair per in-flight doc, watermark-bounded
     when the stream carries event time.
     """
-    from ..queries.dedup import _md5_band_rows
     from ..streaming.dedup import stream_neardup_against_corpus
 
     rs = stream_session(spark, _STATE_PARTS)
@@ -1388,11 +1357,8 @@ def stream_neardup_replay(spark, sf_dir):
         .where(F.col("doc_id") % 2 == 1)
     )
     corpus = T(rs, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
-    # the lsh_store layout: skinny band rows + sigs stored once per doc,
-    # both cut from ONE checkpointed banding pass
-    rows = _md5_band_rows(corpus, with_sig=True).localCheckpoint(eager=False)
-    corpus_bands = rows.select("doc_id", "band", "bucket")
-    corpus_sigs = rows.where(F.col("band") == 0).select("doc_id", "sig")
+    # the lsh_store layout: skinny band rows + sigs stored once per doc
+    corpus_bands, corpus_sigs = mh.split_bands(corpus)
     out = stream_neardup_against_corpus(stream, corpus_bands, corpus_sigs)
     rows = [tuple(r) for r in _replay(out, "stream_neardup")]
     return local_frame(spark, rows, "doc_id long, max_agree long, kept boolean")
@@ -1405,36 +1371,18 @@ _DOC_TS_MOD = 4  # docs spread over 4 one-hour windows
 
 def _neardup_eventtime_sql() -> str:
     """DuckDB twin of :func:`stream_neardup_eventtime_replay`: the same
-    sig/bands/collision/verdict chain as `_neardup_stream_sql`, plus
+    sig/bands/collision/verdict chain as `stream_neardup_replay`'s, plus
     the synthetic event-time window start each doc's verdict is keyed
     by — ts = 2024-01-01 + (doc_id % 4) hours lands exactly on hour
     boundaries, so window_start IS the doc's timestamp (both engines
     state that closed form; the session runs UTC so Spark's
     timestamp_micros arithmetic matches DuckDB's naive TIMESTAMP)."""
-    from .dedup import _N_HASHES, _md5_sig_bands_cte
-
-    agree = " + ".join(
-        f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)"
-        for i in range(_N_HASHES)
-    )
     return f"""
-    WITH {_md5_sig_bands_cte()},
-    hits AS (
-      SELECT a.doc_id, max({agree}) AS agree
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
-       AND a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-      JOIN sig sa ON sa.doc_id = a.doc_id
-      JOIN sig sb ON sb.doc_id = b.doc_id
-      GROUP BY a.doc_id
-    )
-    SELECT s.doc_id,
+    SELECT doc_id,
            TIMESTAMP '2024-01-01 00:00:00'
-             + (s.doc_id % {_DOC_TS_MOD}) * INTERVAL 1 HOUR AS window_start,
-           CAST(coalesce(h.agree, 0) AS BIGINT) AS max_agree,
-           coalesce(h.agree, 0) * 2 < {_N_HASHES} AS kept
-    FROM sig s LEFT JOIN hits h USING (doc_id)
-    WHERE s.doc_id % 2 = 1
+             + (doc_id % {_DOC_TS_MOD}) * INTERVAL 1 HOUR AS window_start,
+           max_agree, kept
+    FROM ({mh.judge_sql("doc_id % 2 = 1", "doc_id % 2 = 0")})
     """
 
 
@@ -1475,16 +1423,11 @@ def stream_neardup_eventtime_replay(spark, sf_dir):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..queries.dedup import _md5_band_rows
     from ..streaming.dedup import stream_neardup_against_corpus_eventtime
 
     rs = stream_session(spark, _STATE_PARTS)
     docs = T(rs, sf_dir, "documents")
-    crows = _md5_band_rows(
-        docs.where(F.col("doc_id") % 2 == 0), with_sig=True
-    ).localCheckpoint(eager=False)
-    corpus_bands = crows.select("doc_id", "band", "bucket")
-    corpus_sigs = crows.where(F.col("band") == 0).select("doc_id", "sig")
+    corpus_bands, corpus_sigs = mh.split_bands(docs.where(F.col("doc_id") % 2 == 0))
 
     root = tempfile.mkdtemp(prefix="stream_neardup_et_")
     try:

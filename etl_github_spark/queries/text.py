@@ -10,12 +10,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ._util import T, par
+from ..minhash import words
+from ._util import T, hamming_pairs, hamming_pairs_sql, par
 from .registry import query
-
-def _words():
-    return F.split(F.col("text"), " ")
-
 
 @query(
     "text_token_count",
@@ -30,7 +27,7 @@ def _words():
 def text_token_count(spark, sf_dir):
     return T(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(_words()).alias("n_tokens"),
+        F.size(words()).alias("n_tokens"),
         F.length("text").alias("n_chars_measured"),
     )
 
@@ -49,7 +46,7 @@ def text_word_freq(spark, sf_dir):
     # |vocab| not |tokens| — the property that matters at 100 TB.
     return (
         T(spark, sf_dir, "documents")
-        .select(F.explode(_words()).alias("word"))
+        .select(F.explode(words()).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .where(F.col("freq") >= 50)
@@ -77,7 +74,7 @@ def text_bigram_freq(spark, sf_dir):
     w = F.col("w")
     d = (
         par(T(spark, sf_dir, "documents"))
-        .select(_words().alias("w"))
+        .select(words().alias("w"))
         .where(F.size(w) >= 2)
     )
     # zip-of-slices, not transform(sequence, i -> element_at(w, i)...):
@@ -119,9 +116,9 @@ def text_bigram_freq(spark, sf_dir):
 def text_quality_score(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     n_chars = F.length("text").cast("double")
-    n_tokens = F.size(_words()).cast("double")
+    n_tokens = F.size(words()).cast("double")
     is_stop = lambda w: (w == "the") | (w == "a") | (w == "of")  # noqa: E731
-    n_stop = F.size(F.filter(_words(), is_stop)).cast("double")
+    n_stop = F.size(F.filter(words(), is_stop)).cast("double")
     return d.select(
         "doc_id",
         ((n_chars - n_tokens + 1) / n_tokens).alias("avg_token_len"),
@@ -150,8 +147,8 @@ def text_lang_id_heuristic(spark, sf_dir):
     # n-gram/stopword-hit language ID: at scale this generalizes to a
     # per-language stopword table broadcast-joined against exploded tokens.
     d = T(spark, sf_dir, "documents")
-    en_hits = F.size(F.filter(_words(), lambda w: (w == "the") | (w == "a")))
-    n_tokens = F.size(_words())
+    en_hits = F.size(F.filter(words(), lambda w: (w == "the") | (w == "a")))
+    n_tokens = F.size(words())
     return d.select(
         "doc_id",
         "lang",
@@ -244,7 +241,7 @@ def text_stopword_removal(spark, sf_dir):
     # result cells and cannot order array values (r02 hard fail), and a
     # string round-trip pins the same element order + content.
     keep = lambda w: ~((w == "the") | (w == "a") | (w == "of"))  # noqa: E731
-    content = F.filter(_words(), keep)
+    content = F.filter(words(), keep)
     return T(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_join(content, " ").alias("content_text"),
@@ -872,9 +869,6 @@ def multimodal_video_scene_cuts(spark, sf_dir):
 
 _PH_BLOCKS = 60  # 60-bit perceptual hash (stays clear of the int64 sign bit)
 _PH_WIDTH = 8  # chars of normalized content per block
-_PH_BANDS = 4
-_PH_BAND_BITS = 15
-_PH_RADIUS = 3  # pigeonhole: d <= 3 with 4 bands => one band identical
 
 
 def _phash_terms(engine: str) -> str:
@@ -895,12 +889,6 @@ def _phash_terms(engine: str) -> str:
 
 
 def _phash_pairs_sql() -> str:
-    band_rows = "\n      UNION ALL ".join(
-        f"SELECT doc_id, phash, {b} AS band,"
-        f" (phash >> {b * _PH_BAND_BITS}) & {(1 << _PH_BAND_BITS) - 1} AS bv"
-        f" FROM ph"
-        for b in range(_PH_BANDS)
-    )
     return f"""
     WITH nrm AS (
       SELECT doc_id,
@@ -908,21 +896,7 @@ def _phash_pairs_sql() -> str:
       FROM documents
     ),
     ph AS (SELECT doc_id, CAST({_phash_terms("duckdb")} AS BIGINT) AS phash
-           FROM nrm),
-    bands AS (
-      {band_rows}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, a.phash AS ph_a,
-                      b.doc_id AS doc_b, b.phash AS ph_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
-    FROM cand
-    WHERE bit_count(xor(ph_a, ph_b)) <= {_PH_RADIUS}
-    """
+           FROM nrm),{hamming_pairs_sql("ph", "phash")}"""
 
 
 @query(
@@ -960,35 +934,4 @@ def multimodal_phash_dedup_pairs(spark, sf_dir):
     ph = nrm.select(
         "doc_id", F.expr(_phash_terms("spark")).cast("long").alias("phash")
     ).localCheckpoint(eager=True)  # reused by all 4 band selects
-    mask = (1 << _PH_BAND_BITS) - 1
-    bands = None
-    for b in range(_PH_BANDS):
-        part = ph.select(
-            "doc_id",
-            "phash",
-            F.lit(b).alias("band"),
-            F.shiftright("phash", b * _PH_BAND_BITS)
-            .bitwiseAND(F.lit(mask))
-            .alias("bv"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.phash").alias("ph_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).cast("long")
-    return cand.select("doc_a", "doc_b", ham.alias("hamming")).where(
-        ham <= _PH_RADIUS
-    )
+    return hamming_pairs(ph, "phash")

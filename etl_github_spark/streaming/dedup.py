@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..minhash import agreement, band_rows, verdict
+
 
 def stream_dedup_exact(
     events: DataFrame,
@@ -100,7 +102,7 @@ def stream_neardup_against_corpus(
 
     Per arriving doc (map-side, no state): 32-component md5/affine
     MinHash signature + 8×4 band buckets via the SHARED
-    `queries/dedup.py::_md5_band_rows` expressions — identical to the
+    `etl_github_spark/minhash.py` expressions — identical to the
     batch family, so batch index and stream agree on what "near-dup"
     means. The static index arrives as TWO frames, exactly the
     `io/lsh_store.py` layout: ``corpus_bands`` is the SKINNY
@@ -130,42 +132,7 @@ def stream_neardup_against_corpus(
     mode used here. Docs with <3 tokens carry no signature and emit no
     verdict (both engines replay the filter).
     """
-    from ..queries.dedup import _N_HASHES, _md5_band_rows
-
-    sb = _md5_band_rows(docs, with_sig=True)
-    cb = corpus_bands.select(
-        F.col("doc_id").alias("c_doc"),
-        F.col("band").alias("band"),
-        F.col("bucket").alias("bucket"),
-    )
-    cs = corpus_sigs.select(
-        F.col("doc_id").alias("c_doc"), F.col("sig").alias("c_sig")
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig", "c_sig", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    # Unmatched left-outer rows carry a NULL c_sig. Guard on the column
-    # itself, not coalesce(size(...), 0): under legacy non-ANSI sessions
-    # (spark.sql.ansi.enabled=false) size() of a NULL array returns -1,
-    # not NULL, so the coalesce never fires and a collision-free doc
-    # would replay max_agree=-1 while the oracle emits 0.
-    j = (
-        sb.join(cb, ["band", "bucket"], "left_outer")
-        .join(cs, "c_doc", "left_outer")
-        .select(
-            "doc_id",
-            F.when(F.col("c_sig").isNull(), F.lit(0))
-            .otherwise(agree)
-            .alias("agree"),
-        )
-    )
-    return j.groupBy("doc_id").agg(
-        F.max("agree").cast("long").alias("max_agree"),
-        (F.max("agree") * 2 < F.lit(_N_HASHES)).alias("kept"),
-    )
+    return _judge(docs, corpus_bands, corpus_sigs)
 
 
 def stream_neardup_against_corpus_eventtime(
@@ -184,7 +151,7 @@ def stream_neardup_against_corpus_eventtime(
     holds one row per doc forever, fine for bounded replays only).
 
     Same banding, collision, and verdict arithmetic as the bounded
-    form (the shared `_md5_band_rows` expressions, skinny static bands
+    form (the shared `minhash.band_rows` expressions, skinny static bands
     + a separate (doc_id, sig) table joined only for colliding corpus
     docs, the c_sig-IS-NULL agreement guard, kept ⇔ max_agree·2 < 32);
     the stream's timestamp rides through the map-side banding
@@ -197,11 +164,31 @@ def stream_neardup_against_corpus_eventtime(
     (pinned by `tests/test_streaming_dedup.py`); eviction is by
     watermark, so a 100 TB/day stream holds hours of state, not days.
     """
-    from ..queries.dedup import _N_HASHES, _md5_band_rows
-
-    sb = _md5_band_rows(docs, with_sig=True, carry=(ts_col,)).withWatermark(
-        ts_col, delay
+    verdicts = _judge(docs, corpus_bands, corpus_sigs, ts_col, delay, window_len)
+    return verdicts.select(
+        "doc_id", F.col("win.start").alias("window_start"), "max_agree", "kept"
     )
+
+
+def _judge(
+    docs: DataFrame,
+    corpus_bands: DataFrame,
+    corpus_sigs: DataFrame,
+    ts_col: str | None = None,
+    delay: str | None = None,
+    window_len: str | None = None,
+) -> DataFrame:
+    """The body both near-dup judges share: map-side banding of the
+    stream (`minhash.band_rows`, ``ts_col`` carried and watermarked when
+    given), stream-static LEFT OUTER collision with the skinny corpus
+    bands, a second one attaching the colliding corpus doc's signature,
+    the agreement per row, and the per-doc `minhash.verdict` — keyed by
+    doc_id, or by (event-time window ``win``, doc_id) when ``ts_col`` is
+    given."""
+    carry = (ts_col,) if ts_col else ()
+    sb = band_rows(docs, with_sig=True, carry=carry)
+    if ts_col:
+        sb = sb.withWatermark(ts_col, delay)
     cb = corpus_bands.select(
         F.col("doc_id").alias("c_doc"),
         F.col("band").alias("band"),
@@ -210,33 +197,21 @@ def stream_neardup_against_corpus_eventtime(
     cs = corpus_sigs.select(
         F.col("doc_id").alias("c_doc"), F.col("sig").alias("c_sig")
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig", "c_sig", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
+    # Unmatched left-outer rows carry a NULL c_sig. Guard on the column
+    # itself, not coalesce(size(...), 0): under legacy non-ANSI sessions
+    # (spark.sql.ansi.enabled=false) size() of a NULL array returns -1,
+    # not NULL, so the coalesce never fires and a collision-free doc
+    # would replay max_agree=-1 while the oracle emits 0.
     j = (
         sb.join(cb, ["band", "bucket"], "left_outer")
         .join(cs, "c_doc", "left_outer")
         .select(
             "doc_id",
-            ts_col,
+            *carry,
             F.when(F.col("c_sig").isNull(), F.lit(0))
-            .otherwise(agree)
+            .otherwise(agreement("sig", "c_sig"))
             .alias("agree"),
         )
     )
-    return (
-        j.groupBy(F.window(ts_col, window_len).alias("win"), F.col("doc_id"))
-        .agg(
-            F.max("agree").cast("long").alias("max_agree"),
-            (F.max("agree") * 2 < F.lit(_N_HASHES)).alias("kept"),
-        )
-        .select(
-            "doc_id",
-            F.col("win.start").alias("window_start"),
-            "max_agree",
-            "kept",
-        )
-    )
+    keys = [F.window(ts_col, window_len).alias("win")] if ts_col else []
+    return j.groupBy(*keys, F.col("doc_id")).agg(*verdict(F.max("agree")))

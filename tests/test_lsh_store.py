@@ -116,7 +116,7 @@ def test_store_judge_agrees_with_streaming_verdicts(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from etl_github_spark.io.lsh_store import store_judge_docs
-    from etl_github_spark.queries.dedup import _md5_band_rows
+    from etl_github_spark.minhash import band_rows
     from etl_github_spark.streaming.dedup import stream_neardup_against_corpus
 
     docs = _docs(spark)
@@ -127,7 +127,7 @@ def test_store_judge_agrees_with_streaming_verdicts(spark, tmp_path):
     from_store = sorted(
         tuple(r) for r in store_judge_docs(spark, path, batch).collect()
     )
-    crows = _md5_band_rows(corpus, with_sig=True)
+    crows = band_rows(corpus, with_sig=True)
     streaming = sorted(
         tuple(r)
         for r in stream_neardup_against_corpus(

@@ -238,22 +238,17 @@ def test_interval_overlap_bucketing_adds_no_duplicates(spark):
     assert got == want
 
 
-def test_minhash_xxhash_variant_pinned_to_canonical_family(spark):
-    """The unregistered xxhash64 production LSH variant must behave like
-    the registry-canonical md5/affine family on the invariants that are
-    hash-family-independent: identical output schema, est_jaccard in
-    [0.5, 1], doc_a < doc_b, and — deterministically, for ANY correct
-    MinHash-LSH — every exact-duplicate pair (true Jaccard == 1.0, so
-    identical signatures collide in every band) surfaced with est 1.0.
-    The fixture has no exact dups, so the test plants them: each doc is
-    unioned with a copy under doc_id+OFFSET."""
+def test_minhash_planted_exact_duplicates_surface_at_est_one(spark):
+    """Banded MinHash-LSH invariants any correct family keeps: output
+    schema, est_jaccard in [0.5, 1], doc_a < doc_b, and —
+    deterministically — every exact-duplicate pair (true Jaccard ==
+    1.0, so identical signatures collide in every band) surfaced with
+    est 1.0. The fixture has no exact dups, so the test plants them:
+    each doc is unioned with a copy under doc_id+OFFSET."""
     from pyspark.sql import functions as F
 
     from etl_github_spark.io.tables import load_table
-    from etl_github_spark.queries.dedup import (
-        _md5_minhash_candidates,
-        _xxhash_lsh_candidates,
-    )
+    from etl_github_spark.minhash import candidates, near
 
     base = (
         load_table(spark, SF_ORACLE, "documents")
@@ -266,17 +261,13 @@ def test_minhash_xxhash_variant_pinned_to_canonical_family(spark):
         base.select((F.col("doc_id") + offset).alias("doc_id"), "text")
     )
     planted = {(r.doc_id, r.doc_id + offset) for r in base.collect()}
-    for name, cand in (
-        ("md5", _md5_minhash_candidates(docs, with_est=True)),
-        ("xxhash", _xxhash_lsh_candidates(docs)),
-    ):
-        rows = cand.where(F.col("est_jaccard") >= 0.5).collect()
-        assert rows and rows[0].__fields__ == ["doc_a", "doc_b", "est_jaccard"]
-        got = {(r.doc_a, r.doc_b): r.est_jaccard for r in rows}
-        for r in rows:
-            assert 0.5 <= r.est_jaccard <= 1.0 and r.doc_a < r.doc_b
-        for pair in planted:
-            assert got.get(pair) == 1.0, (name, pair)
+    rows = near(candidates(docs, with_est=True)).collect()
+    assert rows and rows[0].__fields__ == ["doc_a", "doc_b", "est_jaccard"]
+    got = {(r.doc_a, r.doc_b): r.est_jaccard for r in rows}
+    for r in rows:
+        assert 0.5 <= r.est_jaccard <= 1.0 and r.doc_a < r.doc_b
+    for pair in planted:
+        assert got.get(pair) == 1.0, pair
 
 
 def test_winnowing_guarantee_shared_run_yields_shared_fingerprint(spark):
@@ -925,6 +916,54 @@ def test_spark_internals_only_in_session_module():
         for lineno, line in enumerate(src.splitlines(), 1):
             hits += [f"{rel}:{lineno} {t}" for t in texts if t in line]
     assert not hits, f"Spark internals outside session.py: {hits}"
+
+
+def test_minhash_family_defined_only_in_minhash_module():
+    """The banded-MinHash family lives in `etl_github_spark/minhash.py`
+    alone: the md5 shingle id (`md5(s)` over a shingle `s`, Spark and
+    DuckDB forms) and the signature agreement fold (Spark `zip_with`
+    equality, DuckDB `CASE WHEN a.s{i} = b.s{i}` sum) appear nowhere
+    else in the package or in bench.py, and no module or test imports a
+    MinHash name from `queries.dedup`."""
+    import ast
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "etl_github_spark"
+    family = pkg / "minhash.py"
+    tree = ast.parse(family.read_text())
+    names = {
+        n.name for n in tree.body if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    } | {
+        t.id
+        for n in tree.body
+        if isinstance(n, ast.Assign)
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+    names |= {f"_{n}" for n in names} | {
+        "_md5_band_rows", "_md5_minhash_candidates", "_md5_sig_bands_cte",
+        "_md5_lsh_cte", "_N_HASHES", "_BAND_SIZE", "_MERSENNE_P", "_words",
+    }
+    patterns = (
+        re.compile(r"md5\(s\)"),
+        re.compile(r"\(x == y\)\.cast"),
+        re.compile(r"CASE WHEN \w+\.s\{i\} = \w+\.s\{i\}"),
+    )
+    hits = []
+    files = sorted(pkg.rglob("*.py")) + [root / "bench.py"]
+    for path in files + sorted((root / "tests").glob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root).as_posix()
+        if path in files and path != family:
+            hits += [f"{rel}: {p.pattern}" for p in patterns if p.search(src)]
+        for n in ast.walk(ast.parse(src)):
+            if isinstance(n, ast.ImportFrom) and (n.module or "").endswith("dedup") and (
+                "queries" in (n.module or "") or path.parent.name == "queries"
+            ):
+                hits += [f"{rel}: imports {a.name}" for a in n.names if a.name in names]
+    assert not hits, hits
 
 
 def test_driver_boundary_tunes_an_adversarial_session(spark):

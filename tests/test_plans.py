@@ -56,16 +56,18 @@ def test_q1_partial_final_aggregate(spark):
     assert p.count("HashAggregate") >= 2  # partial + final
 
 
-def test_minhash_signatures_no_shuffle(spark):
-    """Signature computation must stay a pure projection (no Exchange
-    between scan and the signature select)."""
+def test_minhash_band_rows_no_shuffle(spark):
+    """Banding must stay pure map-side work: no Exchange between the
+    scan and the band explode."""
     from etl_github_spark.io.tables import load_table
-    from etl_github_spark.queries.dedup import minhash_signatures
+    from etl_github_spark.minhash import band_rows
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        minhash_signatures(load_table(spark, SF_SMALL, "documents")).explain("formatted")
-    assert "Exchange" not in buf.getvalue()
+        band_rows(load_table(spark, SF_SMALL, "documents"), with_sig=True).explain("formatted")
+    plan = buf.getvalue()
+    assert "Generate" in plan and "explode" in plan
+    assert "Exchange" not in plan
 
 
 def test_ann_codebook_fit_frames_are_sampled(spark):
@@ -567,7 +569,8 @@ def test_prefix_jaccard_equals_exhaustive_above_threshold(spark):
     from pyspark.sql import Window
 
     from etl_github_spark.io.tables import load_table
-    from etl_github_spark.queries.dedup import _hashed_shingles, _words
+    from etl_github_spark.minhash import words
+    from etl_github_spark.queries.dedup import _hashed_shingles
 
     def cands(idx):
         a, b = idx.alias("a"), idx.alias("b")
@@ -584,7 +587,7 @@ def test_prefix_jaccard_equals_exhaustive_above_threshold(spark):
 
     full = (
         load_table(spark, SF_SMALL, "documents")
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", words().alias("w"))
         .where(F.size("w") >= 3)
         .select("doc_id", F.explode(_hashed_shingles(F.col("w"))).alias("sh"))
     )

@@ -126,14 +126,14 @@ def test_stream_neardup_flags_fuzzy_corpus_duplicates(spark, tmp_path):
     verdict. The verdict must match what the batch family would say."""
     import json
 
-    from etl_github_spark.queries.dedup import _md5_band_rows
+    from etl_github_spark.minhash import band_rows
     from etl_github_spark.streaming.dedup import stream_neardup_against_corpus
 
     corpus = spark.createDataFrame(
         [(0, "the quick brown fox jumps over the lazy dog near the river bank")],
         "doc_id long, text string",
     )
-    crows = _md5_band_rows(corpus, with_sig=True)
+    crows = band_rows(corpus, with_sig=True)
     corpus_bands = crows.select("doc_id", "band", "bucket")
     corpus_sigs = crows.where("band = 0").select("doc_id", "sig")
 
@@ -175,7 +175,7 @@ def test_stream_neardup_unmatched_agree_zero_under_legacy_ansi(spark):
     spark.sql.ansi.enabled=false, so a coalesce(size(...), 0) guard
     never fires — the join's unmatched branch must test c_sig IS NULL
     directly. Batch replay of the stream-static join, ANSI toggled off."""
-    from etl_github_spark.queries.dedup import _md5_band_rows
+    from etl_github_spark.minhash import band_rows
     from etl_github_spark.streaming.dedup import stream_neardup_against_corpus
 
     corpus = spark.createDataFrame(
@@ -189,7 +189,7 @@ def test_stream_neardup_unmatched_agree_zero_under_legacy_ansi(spark):
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
-        crows = _md5_band_rows(corpus, with_sig=True)
+        crows = band_rows(corpus, with_sig=True)
         got = stream_neardup_against_corpus(
             docs,
             crows.select("doc_id", "band", "bucket"),
@@ -211,7 +211,7 @@ def test_stream_neardup_eventtime_emits_on_watermark_and_bounds_state(spark, tmp
     import os
     import time
 
-    from etl_github_spark.queries.dedup import _md5_band_rows
+    from etl_github_spark.minhash import band_rows
     from etl_github_spark.streaming.dedup import (
         stream_neardup_against_corpus_eventtime,
     )
@@ -220,7 +220,7 @@ def test_stream_neardup_eventtime_emits_on_watermark_and_bounds_state(spark, tmp
         [(0, "the quick brown fox jumps over the lazy dog near the river bank")],
         "doc_id long, text string",
     )
-    crows = _md5_band_rows(corpus, with_sig=True)
+    crows = band_rows(corpus, with_sig=True)
     corpus_bands = crows.select("doc_id", "band", "bucket")
     corpus_sigs = crows.where("band = 0").select("doc_id", "sig")
 
